@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -71,6 +72,16 @@ object Pipelines {
     *    [[graft.operators.SteamOps.sentimentFromPartials]] /
     *    `reviewBombFromPartials`; equality with a from-scratch
     *    aggregation is spec-pinned.
+    *
+    * The three writes do not depend on each other, so they run
+    * concurrently on driver threads ([[concurrently]]): a trigger waits
+    * for the slowest write, not for the sum of all three. Each write keeps
+    * its own exactly-once record (the archive's published directory, each
+    * hot table's pointer), so when one write fails the others still
+    * commit, the query fails with that write's error, and the replayed
+    * batch re-applies only the write that did not land. The two hot
+    * tables must be distinct sinks: each is written by one thread per
+    * trigger (the single-writer assumption of [[ParquetUpsertSink]]).
     */
   def reviewsMultiSink(
       kafkaShaped: DataFrame,
@@ -78,26 +89,60 @@ object Pipelines {
       sentimentSink: ParquetUpsertSink,
       bombSink: ParquetUpsertSink,
       checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    require(sentimentSink.root != bombSink.root,
+      s"sentiment and bomb sinks share the root ${bombSink.root}")
     val parsed = SteamOps.parseReviews(kafkaShaped)
     parsed.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
-        try {
-          graft.functions.Stores.publishOnce(
+        try concurrently(batch.sparkSession)(
+          () => graft.functions.Stores.publishOnce(
             batch.sparkSession, s"$archiveDir/batch=$batchId")(
-            batch.write.mode("overwrite").parquet(_))
-          sentimentSink.upsertAdditive(
+            batch.write.mode("overwrite").parquet(_)),
+          () => sentimentSink.upsertAdditive(
             SteamOps.sentimentAggPartial(batch), batchId,
-            Seq("total_reviews", "quality_sum", "quality_cnt"))
-          bombSink.upsertAdditive(
+            Seq("total_reviews", "quality_sum", "quality_cnt")),
+          () => bombSink.upsertAdditive(
             SteamOps.reviewBombAggPartial(batch), batchId,
             Seq("total_reviews", "negative_count", "positive_count",
-              "quality_sum", "quality_cnt"))
-        } finally batch.unpersist()
+              "quality_sum", "quality_cnt")))
+        finally batch.unpersist()
         ()
       }
+  }
+
+  /** Daemon driver threads for [[concurrently]]; idle threads exit. */
+  private lazy val sinkWriters: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-sink-writer")
+      t.setDaemon(true)
+      t
+    }
+
+  /** Run independent sink writes of one micro-batch concurrently, wait for
+    * all of them, then rethrow the first failure (in argument order) as
+    * thrown, with any later ones suppressed onto it.
+    *
+    * Each write runs under the caller's thread-local context
+    * (`SQLExecution.withThreadLocalCaptured`, the idiom of Spark's own
+    * broadcast and subquery threads): the streaming query's job group,
+    * so `StreamingQuery.stop()` cancels the writes' jobs too, its job
+    * description, and the active session.
+    */
+  private def concurrently(spark: SparkSession)(writes: (() => Any)*): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pending = writes.map(w =>
+      SQLExecution.withThreadLocalCaptured(session, sinkWriters)(w()))
+    val failures = pending.flatMap { f =>
+      try { f.join(); None }
+      catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Streaming incremental dedup ingest: each micro-batch is classified

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, to_date}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 /** Streaming sinks (SURVEY.md §2.A).
   *
@@ -191,12 +192,21 @@ object Sinks {
   * rows), then atomically swaps the pointer. Readers go through [[read]].
   *
   * All filesystem access goes through the Hadoop FileSystem API, so the
-  * layout works on HDFS and object stores, not just the local disk; the
-  * pointer swap is a `FileContext.rename(OVERWRITE)` (atomic on HDFS and
-  * local; object stores without atomic rename need their usual
-  * commit-service arrangement). Writers are assumed single-driver per
-  * table — the streaming-query model — with `synchronized` guarding
-  * same-JVM races.
+  * layout works on HDFS and object stores, not just the local disk. The
+  * pointer swap is one atomic rename that replaces the old pointer: on the
+  * local disk the pointer is written without a checksum sidecar and
+  * renamed with the raw filesystem (POSIX `rename`), elsewhere it is a
+  * `FileContext.rename(OVERWRITE)` (atomic on HDFS; object stores without
+  * atomic rename need their usual commit-service arrangement). A reader
+  * racing a swap therefore always finds a complete pointer, old or new.
+  *
+  * Single writer per table: one driver owns the table (the streaming-query
+  * model), with `synchronized` guarding same-JVM races; readers may run
+  * concurrently from any thread. Every snapshot is written by the same
+  * merge plan, so all of a table's snapshots share one schema: a sink
+  * instance infers it from the first snapshot it reads and passes it to
+  * the reader after that, which spares every later [[read]] the parquet
+  * schema-inference job.
   *
   * Exactly-once: the pointer records the last applied batchId, written in
   * the SAME atomic swap as the data pointer. [[upsertAdditive]] is a no-op
@@ -210,6 +220,9 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
   private def pointer = new HPath(root, "_CURRENT")
 
   private def hconf(spark: SparkSession) = spark.sessionState.newHadoopConf()
+
+  /** Schema shared by every snapshot, inferred on the first read. */
+  @transient @volatile private var snapshotSchema: StructType = _
 
   /** (snapshot version, last applied batchId) from the pointer file. */
   private def readPointer(spark: SparkSession): Option[(Long, Long)] = {
@@ -233,20 +246,34 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     readPointer(spark).map(_._2).getOrElse(Long.MinValue)
 
   def read(spark: SparkSession): Option[DataFrame] =
-    readPointer(spark).map { case (v, _) => spark.read.parquet(s"$root/v$v") }
+    readPointer(spark).map { case (v, _) => snapshot(spark, v) }
+
+  private def snapshot(spark: SparkSession, version: Long): DataFrame = {
+    val dir = s"$root/v$version"
+    val known = snapshotSchema
+    if (known != null) spark.read.schema(known).parquet(dir)
+    else {
+      val df = spark.read.parquet(dir)
+      snapshotSchema = df.schema
+      df
+    }
+  }
 
   /** Key-replacing upsert: batch rows replace stored rows per key.
     * Idempotent by construction (replaying a batch converges), so no
     * replay skip is needed.
     */
   def upsert(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val merged = read(batch.sparkSession) match {
-      case Some(existing) =>
-        existing.join(batch.select(keys.map(col): _*), keys, "left_anti")
-          .unionByName(batch)
+    val current = readPointer(batch.sparkSession)
+    // batch first: every snapshot keeps the batch's column order (the
+    // join below would move the keys to the front)
+    val merged = current match {
+      case Some((v, _)) =>
+        batch.unionByName(snapshot(batch.sparkSession, v)
+          .join(batch.select(keys.map(col): _*), keys, "left_anti"))
       case None => batch
     }
-    writeSnapshot(merged, batchId)
+    writeSnapshot(merged, current, batchId)
   }
 
   /** Incremental aggregate maintenance: merge a PER-BATCH partial
@@ -264,28 +291,45 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     */
   def upsertAdditive(
       batch: DataFrame, batchId: Long, sumCols: Seq[String]): Unit = synchronized {
-    if (batchId <= lastApplied(batch.sparkSession)) return
-    val merged = read(batch.sparkSession) match {
-      case Some(existing) =>
-        existing.unionByName(batch)
-          .groupBy(keys.map(col): _*)
-          .agg(sum(sumCols.head).as(sumCols.head),
-            sumCols.tail.map(c => sum(c).as(c)): _*)
-      case None => batch
+    val current = readPointer(batch.sparkSession)
+    if (current.exists(_._2 >= batchId)) return
+    def sumByKey(df: DataFrame) =
+      df.groupBy(keys.map(col): _*)
+        .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*)
+    // the first snapshot goes through the same aggregate as every later
+    // one, so all snapshots share its column order and types
+    val merged = current match {
+      case Some((v, _)) => sumByKey(snapshot(batch.sparkSession, v).unionByName(batch))
+      case None         => sumByKey(batch)
     }
-    writeSnapshot(merged, batchId)
+    writeSnapshot(merged, current, batchId)
   }
 
-  private def writeSnapshot(df: DataFrame, batchId: Long): Unit = {
-    val spark = df.sparkSession
-    val conf = hconf(spark)
-    val next = readPointer(spark).map(_._1).getOrElse(-1L) + 1
+  /** Write `df` as the snapshot after `current` and swap the pointer. */
+  private def writeSnapshot(df: DataFrame, current: Option[(Long, Long)], batchId: Long): Unit = {
+    val conf = hconf(df.sparkSession)
+    val next = current.map(_._1).getOrElse(-1L) + 1
     df.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
-    val fs = pointer.getFileSystem(conf)
+    // one rename replaces the pointer, so a concurrent reader finds the
+    // old pointer or the new one, never none and never a torn one
     val tmp = new HPath(root, s"_CURRENT.tmp$batchId")
-    val out = fs.create(tmp, true)
-    try out.write(s"$next $batchId".getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(fs.getUri, conf)
-      .rename(fs.makeQualified(tmp), fs.makeQualified(pointer), Options.Rename.OVERWRITE)
+    def writeTmp(fs: FileSystem): Unit = {
+      val out = fs.create(tmp, true)
+      try out.write(s"$next $batchId".getBytes("UTF-8")) finally out.close()
+    }
+    pointer.getFileSystem(conf) match {
+      case local: ChecksumFileSystem =>
+        // no checksum sidecar: it would be renamed apart from the pointer.
+        // POSIX rename replaces the target atomically.
+        val raw = local.getRawFileSystem
+        writeTmp(raw)
+        raw.delete(local.getChecksumFile(pointer), false) // left by an older writer
+        if (!raw.rename(tmp, pointer))
+          throw new java.io.IOException(s"could not rename $tmp to $pointer")
+      case fs =>
+        writeTmp(fs)
+        FileContext.getFileContext(fs.getUri, conf)
+          .rename(fs.makeQualified(tmp), fs.makeQualified(pointer), Options.Rename.OVERWRITE)
+    }
   }
 }

@@ -240,6 +240,169 @@ class StreamingSpec extends SparkSpec {
     sink.lastApplied(spark) shouldBe 1L
   }
 
+  test("shared-scan multi-sink: a hot sink failing one batch is re-applied alone on replay") {
+    val in   = memStream[String]
+    val arc  = tmpDir("pf_archive")
+    val sent = tmpDir("pf_sent")
+    val bomb = tmpDir("pf_bomb")
+    val ckpt = tmpDir("pf_ckpt")
+    def start() = Pipelines.reviewsMultiSink(
+      in.toDF().select(col("value")), arc,
+      new ParquetUpsertSink(sent, Seq("window", "recommended")),
+      new ParquetUpsertSink(bomb, Seq("app_id")), ckpt)
+      .trigger(Trigger.ProcessingTime(0)).start()
+    val base = 1700000000L
+
+    val q1 = start()
+    try {
+      in.addData(reviewJson("1", rec = true, 0.5, base), reviewJson("2", rec = false, 0.25, base + 60))
+      q1.processAllAvailable()
+      // batch 1's bomb write lands its snapshot, then fails to create the
+      // pointer (a non-empty directory sits on the temp pointer's path):
+      // the crash point between snapshot write and pointer swap
+      val blocker = new java.io.File(bomb, "_CURRENT.tmp1")
+      new java.io.File(blocker, "x").mkdirs() shouldBe true
+      in.addData(reviewJson("1", rec = false, 0.75, base + 120),
+        reviewJson("3", rec = false, 0.125, base + 4000))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+      q1.isActive shouldBe false
+      // the fan-out waited for its other writes: both committed batch 1
+      new java.io.File(arc, "batch=1").isDirectory shouldBe true
+      new ParquetUpsertSink(sent, Seq("window", "recommended")).lastApplied(spark) shouldBe 1L
+      new ParquetUpsertSink(bomb, Seq("app_id")).lastApplied(spark) shouldBe 0L
+      org.apache.commons.io.FileUtils.deleteDirectory(blocker)
+    } finally q1.stop()
+
+    // a restarted query replays batch 1, then runs batch 2
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      in.addData(reviewJson("2", rec = true, 0.5, base + 180))
+      q2.processAllAvailable()
+    } finally q2.stop()
+
+    val archive = spark.read.parquet(arc)
+    archive.count() shouldBe 5
+    archive.select("review_id").distinct().count() shouldBe 5
+    val sentiment = SteamOps.sentimentFromPartials(
+      new ParquetUpsertSink(sent, Seq("window", "recommended")).read(spark).get)
+    val expSent = SteamOps.sentimentAgg(archive)
+    sentiment.except(expSent).count() shouldBe 0
+    expSent.except(sentiment).count() shouldBe 0
+    val bombs = SteamOps.reviewBombFromPartials(
+      new ParquetUpsertSink(bomb, Seq("app_id")).read(spark).get)
+    val expBomb = SteamOps.reviewBombAgg(archive)
+    bombs.count() shouldBe 3
+    bombs.except(expBomb).count() shouldBe 0
+    expBomb.except(bombs).count() shouldBe 0
+  }
+
+  test("upsert pointer swap: reads racing 50 upserts never fail") {
+    val sink = new ParquetUpsertSink(tmpDir("race"), Seq("k"))
+    sink.upsert(Seq(("a", 0L)).toDF("k", "n"), 0L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    var reads = 0
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        try { sink.read(spark).get.count() shouldBe 1L; reads += 1 }
+        catch { case e: Throwable => errors.add(e) }
+      })
+    reader.start()
+    try (1 to 50).foreach(i => sink.upsert(Seq(("a", i.toLong)).toDF("k", "n"), i.toLong))
+    finally { done.set(true); reader.join() }
+    withClue(errors.toArray.take(3).mkString("; "))(errors.size shouldBe 0)
+    reads should be > 0
+    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(50L)
+  }
+
+  test("upsert pointer written by an older version (with a checksum sidecar) still reads and swaps") {
+    val root = tmpDir("legacy")
+    Seq(("a", 1L)).toDF("k", "n").write.parquet(s"$root/v0")
+    // the checksummed local filesystem writes `._CURRENT.crc` beside it
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_CURRENT"), true)
+    try out.write("0 0".getBytes("UTF-8")) finally out.close()
+    new java.io.File(root, "._CURRENT.crc").exists() shouldBe true
+    val sink = new ParquetUpsertSink(root, Seq("k"))
+    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(1L)
+    sink.upsertAdditive(Seq(("a", 2L)).toDF("k", "n"), 1L, Seq("n"))
+    new java.io.File(root, "._CURRENT.crc").exists() shouldBe false
+    sink.lastApplied(spark) shouldBe 1L
+    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(3L)
+  }
+
+  /** Spark jobs `body` submits from this thread (listener events are
+    * delivered in order, so a marker job seen after it flushes the count).
+    */
+  private def jobsSubmittedBy(body: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try {
+        body
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      seen.contains("marker") shouldBe true
+      seen.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("upsert sink schema: inferred once per instance, then reads submit no Spark job") {
+    val sink = new ParquetUpsertSink(tmpDir("schema_jobs"), Seq("k"))
+    sink.upsertAdditive(Seq(("a", 1L)).toDF("k", "n"), 0L, Seq("n"))
+    val fresh = new ParquetUpsertSink(sink.root, Seq("k"))
+    jobsSubmittedBy(fresh.read(spark).get) should be >= 1 // parquet schema inference
+    jobsSubmittedBy(fresh.read(spark).get) shouldBe 0
+    sink.upsertAdditive(Seq(("a", 2L), ("b", 5L)).toDF("k", "n"), 1L, Seq("n"))
+    jobsSubmittedBy(fresh.read(spark).get) shouldBe 0
+    fresh.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
+      Map("a" -> 3L, "b" -> 5L)
+  }
+
+  test("upsert sink schema: a new sink over an existing root reads what spark.read.parquet reads") {
+    // int sums widen to bigint and the aggregate reorders columns: the
+    // first snapshot must already have the shape of every later one
+    val root = tmpDir("schema_parity")
+    val writer = new ParquetUpsertSink(root, Seq("k"))
+    def current = {
+      val v = scala.io.Source.fromFile(s"$root/_CURRENT").mkString.trim.split("\\s+")(0)
+      spark.read.parquet(s"$root/v$v")
+    }
+    def sameAsCurrent(sink: ParquetUpsertSink) = {
+      val got = sink.read(spark).get
+      got.schema shouldBe current.schema
+      got.collect().toSet shouldBe current.collect().toSet
+    }
+    writer.upsertAdditive(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L, Seq("n"))
+    val reader = new ParquetUpsertSink(root, Seq("k"))
+    sameAsCurrent(reader) // infers the schema from v0
+    writer.upsertAdditive(Seq((10, "a"), (7, "c")).toDF("n", "k"), 1L, Seq("n"))
+    sameAsCurrent(reader) // reads v1 with the schema inferred from v0
+    sameAsCurrent(new ParquetUpsertSink(root, Seq("k")))
+    reader.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
+      Map("a" -> 11L, "b" -> 2L, "c" -> 7L)
+
+    val replacing = new ParquetUpsertSink(tmpDir("schema_replace"), Seq("k"))
+    replacing.upsert(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L)
+    replacing.read(spark).get.count() shouldBe 2
+    replacing.upsert(Seq((5, "a")).toDF("n", "k"), 1L)
+    val fresh = new ParquetUpsertSink(replacing.root, Seq("k")).read(spark).get
+    replacing.read(spark).get.schema shouldBe fresh.schema
+    replacing.read(spark).get.collect().toSet shouldBe fresh.collect().toSet
+  }
+
   test("stream-static enrichment join broadcasts the dimension") {
     val in = memStream[String]
     def playerJson(app: Int, n: Int, iso: String) =
