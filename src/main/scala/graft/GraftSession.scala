@@ -21,15 +21,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // probe knob only — the "start shuffles wide, let AQE coalesce"
-      // hypothesis for the sf100 heavy joins was A/B-measured (round 17,
-      // q_join_broadcast + q_distinct_agg at sf100, 8× cores vs flat)
-      // and REJECTED: 256 initial partitions read 120.8/89.2 s vs
-      // 91.5/97.9 s flat — mixed within the noise band, no spill win,
-      // so the default stays the core count and the env override stays
-      // for future probes
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // allow joins/aggregates to reuse a child partitioning that covers
       // a SUBSET of the keys (e.g. iterative state kept hash(doc_id)

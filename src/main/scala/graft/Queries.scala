@@ -4035,7 +4035,7 @@ object Queries {
 
   /** The span-ACCOUNTING query runs the FULL documents table (the
     * round-14 retirement of the historical 2000-doc slice). Why no
-    * slice: the growth study (SuffixProf, sf0.1, min of 2) measured
+    * slice: the growth study (PERF.md round 15, sf0.1, min of 2) measured
     * dupSpans walls 500→1000→2000→4000→5000(full) docs at
     * 6.9→7.2→9.5→15.0→18.5 s — 2000→full is 1.95× wall for 2.5× the
     * chars (gate benches agree: 10.1→17.9 s = 1.77×), i.e. sublinear
@@ -4683,7 +4683,7 @@ object Queries {
       // and `boundary` are each computed under their own broadcast-
       // exchange job, so a lazy cum would re-aggregate the scored
       // checkpoint once per branch (the table is |distinct dsir_bits|
-      // rows — tiny; DsirProf: the branch jobs drop to ~0.2 s each)
+      // rows — tiny; PERF.md round 13: the branch jobs drop to ~0.2 s each)
       val (cum, cumRdd) = localCheckpointHandle(
         hist.withColumn("cum_before",
           coalesce(sum(col("toks")).over(wOrd), lit(0L))))
@@ -4706,8 +4706,8 @@ object Queries {
       // materialize the (budget-bounded) selection eagerly, then free
       // the pool-scale scored checkpoint and the cum table — the
       // dupSpans discipline: repeated calls in one session must not
-      // strand a cached snapshot per call (DsirProf measured the final
-      // union at ~0.3-0.7 s — the cleanup costs one cheap job)
+      // strand a cached snapshot per call (PERF.md round 13 measured the
+      // final union at ~0.3-0.7 s — the cleanup costs one cheap job)
       val h = localCheckpointHandle(keptFull.unionByName(keptBoundary))
       scoredRdd.unpersist(blocking = false)
       cumRdd.unpersist(blocking = false)

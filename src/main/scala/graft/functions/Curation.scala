@@ -632,7 +632,7 @@ object Curation {
     *
     * Why: each trigger adds a directory of per-bucket files, so probe
     * cost grows with batch count (measured: 0.50 s at 10 batches →
-    * 0.72 s at 50, IngestProf) — the streaming small-file problem, same
+    * 0.72 s at 50, PERF.md round 12) — the streaming small-file problem, same
     * as the cold archive's ([[graft.streaming.Sinks.compactArchive]]).
     * Compaction collapses O(batches × buckets) files to O(buckets) with
     * one shuffle-free partitioned rewrite; probe results are unchanged.

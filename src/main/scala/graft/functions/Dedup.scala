@@ -31,17 +31,6 @@ object Dedup {
   def explodedDistinctTokens(df: DataFrame, id: String, text: String): DataFrame =
     df.select(col(id), explode(array_distinct(tokens(col(text)))).as("tok"))
 
-  /** Exact dedup summary: per group key, distinct-content counts.
-    * Representative row = min(id) per fingerprint (deterministic).
-    */
-  def exactDedupStats(df: DataFrame, id: String, text: String, groupCol: String): DataFrame =
-    df.select(col(groupCol), col(id), TextFunctions.fingerprint(col(text)).as("fp"))
-      .groupBy(col(groupCol))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("fp")).as("n_unique"),
-        (count(lit(1)) - countDistinct(col("fp"))).as("n_dupes"))
-
   /** Exact dedup: keep the min-id row per normalized-content fingerprint. */
   def dropExactDuplicates(df: DataFrame, id: String, text: String): DataFrame = {
     val fp = df.withColumn("fp", TextFunctions.fingerprint(col(text)))

@@ -200,7 +200,8 @@ object Stores {
     * (`_tmp_*`, `_tmp_*.old`) whose contents are workspace, not store,
     * and a marker-substring test alone would count them (the
     * [[publishReplace]] temp holds a real `batch=<id>` subtree).
-    * Used by the store compactors' before/after file accounting.
+    * Used by the compactors' before/after file accounting and by the
+    * release writer; `marker = ""` counts every committed data file.
     */
   def committedDataFiles(
       spark: SparkSession, dir: String, marker: String = "/batch="): Long = {

@@ -83,14 +83,6 @@ object Suffix {
 
   import org.apache.spark.sql.graftbridge.GraftBridge.localCheckpointHandle
 
-  private val Prof = sys.env.contains("GRAFT_SUFFIX_PROF")
-  private def prof[A](label: => String)(f: => A): A =
-    if (!Prof) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PROF $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-
   /** Hash-repartition with an EXPLICIT partition count (the session's
     * `spark.sql.shuffle.partitions`, i.e. the conf the driver/cluster
     * operator sizes): a bare `repartition(col)` leaves the count to AQE,
@@ -219,12 +211,12 @@ object Suffix {
         .select(col("g").as("g1"), col("r").as("r_1"))
       val a2 = ranked2(a2base)
         .select(col("g").as("g2"), col("r").as("r_2"))
-      val init = prof("init12")(localCheckpointHandle(
+      val init = localCheckpointHandle(
         posed.withColumn("g1", expr("substring(g2, 1, 1)"))
           .join(broadcast(a1), Seq("g1"))
           .join(broadcast(a2), Seq("g2"))
           .select(col("did"), col("pos"), col("r_1"), col("r_2")),
-        Seq("did")))
+        Seq("did"))
       val init2df =
         init._1.select(col("did"), col("pos"), col("r_2").as("r"))
       levels = Vector(
@@ -236,8 +228,8 @@ object Suffix {
       // re-compresses ranks below), and the TRUE |2-grams| — deciding
       // combine capacity off the real 2-gram domain instead of the safe
       // bound n usually buys two extra combines before the first densify
-      val pr = prof("probe")(init._1.agg(
-        max(col("pos")), count(lit(1)), max(col("r_2"))).head)
+      val pr = init._1.agg(
+        max(col("pos")), count(lit(1)), max(col("r_2"))).head
       docLen = if (pr.isNullAt(0)) 0L else pr.getLong(0)
       n = pr.getLong(1)
       dom = BigInt(if (pr.isNullAt(2)) 1L else math.max(pr.getLong(2) + 1L, 1L))
@@ -254,13 +246,13 @@ object Suffix {
       // single-partition ranking window already assumes): dom is a ~ms
       // count over the cache, and the broadcast build in the first
       // action reads the cache instead of re-running explode+distinct.
-      val st = prof("stats")(base.agg(
+      val st = base.agg(
         max(length(col("txt"))).cast("long"),
-        sum(length(col("txt"))).cast("long")).head)
+        sum(length(col("txt"))).cast("long")).head
       docLen = if (st.isNullAt(0)) 0L else st.getLong(0)
       n = if (st.isNullAt(1)) 0L else st.getLong(1)
-      val (a2, a2Rdd) = prof("init-a2")(localCheckpointHandle(
-        ranked2(a2base).select(col("g").as("g2"), col("r").as("r_2"))))
+      val (a2, a2Rdd) = localCheckpointHandle(
+        ranked2(a2base).select(col("g").as("g2"), col("r").as("r_2")))
       initA2 = Some(a2Rdd)
       dom = BigInt(math.max(a2.count(), 1L))
       cur = posed
@@ -377,7 +369,7 @@ object Suffix {
               s"packed intermediate rank domain $packedDom overflows int64 " +
                 s"(n=$n, buckets=$buckets) — lower the bucket count")
             dom = packedDom
-            prof(s"densify-packed k=$k")(localCheckpointHandle(
+            localCheckpointHandle(
               repartitionFixed(
                 repartitionFixed(
                   keyed.withColumn("bkt", expr(s"r0 DIV $blockSize")),
@@ -386,14 +378,14 @@ object Suffix {
                   .select(carryCols :+
                     (col("bkt") * (nn + 1) + col("rk") - 1).as("r0"): _*),
                 col("did")),
-              Seq("did")))
+              Seq("did"))
           } else {
             dom = BigInt(nn)
-            val (kb, kbRdd) = prof(s"densify-kb k=$k")(localCheckpointHandle(
+            val (kb, kbRdd) = localCheckpointHandle(
               repartitionFixed(
                 keyed.withColumn("bkt", expr(s"r0 DIV $blockSize")),
                 col("bkt")),
-              Seq("bkt")))
+              Seq("bkt"))
             val rk = kb.withColumn("rk", dense_rank().over(rkW).cast("long"))
             // per-bucket distinct-tuple counts straight off the cached
             // state (no dependence on the rank window, so the broadcast
@@ -408,11 +400,11 @@ object Suffix {
               .select(col("bkt"), col("off"))
             val outCols = carryCols :+ (col("off") + col("rk") - 1).as("r0")
             if (materializeLast) {
-              val hh = prof(s"densify k=$k")(localCheckpointHandle(
+              val hh = localCheckpointHandle(
                 repartitionFixed(
                   rk.join(broadcast(offs), Seq("bkt")).select(outCols: _*),
                   col("did")),
-                Seq("did")))
+                Seq("did"))
               kbRdd.unpersist(blocking = false)
               hh
             } else {
@@ -450,8 +442,8 @@ object Suffix {
     // never materialized anything — checkpoint the init chain so the
     // returned level still honors the cached-snapshot contract
     if (levels.isEmpty) {
-      val h = prof("init-cp")(localCheckpointHandle(
-        repartitionFixed(cur, col("did")), Seq("did")))
+      val h = localCheckpointHandle(
+        repartitionFixed(cur, col("did")), Seq("did"))
       initA2.foreach(_.unpersist(blocking = false))
       initA2 = None
       levels = Vector(Level(
@@ -659,7 +651,7 @@ object Suffix {
         && !(protectLast && (levels(j).rdd eq levels.last.rdd)))
         pendingFree ::= levels(j).rdd
       if (sinceCut == 4 || j == walkLevels.head) {
-        val h = prof(s"walk j=$j")(localCheckpointHandle(stepped))
+        val h = localCheckpointHandle(stepped)
         stRdd.foreach(_.unpersist(blocking = false))
         st = h._1
         stRdd = Some(h._2)
@@ -757,7 +749,7 @@ object Suffix {
     // O(total chars) suffix-index checkpoints (see dupSpanIntervals) —
     // what stays resident is the per-doc snapshot the caller consumes
     // (the suffixRanks one-returned-snapshot contract, doc-count-sized).
-    val h = prof("spans-out")(localCheckpointHandle(out))
+    val h = localCheckpointHandle(out)
     free()
     h._1
   }
@@ -874,10 +866,10 @@ object Suffix {
     // ONE aggregate pass over the rank table serves both consumers —
     // the pair representatives and the per-rank multiplicity the span
     // arithmetic needs — checkpointed so neither recomputes it.
-    val (rstats, rstatsRdd) = prof("rstats")(localCheckpointHandle(
+    val (rstats, rstatsRdd) = localCheckpointHandle(
       sr.groupBy(col("r"))
         .agg(min(struct(col("did"), col("pos"))).as("m"),
-          count(lit(1)).as("cnt"))))
+          count(lit(1)).as("cnt")))
     val reps = rstats
       .select(col("r"), col("m.did").as("did"), col("m.pos").as("pos"))
     // adjacent-rank representative pairs fetch their cap-char slices and
@@ -897,7 +889,7 @@ object Suffix {
     val slices = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("_txt"))
     val capLen = lit(cap.toInt)
-    val (lcpByRank, lcpRdd) = prof("lcpByRank")(localCheckpointHandle(
+    val (lcpByRank, lcpRdd) = localCheckpointHandle(
       reps.select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
         .join(reps.select((col("r") - 1).as("srank"),
           col("did").as("db"), col("pos").as("pb")), Seq("srank"))
@@ -909,7 +901,7 @@ object Suffix {
           graft.functions.expressions.NativeExpressions.commonPrefixChars(
             col("_sa"),
             col("_tb").substr(col("pb").cast("int"), capLen)).as("l"))
-        .filter(col("l") >= lit(minSpan))))
+        .filter(col("l") >= lit(minSpan)))
     // rank-keyed inputs (multiplicity + up/down LCP) pre-joined into ONE
     // rank-side table so the corpus-sized sr streams through a single
     // rank join, not three — and PRUNED to the ranks that can still
@@ -930,9 +922,9 @@ object Suffix {
       .join(lcpByRank.select((col("srank") + 1).as("r"), col("l").as("ld")),
         Seq("r"), "left")
       .filter(col("m") >= 2 || col("lu").isNotNull || col("ld").isNotNull)
-    val (rankSide, rankSideRdd) = prof("rankSide")(
+    val (rankSide, rankSideRdd) = 
       org.apache.spark.sql.graftbridge.GraftBridge
-        .localCheckpointHandleSized(rankSide0))
+        .localCheckpointHandleSized(rankSide0)
     // rstats and the LCP table have no consumer beyond rankSide —
     // release them now instead of carrying three snapshots to free()
     rstatsRdd.unpersist(blocking = false)

@@ -60,16 +60,6 @@ object TextFunctions {
   /** Token count (whitespace tokenizer). */
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** BPE-ish subword-count estimate: words + punctuation runs counted
-    * separately (a cheap, deterministic proxy for tokenizer cost used to
-    * budget LLM training data).
-    */
-  def bpeishTokenCount(c: Column): Column =
-    size(
-      filter(
-        split(trim(c), "((?<=[\\p{Punct}])|(?=[\\p{Punct}]))|\\s+"),
-        t => length(t) > 0))
-
   /** Count of punctuation characters. */
   def punctCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "\\p{Punct}", ""))

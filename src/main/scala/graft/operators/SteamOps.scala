@@ -68,25 +68,36 @@ object SteamOps {
         count(col("app_id")).as("total_reviews"),
         avg(col("weighted_vote_score")).as("avg_quality"))
 
+  /** The review-bomb rule (configmap:79-92), strict on both sides: an
+    * app is flagged when negative_ratio > [[BombNegativeRatio]] AND
+    * total_reviews > [[BombMinReviews]].
+    */
+  val BombNegativeRatio: Double = 0.8
+  val BombMinReviews: Int = 10
+
+  /** Ratios and the review-bomb flag over per-app counts. */
+  private def withBombFlag(counts: DataFrame): DataFrame =
+    counts
+      .withColumn("negative_ratio", col("negative_count") / col("total_reviews"))
+      .withColumn("positive_ratio", col("positive_count") / col("total_reviews"))
+      .withColumn(
+        "is_review_bomb",
+        when(col("negative_ratio") > BombNegativeRatio &&
+          col("total_reviews") > BombMinReviews, lit(true))
+          .otherwise(lit(false)))
+
   /** Review-bomb detection (configmap:79-92; C7,C8,B6-B10): per-app
     * lifetime totals (no window, no watermark — unbounded state in the
-    * reference), conditional counts, ratios, boolean flag
-    * (negative_ratio > 0.8 AND total_reviews > 10, strict).
+    * reference), conditional counts, ratios, boolean flag.
     */
   def reviewBombAgg(reviews: DataFrame): DataFrame =
-    reviews
+    withBombFlag(reviews
       .groupBy(col("app_id"))
       .agg(
         count(lit(1)).as("total_reviews"),
         sum(when(col("recommended") === false, 1).otherwise(0)).as("negative_count"),
         sum(when(col("recommended") === true, 1).otherwise(0)).as("positive_count"),
-        avg(col("weighted_vote_score")).as("avg_quality"))
-      .withColumn("negative_ratio", col("negative_count") / col("total_reviews"))
-      .withColumn("positive_ratio", col("positive_count") / col("total_reviews"))
-      .withColumn(
-        "is_review_bomb",
-        when(col("negative_ratio") > 0.8 && col("total_reviews") > 10, lit(true))
-          .otherwise(lit(false)))
+        avg(col("weighted_vote_score")).as("avg_quality")))
 
   /** Additive partial of [[sentimentAgg]] for incremental maintenance:
     * counts and sums only (no avg), so per-batch partials merge by
@@ -128,17 +139,10 @@ object SteamOps {
     * same shape (columns, derivations, flag rule) as [[reviewBombAgg]].
     */
   def reviewBombFromPartials(partials: DataFrame): DataFrame =
-    partials
-      .select(
-        col("app_id"), col("total_reviews"), col("negative_count"),
-        col("positive_count"),
-        (col("quality_sum") / col("quality_cnt")).as("avg_quality"))
-      .withColumn("negative_ratio", col("negative_count") / col("total_reviews"))
-      .withColumn("positive_ratio", col("positive_count") / col("total_reviews"))
-      .withColumn(
-        "is_review_bomb",
-        when(col("negative_ratio") > 0.8 && col("total_reviews") > 10, lit(true))
-          .otherwise(lit(false)))
+    withBombFlag(partials.select(
+      col("app_id"), col("total_reviews"), col("negative_count"),
+      col("positive_count"),
+      (col("quality_sum") / col("quality_cnt")).as("avg_quality")))
 
   /** Genre distribution (configmap:179-185; C9,C10): explode(genres) →
     * global groupBy count. Explode drops null/empty arrays (reference

@@ -145,6 +145,25 @@ object Pipelines {
     }
   }
 
+  /** The corpus a replay-safe ingest classifies batch `batchId` against:
+    * the per-batch partitions under `dir` from batches STRICTLY before
+    * this one. A batch directory only appears complete (atomic
+    * publication), but a committed own partition re-read by its own
+    * replay would make every row "match" itself. A missing store is
+    * `empty`, and so is one whose schema cannot be inferred: a
+    * pre-atomic-publication (legacy) store can hold a crashed first
+    * write with no committed footers at all, and inference throws
+    * before the batch filter could save the replay.
+    */
+  private def priorBatches(
+      spark: SparkSession, dir: String, batchId: Long, empty: => DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) empty
+    else
+      try spark.read.parquet(dir).filter(col("batch") < batchId)
+      catch { case _: org.apache.spark.sql.AnalysisException => empty }
+  }
+
   /** Streaming incremental dedup ingest: each micro-batch is classified
     * against the corpus-so-far via
     * [[graft.functions.Dedup.incrementalDedupAgainst]], decisions land in
@@ -178,31 +197,12 @@ object Pipelines {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-        // REPLAY SAFETY: only index partitions from batches strictly
-        // before this one are corpus — a batch directory only appears
-        // complete (atomic publication below), but a COMMITTED own
-        // partition re-read by its own replay would make every doc
-        // "match" itself
-        def readIndex(sub: String, empty: => DataFrame): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(s"$stateDir/$sub")
-          if (!fs.exists(p)) empty
-          else
-            // defensive: a pre-atomic-publication (legacy) store can
-            // hold a crashed first write with no committed footers at
-            // all — schema inference then throws before the batch
-            // filter could save the replay; treat an uninferable index
-            // as empty
-            try spark.read.parquet(p.toString).filter(col("batch") < batchId)
-            catch { case _: org.apache.spark.sql.AnalysisException => empty }
-        }
         batch.persist()
         try {
-          val corpusFp = readIndex("fp",
+          val corpusFp = priorBatches(spark, s"$stateDir/fp", batchId,
             Dedup.fingerprintTable(batch.limit(0), id, text).withColumnRenamed(id, "cid"))
             .select(col("cid"), col("fp"))
-          val corpusBands = readIndex("bands",
+          val corpusBands = priorBatches(spark, s"$stateDir/bands", batchId,
             Dedup.bandTable(batch.limit(0), id, text, numHashes, bands)
               .withColumnRenamed(id, "cid"))
             .select(col("cid"), col("band"), col("bkey"))
@@ -262,23 +262,14 @@ object Pipelines {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-        def readIndex(sub: String, empty: => DataFrame): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(s"$stateDir/$sub")
-          if (!fs.exists(p)) empty
-          else
-            try spark.read.parquet(p.toString).filter(col("batch") < batchId)
-            catch { case _: org.apache.spark.sql.AnalysisException => empty }
-        }
         batch.persist()
         try {
           val (emptyVecs, emptyCodes) =
             Similarity.srpIndexTables(
               batch.limit(0), id, vec, dims, bitsPerBand, numBands)
-          val corpusVecs = readIndex("vecs", emptyVecs)
+          val corpusVecs = priorBatches(spark, s"$stateDir/vecs", batchId, emptyVecs)
             .select(col("cid"), col("v"), col("vn2"))
-          val corpusCodes = readIndex("codes", emptyCodes)
+          val corpusCodes = priorBatches(spark, s"$stateDir/codes", batchId, emptyCodes)
             .select(col("cid"), col("band"), col("bcode"))
           val decisions = Similarity
             .embedDedupAgainst(batch, corpusVecs, corpusCodes,
@@ -525,9 +516,9 @@ object Pipelines {
     * per-batch partitions are published atomically exactly once
     * ([[graft.functions.Stores.publishOnce]] — a replayed batch is a
     * no-op, and a reader never sees a half-written partition). Same
-    * corpus-view guard as [[dedupIngest]]: only store partitions with
-    * `batch < batchId` count as corpus, else a replayed batch would
-    * match its own committed chunks.
+    * corpus view as [[dedupIngest]] ([[priorBatches]]): only store
+    * partitions with `batch < batchId` count as corpus, else a replayed
+    * batch would match its own committed chunks.
     */
   def cdcIngest(
       docs: DataFrame,
@@ -542,19 +533,9 @@ object Pipelines {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-        val storePath = new org.apache.hadoop.fs.Path(s"$stateDir/chunks")
-        def emptyStore = Dedup.cdcChunkTable(batch.limit(0), id, text)
+        val store = priorBatches(spark, s"$stateDir/chunks", batchId,
+          Dedup.cdcChunkTable(batch.limit(0), id, text))
           .select(col("ch"), col("clen"))
-        val store =
-          if (!fs.exists(storePath)) emptyStore
-          else
-            try spark.read.parquet(storePath.toString)
-              .filter(col("batch") < batchId).select(col("ch"), col("clen"))
-            catch {
-              case _: org.apache.spark.sql.AnalysisException => emptyStore
-            }
         batch.persist()
         try {
           import graft.functions.Stores
@@ -730,7 +711,8 @@ object Pipelines {
     val posR = if (s.total == 0) 0.0 else s.positive.toDouble / s.total
     BombUpdate(appId, s.total, s.negative, s.positive,
       if (s.total == 0) 0.0 else s.qualitySum / s.total,
-      negR, posR, negR > 0.8 && s.total > 10)
+      negR, posR,
+      negR > SteamOps.BombNegativeRatio && s.total > SteamOps.BombMinReviews)
   }
 
   /** Bounded-state review-bomb detector: update-mode equivalent of

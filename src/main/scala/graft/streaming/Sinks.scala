@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.Stores
+
 /** Streaming sinks (SURVEY.md §2.A).
   *
   * A2 — parquet archive (cold path): Spark's built-in file sink, append
@@ -74,18 +76,7 @@ object Sinks {
       dstDir: String,
       tsCol: String,
       lanesPerDate: Int = 1): (Long, Long, Long) = {
-    def dataFiles(dir: String): Long = {
-      val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      val it = fs.listFiles(new HPath(dir), true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
-    val before = dataFiles(srcDir)
+    val before = Stores.committedDataFiles(spark, srcDir, marker = "")
     val src = spark.read.parquet(srcDir).drop("batch")
     val dated = src.withColumn("event_date", to_date(col(tsCol)))
     // count DURING the write via observe — a separate dated.count() is a
@@ -106,7 +97,8 @@ object Sinks {
       .mode("overwrite")
       .partitionBy("event_date")
       .parquet(dstDir)
-    (obs.get("rows").asInstanceOf[Long], before, dataFiles(dstDir))
+    (obs.get("rows").asInstanceOf[Long], before,
+      Stores.committedDataFiles(spark, dstDir, marker = ""))
   }
 
   /** Dataset-release writer: the final step of a training-data pipeline.
@@ -142,19 +134,8 @@ object Sinks {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .parquet(outDir)
-    def dataFiles(dir: String): Long = {
-      val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      val it = fs.listFiles(new HPath(dir), true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
-    val rows = obs.get("rows").asInstanceOf[Long]
-    (rows, dataFiles(outDir))
+    (obs.get("rows").asInstanceOf[Long],
+      Stores.committedDataFiles(spark, outDir, marker = ""))
   }
 
   /** A3 (parity flavor) — complete-mode in-memory table, reproducing the

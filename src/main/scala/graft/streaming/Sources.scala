@@ -66,11 +66,6 @@ object Sources {
     spark.readStream
       .format("text")
       .load(path)
-      .withColumnRenamed("value", "value")
-
-  /** Batch flavor of [[jsonLines]] — same shape, for archive replay. */
-  def jsonLinesBatch(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("text").load(path)
 
   // ---- A5: offline CSV samples (reference inputs/, FIXTURES.md §2) ----
 

@@ -74,11 +74,6 @@ object GraftBridge {
         while (it.hasNext) if (pred(it.next())) c += 1L
         c
       })
-    if (sys.env.contains("GRAFT_CP_EXPLAIN"))
-      println("==== CP PLAN @" + Thread.currentThread.getStackTrace
-        .drop(2).find(_.getClassName.startsWith("graft"))
-        .map(e => e.getFileName + ":" + e.getLineNumber).getOrElse("?") +
-        "\n" + cd.queryExecution.executedPlan.toString)
     val plan = org.apache.spark.sql.execution.LogicalRDD
       .fromDataset(rdd, cd, isStreaming = false)
     (org.apache.spark.sql.classic.Dataset.ofRows(spark, plan), rdd,
@@ -125,7 +120,7 @@ object GraftBridge {
     * partitioning across the lineage cut, but under AQE (Spark 4.1) the
     * rewrite comes back `UnknownPartitioning` — measured: a window over
     * `localCheckpoint(repartition(32, k))` re-exchanged its input
-    * (round-15 CpPartProbe), which silently re-shuffled every
+    * (round 15, pinned by BridgeSpec), which silently re-shuffled every
     * iterative operator's state once per round. When `hashKeys` is
     * non-empty the checkpointed plan is rebuilt with an explicit
     * `HashPartitioning(hashKeys, rdd.getNumPartitions)` and its
@@ -148,15 +143,6 @@ object GraftBridge {
     val rdd   = cd.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
     rdd.count()
-    // debug: checkpoint actions run through toRdd, outside SQL-execution
-    // tracking, so the UI's SQL tab never shows their (adaptive) plans —
-    // this env-gated dump is the only window into what each
-    // materialization actually executed
-    if (sys.env.contains("GRAFT_CP_EXPLAIN"))
-      println("==== CP PLAN @" + Thread.currentThread.getStackTrace
-        .drop(2).find(_.getClassName.startsWith("graft"))
-        .map(e => e.getFileName + ":" + e.getLineNumber).getOrElse("?") +
-        "\n" + cd.queryExecution.executedPlan.toString)
     val plan0 = org.apache.spark.sql.execution.LogicalRDD
       .fromDataset(rdd, cd, isStreaming = false)
     val plan =

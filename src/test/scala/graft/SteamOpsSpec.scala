@@ -147,4 +147,29 @@ class SteamOpsSpec extends SparkSpec {
       .toSet
     out shouldBe Set((t0, 300, 200.0), (t0 + 600, 200, 200.0))
   }
+
+  test("declared hot schemas match the aggregates that fill them (names and types)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    // nullability and metadata are not part of the serving contract
+    def shape(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        StructField(f.name, shape(f.dataType))))
+      case a: ArrayType => ArrayType(shape(a.elementType))
+      case other => other
+    }
+    def check(declared: StructType, produced: DataFrame*): Unit =
+      produced.foreach(df => shape(df.schema) shouldBe shape(declared))
+    val none = Seq.empty[String].toDF("value")
+    val reviews = SteamOps.parseReviews(none)
+    check(SteamModel.SteamReviewsHot,
+      SteamOps.sentimentAgg(reviews),
+      SteamOps.sentimentFromPartials(SteamOps.sentimentAggPartial(reviews)))
+    check(SteamModel.ReviewBombAlerts,
+      SteamOps.reviewBombAgg(reviews),
+      SteamOps.reviewBombFromPartials(SteamOps.reviewBombAggPartial(reviews)))
+    check(SteamModel.SteamChartsHot, SteamOps.genreCount(SteamOps.parseCharts(none)))
+    check(SteamModel.SteamPlayersHot,
+      SteamOps.playerWindowAgg(SteamOps.parsePlayers(none)))
+  }
 }

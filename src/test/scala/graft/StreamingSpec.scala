@@ -649,6 +649,33 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("dedupIngest: a batch re-delivered after a crash between publishes restores the same bands") {
+    val state = tmpDir("dedup_replay_state")
+    def ingestBatch0(): Unit = {
+      val in = memStream[(Long, String)]
+      val q = Pipelines
+        .dedupIngest(in.toDF().toDF("doc_id", "text"), state, tmpDir("dedup_replay_ckpt"))
+        .start()
+      try {
+        in.addData((1L, "alpha beta gamma delta"), (2L, "x y z w"))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    def bands0(): Seq[String] =
+      spark.read.parquet(s"$state/bands/batch=0").collect().map(_.toString).sorted.toSeq
+    ingestBatch0()
+    val first = bands0()
+    first should not be empty
+    // the crash: decisions/ and fp/ are published, bands/batch=0 is lost
+    val bandsDir = new org.apache.hadoop.fs.Path(s"$state/bands/batch=0")
+    bandsDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(bandsDir, true)
+    // a fresh checkpoint re-delivers the same docs as batch 0: its own
+    // fp partition must not count as corpus, or every doc matches itself
+    // and the republished bands come back empty
+    ingestBatch0()
+    bands0() shouldBe first
+  }
+
   test("bm25Ingest: streamed additive layers == the index built on the union, search bit-identical") {
     import graft.functions.Curation
     val in = memStream[(Long, String)]
@@ -1348,9 +1375,14 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("app_id", "timestamp").repartition(2)
         .write.mode("overwrite").parquet(s"$src/batch=$i")
     }
+    // a publish that died before its rename leaves a hidden temp dir
+    // beside the committed batches: spark.read.parquet skips it, and so
+    // must the file count
+    Seq(("z", ts(3, 1))).toDF("app_id", "timestamp").coalesce(1)
+      .write.mode("overwrite").parquet(s"$src/_tmp_batch_9")
     val (rows, before, after) = Sinks.compactArchive(spark, src, dst, "timestamp")
     rows shouldBe 5L
-    before shouldBe 6L // 3 batches x 2 shuffle lanes
+    before shouldBe 6L // 3 batches x 2 shuffle lanes, no temp files
     after should be < before
     val out = spark.read.parquet(dst)
     out.count() shouldBe 5L
