@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.{Checkpoints, GraftBridge}
+
 /** Benchmark main: runs every catalog query against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with total + per-query wall seconds.
   * A warm-up pass (q1_pricing) is executed first so JVM/codegen warmup and
@@ -46,7 +48,7 @@ object Bench {
     val spark = GraftSession.local("graft-bench")
 
     // warm-up: session + codegen + parquet footer caches
-    try SparkEntry.queries("q1_pricing")(spark, sfDir).count()
+    try GraftBridge.action(SparkEntry.queries("q1_pricing")(spark, sfDir).count())
     catch { case _: Throwable => () }
 
     // a throwing query reports -1 (and is listed in "failed"), never a
@@ -68,8 +70,11 @@ object Bench {
     def once(q: Queries.Q): Double = {
       val t0 = System.nanoTime()
       try {
-        q.spark(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val result = q.spark(spark, sfDir)
+        GraftBridge.action(result.write.format("noop").mode("overwrite").save())
+        val wall = (System.nanoTime() - t0) / 1e9
+        Checkpoints.release(result)
+        wall
       } catch {
         case e: Throwable =>
           // record the root cause so a failed row is diagnosable from
@@ -82,15 +87,14 @@ object Bench {
           -1.0
       }
     }
-    // between queries, free every RDD still pinned in the block manager:
-    // operators with a lazy result contract (MaxMatch vocab, Unigram
-    // refit rounds, Bpe delta state, the ivfPqProbeSweep assignment
-    // table) necessarily leave their internal localCheckpoints cached —
-    // after the query's noop materialization they are dead weight, and over a
-    // 149-query session the accumulation is a systematic, ORDER-
-    // dependent memory pressure on later queries that reads as noise.
-    // Each query is measured as an independent job on a clean block
-    // manager, which is the cluster model the numbers stand for.
+    // between queries, free every RDD still pinned in the block manager.
+    // `once` releases the checkpoints its result reads; this sweep is
+    // the owner of last resort for the rest (a checkpoint that no
+    // result reads once its operator's frame was dropped). Left cached,
+    // over a 149-query session they are a systematic, ORDER-dependent
+    // memory pressure on later queries that reads as noise. Each query
+    // is measured as an independent job on a clean block manager, which
+    // is the cluster model the numbers stand for.
     def freeStranded(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

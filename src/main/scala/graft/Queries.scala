@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 import graft.functions.{Clustering, Curation, Dedup, Similarity, TextFunctions => TF}
 import graft.operators.{Multimodal => MM, Serving, SteamOps}
@@ -4654,7 +4655,8 @@ object Queries {
     * query fixes budget = [[DsirBudget]]; the boundary-semantics spec
     * drives small budgets through the same plan.
     */
-  private[graft] def dsirSelect(s: SparkSession, d: String, budget: Long): DataFrame = {
+  private[graft] def dsirSelect(s: SparkSession, d: String, budget: Long)
+      : DataFrame = Checkpoints.scope { cp =>
       // the step the pipeline actually consumes: keep the
       // highest-weight pool docs until the training token budget is
       // hit. Scale discipline (same as q_median): NO global sort of
@@ -4673,8 +4675,7 @@ object Queries {
       // RDD (the q_unigram_refit defect, Unigram.refitStats). It is 4
       // longs per pool doc — on a real cluster this is the persisted
       // output of q_dsir_weight that selection reads back.
-      import org.apache.spark.sql.graftbridge.GraftBridge.localCheckpointHandle
-      val (scored, scoredRdd) = localCheckpointHandle(dsirScored(s, d))
+      val scored = cp.checkpoint(dsirScored(s, d))
       val hist = scored.groupBy(col("dsir_bits")).agg(
         count(lit(1)).as("n_docs"), sum(col("n_toks")).as("toks"))
       val wOrd = Window.partitionBy(lit(1)).orderBy(col("dsir_bits").desc)
@@ -4684,7 +4685,7 @@ object Queries {
       // exchange job, so a lazy cum would re-aggregate the scored
       // checkpoint once per branch (the table is |distinct dsir_bits|
       // rows — tiny; PERF.md round 13: the branch jobs drop to ~0.2 s each)
-      val (cum, cumRdd) = localCheckpointHandle(
+      val cum = cp.checkpoint(
         hist.withColumn("cum_before",
           coalesce(sum(col("toks")).over(wOrd), lit(0L))))
       val full = cum.filter(col("cum_before") + col("toks") <= budget)
@@ -4703,15 +4704,12 @@ object Queries {
         .filter(col("cum_before") + col("rcum") <= budget)
         .select(col("doc_id"), col("dsir_bits"), col("n_toks"),
           lit(true).as("at_boundary"))
-      // materialize the (budget-bounded) selection eagerly, then free
-      // the pool-scale scored checkpoint and the cum table — the
-      // dupSpans discipline: repeated calls in one session must not
-      // strand a cached snapshot per call (PERF.md round 13 measured the
-      // final union at ~0.3-0.7 s — the cleanup costs one cheap job)
-      val h = localCheckpointHandle(keptFull.unionByName(keptBoundary))
-      scoredRdd.unpersist(blocking = false)
-      cumRdd.unpersist(blocking = false)
-      h._1
+      // materialize the (budget-bounded) selection eagerly; the scope
+      // then frees the pool-scale scored checkpoint and the cum table —
+      // repeated calls in one session must not strand a cached snapshot
+      // per call (PERF.md round 13 measured the final union at
+      // ~0.3-0.7 s — the cleanup costs one cheap job)
+      cp.checkpoint(keptFull.unionByName(keptBoundary))
   }
 
   private val qDsirSelect = Q(
@@ -4888,6 +4886,13 @@ object Queries {
     * cannot drift).
     */
   val BpeMerges: Int = 8
+
+  /** The [[BpeMerges]]-round merge list of `docs`; the word table it
+    * trains on is freed with the rest of the trainer's checkpoints.
+    */
+  private def bpeMerges(docs: DataFrame): Seq[(Int, String, Long)] =
+    Checkpoints.scope(_ =>
+      graft.functions.Bpe.trainDelta(graft.functions.Bpe.wordTable(docs, "text"), BpeMerges))
 
   /** Product-quantization geometry shared by [[Similarity.pqEncode]] and
     * the DuckDB oracle mirror [[sqlPqCtes]]: 64-dim vectors split into
@@ -5347,9 +5352,7 @@ object Queries {
       // sequence equal to the naive full-recount loop, which is what
       // the oracle's unrolled CTE chain mirrors.
       import s.implicits._
-      graft.functions.Bpe.trainDelta(
-        graft.functions.Bpe.wordTable(t(s, d).documents, "text"), BpeMerges)
-        .toDF("step", "pair", "n")
+      bpeMerges(t(s, d).documents).toDF("step", "pair", "n")
     },
     Some {
       val rounds = (1 to BpeMerges).map(sqlBpeRound).mkString(",\n")
@@ -5380,7 +5383,7 @@ object Queries {
       // n_tokens falls as merges learn the corpus.
       import graft.functions.Bpe
       val docs   = t(s, d).documents
-      val merges = Bpe.trainDelta(Bpe.wordTable(docs, "text"), BpeMerges).map(_._2)
+      val merges = bpeMerges(docs).map(_._2)
       val toks = docs.select(col("doc_id"), explode(TF.tokens(col("text"))).as("w"))
       val vocab = toks.select(col("w")).distinct()
         .withColumn("r", concat(lit(" "),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Checkpoints
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -20,13 +21,16 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val result = fn(spark, sfDir)
+        result.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        Checkpoints.release(result)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free checkpoints stranded by lazy-result operators (the Bench
-      // freeStranded rationale — dead weight once the result is written)
+      // free what no result reads but is still cached (the Bench
+      // freeStranded rationale); each local checkpoint freed here logs
+      // Spark's "lineage has been truncated" WARN
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }

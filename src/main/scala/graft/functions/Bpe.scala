@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 import graft.functions.expressions.NativeExpressions
 
@@ -38,7 +39,8 @@ import graft.functions.expressions.NativeExpressions
   * replace — is map-side over vocab rows, with one pair-keyed agg for
   * the delta and a 1-row TakeOrderedAndProject collect (the only
   * driver traffic) for the argmax. Lineage is truncated per round via
-  * lazy localCheckpoint so round N never replays rounds 1..N−1.
+  * a lazy checkpoint so round N never replays rounds 1..N−1; the
+  * collected result reads none of them, so all are freed on return.
   */
 object Bpe {
 
@@ -47,12 +49,12 @@ object Bpe {
     * training loop never re-reads documents.
     */
   def wordTable(docs: DataFrame, textCol: String): DataFrame =
-    docs
+    Checkpoints.scope(_.checkpoint(docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       .select(col("f"), concat(lit(" "),
-        rtrim(regexp_replace(col("w"), "(.)", "$1  ")), lit(" ")).as("r"))
-      .localCheckpoint(eager = false)
+        rtrim(regexp_replace(col("w"), "(.)", "$1  ")), lit(" ")).as("r")),
+      eager = false))
 
   /** (pr, n) adjacent-symbol-pair counts of a word table, weighted by
     * word frequency — one map-side explode + one pair-keyed agg.
@@ -102,10 +104,10 @@ object Bpe {
   def trainDelta(
       words0: DataFrame,
       maxMerges: Int,
-      onRound: RoundProbe = NoProbe): Seq[(Int, String, Long)] = {
+      onRound: RoundProbe = NoProbe): Seq[(Int, String, Long)] = Checkpoints.scope { cp =>
     val merges = Seq.newBuilder[(Int, String, Long)]
     var cur  = words0
-    var pc   = pairCounts(cur).localCheckpoint(eager = false)
+    var pc   = cp.checkpoint(pairCounts(cur), eager = false)
     var step = 1
     var done = false
     while (step <= maxMerges && !done) {
@@ -121,14 +123,12 @@ object Bpe {
         val delta = pairCounts(affected.withColumn("r", merged(col("r"), pair)))
           .unionByName(pairCounts(affected)
             .select(col("pr"), (-col("n")).as("n")))
-        pc = pc.unionByName(delta)
+        pc = cp.checkpoint(pc.unionByName(delta)
           .groupBy(col("pr")).agg(sum(col("n")).as("n"))
-          .filter(col("n") > 0)
-          .localCheckpoint(eager = false)
-        cur = cur.withColumn("r", merged(col("r"), pair))
-          .localCheckpoint(eager = false)
+          .filter(col("n") > 0), eager = false)
+        cur = cp.checkpoint(cur.withColumn("r", merged(col("r"), pair)), eager = false)
         onRound(step, (System.nanoTime() - roundT0) / 1000000L,
-          planNodes(cur) + planNodes(pc))
+          Graph.planNodes(cur) + Graph.planNodes(pc))
         step += 1
       }
     }
@@ -139,7 +139,7 @@ object Bpe {
     * `planNodes` is the combined optimized-plan node count of the two
     * loop-carried tables (word table + pair counts). The production
     * flatness contract (spec-pinned over 64+ merges): planNodes is
-    * CONSTANT — each round's `localCheckpoint` cuts the carried plan to
+    * CONSTANT — each round's checkpoint cuts the carried plan to
     * a fixed `LogicalRDD`-rooted tree, so round N never re-plans or
     * replays rounds 1..N−1 — and wall time stays flat (it shrinks as
     * merges specialize; lineage creep would grow it exponentially).
@@ -147,9 +147,4 @@ object Bpe {
   type RoundProbe = (Int, Long, Int) => Unit
   val NoProbe: RoundProbe = (_, _, _) => ()
 
-  private def planNodes(df: DataFrame): Int = {
-    var n = 0
-    df.queryExecution.optimizedPlan.foreach(_ => n += 1)
-    n
-  }
 }

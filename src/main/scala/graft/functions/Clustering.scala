@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Duplicate-cluster construction for training-data pipelines: turn
   * pairwise near-dup evidence (from [[Dedup]] / [[Similarity]] candidates)
@@ -32,51 +33,26 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** Labels produced by [[connectedComponentsManaged]]. `labels` is
-    * backed by the final round's local checkpoint (one resident
-    * block-manager snapshot); once the result has been consumed — or
-    * copied with a write/cache of its own — call `release()` to free
-    * that snapshot. Releasing before consumption makes `labels`
-    * unrecomputable (local checkpoints truncate lineage).
-    */
-  final case class CcLabels(
-      labels: DataFrame,
-      release: () => Unit,
-      rounds: Int = 0)
-
   /** Connected components by iterative min-label propagation over an
     * undirected edge list `(a, b)`. Returns `(node, cluster_id)` where
     * `cluster_id` is the minimum node id in the component. Only nodes
     * that appear in at least one edge are returned — callers union in
     * their singleton population (see [[clustersOf]]).
     *
-    * The convergence probe is `limit(1).count()` on the changed-label
-    * set: a distributed existence check that stops at the first changed
-    * row rather than counting all of them.
+    * The convergence test counts changed labels during each round's
+    * materialization. `onRound` sees `(round, wallMillis, planNodes)`
+    * per propagation round.
     *
-    * The result stays pinned in the block manager; a long-lived driver
-    * issuing many component runs should use [[connectedComponentsManaged]]
-    * and `release()` each result after consuming it.
+    * The result reads the final round's checkpoint; free it with
+    * `Checkpoints.release` once consumed.
     */
   def connectedComponents(
       edges: DataFrame,
       a: String = "doc_a",
       b: String = "doc_b",
-      maxRounds: Int = 100): DataFrame =
-    connectedComponentsManaged(edges, a, b, maxRounds).labels
-
-  /** [[connectedComponents]] plus an explicit handle on the final
-    * checkpoint so callers can free it (ADVICE r3: repeated calls in a
-    * long session otherwise accumulate unreleasable snapshots).
-    */
-  def connectedComponentsManaged(
-      edges: DataFrame,
-      a: String = "doc_a",
-      b: String = "doc_b",
-      maxRounds: Int = 100): CcLabels = {
-    import org.apache.spark.sql.graftbridge.GraftBridge.{
-      localCheckpointHandle, localCheckpointHandleCounting}
-    val (sym, symRdd) = localCheckpointHandle(
+      maxRounds: Int = 100,
+      onRound: Graph.RoundProbe = Graph.NoProbe): DataFrame = Checkpoints.scope { cp =>
+    val sym = cp.checkpoint(
       edges
         .select(col(a).as("src"), col(b).as("dst"))
         .union(edges.select(col(b).as("src"), col(a).as("dst")))
@@ -87,7 +63,7 @@ object Clustering {
     // common clique-shaped duplicate component in ONE loop round — the
     // propagation fixpoint is the component min for any init whose
     // labels stay inside the component, which node ids trivially do
-    var (labels, labelsRdd) = localCheckpointHandle(
+    var labels = cp.checkpoint(
       sym
         .groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("nbr_min"))
@@ -95,6 +71,7 @@ object Clustering {
     var converged = false
     var rounds = 0
     while (!converged) {
+      val t0 = System.nanoTime()
       rounds += 1
       // with pointer jumping, rounds grow like log2(diameter): hitting
       // this guard means a cycle in the driver logic, not a deep graph
@@ -123,7 +100,7 @@ object Clustering {
       // job-count-bound gate SFs). The changed flag is computed in-plan
       // as a null-safe boolean (ordinal 2), so the count stays correct
       // for any node-id type.
-      val (next, nextRdd, changed) = localCheckpointHandleCounting(
+      val (next, changed) = cp.checkpointCounting(
         viaEdges
           .join(
             labels.select(col("node").as("lab"), col("lab").as("lab2")),
@@ -136,46 +113,27 @@ object Clustering {
       converged = changed == 0L
       // `next` is materialized and the convergence probe has run — the
       // prior round's block-manager copy has no remaining reader
-      labelsRdd.unpersist(blocking = false)
+      cp.release(labels)
       labels = next.select(col("node"), col("lab"))
-      labelsRdd = nextRdd
+      onRound(rounds, (System.nanoTime() - t0) / 1000000L,
+        if (onRound eq Graph.NoProbe) 0 else Graph.planNodes(labels))
     }
-    symRdd.unpersist(blocking = false)
-    // the returned frame is backed by the final round's checkpoint (one
-    // resident snapshot); it stays cached until the caller releases it
-    val finalRdd = labelsRdd
-    CcLabels(
-      labels.select(col("node"), col("lab").as("cluster_id")),
-      () => { finalRdd.unpersist(blocking = false); () },
-      rounds)
+    labels.select(col("node"), col("lab").as("cluster_id"))
   }
 
   /** Cluster assignment for a full document population: every row of
     * `docs` gets a `cluster_id` (min doc id of its component; its own id
-    * if it shares no edge) and the component's `cluster_size`.
-    *
-    * The component labels ride on a pinned local checkpoint that lives
-    * until the session ends (fine for a one-shot job). A long-lived
-    * driver looping over many cluster runs should use
-    * [[clustersOfManaged]] and `release()` each result after consuming
-    * it — the returned frame is lazy, so release only after the last
-    * action over it.
+    * if it shares no edge) and the component's `cluster_size`. The lazy
+    * result reads the component-label checkpoint.
     */
   def clustersOf(docs: DataFrame, edges: DataFrame, id: String): DataFrame =
-    clustersOfManaged(docs, edges, id).labels
-
-  /** [[clustersOf]] plus the component-label checkpoint's release handle
-    * (see [[CcLabels]]); the handle frees the one block-manager snapshot
-    * the whole lazy result is rooted in.
-    */
-  def clustersOfManaged(docs: DataFrame, edges: DataFrame, id: String): CcLabels = {
-    val cc = connectedComponentsManaged(edges)
-    val assigned = docs
-      .join(cc.labels.withColumnRenamed("node", id), Seq(id), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col(id)))
-    val sizes = assigned.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    CcLabels(assigned.join(sizes, Seq("cluster_id")), cc.release, cc.rounds)
-  }
+    Checkpoints.scope { _ =>
+      val assigned = docs
+        .join(connectedComponents(edges).withColumnRenamed("node", id), Seq(id), "left")
+        .withColumn("cluster_id", coalesce(col("cluster_id"), col(id)))
+      val sizes = assigned.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
+      assigned.join(sizes, Seq("cluster_id"))
+    }
 
   /** One canonical document per cluster: highest `prefCol` wins, ties
     * broken by smallest doc id — a deterministic total order, so the

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 import graft.functions.expressions.NativeExpressions
 
@@ -70,7 +71,7 @@ object Graph {
       iters: Int,
       dampingBp: Long = DefaultDampingBp,
       scale: Long = DefaultScale,
-      onRound: RoundProbe = NoProbe): DataFrame = {
+      onRound: RoundProbe = NoProbe): DataFrame = Checkpoints.scope { cp =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampingBp >= 0 && dampingBp <= 10000,
       s"dampingBp must be in [0, 10000], got $dampingBp")
@@ -87,7 +88,6 @@ object Graph {
       .union(edges.select(col("dst").as("node"))).distinct()
     val teleport = ((10000L - dampingBp) * scale) / 10000L
     var ranks = nodes.select(col("node"), lit(scale).as("rk"))
-    var prevSnapshot: org.apache.spark.rdd.RDD[_] = null
     for (i <- 1 to iters) {
       val t0 = System.nanoTime()
       val inflow = ew
@@ -106,7 +106,7 @@ object Graph {
       // (a `LogicalRDD` root every window), so iteration N never
       // replays more than the current window and analyzer cost never
       // grows super-linearly (spec-pinned at 18 iterations). Cuts are
-      // EAGER and the predecessor snapshot is unpersisted as soon as
+      // EAGER and the predecessor snapshot is released as soon as
       // the new window lands (the Suffix/Clustering discipline), so at
       // most TWO node-rank snapshots (one row per node each) are ever
       // resident regardless of iteration count. Trade-off of
@@ -114,11 +114,10 @@ object Graph {
       // recomputable after executor loss — acceptable for an iterative
       // refinement whose remedy is rerunning the bounded loop.
       if (i % CheckpointEvery == 0) {
-        val (cut, rdd) =
-          org.apache.spark.sql.graftbridge.GraftBridge.localCheckpointHandle(ranks)
+        val cut = cp.checkpoint(ranks)
+        // the window just cut reads the predecessor snapshot, nothing else
+        cp.release(ranks)
         ranks = cut
-        if (prevSnapshot != null) prevSnapshot.unpersist(blocking = false)
-        prevSnapshot = rdd
       }
       onRound(i, (System.nanoTime() - t0) / 1000000L,
         if (onRound eq NoProbe) 0 else planNodes(ranks))
@@ -138,7 +137,7 @@ object Graph {
   type RoundProbe = (Int, Long, Int) => Unit
   val NoProbe: RoundProbe = (_, _, _) => ()
 
-  private def planNodes(df: DataFrame): Int = {
+  private[functions] def planNodes(df: DataFrame): Int = {
     var n = 0
     df.queryExecution.optimizedPlan.foreach(_ => n += 1)
     n

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** WordPiece-style greedy longest-match-first ("MaxMatch") subword
   * tokenizer (Wu et al., GNMT '16 §4.1 — the BERT inference-time
@@ -41,14 +42,13 @@ object MaxMatch {
     * explode + word agg.
     */
   def wordTable(docs: DataFrame, textCol: String): DataFrame =
-    docs
+    // EAGER: consumers reach this through broadcast subtrees (the
+    // induced vocab is broadcast into the piece-match join), and a lazy
+    // checkpoint re-runs the corpus explode once per reaching broadcast
+    // branch (the Unigram.refitStats defect)
+    Checkpoints.scope(_.checkpoint(docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      // EAGER: consumers reach this through broadcast subtrees (the
-      // induced vocab is broadcast into the piece-match join), and a
-      // lazy checkpoint re-runs the corpus explode once per reaching
-      // broadcast branch (the Unigram.refitStats defect)
-      .localCheckpoint(eager = true)
+      .groupBy(col("w")).agg(count(lit(1)).as("f"))))
 
   /** The induced piece vocabulary: all single chars ∪ top-`k` n-grams
     * (2..`maxLen`) by weighted count desc, gram asc. One column `gram`.

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Vector-similarity search over an embedding column (`array<float>`).
   *
@@ -104,7 +105,7 @@ object Similarity {
     * plan-unrolled rounds (anti-join + max-sim aggregate + per-query
     * top-`pickBatch` window, the [[graft.functions.Graph.pageRank]]
     * unrolling idiom; each round's selection is checkpointed and its
-    * predecessor freed, so the plan stays round-local). Queries are
+    * predecessor released, so the plan stays round-local). Queries are
     * independent — the greedy is sequential in rounds but parallel
     * across queries. `pickBatch = 1` (default) is the exact greedy;
     * larger batches hold the DRIVER ROUND LATENCY flat as k grows (the
@@ -122,11 +123,10 @@ object Similarity {
       n: Int,
       k: Int,
       lambdaBp: Int = 7000,
-      pickBatch: Int = 1): DataFrame = {
+      pickBatch: Int = 1): DataFrame = Checkpoints.scope { cp =>
     require(n >= 1 && k >= 1 && k <= n, s"need 1 <= k <= n, got k=$k n=$n")
     require(lambdaBp >= 0 && lambdaBp <= 10000, s"lambdaBp in [0,10000], got $lambdaBp")
     require(pickBatch >= 1, s"pickBatch must be >= 1, got $pickBatch")
-    import org.apache.spark.sql.graftbridge.GraftBridge.localCheckpointHandle
     val muBp = 10000 - lambdaBp
 
     val cands0 = knnCosine(queries, corpus, id, vec, n)
@@ -135,76 +135,59 @@ object Similarity {
     val cv = corpus.select(col(id).as("neighbor_id"), toDouble(col(vec)).as("nv"))
     // bounded candidate list broadcasts onto the corpus scan to pick up
     // vectors; from here on every frame is |queries|·n (or ·n²) rows.
-    // Every intermediate checkpoint is freed on every path (try/finally);
-    // the RETURNED frame is itself one bounded (|queries|·k rows)
-    // checkpoint — callers that loop re-ranks should drop it when done
-    // (the Bench/Verify mains sweep stranded checkpoints between queries)
-    val (cands, candsRdd) = localCheckpointHandle(
+    // The RETURNED frame is one bounded (|queries|·k rows) checkpoint.
+    val cands = cp.checkpoint(
       cv.join(broadcast(cands0), Seq("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"), col("rel_sc"), col("nv")))
-    var selRdd: org.apache.spark.rdd.RDD[_] = null
-    try {
-      val a = cands.select(col("query_id"), col("neighbor_id").as("a"), col("nv").as("av"))
-      val b = cands.select(col("query_id"), col("neighbor_id").as("b"), col("nv").as("bv"))
-      val (pairs, pairsRdd) = localCheckpointHandle(
-        a.join(b, "query_id")
-          .filter(col("a") =!= col("b"))
-          .select(col("query_id"), col("a"), col("b"),
-            round(round(cosine(col("av"), col("bv")), 4) * 10000)
-              .cast("long").as("sim_sc")))
-      try {
-        val byScore = Window.partitionBy(col("query_id"))
-          .orderBy(col("score_sc").desc, col("neighbor_id"))
-        // pickBatch = 1 IS the paper's greedy (each pick sees every
-        // earlier pick's redundancy). pickBatch = b > 1 trades that for
-        // round count: the top b marginal scorers are taken per round,
-        // and picks WITHIN a round do not see each other's similarity —
-        // a documented approximation (the PERF round-15 knee: at k = 64
-        // the greedy's 63 driver-sequenced rounds cost +40% per pick
-        // from checkpoint churn alone; b = k/8 holds rounds, and
-        // per-pick wall, ~constant). Ranks stay 1‥k in round-major,
-        // score-desc order, b = 1 reproduces greedy exactly (spec).
-        def pick(scored: DataFrame, baseRank: Int, take: Int): DataFrame = scored
-          .withColumn("score_sc",
-            lit(lambdaBp.toLong) * col("rel_sc") - lit(muBp.toLong) * col("maxsim_sc"))
-          .withColumn("_rn", row_number().over(byScore))
-          .filter(col("_rn") <= take)
-          .select(col("query_id"),
-            (lit(baseRank.toLong) + col("_rn")).as("mmr_rank"),
-            col("neighbor_id"), col("rel_sc"), col("maxsim_sc"), col("score_sc"))
+    val a = cands.select(col("query_id"), col("neighbor_id").as("a"), col("nv").as("av"))
+    val b = cands.select(col("query_id"), col("neighbor_id").as("b"), col("nv").as("bv"))
+    val pairs = cp.checkpoint(
+      a.join(b, "query_id")
+        .filter(col("a") =!= col("b"))
+        .select(col("query_id"), col("a"), col("b"),
+          round(round(cosine(col("av"), col("bv")), 4) * 10000)
+            .cast("long").as("sim_sc")))
+    val byScore = Window.partitionBy(col("query_id"))
+      .orderBy(col("score_sc").desc, col("neighbor_id"))
+    // pickBatch = 1 IS the paper's greedy (each pick sees every
+    // earlier pick's redundancy). pickBatch = b > 1 trades that for
+    // round count: the top b marginal scorers are taken per round,
+    // and picks WITHIN a round do not see each other's similarity —
+    // a documented approximation (the PERF round-15 knee: at k = 64
+    // the greedy's 63 driver-sequenced rounds cost +40% per pick
+    // from checkpoint churn alone; b = k/8 holds rounds, and
+    // per-pick wall, ~constant). Ranks stay 1‥k in round-major,
+    // score-desc order, b = 1 reproduces greedy exactly (spec).
+    def pick(scored: DataFrame, baseRank: Int, take: Int): DataFrame = scored
+      .withColumn("score_sc",
+        lit(lambdaBp.toLong) * col("rel_sc") - lit(muBp.toLong) * col("maxsim_sc"))
+      .withColumn("_rn", row_number().over(byScore))
+      .filter(col("_rn") <= take)
+      .select(col("query_id"),
+        (lit(baseRank.toLong) + col("_rn")).as("mmr_rank"),
+        col("neighbor_id"), col("rel_sc"), col("maxsim_sc"), col("score_sc"))
 
-        var picked = math.min(pickBatch, k)
-        val first = localCheckpointHandle(
-          pick(cands.withColumn("maxsim_sc", lit(0L)), 0, picked))
-        var sel = first._1
-        selRdd = first._2
-        while (picked < k) {
-          val take = math.min(pickBatch, k - picked)
-          val rem = cands
-            .join(sel.select(col("query_id"), col("neighbor_id")),
-              Seq("query_id", "neighbor_id"), "left_anti")
-          val ms = rem
-            .join(pairs
-              .join(sel.select(col("query_id"), col("neighbor_id").as("b")),
-                Seq("query_id", "b"))
-              .select(col("query_id"), col("a").as("neighbor_id"), col("sim_sc")),
-              Seq("query_id", "neighbor_id"))
-            .groupBy(col("query_id"), col("neighbor_id"), col("rel_sc"))
-            .agg(max(col("sim_sc")).as("maxsim_sc"))
-          val (nextSel, nextRdd) = localCheckpointHandle(
-            sel.unionByName(pick(ms, picked, take)))
-          selRdd.unpersist()
-          sel = nextSel
-          selRdd = nextRdd
-          picked += take
-        }
-        val (out, _) = localCheckpointHandle(sel)
-        out
-      } finally pairsRdd.unpersist()
-    } finally {
-      if (selRdd != null) selRdd.unpersist()
-      candsRdd.unpersist()
+    var picked = math.min(pickBatch, k)
+    var sel = cp.checkpoint(pick(cands.withColumn("maxsim_sc", lit(0L)), 0, picked))
+    while (picked < k) {
+      val take = math.min(pickBatch, k - picked)
+      val rem = cands
+        .join(sel.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_anti")
+      val ms = rem
+        .join(pairs
+          .join(sel.select(col("query_id"), col("neighbor_id").as("b")),
+            Seq("query_id", "b"))
+          .select(col("query_id"), col("a").as("neighbor_id"), col("sim_sc")),
+          Seq("query_id", "neighbor_id"))
+        .groupBy(col("query_id"), col("neighbor_id"), col("rel_sc"))
+        .agg(max(col("sim_sc")).as("maxsim_sc"))
+      val nextSel = cp.checkpoint(sel.unionByName(pick(ms, picked, take)))
+      cp.release(sel)
+      sel = nextSel
+      picked += take
     }
+    cp.checkpoint(sel)
   }
 
   /** Embedding-level eval-set decontamination: for every corpus vector,
@@ -609,15 +592,15 @@ object Similarity {
       threshold: Double,
       dims: Int = 64,
       numCells: Int = 0,
-      iters: Int = 2): DataFrame = {
+      iters: Int = 2): DataFrame = Checkpoints.scope { cp =>
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
     // the assignment is referenced three times (both sides of the
     // within-cell pair join + the final keep/left join) — checkpoint it
     // so it is computed once, exactly as production would persist the
     // cell-partitioned assignment before the verify
-    val asg = cellAssignments(corpus, id, vec, dims, cells, iters)
-      .localCheckpoint(eager = false)
+    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells, iters),
+      eager = false)
     val a = asg.select(
       col("cid").as("doc_a"), col("cell"),
       col("v").as("va"), col("vn2").as("na"))
@@ -694,7 +677,7 @@ object Similarity {
       dims: Int = 64,
       numCells: Int = 0,
       iters: Int = 2,
-      maxHamming: Int = -1): DataFrame = {
+      maxHamming: Int = -1): DataFrame = Checkpoints.scope { cp =>
     require(threshold >= 0.8,
       s"SRP-code prefiltering is only recall-safe at high thresholds " +
         s"(got $threshold): below ~0.8 the boundary-pair Hamming band " +
@@ -711,10 +694,9 @@ object Similarity {
       }
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
-    val asg = cellAssignments(corpus, id, vec, dims, cells, iters)
+    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells, iters)
       .withColumn("code", graft.functions.expressions.NativeExpressions
-        .srpBank(col("v"), dims, bitsPerBand, numBands))
-      .localCheckpoint(eager = false)
+        .srpBank(col("v"), dims, bitsPerBand, numBands)), eager = false)
     val a = asg.select(col("cid").as("doc_a"), col("cell"), col("code").as("ca"))
     val b = asg.select(col("cid").as("doc_b"), col("cell"), col("code").as("cb"))
     val ham = (1 to numBands)
@@ -1775,7 +1757,7 @@ object Similarity {
       codesPerSub: Int = 16,
       pqIters: Int = 2,
       numCells: Int = 16,
-      ivfIters: Int = 2): DataFrame = {
+      ivfIters: Int = 2): DataFrame = Checkpoints.scope { cp =>
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
     val sub   = dims / numSub
@@ -1785,8 +1767,9 @@ object Similarity {
     // both quantizers trained concurrently (see [[trainIvfAndPq]])
     val (localCn, books) = trainIvfAndPq(
       corpus, id, vec, dims, numCells, ivfIters, numSub, codesPerSub, pqIters)
-    val codes = encodeWithModel(corpus, localCn, books, id, vec)
-      .localCheckpoint(eager = false) // one assignment+encode pass for all arms
+    // one assignment+encode pass for all arms
+    val codes = cp.checkpoint(encodeWithModel(corpus, localCn, books, id, vec),
+      eager = false)
 
     // full probe ranking once; each arm is a prn-prefix of it
     val qs = queries.select(
@@ -1818,9 +1801,8 @@ object Similarity {
       }: _*),
       probeSchema)
 
-    val full = scoreProbed(codes, probeDfUpTo(numCells), numSub, k)
-      .select(col("qid"), col("neighbor_id"))
-      .localCheckpoint(eager = false)
+    val full = cp.checkpoint(scoreProbed(codes, probeDfUpTo(numCells), numSub, k)
+      .select(col("qid"), col("neighbor_id")), eager = false)
     probeArms.map { p =>
       scoreProbed(codes, probeDfUpTo(p), numSub, k)
         .select(col("qid"), col("neighbor_id"))
@@ -2325,12 +2307,11 @@ object Similarity {
       batch: DataFrame,
       id: String,
       vec: String,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame = Checkpoints.scope { cp =>
     val localCn = readSemanticModel(spark, indexDir)
     requireCurrentModel(spark, indexDir,
       centroidVersion(localCn), "semanticDedupIncremental", "assign")
-    val bAsg = assignWithModel(batch, id, vec, localCn)
-      .localCheckpoint(eager = false)
+    val bAsg = cp.checkpoint(assignWithModel(batch, id, vec, localCn), eager = false)
     bAsg.agg(min(col("cid"))).head() match {
       case r if !r.isNullAt(0) =>
         requireAppendOnlyIds(spark, indexDir, r.getLong(0),

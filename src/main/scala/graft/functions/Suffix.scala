@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{Checkpoints, GraftBridge}
 
 /** Distributed suffix-array construction by prefix doubling
   * (Manber & Myers, SIAM J. Comput. 1993; the sort/rank formulation used
@@ -81,8 +82,6 @@ import org.apache.spark.sql.functions._
   */
 object Suffix {
 
-  import org.apache.spark.sql.graftbridge.GraftBridge.localCheckpointHandle
-
   /** Hash-repartition with an EXPLICIT partition count (the session's
     * `spark.sql.shuffle.partitions`, i.e. the conf the driver/cluster
     * operator sizes): a bare `repartition(col)` leaves the count to AQE,
@@ -103,12 +102,8 @@ object Suffix {
       : DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, c)
 
-  private type CpRdd =
-    org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
-
   private final case class Level(
       df: DataFrame, // (did, pos, r): rank of the prefix of length `len`
-      rdd: CpRdd,
       len: Long)
 
   private val MaxDom = BigInt(Long.MaxValue)
@@ -142,12 +137,15 @@ object Suffix {
     */
   /** `materializeLast = false` skips the final dense level's checkpoint
     * (and its did repartition): the level df becomes the rank+offset
-    * plan over the cached bucket state, with `Level.rdd` = that bucket
-    * snapshot. ONLY sound for callers that consume the level once —
-    * a second consumption would recompute the rank window (correct but
-    * paid twice).
+    * plan over the cached bucket state. ONLY sound for callers that
+    * consume the level once — a second consumption would recompute the
+    * rank window (correct but paid twice).
+    *
+    * Every checkpoint belongs to `cp`; superseded ones are released as
+    * the ladder climbs, and the caller's scope frees the rest.
     */
   private def build(
+      cp: Checkpoints,
       docs: DataFrame,
       id: String,
       text: String,
@@ -192,10 +190,6 @@ object Suffix {
       df.withColumn("r", dense_rank().over(Window.orderBy(col("g")))
         .cast("long") - 1)
     var levels = Vector.empty[Level]
-    // keepLevels=false: the tiny cached alphabet table, freed as soon as
-    // the first downstream checkpoint has materialized the chain over it
-    var initA2: Option[CpRdd] = None
-    var lastCp: Option[CpRdd] = None
     var docLen = 0L
     var n = 0L
     var dom: BigInt = BigInt(1)
@@ -211,30 +205,27 @@ object Suffix {
         .select(col("g").as("g1"), col("r").as("r_1"))
       val a2 = ranked2(a2base)
         .select(col("g").as("g2"), col("r").as("r_2"))
-      val init = localCheckpointHandle(
+      val init = cp.checkpoint(
         posed.withColumn("g1", expr("substring(g2, 1, 1)"))
           .join(broadcast(a1), Seq("g1"))
           .join(broadcast(a2), Seq("g2"))
           .select(col("did"), col("pos"), col("r_1"), col("r_2")),
         Seq("did"))
-      val init2df =
-        init._1.select(col("did"), col("pos"), col("r_2").as("r"))
+      val init2df = init.select(col("did"), col("pos"), col("r_2").as("r"))
       levels = Vector(
-        Level(init._1.select(col("did"), col("pos"), col("r_1").as("r")),
-          init._2, 1L),
-        Level(init2df, init._2, 2L))
+        Level(init.select(col("did"), col("pos"), col("r_1").as("r")), 1L),
+        Level(init2df, 2L))
       // ONE tiny probe job over the cached init table: longest document
       // (loop bound), total characters (the bound every densify round
       // re-compresses ranks below), and the TRUE |2-grams| — deciding
       // combine capacity off the real 2-gram domain instead of the safe
       // bound n usually buys two extra combines before the first densify
-      val pr = init._1.agg(
-        max(col("pos")), count(lit(1)), max(col("r_2"))).head
+      val pr = GraftBridge.action(init.agg(
+        max(col("pos")), count(lit(1)), max(col("r_2"))).head)
       docLen = if (pr.isNullAt(0)) 0L else pr.getLong(0)
       n = pr.getLong(1)
       dom = BigInt(if (pr.isNullAt(2)) 1L else math.max(pr.getLong(2) + 1L, 1L))
       cur = init2df.withColumnRenamed("r", "r0")
-      lastCp = Some(init._2)
     } else {
       // no kept levels ⇒ the init table has exactly ONE consumer (the
       // combine-window chain into the first densify), so materializing
@@ -246,15 +237,15 @@ object Suffix {
       // single-partition ranking window already assumes): dom is a ~ms
       // count over the cache, and the broadcast build in the first
       // action reads the cache instead of re-running explode+distinct.
-      val st = base.agg(
+      val st = GraftBridge.action(base.agg(
         max(length(col("txt"))).cast("long"),
-        sum(length(col("txt"))).cast("long")).head
+        sum(length(col("txt"))).cast("long")).head)
       docLen = if (st.isNullAt(0)) 0L else st.getLong(0)
       n = if (st.isNullAt(1)) 0L else st.getLong(1)
-      val (a2, a2Rdd) = localCheckpointHandle(
+      // released once the first densify has materialized the chain over it
+      val a2 = cp.checkpoint(
         ranked2(a2base).select(col("g").as("g2"), col("r").as("r_2")))
-      initA2 = Some(a2Rdd)
-      dom = BigInt(math.max(a2.count(), 1L))
+      dom = BigInt(math.max(GraftBridge.action(a2.count()), 1L))
       cur = posed
         .join(broadcast(a2), Seq("g2"))
         .select(col("did"), col("pos"), col("r_2").as("r0"))
@@ -369,7 +360,7 @@ object Suffix {
               s"packed intermediate rank domain $packedDom overflows int64 " +
                 s"(n=$n, buckets=$buckets) — lower the bucket count")
             dom = packedDom
-            localCheckpointHandle(
+            cp.checkpoint(
               repartitionFixed(
                 repartitionFixed(
                   keyed.withColumn("bkt", expr(s"r0 DIV $blockSize")),
@@ -381,7 +372,7 @@ object Suffix {
               Seq("did"))
           } else {
             dom = BigInt(nn)
-            val (kb, kbRdd) = localCheckpointHandle(
+            val kb = cp.checkpoint(
               repartitionFixed(
                 keyed.withColumn("bkt", expr(s"r0 DIV $blockSize")),
                 col("bkt")),
@@ -400,41 +391,37 @@ object Suffix {
               .select(col("bkt"), col("off"))
             val outCols = carryCols :+ (col("off") + col("rk") - 1).as("r0")
             if (materializeLast) {
-              val hh = localCheckpointHandle(
+              val hh = cp.checkpoint(
                 repartitionFixed(
                   rk.join(broadcast(offs), Seq("bkt")).select(outCols: _*),
                   col("did")),
                 Seq("did"))
-              kbRdd.unpersist(blocking = false)
+              cp.release(kb)
               hh
             } else {
               // single-consumption callers ([[suffixRanks]],
               // [[adjacentLcpCapped]]) read the dense level exactly ONCE:
               // its full-table copy+cache — and the did repartition no
               // such consumer needs — are pure overhead. The level df is
-              // the rank+offset plan over the cached bucket state;
-              // Level.rdd is the kb snapshot, so the caller's existing
-              // release path frees exactly what is resident.
-              (rk.join(broadcast(offs), Seq("bkt")).select(outCols: _*),
-                kbRdd)
+              // the rank+offset plan over the cached bucket state, so
+              // the kb snapshot is what stays resident.
+              rk.join(broadcast(offs), Seq("bkt")).select(outCols: _*)
             }
           }
-        if (!keepLevels) lastCp.foreach(_.unpersist(blocking = false))
-        initA2.foreach(_.unpersist(blocking = false))
-        initA2 = None
+        // without kept levels, the previous densify's table (or, on the
+        // first densify, the alphabet table) has no reader left
+        if (!keepLevels) cp.release(keyed)
         // every pending combine level materialized with this action:
         // emit each as a projection view of the one checkpointed table
         levels = levels ++ pending.map { case (nm, len) =>
-          Level(h._1.select(col("did"), col("pos"), col(nm).as("r")),
-            h._2, len)
+          Level(h.select(col("did"), col("pos"), col(nm).as("r")), len)
         }
         pending = Vector.empty
         curMaterialized = true
         width = 1
-        cur = h._1.select(col("did"), col("pos"), col("r0"))
+        cur = h.select(col("did"), col("pos"), col("r0"))
         levels = levels :+ Level(
-          h._1.select(col("did"), col("pos"), col("r0").as("r")), h._2, 2 * k)
-        lastCp = Some(h._2)
+          h.select(col("did"), col("pos"), col("r0").as("r")), 2 * k)
       }
       k *= 2
     }
@@ -442,12 +429,9 @@ object Suffix {
     // never materialized anything — checkpoint the init chain so the
     // returned level still honors the cached-snapshot contract
     if (levels.isEmpty) {
-      val h = localCheckpointHandle(
-        repartitionFixed(cur, col("did")), Seq("did"))
-      initA2.foreach(_.unpersist(blocking = false))
-      initA2 = None
-      levels = Vector(Level(
-        h._1.select(col("did"), col("pos"), col("r0").as("r")), h._2, 2L))
+      val h = cp.checkpoint(repartitionFixed(cur, col("did")), Seq("did"))
+      cp.release(cur)
+      levels = Vector(Level(h.select(col("did"), col("pos"), col("r0").as("r")), 2L))
     }
     levels
   }
@@ -470,10 +454,11 @@ object Suffix {
       docs: DataFrame,
       id: String,
       text: String,
-      buckets: Int = 512): DataFrame =
-    build(docs, id, text, buckets, keepLevels = false,
+      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
+    build(cp, docs, id, text, buckets, keepLevels = false,
       materializeLast = false).last.df
       .select(col("did").as(id), col("pos"), col("r").as("srank"))
+  }
 
   /** The LCP table over rank-ADJACENT suffixes — the dedup half of the
     * index: a substring of length ≥ L occurs twice in the corpus iff
@@ -497,7 +482,7 @@ object Suffix {
     * two equi-joins of the pair table against that level's rank table
     * on (doc, pos+acc) — ~log₂ maxLen levels, pair count < distinct
     * suffix count, everything hash-partitioned; lineage is cut every
-    * few levels and levels are freed as soon as the walk state has
+    * few levels and levels are released as soon as the walk state has
     * materialized past them.
     *
     * `maxLcp` caps the walk: only levels of length ≤ maxLcp are
@@ -514,11 +499,11 @@ object Suffix {
       id: String,
       text: String,
       buckets: Int = 512,
-      maxLcp: Long = Long.MaxValue): DataFrame = {
+      maxLcp: Long = Long.MaxValue): DataFrame = Checkpoints.scope { cp =>
     require(maxLcp >= 1, s"maxLcp must be >= 1, got $maxLcp")
-    val levels = build(docs, id, text, buckets, keepLevels = true,
+    val levels = build(cp, docs, id, text, buckets, keepLevels = true,
       keepUpTo = maxLcp)
-    lcpWalk(levels, repsOf(levels.last.df), maxLcp, protectLast = false)._1
+    lcpWalk(cp, levels, repsOf(levels.last.df), maxLcp)
   }
 
   /** [[adjacentLcp]] with the LCP CLAMPED at `maxLcp` — the shape a
@@ -540,22 +525,19 @@ object Suffix {
       id: String,
       text: String,
       maxLcp: Long,
-      buckets: Int = 512): DataFrame = {
+      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
     require(maxLcp >= 1 && maxLcp <= Int.MaxValue,
       s"maxLcp must be in [1, Int.MaxValue], got $maxLcp")
     // the rank table has exactly one consumer here (the repsOf
-    // aggregate, checkpointed below) — lazy final level
-    val levels = build(docs, id, text, buckets, keepLevels = false,
+    // aggregate, checkpointed below) — lazy final level, freed by the
+    // scope since the result reads only the representatives
+    val levels = build(cp, docs, id, text, buckets, keepLevels = false,
       materializeLast = false)
-    val sr = levels.last.df
     // the per-rank representative is consumed TWICE (both sides of the
     // adjacent-rank self-join) — checkpoint it once, or the analyzer's
     // self-join expr-id dedup re-instantiates the aggregate (and its
     // corpus-sized exchange) per side
-    val (reps, _) = localCheckpointHandle(repsOf(sr))
-    // the rank table is consumed by nothing else — release it as soon
-    // as the representative snapshot has materialized
-    levels.last.rdd.unpersist(blocking = false)
+    val reps = cp.checkpoint(repsOf(levels.last.df))
     val slices = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("_txt"))
     val capLen = lit(maxLcp.toInt)
@@ -587,25 +569,18 @@ object Suffix {
 
   /** The LCP walk over kept doubling levels (semantics documented at
     * [[adjacentLcp]]). `reps` is the per-rank representative table
-    * (schema (r, did, pos), one row per rank — [[repsOf]] or a
-    * projection of a richer per-rank aggregate). With `protectLast` the
-    * final rank level's checkpoint — and any level sharing its table —
-    * survives the walk's freeing discipline, for callers ([[dupSpans]])
-    * that keep consuming the rank table after the walk.
+    * (schema (r, did, pos), one row per rank).
     */
   private def lcpWalk(
+      cp: Checkpoints,
       levels: Seq[Level],
       reps: DataFrame,
-      maxLcp: Long,
-      protectLast: Boolean): (DataFrame,
-      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]) = {
+      maxLcp: Long): DataFrame = {
     val pairs = reps
       .select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
       .join(reps.select((col("r") - 1).as("srank"),
         col("did").as("db"), col("pos").as("pb")), Seq("srank"))
     var st = pairs.withColumn("acc", lit(0L))
-    var stRdd: Option[org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow]] = None
     // the top level (len >= maxLen) can never fire: agreement there
     // needs either `len` remaining equal chars (suffixes are shorter —
     // except two full-length identical docs, whose suffixes share a
@@ -617,11 +592,6 @@ object Suffix {
       (if (levels.size >= 2) levels.indices.dropRight(1) else levels.indices)
         .filter(i => levels(i).len <= maxLcp)
     var sinceCut = 0
-    // levels consumed since the last lineage cut: their checkpointed
-    // RDDs are unrecomputable, so they may only be freed once a
-    // DOWNSTREAM checkpoint has materialized the walk state past them
-    var pendingFree = List.empty[
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
     for (j <- walkLevels.reverse) {
       val ell = levels(j).len
       val la = levels(j).df.select(
@@ -643,36 +613,19 @@ object Suffix {
       // fine per-action depth and cuts the materialize jobs to a
       // quarter)
       sinceCut += 1
-      // the 1-gram and 2-gram levels are views over one shared cached
-      // table: only free an RDD once no LOWER (still-unconsumed) level
-      // references it; under `protectLast`, a table hosting the final
-      // rank level is never freed here
-      if (!levels.indices.take(j).exists(i => levels(i).rdd eq levels(j).rdd)
-        && !(protectLast && (levels(j).rdd eq levels.last.rdd)))
-        pendingFree ::= levels(j).rdd
       if (sinceCut == 4 || j == walkLevels.head) {
-        val h = localCheckpointHandle(stepped)
-        stRdd.foreach(_.unpersist(blocking = false))
-        st = h._1
-        stRdd = Some(h._2)
+        val next = cp.checkpoint(stepped)
+        // the state is materialized past the levels walked since the
+        // last cut: release them with the previous state — except a
+        // table that a LOWER, still-unwalked level shares (the 1-gram
+        // and 2-gram levels are views over one cached table)
+        cp.release(stepped, keep = levels.take(j).map(_.df))
+        st = next
         sinceCut = 0
-        pendingFree.foreach(_.unpersist(blocking = false))
-        pendingFree = Nil
       } else st = stepped
     }
-    // final sweep: every level table is consumed by now (the last walk
-    // cut materialized the state past all of them, and `reps` was
-    // materialized with the first cut) — unpersist is idempotent, so
-    // re-freeing walked levels is a no-op and cap-skipped tables that
-    // no walked level shares are released here. Under `protectLast`
-    // the final rank level's table stays resident for the caller
-    // (the suffixRanks contract: one returned cached snapshot).
-    levels.map(_.rdd).distinct
-      .filterNot(r => protectLast && (r eq levels.last.rdd))
-      .foreach(_.unpersist(blocking = false))
-    (st.select(col("srank"), col("da").as("doc_a"), col("pa").as("pos_a"),
-      col("db").as("doc_b"), col("pb").as("pos_b"), col("acc").as("lcp")),
-      stRdd)
+    st.select(col("srank"), col("da").as("doc_a"), col("pa").as("pos_a"),
+      col("db").as("doc_b"), col("pb").as("pos_b"), col("acc").as("lcp"))
   }
 
   /** Per-document duplicated-REGION accounting — the decision step the
@@ -734,8 +687,8 @@ object Suffix {
       text: String,
       minSpan: Long,
       cap: Long = 64L,
-      buckets: Int = 512): DataFrame = {
-    val (spans, free) = dupSpanIntervals(docs, id, text, minSpan, cap, buckets)
+      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
+    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap, buckets)
     val perDoc = spans.groupBy(col("did"))
       .agg(count(lit(1)).as("dup_spans"),
         sum(col("e") - col("s")).as("dup_chars"))
@@ -745,13 +698,10 @@ object Suffix {
       .select(col("did").as(id), col("n_chars"),
         coalesce(col("dup_spans"), lit(0L)).as("dup_spans"),
         coalesce(col("dup_chars"), lit(0L)).as("dup_chars"))
-    // materialize the ONE-ROW-PER-DOC result eagerly, then free the
-    // O(total chars) suffix-index checkpoints (see dupSpanIntervals) —
-    // what stays resident is the per-doc snapshot the caller consumes
-    // (the suffixRanks one-returned-snapshot contract, doc-count-sized).
-    val h = localCheckpointHandle(out)
-    free()
-    h._1
+    // materialize the ONE-ROW-PER-DOC result eagerly; the scope then
+    // frees the O(total chars) suffix-index checkpoints — what stays
+    // resident is the doc-count-sized snapshot the caller consumes
+    cp.checkpoint(out)
   }
 
   /** The transformation [[dupSpans]] accounts for: rebuild each document
@@ -781,8 +731,8 @@ object Suffix {
       minSpan: Long,
       cap: Long = 64L,
       buckets: Int = 512,
-      scrubbedCol: String = "text_scrubbed"): DataFrame = {
-    val (spans, free) = dupSpanIntervals(docs, id, text, minSpan, cap, buckets)
+      scrubbedCol: String = "text_scrubbed"): DataFrame = Checkpoints.scope { cp =>
+    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap, buckets)
     val iv = spans.groupBy(col("did"))
       .agg(sort_array(collect_list(struct(
         col("s").cast("long").as("s"), col("e").cast("long").as("e"))))
@@ -813,26 +763,24 @@ object Suffix {
         col(scrubbedCol))
     // same eager-materialize-then-free discipline as dupSpans; the
     // resident snapshot is doc-count rows of scrubbed text
-    val h = localCheckpointHandle(out)
-    free()
-    h._1
+    cp.checkpoint(out)
   }
 
   /** Merged duplicated-span intervals per document — the shared core of
     * [[dupSpans]] (accounting) and [[scrubDupSpans]] (transformation).
     * Returns the LAZY (did, s, e) interval table (s 1-based inclusive, e
-    * exclusive; intervals disjoint and maximal within a doc) plus a free
-    * callback releasing the O(total chars) suffix-index checkpoints —
-    * the caller MUST eagerly materialize its consumption of the interval
-    * table (its own local checkpoint) before invoking the callback.
+    * exclusive; intervals disjoint and maximal within a doc), which
+    * reads O(total chars) suffix-index checkpoints owned by `cp` — the
+    * caller materializes its consumption before its scope exits.
     */
   private def dupSpanIntervals(
+      cp: Checkpoints,
       docs: DataFrame,
       id: String,
       text: String,
       minSpan: Long,
       cap: Long,
-      buckets: Int): (DataFrame, () => Unit) = {
+      buckets: Int): DataFrame = {
     require(minSpan >= 1, s"minSpan must be >= 1, got $minSpan")
     require(cap >= minSpan, s"cap ($cap) must be >= minSpan ($minSpan) — " +
       "the capped union argument needs a length-minSpan interval to fit " +
@@ -860,13 +808,13 @@ object Suffix {
     // pass over every position) and halves the final densify's
     // rank-tuple width through the bucket shuffle (guide §2.3,
     // narrower types / fewer bytes).
-    val levels = build(docs, id, text, buckets, keepLevels = false,
+    val levels = build(cp, docs, id, text, buckets, keepLevels = false,
       maxPrefix = cap)
-    val sr = levels.last.df // (did, pos, r) — checkpoint freed below
+    val sr = levels.last.df // (did, pos, r)
     // ONE aggregate pass over the rank table serves both consumers —
     // the pair representatives and the per-rank multiplicity the span
     // arithmetic needs — checkpointed so neither recomputes it.
-    val (rstats, rstatsRdd) = localCheckpointHandle(
+    val rstats = cp.checkpoint(
       sr.groupBy(col("r"))
         .agg(min(struct(col("did"), col("pos"))).as("m"),
           count(lit(1)).as("cnt")))
@@ -889,7 +837,7 @@ object Suffix {
     val slices = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("_txt"))
     val capLen = lit(cap.toInt)
-    val (lcpByRank, lcpRdd) = localCheckpointHandle(
+    val lcpByRank = cp.checkpoint(
       reps.select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
         .join(reps.select((col("r") - 1).as("srank"),
           col("did").as("db"), col("pos").as("pb")), Seq("srank"))
@@ -922,13 +870,10 @@ object Suffix {
       .join(lcpByRank.select((col("srank") + 1).as("r"), col("l").as("ld")),
         Seq("r"), "left")
       .filter(col("m") >= 2 || col("lu").isNotNull || col("ld").isNotNull)
-    val (rankSide, rankSideRdd) = 
-      org.apache.spark.sql.graftbridge.GraftBridge
-        .localCheckpointHandleSized(rankSide0)
+    val rankSide = cp.checkpoint(rankSide0, sized = true)
     // rstats and the LCP table have no consumer beyond rankSide —
-    // release them now instead of carrying three snapshots to free()
-    rstatsRdd.unpersist(blocking = false)
-    lcpRdd.unpersist(blocking = false)
+    // release them now instead of carrying three snapshots to the end
+    cp.release(rankSide0)
     val docLens = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), length(col(text)).cast("long").as("len"))
     val per = sr
@@ -941,7 +886,7 @@ object Suffix {
           coalesce(col("lu"), lit(0L)),
           coalesce(col("ld"), lit(0L))).as("dlen"))
     val ordered = Window.partitionBy(col("did")).orderBy(col("pos"))
-    val spans = per.filter(col("dlen") >= minSpan)
+    per.filter(col("dlen") >= minSpan)
       .select(col("did"), col("pos"), (col("pos") + col("dlen")).as("e"))
       .withColumn("pe",
         max(col("e")).over(ordered.rowsBetween(Window.unboundedPreceding, -1)))
@@ -951,11 +896,5 @@ object Suffix {
       .groupBy(col("did"), col("grp"))
       .agg(min(col("pos")).as("s"), max(col("e")).as("e2"))
       .select(col("did"), col("s"), col("e2").as("e"))
-    val free = () => {
-      levels.last.rdd.unpersist(blocking = false)
-      rankSideRdd.unpersist(blocking = false)
-      ()
-    }
-    (spans, free)
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Unigram-LM subword tokenizer (Kudo, ACL'18 — the SentencePiece
   * `unigram` model): segmentation picks the GLOBALLY cheapest piece
@@ -324,7 +325,8 @@ object Unigram {
     * usage-fitted model never costs more than the seed on the corpus
     * it was fitted to.
     */
-  def refitStats(docs: DataFrame, textCol: String, k: Int, maxLen: Int): DataFrame = {
+  def refitStats(docs: DataFrame, textCol: String, k: Int, maxLen: Int)
+      : DataFrame = Checkpoints.scope { cp =>
     // Every multiply-referenced intermediate is checkpointed EAGERLY.
     // Lazy (eager=false) checkpoints looked equivalent but were a ~40×
     // wall-clock defect at vocab diversity (measured 65 s vs ~10 s at
@@ -335,27 +337,27 @@ object Unigram {
     // of once. Eager materialization pins each table before anything
     // downstream references it.
     val words = MaxMatch.wordTable(docs, textCol) // checkpoints internally
-    val seed  = vocabScored(words, k, maxLen)
-      .localCheckpoint(eager = true) // read by model2 derivation + collect
-    val seg0 = wordPieces(words, seed, maxLen)
-      .localCheckpoint(eager = true) // read by usage recount + round-0 stats
+    // read by model2 derivation + collect
+    val seed = cp.checkpoint(vocabScored(words, k, maxLen))
+    // read by usage recount + round-0 stats
+    val seg0 = cp.checkpoint(wordPieces(words, seed, maxLen))
     // M-step: usage-weighted piece counts; keep unused single chars at
     // count 1 (coverage), prune unused multi-grams
     val used = seg0
       .select(col("f"), explode(col("pieces")).as("gram"))
       .groupBy(col("gram")).agg(sum(col("f")).as("cnt"))
     val tot2 = used.agg(sum(col("cnt")).as("t"))
-    val model2 = seed.select(col("gram"))
+    // read by seg1's collect + round-1 stats
+    val model2 = cp.checkpoint(seed.select(col("gram"))
       .join(used, Seq("gram"), "left")
       .filter(col("cnt").isNotNull || length(col("gram")) === 1)
       .select(col("gram"), coalesce(col("cnt"), lit(1L)).as("cnt"))
       .crossJoin(broadcast(tot2))
       .select(col("gram"),
         ((length(expr("bin(t)")) - length(expr("bin(cnt)"))).cast("long") *
-          1024L + 1L).as("cost"))
-      .localCheckpoint(eager = true) // read by seg1's collect + round-1 stats
-    val seg1 = wordPieces(words, model2, maxLen)
-      .localCheckpoint(eager = true) // read by round-1 cost + used-piece count
+          1024L + 1L).as("cost")))
+    // read by round-1 cost + used-piece count
+    val seg1 = cp.checkpoint(wordPieces(words, model2, maxLen))
     def stats(round: Int, model: DataFrame, seg: DataFrame): DataFrame = {
       // corpus cost: Σ_w f(w) · Σ_{piece uses} surp(piece). The DP
       // total already IS that sum under the model that produced the

@@ -1,15 +1,33 @@
 package org.apache.spark.sql.graftbridge
 
+import scala.collection.mutable
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.util.CallSite
 
 /** Column ⇄ Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`); this
   * object lives under `org.apache.spark.sql` to re-export them to the
   * graft expression package — the standard piggyback for libraries that
   * ship native Catalyst expressions.
+  *
+  * It also holds the one lineage cut every iterative operator uses
+  * ([[checkpoint]]), reachable only through a [[Checkpoints]] scope.
+  * The ownership rule, stated once: '''a scope owns every checkpoint
+  * made through it, and when its block exits — normally or by
+  * exception — it frees every one the block's result does not read'''
+  * ("reads" = reachable from the `LogicalRDD` leaves of the result's
+  * plan through RDD dependencies). What the result reads passes to the
+  * enclosing scope on the same thread, or, at the outermost scope, to
+  * the caller, who frees it with [[Checkpoints.release]] once the frame
+  * is consumed. No operator holds an RDD handle.
   */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -25,149 +43,225 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df.localCheckpoint(eager = true)` that also hands back the backing
-    * RDD so iterative algorithms can `unpersist` superseded rounds —
-    * `Dataset.localCheckpoint` alone gives the caller no handle to free
-    * the block-manager copy, so loops leak one cached round per
-    * iteration. Same mechanics as `Dataset.checkpoint(reliable=false)`:
-    * copy rows (they are reused mutable buffers), cut lineage, cache,
-    * materialize eagerly.
+  /** `df.localCheckpoint(eager)` with the call-site arguments iterative
+    * operators need. Same mechanics as `Dataset.localCheckpoint`: under
+    * a new SQL execution id, copy rows (they are reused mutable
+    * buffers), cut lineage, cache, and (if `eager`) materialize — as an
+    * [[action]], so all its stages read `checkpoint at
+    * Suffix.scala:<line>`. `own` receives the cached RDD BEFORE it
+    * materializes, so a failed materialization is still freed.
     *
-    * The checkpointed DataFrame is built with `LogicalRDD.fromDataset`
-    * — the same call `Dataset.checkpoint` uses — so the executed plan's
-    * output PARTITIONING and ORDERING survive the lineage cut. An
-    * iterative operator that keeps its state hash-partitioned on a
-    * stable key (e.g. [[graft.functions.Suffix]] on the document id)
-    * therefore pays zero exchanges for per-round window/aggregate
-    * passes over that key; the old `internalCreateDataFrame` form
-    * erased the metadata and forced a re-shuffle every round.
+    * The plan is built with `LogicalRDD.fromDataset` (what
+    * `Dataset.checkpoint` uses). Eager-only options:
     *
-    * The returned DataFrame is NOT recomputable once its RDD is
-    * unpersisted (lineage was cut) — only unpersist a round after its
-    * successor has been materialized and nothing else references it.
+    *   - `hashKeys` DECLARES `HashPartitioning(hashKeys, numPartitions)`
+    *     and attaches the measured size. `fromDataset` is documented to
+    *     carry the partitioning across the cut, but under AQE (Spark 4.1)
+    *     it comes back `UnknownPartitioning` — measured: a window over
+    *     `localCheckpoint(repartition(32, k))` re-exchanged its input
+    *     (pinned by BridgeSpec). CONTRACT: the input plan must end in an
+    *     EXPLICIT-COUNT `repartition(n, hashKeys...)` — AQE never
+    *     coalesces those, so the layout really is `hash(keys) % n`.
+    *     Declaring keys over an ENSURE_REQUIREMENTS (or bare
+    *     `repartition(col)`) exchange is UNSOUND: coalescing merges
+    *     adjacent buckets and downstream joins/aggregates would skip a
+    *     required shuffle.
+    *   - `sized` attaches the MEASURED block-manager size as the plan's
+    *     statistics. Broadcast decisions over a cut table otherwise run
+    *     on the origin plan's estimates, which for a filtered or
+    *     aggregated intermediate can be orders of magnitude too large.
+    *   - `countWhere` counts the rows matching a predicate during the
+    *     materializing job (exact: `runJob`, not an accumulator), for
+    *     convergence tests over a round's own output. It sees the row in
+    *     the frame's column order. Without it the count is all rows
+    *     (−1 when lazy).
     */
-  def localCheckpointHandle(
-      df: DataFrame): (DataFrame, RDD[org.apache.spark.sql.catalyst.InternalRow]) =
-    localCheckpointHandle(df, Nil)
-
-  /** [[localCheckpointHandle]] that folds a row-count predicate into the
-    * one materialization action: returns the checkpointed frame, its
-    * backing RDD, and the number of rows matching `pred` — for iterative
-    * operators whose convergence test is a per-row predicate over the
-    * round's own output ([[graft.functions.Clustering]]'s changed-label
-    * probe), which otherwise costs a separate job per round. The count
-    * rides `sparkContext.runJob` over the same action that populates the
-    * cache, so it is exact (no accumulator retry caveats). `pred` sees
-    * the checkpointed row in the DataFrame's column order.
-    */
-  def localCheckpointHandleCounting(
+  private[graftbridge] def checkpoint(
       df: DataFrame,
-      pred: org.apache.spark.sql.catalyst.InternalRow => Boolean)
-      : (DataFrame, RDD[org.apache.spark.sql.catalyst.InternalRow], Long) = {
+      hashKeys: Seq[String],
+      sized: Boolean,
+      countWhere: Option[InternalRow => Boolean],
+      eager: Boolean,
+      own: RDD[InternalRow] => Unit): (DataFrame, Long) = {
+    require(eager || (hashKeys.isEmpty && !sized && countWhere.isEmpty),
+      "hash keys, measured size and row counts need an eager checkpoint")
     val cd    = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val spark = cd.sparkSession
-    val rdd   = cd.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val counts = spark.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var c = 0L
-        while (it.hasNext) if (pred(it.next())) c += 1L
-        c
-      })
-    val plan = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, cd, isStreaming = false)
-    (org.apache.spark.sql.classic.Dataset.ofRows(spark, plan), rdd,
-      counts.sum)
+    val sc    = spark.sparkContext
+    val missing = hashKeys.filterNot(cd.columns.contains)
+    require(missing.isEmpty, s"checkpoint: declared hash key " +
+      s"${missing.mkString("'", "', '", "'")} not in output " +
+      cd.columns.mkString("[", ", ", "]"))
+    action(SQLExecution.withNewExecutionId(cd.queryExecution, Some("checkpoint")) {
+      val rdd = cd.queryExecution.toRdd.map(_.copy())
+      rdd.localCheckpoint()
+      own(rdd)
+      val count =
+        if (!eager) -1L
+        else countWhere match {
+          case None => rdd.count()
+          case Some(pred) =>
+            sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+              var c = 0L
+              while (it.hasNext) if (pred(it.next())) c += 1L
+              c
+            }).sum
+        }
+      val lr = LogicalRDD.fromDataset(rdd, cd, isStreaming = false)
+        .asInstanceOf[LogicalRDD]
+      val stats =
+        if (hashKeys.isEmpty && !sized) None
+        else sc.getRDDStorageInfo.find(_.id == rdd.id)
+          .map(i => i.memSize + i.diskSize).filter(_ > 0L)
+          .map(b => Statistics(sizeInBytes = BigInt(b)))
+      val plan =
+        if (hashKeys.nonEmpty)
+          lr.copy(outputPartitioning = HashPartitioning(
+            hashKeys.map(k => lr.output.find(_.name == k).get),
+            rdd.getNumPartitions))(spark, stats, None)
+        else if (stats.nonEmpty) lr.copy()(spark, stats, None)
+        else lr
+      (org.apache.spark.sql.classic.Dataset.ofRows(spark, plan), count)
+    })
   }
 
-  /** [[localCheckpointHandle]] that also attaches the MEASURED
-    * block-manager size of the cached copy as the checkpointed plan's
-    * statistics (no partitioning declared). Catalyst's broadcast
-    * decisions over a lineage-cut table otherwise run on the ORIGIN
-    * plan's estimates, which for a filtered/aggregated intermediate can
-    * be orders of magnitude too large — with the real size attached,
-    * a small intermediate auto-broadcasts (guide §3.1) and a large one
-    * keeps the shuffle join, with no hard-coded hint either way.
+  /** Runs the driver action `body` under the caller's call site (source
+    * line), so the shuffle-map stages adaptive execution submits for it
+    * on other threads are named after that line (`action at
+    * Suffix.scala:<line>`) instead of the generic `CompletableFuture`.
     */
-  def localCheckpointHandleSized(
-      df: DataFrame): (DataFrame, RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val cd    = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val spark = cd.sparkSession
-    val rdd   = cd.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    rdd.count()
-    val lr = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, cd, isStreaming = false)
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val bytes = spark.sparkContext.getRDDStorageInfo
-      .find(_.id == rdd.id)
-      .map(i => i.memSize + i.diskSize)
-      .filter(_ > 0L)
-    val stats = bytes.map(b =>
-      org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(b)))
-    val plan =
-      if (stats.isEmpty) lr
-      else lr.copy()(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        stats, None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(spark, plan), rdd)
+  def action[T](body: => T): T = {
+    val sc        = org.apache.spark.SparkContext.getActive.get
+    val prevShort = sc.getLocalProperty(CallSite.SHORT_FORM)
+    val prevLong  = sc.getLocalProperty(CallSite.LONG_FORM)
+    sc.setCallSite(sc.getCallSite())
+    try body
+    finally {
+      sc.setLocalProperty(CallSite.SHORT_FORM, prevShort)
+      sc.setLocalProperty(CallSite.LONG_FORM, prevLong)
+    }
+  }
+}
+
+/** An owner of local checkpoints (see [[GraftBridge]] for the rule).
+  * Obtained only from [[Checkpoints.scope]].
+  */
+final class Checkpoints private () {
+  private val owned = mutable.LinkedHashMap.empty[Int, RDD[_]]
+
+  /** Eager (default) or lazy lineage cut of `df`, owned by this scope. */
+  def checkpoint(
+      df: DataFrame,
+      hashKeys: Seq[String] = Nil,
+      sized: Boolean = false,
+      eager: Boolean = true): DataFrame = {
+    val out = GraftBridge.checkpoint(df, hashKeys, sized, None, eager, own)._1
+    // a lazy cut drops its lineage once it materializes: remember what it
+    // reads now, so that releasing it later still frees those too
+    if (!eager) Checkpoints.lazyInputs.put(owned.last._1, Checkpoints.cuts(df))
+    out
   }
 
-  /** [[localCheckpointHandle]] with a DECLARED hash partitioning.
-    *
-    * `fromDataset` is documented to carry the executed plan's output
-    * partitioning across the lineage cut, but under AQE (Spark 4.1) the
-    * rewrite comes back `UnknownPartitioning` — measured: a window over
-    * `localCheckpoint(repartition(32, k))` re-exchanged its input
-    * (round 15, pinned by BridgeSpec), which silently re-shuffled every
-    * iterative operator's state once per round. When `hashKeys` is
-    * non-empty the checkpointed plan is rebuilt with an explicit
-    * `HashPartitioning(hashKeys, rdd.getNumPartitions)` and its
-    * statistics are the MEASURED block-manager size of the cached copy.
-    *
-    * CONTRACT: the caller must guarantee the input plan ends in an
-    * EXPLICIT-COUNT `repartition(n, hashKeys...)` — AQE never coalesces
-    * explicit-count repartitions, so the physical layout really is
-    * `hash(keys) % n`. Declaring keys over an ENSURE_REQUIREMENTS (or
-    * bare `repartition(col)`) exchange is UNSOUND: AQE's coalescing
-    * merges adjacent hash buckets and the layout is no longer a
-    * HashPartitioning — downstream joins/aggregates would silently skip
-    * a required shuffle and produce wrong results.
-    */
-  def localCheckpointHandle(
+  /** Eager cut that also returns how many rows match `countWhere`. */
+  def checkpointCounting(
       df: DataFrame,
-      hashKeys: Seq[String]): (DataFrame, RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val cd    = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val spark = cd.sparkSession
-    val rdd   = cd.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    rdd.count()
-    val plan0 = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, cd, isStreaming = false)
-    val plan =
-      if (hashKeys.isEmpty) plan0
-      else {
-        val lr = plan0.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-        val attrs = hashKeys.map(k =>
-          lr.output.find(_.name == k).getOrElse(sys.error(
-            s"localCheckpointHandle: declared hash key '$k' not in output " +
-              lr.output.map(_.name).mkString("[", ", ", "]"))))
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(attrs, rdd.getNumPartitions)
-        // measured size of the cached copy — better than the origin
-        // plan's estimate, and it keeps broadcast decisions sane
-        val bytes = spark.sparkContext.getRDDStorageInfo
-          .find(_.id == rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
-        val stats = bytes.map(b =>
-          org.apache.spark.sql.catalyst.plans.logical.Statistics(
-            sizeInBytes = BigInt(b)))
-        lr.copy(outputPartitioning = part)(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          stats, None)
+      countWhere: InternalRow => Boolean): (DataFrame, Long) =
+    GraftBridge.checkpoint(df, Nil, sized = false, Some(countWhere), eager = true, own)
+
+  /** Frees now the checkpoints of this scope that `df` reads and none of
+    * `keep` reads — for a superseded round inside a loop. Only sound
+    * once nothing still to be computed reads them.
+    */
+  def release(df: DataFrame, keep: Seq[DataFrame] = Nil): Unit = {
+    val live = keep.flatMap(Checkpoints.reads).toSet
+    Checkpoints.reads(df).filterNot(live).flatMap(owned.remove)
+      .foreach(Checkpoints.free)
+  }
+
+  private def own(rdd: RDD[InternalRow]): Unit = owned(rdd.id) = rdd
+}
+
+object Checkpoints {
+  // the innermost open scope of this thread: a nested scope hands what
+  // its result reads to it. Not inheritable — a pool thread spawned
+  // inside a scope must not adopt it.
+  private val current = new ThreadLocal[Checkpoints]
+
+  // lazy cut id → the checkpoints its input read when it was made
+  private val lazyInputs =
+    new java.util.concurrent.ConcurrentHashMap[Int, Set[Int]]
+
+  /** Runs `body` with a fresh owner and, on exit, frees every checkpoint
+    * it made that `body`'s result does not read. The result may be a
+    * frame, or tuples/collections of frames.
+    */
+  def scope[T](body: Checkpoints => T): T = {
+    val cp     = new Checkpoints
+    val parent = current.get
+    current.set(cp)
+    var result: Option[T] = None
+    try {
+      result = Some(body(cp))
+      result.get
+    } finally {
+      current.set(parent)
+      val live = result.fold(Set.empty[Int])(readsAny)
+      val (kept, dead) = cp.owned.partition { case (id, _) => live(id) }
+      dead.values.foreach(free)
+      if (parent != null) parent.owned ++= kept
+    }
+  }
+
+  /** Frees every local checkpoint `df` reads — for the caller that owns
+    * an operator's result, once it has consumed it.
+    */
+  def release(df: DataFrame): Unit = {
+    val persistent = df.sparkSession.sparkContext.getPersistentRDDs
+    reads(df).filter(persistent.contains).foreach(i => free(persistent(i)))
+  }
+
+  // ids of the local checkpoints a frame reads: `cuts`, closed over what
+  // each lazy cut read when it was made
+  private def reads(df: DataFrame): Set[Int] = {
+    var all = cuts(df)
+    var frontier = all
+    while (frontier.nonEmpty) {
+      frontier = frontier.flatMap(i => Option(lazyInputs.get(i)).getOrElse(Set.empty[Int])) -- all
+      all ++= frontier
+    }
+    all
+  }
+
+  // the local checkpoints reachable from a plan's LogicalRDD leaves
+  // through RDD dependencies (a lazy cut not yet materialized still
+  // depends on its inputs)
+  private def cuts(df: DataFrame): Set[Int] = {
+    val seen = mutable.Map.empty[Int, RDD[_]]
+    def walk(r: RDD[_]): Unit =
+      if (!seen.contains(r.id)) {
+        seen(r.id) = r
+        r.dependencies.foreach(d => walk(d.rdd))
       }
-    (org.apache.spark.sql.classic.Dataset.ofRows(spark, plan), rdd)
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+      .analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd }
+      .foreach(walk)
+    seen.collect { case (id, r) if r.checkpointData.exists(
+      _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]) => id }.toSet
+  }
+
+  private def readsAny(x: Any): Set[Int] = x match {
+    case df: org.apache.spark.sql.Dataset[_] => reads(df.toDF())
+    case p: Product  => p.productIterator.flatMap(readsAny).toSet
+    case i: Iterable[_] => i.iterator.flatMap(readsAny).toSet
+    case _ => Set.empty
+  }
+
+  // `RDD.unpersist` warns on every locally checkpointed RDD that its
+  // lineage cannot be recomputed; a scope frees only what nothing it
+  // returns reads, so that hazard is ruled out here and the warning is
+  // left to the per-query sweeps, where it marks a stranded checkpoint
+  private def free(r: RDD[_]): Unit = {
+    lazyInputs.remove(r.id)
+    r.sparkContext.unpersistRDD(r.id, blocking = false)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 import graft.functions.Bpe
 
@@ -43,6 +44,18 @@ class BpeSpec extends SparkSpec {
       .filter(col("doc_id") < 60)
     val w = Bpe.wordTable(d, "text")
     Bpe.trainDelta(w, 6) shouldBe Bpe.trainNaive(w, 6)
+  }
+
+  test("delta trainer leaves no checkpoint cached: its collected result reads none") {
+    // each round cuts the pair counts and the word table lazily; the
+    // returned merge list is plain data, so every cut is freed on return
+    val w = Bpe.wordTable(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val merges = Bpe.trainDelta(w, 16)
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+    merges shouldBe Bpe.trainNaive(w, 16)
+    Checkpoints.release(w)
   }
 
   test("delta trainer stays flat over 64+ merges: constant plan size, no wall-time creep") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 import graft.functions.Clustering
 
@@ -37,12 +38,14 @@ class ClusteringSpec extends SparkSpec {
       a <- 0L to 4L; b <- (a + 1) to 4L
     } yield (a + 100L, b + 100L)
     val two = clique ++ Seq((500L, 501L), (501L, 502L), (500L, 502L))
-    val cc = Clustering.connectedComponentsManaged(edges(two: _*))
-    val labs = cc.labels.as[(Long, Long)].collect().toMap
+    var rounds = 0
+    val cc = Clustering.connectedComponents(edges(two: _*),
+      onRound = (r, _, _) => rounds = r)
+    val labs = cc.as[(Long, Long)].collect().toMap
     labs(104L) shouldBe 100L
     labs(502L) shouldBe 500L
-    cc.rounds shouldBe 1
-    cc.release()
+    rounds shouldBe 1
+    Checkpoints.release(cc)
   }
 
   test("connectedComponents merges components connected through a bridge") {

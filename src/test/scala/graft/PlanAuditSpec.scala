@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -13,30 +12,7 @@ import org.scalatest.matchers.should.Matchers
   */
 class PlanAuditSpec extends AnyFunSuite with Matchers {
 
-  /** The catalog assumes the product session (GraftExtensions for the
-    * range-join rewrite, nanosAsLong for the events table); the shared
-    * TestSpark session predates both, so audit under a sibling session
-    * on the same context, defaults restored after.
-    */
-  private def withGraftSession[A](body: SparkSession => A): A = {
-    TestSpark.spark // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    try body(s)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(TestSpark.spark)
-      SparkSession.setActiveSession(TestSpark.spark)
-    }
-  }
+  import TestSpark.withGraftSession
 
   private val quadraticBaselines = Set(
     "q_embed_neardup" // bounded exhaustive ground truth for q_neardup_banded

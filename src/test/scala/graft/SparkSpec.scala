@@ -20,6 +20,31 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The catalog assumes the product session (GraftExtensions for the
+    * range-join rewrite, nanosAsLong for the events table); the shared
+    * TestSpark session predates both, so catalog specs run under a sibling session
+    * on the same context, defaults restored after.
+    */
+  def withGraftSession[A](body: SparkSession => A): A = {
+    TestSpark.spark // ensure the shared context exists first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    try body(s)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(TestSpark.spark)
+      SparkSession.setActiveSession(TestSpark.spark)
+    }
+  }
 }
 
 trait SparkSpec extends AnyFunSuite with Matchers {
