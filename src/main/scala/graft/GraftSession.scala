@@ -26,7 +26,7 @@ object GraftSession {
       // a SUBSET of the keys (e.g. iterative state kept hash(doc_id)
       // while joining on (doc_id, pos)): Spark 4 defaults this to true
       // purely as a skew conservatism; the engine's iterative operators
-      // ([[graft.functions.Suffix]], the LCP walk) partition on the
+      // ([[graft.functions.Suffix]]'s ladder) partition on the
       // high-cardinality document id where subset reuse is safe and
       // saves one full shuffle per round — skewed single-key hotspots
       // are still covered by AQE skew handling above

@@ -4114,10 +4114,8 @@ object Queries {
       // is the operational span threshold a dedup consumer queries at
       // (and keeps the oracle's brute-force per-character probe
       // affordable), so the query consumes the CLAMPED LCP — which the
-      // capped operator computes by direct slice comparison, with no
-      // level walk and no kept levels (adjacentLcpCapped's doc; output
-      // spec-pinned identical to the walk + least(lcp, cap), and the
-      // uncapped walk stays spec-pinned vs Scala brute force)
+      // operator computes by direct slice comparison (adjacentLcpCapped's
+      // doc; full rows spec-pinned vs a Scala brute force at every cap)
       graft.functions.Suffix.adjacentLcpCapped(
         t(s, d).documents.filter(col("doc_id") < SuffixMaxDoc),
         "doc_id", "text", maxLcp = LcpCap)
@@ -4147,13 +4145,13 @@ object Queries {
 
   private val MinSpan = 20L
 
-  /** [[qDupSpans]]'s walk cap. The merged-region union is provably
+  /** [[qDupSpans]]'s LCP cap. The merged-region union is provably
     * cap-INVARIANT for any cap ≥ minSpan (Suffix.dupSpans scaladoc;
     * spec-pinned cap-invariance), so the span-accounting query takes
-    * the cheapest admissible cap: 32 halves the 2·cap rank-truncation
-    * horizon vs [[LcpCap]]'s 64 and drops one doubling + one walk
-    * round — output bit-identical (oracle-green at sf0.01 and sf0.1
-    * with the oracle run at the same cap); clean-boot wall in
+    * the cheapest admissible cap: 32 halves the rank-truncation
+    * horizon vs [[LcpCap]]'s 64 and drops one doubling round — output
+    * bit-identical (oracle-green at sf0.01 and sf0.1 with the oracle
+    * run at the same cap); clean-boot wall in
     * BENCH_local_r15_sf0.1.json.
     * [[LcpCap]] stays 64 for [[qSuffixLcp]], whose OUTPUT (the capped
     * LCP values themselves) genuinely depends on the cap.
@@ -4211,8 +4209,8 @@ object Queries {
     (s, d) =>
       // the CONSUMER of the suffix index: dupLen(p) = max(neighbor-rank
       // LCPs, full length if the rank has >=2 members), region = merged
-      // union of [p, p+dupLen) over dupLen >= MinSpan. The walk runs
-      // capped at LcpCap — exact for the union as long as cap >= minSpan
+      // union of [p, p+dupLen) over dupLen >= MinSpan. The LCP is capped
+      // at DupSpanCap — exact for the union as long as cap >= minSpan
       // (see Suffix.dupSpans's doc). The 5000-doc bound = the WHOLE
       // table at the gate SF 0.1 (full-corpus criterion, r13 verdict);
       // see the slice note above SuffixSpanMaxDoc for why sharding was

@@ -39,8 +39,9 @@ import graft.functions.expressions.NativeExpressions
   * replace — is map-side over vocab rows, with one pair-keyed agg for
   * the delta and a 1-row TakeOrderedAndProject collect (the only
   * driver traffic) for the argmax. Lineage is truncated per round via
-  * a lazy checkpoint so round N never replays rounds 1..N−1; the
-  * collected result reads none of them, so all are freed on return.
+  * a lazy checkpoint so round N never replays rounds 1..N−1; each
+  * round frees the cuts its predecessor superseded, and the collected
+  * result reads none of them, so the rest are freed on return.
   */
 object Bpe {
 
@@ -108,11 +109,19 @@ object Bpe {
     val merges = Seq.newBuilder[(Int, String, Long)]
     var cur  = words0
     var pc   = cp.checkpoint(pairCounts(cur), eager = false)
+    var spent: Option[DataFrame] = None
     var step = 1
     var done = false
     while (step <= maxMerges && !done) {
       val roundT0 = System.nanoTime()
       val best = pc.orderBy(col("n").desc, col("pr").asc).limit(1).collect()
+      // that action materialized `pc` and the word table its delta read,
+      // so the previous round's pair counts, and the word table they
+      // read, have no reader left. Releasing those pair counts frees them
+      // and every older cut they read: a run of any length holds a fixed
+      // number of cuts.
+      spent.foreach(cp.release)
+      spent = Some(pc)
       if (best.isEmpty) done = true
       else {
         val pair = best(0).getString(0)

@@ -8,13 +8,13 @@ import org.apache.spark.sql.graftbridge.{Checkpoints, GraftBridge}
 /** Distributed suffix-array construction by prefix doubling
   * (Manber & Myers, SIAM J. Comput. 1993; the sort/rank formulation used
   * by every shared-nothing SA builder), plus the rank-adjacent LCP table
-  * derived from the kept doubling levels. Together they are the index
-  * behind EXACT substring deduplication of training corpora (Lee et al.,
-  * "Deduplicating Training Data Makes Language Models Better", ACL'22
-  * builds exactly this pair over the whole corpus: a span is duplicated
-  * at length ≥ L iff some rank-adjacent suffix pair has LCP ≥ L) — the
-  * catalog's window-hash / winnowing substring paths are the
-  * probabilistic counterpart, this is the exact structure.
+  * measured by comparing adjacent-rank suffix slices. Together they are
+  * the index behind EXACT substring deduplication of training corpora
+  * (Lee et al., "Deduplicating Training Data Makes Language Models
+  * Better", ACL'22 builds exactly this pair over the whole corpus: a
+  * span is duplicated at length ≥ L iff some rank-adjacent suffix pair
+  * has LCP ≥ L) — the catalog's window-hash / winnowing substring
+  * paths are the probabilistic counterpart, this is the exact structure.
   *
   * Reference scope: the reference's pipelines stop at per-key
   * aggregation (k8s/spark-apps/kafka-spark-configmap.yaml:106-199);
@@ -46,8 +46,8 @@ import org.apache.spark.sql.graftbridge.{Checkpoints, GraftBridge}
   *   - '''combine rounds are arithmetic, then widen.''' Doubling needs
   *     only ORDER-ISOMORPHIC ranks, not dense ones, so while the domain
   *     `dom` satisfies (dom+1)(dom+2) ≤ 2⁶³−1 (checked in BigInt on the
-  *     driver; the true 2-gram domain is probed once from the cached
-  *     init level so the first densify is deferred as long as
+  *     driver; the true 2-gram domain is counted once off the cached
+  *     2-gram rank table so the first densify is deferred as long as
   *     possible), the new rank is the pure map `r·(dom+2) + r2 + 2` —
   *     consecutive combine rounds are chained windows in ONE stage.
   *     When the pack would overflow, the rank GROWS to a lexicographic
@@ -102,44 +102,28 @@ object Suffix {
       : DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, c)
 
-  private final case class Level(
-      df: DataFrame, // (did, pos, r): rank of the prefix of length `len`
-      len: Long)
-
   private val MaxDom = BigInt(Long.MaxValue)
 
-  /** Runs the doubling rounds. `levels` ranks prefixes of length
-    * `level.len` (equal ranks iff equal length-`len` prefixes — combine
-    * levels are order-isomorphic, not dense, which is all the walk and
-    * the next round need); the last level is the full-suffix DENSE
-    * rank. With `keepLevels = false` only densify outputs materialize
-    * (combine windows chain lazily into the next densify) and
-    * predecessors are freed as soon as their successor lands; with
-    * `keepLevels = true` every level is checkpointed (the LCP walk
-    * reads each one) and a character-level (len = 1) table is prepended
-    * so the walk can decompose odd lengths.
-    */
-  /** `maxPrefix` truncates the ranking: ranks are computed over the
+  /** Runs the doubling rounds and returns the full-suffix DENSE rank
+    * table (did, pos, r). Only densify outputs materialize (combine
+    * windows chain lazily into the next densify), and predecessors are
+    * freed as soon as their successor lands.
+    *
+    * `maxPrefix` truncates the ranking: ranks are computed over the
     * first `maxPrefix` characters of each suffix only (equal ranks iff
     * equal padded `maxPrefix`-prefixes), cutting the doubling ladder to
     * ~log₂ maxPrefix rounds regardless of document length. Callers that
     * only consume rank EQUALITY up to a known horizon ([[dupSpans]],
     * whose span arithmetic saturates at its cap) use this to skip the
     * deep rounds — and their densifies — entirely; the default keeps
-    * full-suffix ranking ([[suffixRanks]] / [[adjacentLcp]]'s output
-    * contract).
+    * full-suffix ranking ([[suffixRanks]] / [[adjacentLcpCapped]]'s
+    * output contract).
     *
-    * `keepUpTo` bounds which PENDING combine levels are kept when
-    * `keepLevels` is set: a capped LCP walk only reads levels of length
-    * ≤ its cap, so deeper combine ranks need not be carried as extra
-    * columns through the final densify's shuffle nor materialized in its
-    * checkpoint — the final (dense) level is always kept regardless.
-    */
-  /** `materializeLast = false` skips the final dense level's checkpoint
-    * (and its did repartition): the level df becomes the rank+offset
+    * `materializeLast = false` skips the final dense level's checkpoint
+    * (and its did repartition): the returned frame is the rank+offset
     * plan over the cached bucket state. ONLY sound for callers that
-    * consume the level once — a second consumption would recompute the
-    * rank window (correct but paid twice).
+    * consume it once — a second consumption would recompute the rank
+    * window (correct but paid twice).
     *
     * Every checkpoint belongs to `cp`; superseded ones are released as
     * the ladder climbs, and the caller's scope frees the rest.
@@ -150,10 +134,8 @@ object Suffix {
       id: String,
       text: String,
       buckets: Int,
-      keepLevels: Boolean,
       maxPrefix: Long = Long.MaxValue,
-      keepUpTo: Long = Long.MaxValue,
-      materializeLast: Boolean = true): Seq[Level] = {
+      materializeLast: Boolean = true): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val base = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("txt"))
@@ -180,77 +162,31 @@ object Suffix {
         col("txt"))
       .select(col("did"), col("pos").cast("long").as("pos"),
         expr("substring(txt, pos, 2)").as("g2"))
-    // gram ranks: the intentionally tiny single-partition windows
-    // (distinct 1/2-grams — bounded by the alphabet, not the corpus).
-    // When the walk needs BOTH the 1-gram and 2-gram levels they are
-    // materialized as two views over ONE checkpointed table (one
-    // action, one cached copy) — Level.df is just a projection.
-    val a2base = posed.select(col("g2").as("g")).distinct()
-    def ranked2(df: DataFrame): DataFrame =
-      df.withColumn("r", dense_rank().over(Window.orderBy(col("g")))
-        .cast("long") - 1)
-    var levels = Vector.empty[Level]
-    var docLen = 0L
-    var n = 0L
-    var dom: BigInt = BigInt(1)
-    var cur: DataFrame = null
-    var curMaterialized = true
-    if (keepLevels) {
-      // the 1-gram alphabet is exactly the distinct first characters
-      // of the 2-gram alphabet (every position's 1-gram prefixes its
-      // 2-gram), so it derives from a2base's ALREADY-SHUFFLED output
-      // (tiny second distinct over ≤|alphabet|² rows, exchange reused)
-      val a1 = ranked2(a2base.select(expr("substring(g, 1, 1)").as("g"))
-        .distinct())
-        .select(col("g").as("g1"), col("r").as("r_1"))
-      val a2 = ranked2(a2base)
-        .select(col("g").as("g2"), col("r").as("r_2"))
-      val init = cp.checkpoint(
-        posed.withColumn("g1", expr("substring(g2, 1, 1)"))
-          .join(broadcast(a1), Seq("g1"))
-          .join(broadcast(a2), Seq("g2"))
-          .select(col("did"), col("pos"), col("r_1"), col("r_2")),
-        Seq("did"))
-      val init2df = init.select(col("did"), col("pos"), col("r_2").as("r"))
-      levels = Vector(
-        Level(init.select(col("did"), col("pos"), col("r_1").as("r")), 1L),
-        Level(init2df, 2L))
-      // ONE tiny probe job over the cached init table: longest document
-      // (loop bound), total characters (the bound every densify round
-      // re-compresses ranks below), and the TRUE |2-grams| — deciding
-      // combine capacity off the real 2-gram domain instead of the safe
-      // bound n usually buys two extra combines before the first densify
-      val pr = GraftBridge.action(init.agg(
-        max(col("pos")), count(lit(1)), max(col("r_2"))).head)
-      docLen = if (pr.isNullAt(0)) 0L else pr.getLong(0)
-      n = pr.getLong(1)
-      dom = BigInt(if (pr.isNullAt(2)) 1L else math.max(pr.getLong(2) + 1L, 1L))
-      cur = init2df.withColumnRenamed("r", "r0")
-    } else {
-      // no kept levels ⇒ the init table has exactly ONE consumer (the
-      // combine-window chain into the first densify), so materializing
-      // it is a pure O(total chars) copy+cache+read — skipped. The loop
-      // bound and position count come off the raw docs (one narrow
-      // aggregate over pre-explode rows); the TRUE 2-gram domain comes
-      // off the alphabet rank table itself, checkpointed as the
-      // |alphabet|²-bounded TINY table it is (the same bound its
-      // single-partition ranking window already assumes): dom is a ~ms
-      // count over the cache, and the broadcast build in the first
-      // action reads the cache instead of re-running explode+distinct.
-      val st = GraftBridge.action(base.agg(
-        max(length(col("txt"))).cast("long"),
-        sum(length(col("txt"))).cast("long")).head)
-      docLen = if (st.isNullAt(0)) 0L else st.getLong(0)
-      n = if (st.isNullAt(1)) 0L else st.getLong(1)
-      // released once the first densify has materialized the chain over it
-      val a2 = cp.checkpoint(
-        ranked2(a2base).select(col("g").as("g2"), col("r").as("r_2")))
-      dom = BigInt(math.max(GraftBridge.action(a2.count()), 1L))
-      cur = posed
-        .join(broadcast(a2), Seq("g2"))
-        .select(col("did"), col("pos"), col("r_2").as("r0"))
-      curMaterialized = false
-    }
+    // the init table has exactly ONE consumer (the combine-window chain
+    // into the first densify), so materializing it would be a pure
+    // O(total chars) copy+cache+read — skipped. The loop bound and
+    // position count come off the raw docs (one narrow aggregate over
+    // pre-explode rows); the TRUE 2-gram domain comes off the alphabet
+    // rank table itself, checkpointed as the |alphabet|²-bounded TINY
+    // table it is (the same bound its single-partition ranking window
+    // already assumes): dom is a ~ms count over the cache, and the
+    // broadcast build in the first action reads the cache instead of
+    // re-running explode+distinct.
+    val st = GraftBridge.action(base.agg(
+      max(length(col("txt"))).cast("long"),
+      sum(length(col("txt"))).cast("long")).head)
+    val docLen = if (st.isNullAt(0)) 0L else st.getLong(0)
+    val n = if (st.isNullAt(1)) 0L else st.getLong(1)
+    // released once the first densify has materialized the chain over it
+    val a2 = cp.checkpoint(
+      posed.select(col("g2").as("g")).distinct()
+        .withColumn("r", dense_rank().over(Window.orderBy(col("g")))
+          .cast("long") - 1)
+        .select(col("g").as("g2"), col("r").as("r_2")))
+    var dom = BigInt(math.max(GraftBridge.action(a2.count()), 1L))
+    var cur = posed
+      .join(broadcast(a2), Seq("g2"))
+      .select(col("did"), col("pos"), col("r_2").as("r0"))
     // the ladder only needs to distinguish the first maxPrefix chars
     val maxLen = math.min(docLen, maxPrefix)
     require(maxLen <= Int.MaxValue, "rank horizon exceeds lead() range")
@@ -269,10 +205,6 @@ object Suffix {
     // instead of the four the arithmetic-only ladder paid, and each
     // extra column is 8 bytes/row through one bucket shuffle.
     var width = 1
-    // combine levels not yet materialized, carried as named extra
-    // columns of `cur` until the next densify checkpoints them all in
-    // ONE action (each then becomes a projection view of that table)
-    var pending = Vector.empty[(String, Long)]
     var k = 2L
     while (k < maxLen) {
       // s0..s{W-1} = rank tuple of the prefix k positions ahead (all
@@ -286,36 +218,22 @@ object Suffix {
       }
       val isLast = 2 * k >= maxLen
       val combined = (dom + 1) * (dom + 2)
-      // if `cur`'s top rank (prefix length k) is itself unmaterialized,
-      // keep it as a named pending column through this round
-      def carryCols: Seq[org.apache.spark.sql.Column] = {
-        val keep =
-          if (keepLevels && !curMaterialized && k <= keepUpTo) {
-            pending = pending :+ (s"rl$k", k)
-            Seq((if (width == 1) col("r0")
-            else struct(rCols.map(col): _*)).as(s"rl$k"))
-          } else Nil
-        Seq(col("did"), col("pos")) ++ pending.dropRight(keep.size)
-          .map { case (nm, _) => col(nm) } ++ keep
-      }
       if (!isLast && width == 1 && combined <= MaxDom) {
         // combine: arithmetic order-isomorphic rank — one chained
         // window pass. s0+2 ∈ [1, dom+1] < dom+2 ⇒ no carry collision.
         val d = dom.toLong
         dom = combined
-        cur = keyed.select(carryCols :+
-          (col("r0") * (d + 2) + col("s0") + 2).as("r0"): _*)
-        curMaterialized = false
+        cur = keyed.select(col("did"), col("pos"),
+          (col("r0") * (d + 2) + col("s0") + 2).as("r0"))
       } else if (!isLast && 2 * width <= MaxWidth) {
         // widen: the concatenated (r tuple, led tuple) IS the combined
         // rank, compared lexicographically — zero extra passes. `dom`
         // (the domain of r0, the bucketing major key) is unchanged:
         // r0 is still the same column.
-        cur = keyed.select(carryCols ++
+        cur = keyed.select(Seq(col("did"), col("pos")) ++
           rCols.map(col) ++
           sCols.zipWithIndex.map { case (s2, i) => col(s2).as(s"r${width + i}") }: _*)
         width *= 2
-        curMaterialized = false
       } else {
         // densify. Shared structure: bucket by the major key (bkt =
         // r0 DIV blockSize is monotone in the pair order — and in the
@@ -366,8 +284,8 @@ object Suffix {
                   keyed.withColumn("bkt", expr(s"r0 DIV $blockSize")),
                   col("bkt"))
                   .withColumn("rk", dense_rank().over(rkW).cast("long"))
-                  .select(carryCols :+
-                    (col("bkt") * (nn + 1) + col("rk") - 1).as("r0"): _*),
+                  .select(col("did"), col("pos"),
+                    (col("bkt") * (nn + 1) + col("rk") - 1).as("r0")),
                 col("did")),
               Seq("did"))
           } else {
@@ -389,7 +307,8 @@ object Suffix {
                   Window.orderBy(col("bkt"))
                     .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
               .select(col("bkt"), col("off"))
-            val outCols = carryCols :+ (col("off") + col("rk") - 1).as("r0")
+            val outCols = Seq(col("did"), col("pos"),
+              (col("off") + col("rk") - 1).as("r0"))
             if (materializeLast) {
               val hh = cp.checkpoint(
                 repartitionFixed(
@@ -402,38 +321,29 @@ object Suffix {
               // single-consumption callers ([[suffixRanks]],
               // [[adjacentLcpCapped]]) read the dense level exactly ONCE:
               // its full-table copy+cache — and the did repartition no
-              // such consumer needs — are pure overhead. The level df is
-              // the rank+offset plan over the cached bucket state, so
+              // such consumer needs — are pure overhead. The returned frame
+              // is the rank+offset plan over the cached bucket state, so
               // the kb snapshot is what stays resident.
               rk.join(broadcast(offs), Seq("bkt")).select(outCols: _*)
             }
           }
-        // without kept levels, the previous densify's table (or, on the
-        // first densify, the alphabet table) has no reader left
-        if (!keepLevels) cp.release(keyed)
-        // every pending combine level materialized with this action:
-        // emit each as a projection view of the one checkpointed table
-        levels = levels ++ pending.map { case (nm, len) =>
-          Level(h.select(col("did"), col("pos"), col(nm).as("r")), len)
-        }
-        pending = Vector.empty
-        curMaterialized = true
+        // the previous densify's table (or, on the first densify, the
+        // alphabet table) has no reader left
+        cp.release(keyed)
         width = 1
-        cur = h.select(col("did"), col("pos"), col("r0"))
-        levels = levels :+ Level(
-          h.select(col("did"), col("pos"), col("r0").as("r")), 2 * k)
+        cur = h
       }
       k *= 2
     }
-    // keepLevels=false with no doubling rounds (maxLen ≤ 2): the loop
-    // never materialized anything — checkpoint the init chain so the
-    // returned level still honors the cached-snapshot contract
-    if (levels.isEmpty) {
+    // no doubling round (maxLen ≤ 2): the loop never materialized
+    // anything — checkpoint the init chain so the returned frame still
+    // honors the cached-snapshot contract
+    if (maxLen <= 2) {
       val h = cp.checkpoint(repartitionFixed(cur, col("did")), Seq("did"))
       cp.release(cur)
-      levels = Vector(Level(h.select(col("did"), col("pos"), col("r0").as("r")), 2L))
+      cur = h
     }
-    levels
+    cur.select(col("did"), col("pos"), col("r0").as("r"))
   }
 
   /** Widest rank tuple carried between densifies: 4 long columns = 32
@@ -455,8 +365,7 @@ object Suffix {
       id: String,
       text: String,
       buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
-    build(cp, docs, id, text, buckets, keepLevels = false,
-      materializeLast = false).last.df
+    build(cp, docs, id, text, buckets, materializeLast = false)
       .select(col("did").as(id), col("pos"), col("r").as("srank"))
   }
 
@@ -466,59 +375,16 @@ object Suffix {
     * Rows are (srank, doc_a, pos_a, doc_b, pos_b, lcp): the
     * (doc,pos)-minimal representative of rank `srank` against that of
     * rank `srank`+1 (any representative works — equal ranks mean
-    * byte-identical suffixes) and the exact length of their longest
-    * common prefix.
+    * byte-identical suffixes) and the length of their longest common
+    * prefix CLAMPED at `maxLcp`; `srank` is the FULL-suffix dense rank.
     *
-    * LCP is computed from the KEPT doubling levels, never from suffix
-    * strings: walk the levels top…1-gram and extend by `level.len`
-    * exactly when both sides' ranks at the current offsets exist and
-    * agree. Soundness of each step: equal level ranks with BOTH
-    * suffixes shorter than `len` would force identical full suffixes
-    * (same srank — excluded), so agreement certifies `len` further
-    * equal characters; conversely a remaining common prefix ≥ `len`
-    * forces level agreement, so the greedy decomposition over lengths
-    * {top…4, 2, 1} is exact (combine levels are order-isomorphic, and
-    * the walk only tests EQUALITY, which they preserve). Each level is
-    * two equi-joins of the pair table against that level's rank table
-    * on (doc, pos+acc) — ~log₂ maxLen levels, pair count < distinct
-    * suffix count, everything hash-partitioned; lineage is cut every
-    * few levels and levels are released as soon as the walk state has
-    * materialized past them.
-    *
-    * `maxLcp` caps the walk: only levels of length ≤ maxLcp are
-    * consumed, so with maxLcp = 2^j the walk visits j+1 levels instead
-    * of ~log₂ maxLen. The capped contract is exact under the cap —
-    * `least(lcp, maxLcp)` equals the true capped LCP for EVERY pair
-    * (the kept levels sum to 2^(j+1)−1 ≥ maxLcp, so any true LCP <
-    * maxLcp decomposes exactly and any ≥ maxLcp accumulates ≥ maxLcp)
-    * — which is precisely what a dedup threshold query consumes: "is
-    * this span duplicated at ≥ L chars" never needs the LCP beyond L.
-    */
-  def adjacentLcp(
-      docs: DataFrame,
-      id: String,
-      text: String,
-      buckets: Int = 512,
-      maxLcp: Long = Long.MaxValue): DataFrame = Checkpoints.scope { cp =>
-    require(maxLcp >= 1, s"maxLcp must be >= 1, got $maxLcp")
-    val levels = build(cp, docs, id, text, buckets, keepLevels = true,
-      keepUpTo = maxLcp)
-    lcpWalk(cp, levels, repsOf(levels.last.df), maxLcp)
-  }
-
-  /** [[adjacentLcp]] with the LCP CLAMPED at `maxLcp` — the shape a
-    * threshold consumer (`least(lcp, cap)`) actually needs, computed
-    * WITHOUT the level walk: a cap-clamped LCP is one codegen'd
-    * character comparison of the two `maxLcp`-char suffix slices of
-    * each adjacent-rank representative pair (the [[dupSpans]]
-    * equivalence: true LCP < cap is measured exactly by both the walk
-    * and the slice compare; true LCP ≥ cap saturates both). Dropping
-    * the walk drops its ~log₂ cap levels × 2 equi-joins, the kept-level
-    * carries through the ladder's densifies, and the 1-gram init level
-    * (`keepLevels = false` — the build is exactly [[suffixRanks]]'s).
-    * Output identical to
-    * `adjacentLcp(maxLcp = cap).withColumn("lcp", least(lcp, cap))`
-    * (spec-pinned); `srank` is still the FULL-suffix dense rank.
+    * The LCP is one codegen'd character comparison of the two
+    * `maxLcp`-char suffix slices of each pair ([[adjacentSliceLcp]]). A
+    * true LCP < maxLcp is measured exactly and one ≥ maxLcp saturates at
+    * maxLcp — all a threshold consumer ("is this span duplicated at ≥ L
+    * chars") reads. With `maxLcp` ≥ the longest document the slices are
+    * whole suffixes, so `lcp` is the exact, uncapped LCP (spec-pinned
+    * against a brute force at both).
     */
   def adjacentLcpCapped(
       docs: DataFrame,
@@ -528,19 +394,36 @@ object Suffix {
       buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
     require(maxLcp >= 1 && maxLcp <= Int.MaxValue,
       s"maxLcp must be in [1, Int.MaxValue], got $maxLcp")
-    // the rank table has exactly one consumer here (the repsOf
+    // the rank table has exactly one consumer here (the representative
     // aggregate, checkpointed below) — lazy final level, freed by the
     // scope since the result reads only the representatives
-    val levels = build(cp, docs, id, text, buckets, keepLevels = false,
-      materializeLast = false)
-    // the per-rank representative is consumed TWICE (both sides of the
-    // adjacent-rank self-join) — checkpoint it once, or the analyzer's
-    // self-join expr-id dedup re-instantiates the aggregate (and its
-    // corpus-sized exchange) per side
-    val reps = cp.checkpoint(repsOf(levels.last.df))
+    val sr = build(cp, docs, id, text, buckets, materializeLast = false)
+    // the (doc,pos)-minimal representative of each rank is consumed
+    // TWICE (both sides of the adjacent-rank self-join) — checkpoint it
+    // once, or the analyzer's self-join expr-id dedup re-instantiates
+    // the aggregate (and its corpus-sized exchange) per side
+    val reps = cp.checkpoint(sr.groupBy(col("r"))
+      .agg(min(struct(col("did"), col("pos"))).as("m"))
+      .select(col("r"), col("m.did").as("did"), col("m.pos").as("pos")))
+    adjacentSliceLcp(docs, id, text, reps, maxLcp)
+  }
+
+  /** `least(LCP, cap)` of every rank-adjacent representative pair, by
+    * direct comparison: each pair joins its two cap-char suffix slices
+    * and runs one codegen'd character compare. `reps` is (r, did, pos),
+    * one representative row per rank. Rows are (srank, doc_a, pos_a,
+    * doc_b, pos_b, lcp), lazy — the shared core of [[adjacentLcpCapped]]
+    * and [[dupSpanIntervals]].
+    */
+  private def adjacentSliceLcp(
+      docs: DataFrame,
+      id: String,
+      text: String,
+      reps: DataFrame,
+      cap: Long): DataFrame = {
     val slices = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("_txt"))
-    val capLen = lit(maxLcp.toInt)
+    val capLen = lit(cap.toInt)
     reps.select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
       .join(reps.select((col("r") - 1).as("srank"),
         col("did").as("db"), col("pos").as("pb")), Seq("srank"))
@@ -553,79 +436,6 @@ object Suffix {
         graft.functions.expressions.NativeExpressions.commonPrefixChars(
           col("_sa"),
           col("_tb").substr(col("pb").cast("int"), capLen)).as("lcp"))
-  }
-
-  /** The (doc,pos)-minimal representative of each rank — the walk's pair
-    * seeds. Lazy: callers that need nothing else per rank let the walk's
-    * first lineage cut materialize it; [[dupSpans]] instead derives it
-    * from its checkpointed one-pass rank aggregate (representative AND
-    * multiplicity together, so the rank table is aggregated once, not
-    * twice).
-    */
-  private def repsOf(sr: DataFrame): DataFrame =
-    sr.groupBy(col("r"))
-      .agg(min(struct(col("did"), col("pos"))).as("m"))
-      .select(col("r"), col("m.did").as("did"), col("m.pos").as("pos"))
-
-  /** The LCP walk over kept doubling levels (semantics documented at
-    * [[adjacentLcp]]). `reps` is the per-rank representative table
-    * (schema (r, did, pos), one row per rank).
-    */
-  private def lcpWalk(
-      cp: Checkpoints,
-      levels: Seq[Level],
-      reps: DataFrame,
-      maxLcp: Long): DataFrame = {
-    val pairs = reps
-      .select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
-      .join(reps.select((col("r") - 1).as("srank"),
-        col("did").as("db"), col("pos").as("pb")), Seq("srank"))
-    var st = pairs.withColumn("acc", lit(0L))
-    // the top level (len >= maxLen) can never fire: agreement there
-    // needs either `len` remaining equal chars (suffixes are shorter —
-    // except two full-length identical docs, whose suffixes share a
-    // rank and are excluded from pairs) or two equal truncated
-    // remainders (identical suffixes, same exclusion). LCP <= maxLen-1
-    // is covered by the lengths {top/2, …, 2, 1}, so skip one walk
-    // round.
-    val walkLevels =
-      (if (levels.size >= 2) levels.indices.dropRight(1) else levels.indices)
-        .filter(i => levels(i).len <= maxLcp)
-    var sinceCut = 0
-    for (j <- walkLevels.reverse) {
-      val ell = levels(j).len
-      val la = levels(j).df.select(
-        col("did").as("_dxa"), col("pos").as("_qxa"), col("r").as("_ra"))
-      val lb = levels(j).df.select(
-        col("did").as("_dxb"), col("pos").as("_qxb"), col("r").as("_rb"))
-      val stepped = st
-        .join(la, col("da") === col("_dxa") &&
-          col("_qxa") === col("pa") + col("acc"), "left")
-        .join(lb, col("db") === col("_dxb") &&
-          col("_qxb") === col("pb") + col("acc"), "left")
-        .withColumn("acc", col("acc") +
-          when(col("_ra").isNotNull && col("_ra") === col("_rb"), ell)
-            .otherwise(0L))
-        .select(col("srank"), col("da"), col("pa"), col("db"), col("pb"),
-          col("acc"))
-      // cut lineage every FOURTH level (the walk would otherwise stack
-      // 2·levels joins into one plan; four levels = eight joins is a
-      // fine per-action depth and cuts the materialize jobs to a
-      // quarter)
-      sinceCut += 1
-      if (sinceCut == 4 || j == walkLevels.head) {
-        val next = cp.checkpoint(stepped)
-        // the state is materialized past the levels walked since the
-        // last cut: release them with the previous state — except a
-        // table that a LOWER, still-unwalked level shares (the 1-gram
-        // and 2-gram levels are views over one cached table)
-        cp.release(stepped, keep = levels.take(j).map(_.df))
-        st = next
-        sinceCut = 0
-      } else st = stepped
-    }
-    st.select(col("srank"), col("da").as("doc_a"), col("pa").as("pos_a"),
-      col("db").as("doc_b"), col("pb").as("pos_b"), col("acc").as("lcp"))
   }
 
   /** Per-document duplicated-REGION accounting — the decision step the
@@ -644,42 +454,27 @@ object Suffix {
     * character inside a long duplicated substring is also inside a
     * length-`minSpan` duplicated substring starting ≤ it (substrings
     * of duplicated strings are duplicated), whose start contributes an
-    * interval covering it. So the walk runs capped ([[adjacentLcp]]'s
-    * `maxLcp` machinery) and the region arithmetic is still exact —
+    * interval covering it. So the LCP is clamped at the cap
+    * ([[adjacentSliceLcp]]) and the region arithmetic is still exact —
     * only per-SPAN lengths beyond the cap would be understated, and
     * the output reports merged regions, not raw span lengths.
     *
     * Touching intervals merge ([p,5) ∪ [5,e) is one region): a region
     * boundary means a genuinely non-duplicated character between.
     *
-    * The ranking itself is TRUNCATED at 2·cap characters (`build`'s
+    * The ranking itself is TRUNCATED at `cap` characters (`build`'s
     * `maxPrefix`), cutting the doubling ladder to ~log₂ cap rounds and
-    * ONE densify regardless of document length. Per-position dup
-    * lengths are unchanged: equal-truncated-rank groups are contiguous
-    * runs of the full suffix order, so (a) a position whose truncated
-    * rank has ≥ 2 members shares ≥ min(2·cap, its remaining length) ≥
-    * min(cap, remaining) characters with another position — the
-    * multiplicity branch yields min(remaining, cap), exactly the full
-    * ranking's value (capped LCP ≥ cap collapses there too); (b) a
-    * singleton truncated rank IS a full rank, its truncated-order
-    * neighbors are its full-order neighbor runs, every member of a run
-    * shares the run's padded 2·cap-prefix, so the capped LCP against
-    * the run's representative equals the capped LCP against the
-    * full-order-adjacent member — and two DIFFERENT truncated ranks
-    * always have LCP ≤ 2·cap − 1, within what the walked levels
-    * (1 … cap, summing to 2·cap − 1) measure exactly up to the cap.
+    * ONE densify regardless of document length; why per-position dup
+    * lengths are unchanged is argued at [[dupSpanIntervals]].
     *
-    * Scale shape: one suffix-index build (keepLevels = false — no walk
-    * levels), ONE per-rank aggregate pass (pair representative +
-    * multiplicity together, checkpointed once for both consumers), the
-    * capped LCP by DIRECT slice comparison (adjacent-rank representative
-    * pairs join their cap-char substrings and run one codegen'd
-    * character compare — exact because the consumed value is clamped at
-    * the cap anyway, so the unbounded-LCP walk machinery is pure
-    * overhead here), then one rank-keyed equi-join (pre-merged per-rank
-    * lcp/multiplicity onto positions) and doc-partitioned windows for
-    * the interval merge — no all-pairs, nothing beyond the index
-    * build's own cost class.
+    * Scale shape: one suffix-index build, ONE per-rank aggregate pass
+    * (pair representative + multiplicity together, checkpointed once
+    * for both consumers), the capped LCP by DIRECT slice comparison
+    * (adjacent-rank representative pairs join their cap-char substrings
+    * and run one codegen'd character compare), then one rank-keyed
+    * equi-join (pre-merged per-rank lcp/multiplicity onto positions)
+    * and doc-partitioned windows for the interval merge — no all-pairs,
+    * nothing beyond the index build's own cost class.
     */
   def dupSpans(
       docs: DataFrame,
@@ -786,31 +581,24 @@ object Suffix {
       "the capped union argument needs a length-minSpan interval to fit " +
       "inside the cap")
     require(cap <= Int.MaxValue, s"cap ($cap) overflows the rank horizon")
-    // no kept levels: the span arithmetic only consumes LCPs CLAMPED at
-    // the cap, and a cap-clamped LCP is computable by DIRECT character
-    // comparison of the two cap-char suffix slices (one codegen'd pass)
-    // — the log₂(cap)-round LCP walk, its per-level pair-state shuffles,
-    // its kept-level carries through the densify, and the 1-gram level
-    // all exist to serve UNBOUNDED LCP ([[adjacentLcp]]'s contract) and
-    // are skipped here entirely (measured sf0.1 full-table: 17 → 11 s).
+    // the span arithmetic only consumes LCPs CLAMPED at the cap, and a
+    // cap-clamped LCP is one DIRECT character comparison of the two
+    // cap-char suffix slices ([[adjacentSliceLcp]]).
     //
-    // The rank horizon is `cap` itself, not the walk era's 2·cap: the
-    // tail consumes ranks only through (a) the multiplicity branch —
-    // equal cap-truncated ranks are identical padded cap-prefixes, so
-    // m ≥ 2 yields exactly least(remaining, cap), the same value any
-    // deeper ranking produces (capped LCP ≥ cap collapses there too) —
-    // and (b) adjacent-rank slice compares, where two DIFFERENT
-    // cap-truncated ranks have true LCP ≤ cap − 1 and every member of
-    // the neighboring rank run shares that run's padded cap-prefix, so
-    // the representative's cap-char slice compare returns the exact
-    // capped LCP against the true full-order neighbor. Halving the
-    // horizon drops the ladder's last doubling round (its lead-window
-    // pass over every position) and halves the final densify's
-    // rank-tuple width through the bucket shuffle (guide §2.3,
-    // narrower types / fewer bytes).
-    val levels = build(cp, docs, id, text, buckets, keepLevels = false,
-      maxPrefix = cap)
-    val sr = levels.last.df // (did, pos, r)
+    // The rank horizon is `cap` itself: the tail consumes ranks only
+    // through (a) the multiplicity branch — equal cap-truncated ranks
+    // are identical padded cap-prefixes, so m ≥ 2 yields exactly
+    // least(remaining, cap), the same value any deeper ranking produces
+    // (capped LCP ≥ cap collapses there too) — and (b) adjacent-rank
+    // slice compares, where two DIFFERENT cap-truncated ranks have true
+    // LCP ≤ cap − 1 and every member of the neighboring rank run shares
+    // that run's padded cap-prefix, so the representative's cap-char
+    // slice compare returns the exact capped LCP against the true
+    // full-order neighbor. A 2·cap horizon would add a doubling round
+    // (a lead-window pass over every position) and double the final
+    // densify's rank-tuple width through the bucket shuffle (guide
+    // §2.3, narrower types / fewer bytes).
+    val sr = build(cp, docs, id, text, buckets, maxPrefix = cap) // (did, pos, r)
     // ONE aggregate pass over the rank table serves both consumers —
     // the pair representatives and the per-rank multiplicity the span
     // arithmetic needs — checkpointed so neither recomputes it.
@@ -820,11 +608,8 @@ object Suffix {
           count(lit(1)).as("cnt")))
     val reps = rstats
       .select(col("r"), col("m.did").as("did"), col("m.pos").as("pos"))
-    // adjacent-rank representative pairs fetch their cap-char slices and
-    // compare once. Equivalence to least(walk_lcp, cap): true LCP < cap
-    // is measured exactly by both; true LCP ≥ cap saturates both the
-    // walk (clamped) and the slice compare (slices are cap chars).
-    // Checkpointed because the span arithmetic joins it TWICE (lu/ld).
+    // the capped adjacent-rank LCP, checkpointed because the span
+    // arithmetic joins it TWICE (lu/ld).
     //
     // Rows with l < minSpan are DROPPED inside the checkpoint: dlen is a
     // max whose consumers keep only dlen ≥ minSpan, so a sub-minSpan LCP
@@ -834,21 +619,9 @@ object Suffix {
     // unchanged). The cached table shrinks from rank-count rows to
     // duplicated-adjacency rows — the quantity the whole tail is
     // keyed on below.
-    val slices = docs.filter(length(col(text)) >= 1)
-      .select(col(id).as("did"), col(text).as("_txt"))
-    val capLen = lit(cap.toInt)
     val lcpByRank = cp.checkpoint(
-      reps.select(col("r").as("srank"), col("did").as("da"), col("pos").as("pa"))
-        .join(reps.select((col("r") - 1).as("srank"),
-          col("did").as("db"), col("pos").as("pb")), Seq("srank"))
-        .join(slices.select(col("did").as("da"), col("_txt").as("_ta")), Seq("da"))
-        .select(col("srank"), col("db"), col("pb"),
-          col("_ta").substr(col("pa").cast("int"), capLen).as("_sa"))
-        .join(slices.select(col("did").as("db"), col("_txt").as("_tb")), Seq("db"))
-        .select(col("srank"),
-          graft.functions.expressions.NativeExpressions.commonPrefixChars(
-            col("_sa"),
-            col("_tb").substr(col("pb").cast("int"), capLen)).as("l"))
+      adjacentSliceLcp(docs, id, text, reps, cap)
+        .select(col("srank"), col("lcp").as("l"))
         .filter(col("l") >= lit(minSpan)))
     // rank-keyed inputs (multiplicity + up/down LCP) pre-joined into ONE
     // rank-side table so the corpus-sized sr streams through a single

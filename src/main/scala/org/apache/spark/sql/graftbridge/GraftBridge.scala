@@ -168,15 +168,12 @@ final class Checkpoints private () {
       countWhere: InternalRow => Boolean): (DataFrame, Long) =
     GraftBridge.checkpoint(df, Nil, sized = false, Some(countWhere), eager = true, own)
 
-  /** Frees now the checkpoints of this scope that `df` reads and none of
-    * `keep` reads — for a superseded round inside a loop. Only sound
-    * once nothing still to be computed reads them.
+  /** Frees now the checkpoints of this scope that `df` reads — for a
+    * superseded round inside a loop. Only sound once nothing still to be
+    * computed reads them.
     */
-  def release(df: DataFrame, keep: Seq[DataFrame] = Nil): Unit = {
-    val live = keep.flatMap(Checkpoints.reads).toSet
-    Checkpoints.reads(df).filterNot(live).flatMap(owned.remove)
-      .foreach(Checkpoints.free)
-  }
+  def release(df: DataFrame): Unit =
+    Checkpoints.reads(df).flatMap(owned.remove).foreach(Checkpoints.free)
 
   private def own(rdd: RDD[InternalRow]): Unit = owned(rdd.id) = rdd
 }

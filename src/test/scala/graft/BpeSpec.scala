@@ -58,6 +58,29 @@ class BpeSpec extends SparkSpec {
     Checkpoints.release(w)
   }
 
+  test("delta trainer holds a bounded number of cuts: 16 merges peak no higher than 4") {
+    // each round cuts the pair counts and the word table; a trainer that
+    // keeps every superseded cut until return holds ~2 per merge (a
+    // 30k-merge build would hold ~60k cached RDDs)
+    val w = Bpe.wordTable(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def peak(merges: Int): (Int, Seq[(Int, String, Long)]) = {
+      var cached = 0
+      val out = Bpe.trainDelta(w, merges, (_, _, _) =>
+        cached = math.max(cached, spark.sparkContext.getPersistentRDDs.size))
+      (cached, out)
+    }
+    val (peak4, _) = peak(4)
+    val (peak16, merges) = peak(16)
+    withClue(s"peak cached RDDs: 4 merges $peak4, 16 merges $peak16: ") {
+      peak16 should be <= peak4
+    }
+    merges shouldBe Bpe.trainNaive(w, 16)
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+    Checkpoints.release(w)
+  }
+
   test("delta trainer stays flat over 64+ merges: constant plan size, no wall-time creep") {
     // the production-geometry contract (a 30k-merge build is this loop,
     // longer): per-round localCheckpoints must hold the loop-carried

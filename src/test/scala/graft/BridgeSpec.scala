@@ -70,18 +70,6 @@ class BridgeSpec extends SparkSpec {
     persistent shouldBe before
   }
 
-  test("release keeps a table that a frame still to be computed shares") {
-    val before = persistent
-    Checkpoints.scope { cp =>
-      val t = cp.checkpoint(spark.range(10).select(col("id").as("a"), (col("id") + 1).as("b")))
-      val u = cp.checkpoint(spark.range(5).toDF("c"))
-      cp.release(t.select("a").crossJoin(u), keep = Seq(t.select("b")))
-      (persistent -- before).size shouldBe 1
-      t.select("b").count() shouldBe 10L
-    }
-    persistent shouldBe before
-  }
-
   test("counting cut: the predicate count rides the materializing job") {
     val (df, n) = Checkpoints.scope(_.checkpointCounting(
       spark.range(1000).select((col("id") % 3 === 0).as("f")), r => r.getBoolean(0)))

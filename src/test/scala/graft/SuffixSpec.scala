@@ -47,9 +47,34 @@ class SuffixSpec extends SparkSpec {
     ranks(docs) shouldBe expected
   }
 
+  private def longest(docs: Seq[(Long, String)]): Long =
+    math.max(docs.map(_._2.length).max, 1).toLong
+
+  /** (srank, doc_a, pos_a, doc_b, pos_b, lcp) rows of the operator. */
+  private def lcpRows(docs: Seq[(Long, String)], cap: Long) =
+    Suffix.adjacentLcpCapped(docs.toDF("doc_id", "text"), "doc_id", "text",
+      maxLcp = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+
+  /** The same rows by brute force: sort the distinct suffixes, take each
+    * one's (doc,pos)-minimal occurrence, and clamp the character-by-
+    * character LCP of rank-adjacent suffixes at `cap`.
+    */
+  private def bruteRows(docs: Seq[(Long, String)], cap: Long) = {
+    val rep = docs.flatMap { case (did, t) =>
+      (1 to t.length).map(p => t.substring(p - 1) -> ((did, p.toLong)))
+    }.groupBy(_._1).map { case (suf, occ) => suf -> occ.map(_._2).min }
+    val sorted = rep.keys.toVector.sorted
+    sorted.zip(sorted.tail).zipWithIndex.map { case ((a, b), i) =>
+      val lcp = a.zip(b).takeWhile { case (x, y) => x == y }.size.toLong
+      (i.toLong, rep(a)._1, rep(a)._2, rep(b)._1, rep(b)._2, math.min(lcp, cap))
+    }.toSet
+  }
+
+  // srank -> exact LCP: a cap of the longest document never clamps
   private def lcps(docs: Seq[(Long, String)]): Map[Long, Long] =
-    Suffix.adjacentLcp(docs.toDF("doc_id", "text"), "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(5)).toMap
+    lcpRows(docs, longest(docs)).map(r => r._1 -> r._6).toMap
 
   test("banana: hand-computed adjacent LCPs") {
     // sorted distinct suffixes: a ana anana banana na nana
@@ -59,68 +84,63 @@ class SuffixSpec extends SparkSpec {
   }
 
   test("adjacentLcp matches brute-force LCP on random multi-doc corpora") {
+    // adjacentLcpCapped with a cap of the longest document is the exact
+    // adjacent LCP: full rows against the unclamped brute force
     val rnd = new scala.util.Random(41)
     val docs = (0 until 20).map { i =>
       (i.toLong,
         (0 until (1 + rnd.nextInt(30)))
           .map(_ => "abc".charAt(rnd.nextInt(3))).mkString)
     }
-    def bruteLcp(s2: String, t2: String): Long =
-      s2.zip(t2).takeWhile { case (x, y) => x == y }.size.toLong
-    val sorted = docs.flatMap { case (_, t) =>
-      (1 to t.length).map(p => t.substring(p - 1))
-    }.distinct.sorted
-    val expected = sorted.zip(sorted.tail).zipWithIndex
-      .map { case ((a, b), i) => i.toLong -> bruteLcp(a, b) }.toMap
-    lcps(docs) shouldBe expected
+    lcpRows(docs, longest(docs)) shouldBe bruteRows(docs, Long.MaxValue)
   }
 
-  test("capped walk: least(lcp, maxLcp) is exact for every cap") {
-    // the capped contract: with only the <= maxLcp doubling levels
-    // consumed, least(result, cap) must equal least(true_lcp, cap) on
-    // EVERY pair — including caps that are not powers of two
-    val rnd = new scala.util.Random(97)
-    val docs = (0 until 16).map { i =>
+  private def longRepeats(seed: Int, n: Int, minLen: Int, spread: Int) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
       (i.toLong,
-        (0 until (8 + rnd.nextInt(40)))
-          .map(_ => "ab".charAt(rnd.nextInt(2))).mkString) // long repeats
+        (0 until (minLen + rnd.nextInt(spread)))
+          .map(_ => "ab".charAt(rnd.nextInt(2))).mkString)
     }
-    def bruteLcp(s2: String, t2: String): Long =
-      s2.zip(t2).takeWhile { case (x, y) => x == y }.size.toLong
-    val sorted = docs.flatMap { case (_, t) =>
-      (1 to t.length).map(p => t.substring(p - 1))
-    }.distinct.sorted
-    val exact = sorted.zip(sorted.tail).zipWithIndex
-      .map { case ((a, b), i) => i.toLong -> bruteLcp(a, b) }.toMap
-    Seq(1L, 3L, 4L, 7L, 8L).foreach { cap =>
-      val got = Suffix.adjacentLcp(
-        docs.toDF("doc_id", "text"), "doc_id", "text", maxLcp = cap)
-        .collect().map(r => r.getLong(0) -> math.min(r.getLong(5), cap)).toMap
+  }
+
+  private val caps = Seq(1L, 3L, 4L, 7L, 8L, 64L)
+
+  test("capped walk: least(lcp, maxLcp) is exact for every cap") {
+    // the capped contract: full rows (srank, both (doc,pos)-minimal
+    // representatives, least(lcp, cap)) equal the brute force on EVERY
+    // pair — including caps that are not powers of two and one that
+    // never clamps
+    val docs = longRepeats(97, 16, 8, 40)
+    (caps :+ longest(docs)).foreach { cap =>
       withClue(s"cap $cap: ") {
-        got shouldBe exact.map { case (k, v) => k -> math.min(v, cap) }
+        lcpRows(docs, cap) shouldBe bruteRows(docs, cap)
       }
     }
   }
 
   test("adjacentLcpCapped == adjacentLcp + least(lcp, cap), full rows, every cap") {
-    // the direct-slice-compare path must be bit-identical to the walk
-    // formulation it replaces in q_suffix_lcp: same srank (full-suffix
-    // dense rank), same representative pair, lcp clamped at the cap
-    val rnd = new scala.util.Random(83)
-    val docs = (0 until 18).map { i =>
-      (i.toLong,
-        (0 until (4 + rnd.nextInt(36)))
-          .map(_ => "ab".charAt(rnd.nextInt(2))).mkString) // long repeats
-    } :+ (99L -> "") // empty doc: contributes nothing, must not break
-    def rows(df: org.apache.spark.sql.DataFrame, cap: Long) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), math.min(r.getLong(5), cap))).toSet
-    Seq(1L, 4L, 7L, 64L).foreach { cap =>
-      val walk = rows(Suffix.adjacentLcp(
-        docs.toDF("doc_id", "text"), "doc_id", "text", maxLcp = cap), cap)
-      val direct = rows(Suffix.adjacentLcpCapped(
-        docs.toDF("doc_id", "text"), "doc_id", "text", maxLcp = cap), cap)
-      withClue(s"cap $cap: ") { direct shouldBe walk }
+    // a capped run equals the exact (cap >= longest document) run with
+    // lcp clamped at the cap: same srank, same representative pair
+    val corpora = Seq(
+      // the empty doc contributes nothing; the 1- and 2-char docs tie
+      // with suffixes of longer docs
+      "short docs" -> (longRepeats(83, 18, 4, 36) ++
+        Seq(99L -> "", 100L -> "b", 101L -> "ab")),
+      // longest doc <= 2: the ladder runs no doubling round at all
+      "no doubling round" -> Seq(1L -> "ab", 2L -> "b", 3L -> "ba",
+        4L -> "", 5L -> "a", 6L -> "ab"))
+    for ((name, docs) <- corpora) {
+      val exact = lcpRows(docs, longest(docs))
+      withClue(s"$name, exact: ") {
+        exact shouldBe bruteRows(docs, Long.MaxValue)
+      }
+      caps.foreach { cap =>
+        withClue(s"$name, cap $cap: ") {
+          lcpRows(docs, cap) shouldBe
+            exact.map(r => r.copy(_6 = math.min(r._6, cap)))
+        }
+      }
     }
   }
 
