@@ -5077,8 +5077,8 @@ object Queries {
       // the SAME SQL: any silent divergence between the transient and
       // persisted paths hash-mismatches.
       val e = t(s, d).embeddings
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index_" +
-        new java.io.File(d).getName
+      val dir = graft.functions.Stores.scratchDir(
+        "graft_ivfpq_index_", new java.io.File(d).getName)
       Similarity.writeIvfPqIndex(e, "vec_id", "embedding", dir,
         dims = 64, numSub = PqM, codesPerSub = PqK, pqIters = PqIters,
         numCells = IvfNumCells, ivfIters = 2)
@@ -6408,11 +6408,8 @@ object Queries {
     "q_phrase_served",
     "phrase probe served from a PERSISTED term-bucket-partitioned posting store: directory pruning, corpus text never touched",
     (s, d) => {
-      // per-run-unique path (PID suffix): two concurrent harness runs on
-      // the same dataset must not race each other's store rebuild; the
-      // same JVM re-running the query just rebuilds its own store
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_postings_" +
-        s"${ProcessHandle.current().pid()}_${new java.io.File(d).getName}"
+      val dir = graft.functions.Stores.scratchDir(
+        "graft_postings_", new java.io.File(d).getName)
       graft.functions.Curation.writePhrasePostings(
         graft.functions.Curation.phrasePostings(
           t(s, d).documents.filter(col("doc_id") < PhraseSnapDoc),
@@ -6456,26 +6453,12 @@ object Queries {
     "q_phrase_store",
     "phrase probe over a STREAMED multi-batch posting store: batch=/tb= layout, atomic per-batch publication, directory pruning spans every batch",
     (s, d) => {
-      import graft.functions.Stores
-      // per-run-unique path (PID suffix), same contract as q_phrase_served
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_pstore_" +
-        s"${ProcessHandle.current().pid()}_${new java.io.File(d).getName}"
-      val docs = t(s, d).documents
-      // two ingest batches, published exactly the way phraseAuditIngest
-      // publishes them: written beside the store, renamed in atomically,
-      // never rewritten once present (a re-run in the same JVM exercises
-      // the replay no-op path)
-      Stores.publishOnce(s, s"$dir/batch=0")(
-        Curation.writePostingsRaw(
-          Curation.phrasePostings(
-            docs.filter(col("doc_id") < StoreBatchBoundary), "doc_id", "text"),
-          _, Curation.PhrasePostingBuckets))
-      Stores.publishOnce(s, s"$dir/batch=1")(
-        Curation.writePostingsRaw(
-          Curation.phrasePostings(
-            docs.filter(col("doc_id") >= StoreBatchBoundary &&
-              col("doc_id") < StoreSnapDoc), "doc_id", "text"),
-          _, Curation.PhrasePostingBuckets))
+      val dir = graft.functions.Stores.scratchDir(
+        "graft_pstore_", new java.io.File(d).getName)
+      val batches = publishPostingBatches(s, d, dir)
+      // a replayed batch is a no-op: its committed directory is kept
+      require(!publishPostingBatch(s, dir, 0, batches.head),
+        "q_phrase_store: a replayed batch 0 was published again")
       Curation.phraseMatchesStore(s, dir, StorePhrases)
     },
     Some(phraseStoreOracle))
@@ -6491,23 +6474,36 @@ object Queries {
       // Swept at JVM exit (scratch registry).
       val dir = graft.functions.Stores.scratchDir(
         "graft_pcomp_", new java.io.File(d).getName)
-      import graft.functions.Stores
-      val docs = t(s, d).documents
-      Stores.publishOnce(s, s"$dir/batch=0")(
-        Curation.writePostingsRaw(
-          Curation.phrasePostings(
-            docs.filter(col("doc_id") < StoreBatchBoundary), "doc_id", "text"),
-          _, Curation.PhrasePostingBuckets))
-      Stores.publishOnce(s, s"$dir/batch=1")(
-        Curation.writePostingsRaw(
-          Curation.phrasePostings(
-            docs.filter(col("doc_id") >= StoreBatchBoundary &&
-              col("doc_id") < StoreSnapDoc), "doc_id", "text"),
-          _, Curation.PhrasePostingBuckets))
+      publishPostingBatches(s, d, dir)
       Curation.compactPostingStore(s, dir)
       Curation.phraseMatchesStore(s, dir, StorePhrases)
     },
     Some(phraseStoreOracle))
+
+  /** Publish one ingest batch's postings into the streamed store at
+    * `dir` exactly the way phraseAuditIngest publishes them: written
+    * beside the store, renamed in atomically, never rewritten once
+    * present (`false` for an already-published id).
+    */
+  private def publishPostingBatch(
+      s: SparkSession, dir: String, batch: Long, docs: DataFrame): Boolean =
+    graft.functions.Stores.publishBatch(s, dir, batch)(
+      Curation.writePostingsRaw(
+        Curation.phrasePostings(docs, "doc_id", "text"), _,
+        Curation.PhrasePostingBuckets))
+
+  /** Publish the two ingest batches of [[qPhraseStore]]'s split into
+    * `dir`; returns the batches' documents in id order.
+    */
+  private def publishPostingBatches(
+      s: SparkSession, d: String, dir: String): Seq[DataFrame] = {
+    val docs = t(s, d).documents
+    val batches = Seq(
+      docs.filter(col("doc_id") < StoreBatchBoundary),
+      docs.filter(col("doc_id") >= StoreBatchBoundary && col("doc_id") < StoreSnapDoc))
+    batches.zipWithIndex.foreach { case (b, i) => publishPostingBatch(s, dir, i.toLong, b) }
+    batches
+  }
 
   /** One oracle, two store layouts: the multi-batch probe
     * (q_phrase_store) and the compacted store's probe (q_phrase_compact)

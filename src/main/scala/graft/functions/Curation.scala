@@ -136,10 +136,10 @@ object Curation {
     bm25Search(docs, bm25Index(docs, idCol, textCol), idCol, textCol, terms, k)
 
   /** Publish one corpus batch's BM25 statistics as an ADDITIVE layer of
-    * a streaming index store: ONE `batch=<id>` directory holding both
-    * the batch's `df/` (tok, df over the batch's docs) and `tot/` (one
-    * row of batch n_docs/t_toks), published in a SINGLE
-    * `Stores.publishOnce` rename — a replayed batch is a no-op, and a
+    * a streaming index store: ONE batch directory holding both the
+    * batch's `df/` (tok, df over the batch's docs) and `tot/` (one row
+    * of batch n_docs/t_toks), published in a SINGLE
+    * [[Stores.publishBatch]] rename — a replayed batch is a no-op, and a
     * racing reader sees df AND totals together or neither (two separate
     * publishes would open a window where df includes a batch whose
     * totals don't, skewing every idf/avgdl until the second rename).
@@ -151,7 +151,7 @@ object Curation {
     * would in any additive aggregate.
     */
   def writeBm25Batch(ix: Bm25Index, dir: String, batchId: Long): Unit = {
-    Stores.publishOnce(ix.df.sparkSession, s"$dir/batch=$batchId") { tmp =>
+    Stores.publishBatch(ix.df.sparkSession, dir, batchId) { tmp =>
       ix.df.write.mode("overwrite").parquet(s"$tmp/df")
       ix.tot.write.mode("overwrite").parquet(s"$tmp/tot")
     }
@@ -160,31 +160,23 @@ object Curation {
 
   /** Serve a [[Bm25Index]] from a layered store written by
     * [[writeBm25Batch]]: df layers sum per token, totals layers sum to
-    * one row (both globbed across the committed `batch=*` dirs — temp
-    * siblings never match the glob). Both reads are vocab- (not
-    * corpus-) scale; the fold is a keyed aggregation a search plan then
-    * broadcasts, same as the monolithic index.
+    * one row (both read from the committed batch directories,
+    * [[Stores.batchIds]]). Both reads are vocab- (not corpus-) scale;
+    * the fold is a keyed aggregation a search plan then broadcasts, same
+    * as the monolithic index.
     */
   def readBm25Store(
       spark: org.apache.spark.sql.SparkSession, dir: String): Bm25Index = {
-    // expand the batch glob here instead of handing the glob string to
-    // the parquet reader: resolveRelation probes the LITERAL path for a
-    // streaming-sink metadata dir (FileStreamSink.hasMetadata), and a
-    // glob never exists as a literal path, so every read logged a
-    // FileNotFoundException WARN stack into the driver log (harmless
-    // but scary — flagged by the r15 review). Concrete dirs don't trip
-    // the probe. Committed layers only, same as the glob: publishOnce's
-    // temp siblings are hidden names the glob never matched either.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sessionState.newHadoopConf())
-    val batches = fs
-      .globStatus(new org.apache.hadoop.fs.Path(s"$dir/batch=*"))
-      .map(_.getPath.toString)
-    require(batches.nonEmpty, s"no committed batch=* layer under $dir")
+    // concrete layer dirs, not a glob string: resolveRelation probes the
+    // LITERAL path for a streaming-sink metadata dir
+    // (FileStreamSink.hasMetadata), and a glob never exists as a literal
+    // path, so every read logged a FileNotFoundException WARN stack
+    val batches = Stores.batchIds(spark, dir).map(Stores.batchDir(dir, _))
+    require(batches.nonEmpty, s"no committed batch layer under $dir")
     Bm25Index(
-      spark.read.parquet(batches.map(_ + "/df").toIndexedSeq: _*)
+      spark.read.parquet(batches.map(_ + "/df"): _*)
         .groupBy(col("tok")).agg(sum(col("df")).as("df")),
-      spark.read.parquet(batches.map(_ + "/tot").toIndexedSeq: _*)
+      spark.read.parquet(batches.map(_ + "/tot"): _*)
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("t_toks")).as("t_toks")))
   }
 
@@ -195,48 +187,24 @@ object Curation {
     * a df + tot layer, and [[readBm25Store]]'s serving fold sums across
     * ALL of them forever, so both file count and fold width grow
     * O(triggers). The fold is additive algebra (df and totals are pure
-    * sums), so pre-folding the layers into one `batch=<max id>` layer
-    * is exact: searches served before and after are bit-identical.
-    *
-    * Publication and replay mirror [[compactPostingStore]]: the
-    * compacted tree is built in a hidden temp sibling and swapped over
-    * the store root atomically ([[Stores.publishReplace]] — a racing
-    * reader sees the old store or the compacted one, never partial),
-    * the kept layer carries the HIGHEST committed batch id so a resumed
-    * ingest (strictly larger ids) appends above it, and — as with any
-    * sink-side compaction — it runs between ingest runs (single-writer
-    * discipline). `dfFiles` sizes the folded df rewrite (coalesce — the
-    * fold's agg output narrows without a shuffle); 1 suits test stores,
-    * size to ~vocab volume / 1 GB in production.
-    *
-    * Returns (kept batch id, data files before, after);
-    * (-1, 0, n) for a missing or empty store.
+    * sums), so pre-folding the layers into the one kept layer is exact:
+    * searches served before and after are bit-identical. Publication,
+    * the kept id and the return value are [[Stores.foldAndSwap]]'s.
+    * `dfFiles` sizes the folded df rewrite (coalesce — the fold's agg
+    * output narrows without a shuffle); 1 suits test stores, size to
+    * ~vocab volume / 1 GB in production.
     */
   def compactBm25Store(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       dfFiles: Int = 1): (Long, Long, Long) = {
-    import org.apache.hadoop.fs.Path
     require(dfFiles >= 1, s"dfFiles must be >= 1, got $dfFiles")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sessionState.newHadoopConf())
-    def dataFiles(): Long = Stores.committedDataFiles(spark, dir)
-    if (!fs.exists(new Path(dir))) return (-1L, 0L, 0L)
-    // committed layers only (hidden temp siblings are workspace)
-    val batches = fs.listStatus(new Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    if (batches.isEmpty) return (-1L, 0L, dataFiles())
-    val maxBatch = batches.max
-    val folded = readBm25Store(spark, dir)
-    val before = dataFiles()
-    Stores.publishReplace(spark, dir) { tmp =>
-      folded.df.coalesce(dfFiles)
-        .write.mode("overwrite").parquet(s"$tmp/batch=$maxBatch/df")
-      folded.tot.coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/batch=$maxBatch/tot")
+    Stores.foldAndSwap(spark, dir) { (kept, tmp) =>
+      val folded = readBm25Store(spark, dir)
+      val layer = Stores.batchDir(tmp, kept)
+      folded.df.coalesce(dfFiles).write.mode("overwrite").parquet(s"$layer/df")
+      folded.tot.coalesce(1).write.mode("overwrite").parquet(s"$layer/tot")
     }
-    (maxBatch, before, dataFiles())
   }
 
   // ─────────────────────────────────────────────────────────────────
@@ -604,12 +572,10 @@ object Curation {
   /** [[phraseMatchesIndexed]] over a STREAMED posting store — the
     * layout [[graft.streaming.Pipelines.phraseAuditIngest]] maintains:
     * one `batch=N` layer above the term-hash buckets
-    * (`postings/batch=N/tb=K/`). Batch directories are published
-    * atomically ([[Stores.publishOnce]]: written beside the store,
-    * renamed into place, and never rewritten once present — a replayed
-    * batch is a no-op), so a probe running concurrently with ingest
-    * sees each batch either complete or not yet published, never
-    * partial. Directory pruning on `tb` spans every batch. Contract, as
+    * (`postings/batch=N/tb=K/`). Batches follow [[Stores]]' per-batch
+    * contract, so a probe running concurrently with ingest sees each
+    * batch either complete or not yet published, never partial.
+    * Directory pruning on `tb` spans every batch. Contract, as
     * for the CDC store: batches carry NEW documents (a doc re-ingested
     * in two batches would double its postings — dedup is the
     * exact-dedup stage's job, upstream).
@@ -626,9 +592,10 @@ object Curation {
 
   /** Compact a STREAMED posting store (the `batch=N/tb=K` layout
     * [[graft.streaming.Pipelines.phraseAuditIngest]] maintains): rewrite
-    * every committed batch into ONE batch layer, published atomically
-    * over the store root ([[Stores.publishReplace]] — a concurrent probe
-    * sees the old store or the compacted one, never a partial tree).
+    * every committed batch into ONE batch layer with
+    * [[Stores.foldAndSwap]] (a concurrent probe sees the old store or
+    * the compacted one, never a partial tree; kept id and return value
+    * are its).
     *
     * Why: each trigger adds a directory of per-bucket files, so probe
     * cost grows with batch count (measured: 0.50 s at 10 batches →
@@ -636,44 +603,25 @@ object Curation {
     * as the cold archive's ([[graft.streaming.Sinks.compactArchive]]).
     * Compaction collapses O(batches × buckets) files to O(buckets) with
     * one shuffle-free partitioned rewrite; probe results are unchanged.
-    *
-    * The compacted layer keeps the HIGHEST committed batch id, so a
-    * resumed ingest (whose next ids are strictly larger) appends above
-    * it and replay of already-compacted batch ids stays a no-op only if
-    * the checkpoint is retained — as with any sink-side compaction, run
-    * this between ingest runs (single-writer discipline; the ingest
-    * owns the store while live).
-    *
-    * Returns (kept batch id, data files before, after); (-1, 0, 0) for
-    * a missing or empty store.
+    * Replay of already-compacted batch ids stays a no-op only if the
+    * checkpoint is retained.
     */
   def compactPostingStore(
       spark: org.apache.spark.sql.SparkSession,
       storeDir: String,
       buckets: Int = PhrasePostingBuckets): (Long, Long, Long) = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sessionState.newHadoopConf())
-    // count only files under committed batch dirs — hidden-ancestor
-    // aware, so a crashed publish's temp sibling never inflates it
-    def dataFiles(): Long = Stores.committedDataFiles(spark, storeDir)
-    if (!fs.exists(new Path(storeDir))) return (-1L, 0L, 0L)
+    // explicit schema: a layer of zero postings holds no parquet file
     val schema = StructType(Seq(
       StructField("term", StringType), StructField("doc_id", LongType),
       StructField("pos", LongType), StructField("batch", LongType),
       StructField("tb", LongType)))
-    val store = spark.read.schema(schema).parquet(storeDir)
-    val mb = store.agg(max(col("batch"))).head()
-    if (mb.isNullAt(0)) return (-1L, 0L, dataFiles())
-    val maxBatch = mb.getLong(0)
-    val before = dataFiles()
-    Stores.publishReplace(spark, storeDir) { tmp =>
+    Stores.foldAndSwap(spark, storeDir) { (kept, tmp) =>
       writePostingsRaw(
-        store.select(col("term"), col("doc_id"), col("pos")),
-        s"$tmp/batch=$maxBatch", buckets)
+        spark.read.schema(schema).parquet(storeDir)
+          .select(col("term"), col("doc_id"), col("pos")),
+        Stores.batchDir(tmp, kept), buckets)
     }
-    (maxBatch, before, dataFiles())
   }
 
   /** Shared probe path of [[phraseMatchesIndexed]] / [[phraseMatchesStore]]

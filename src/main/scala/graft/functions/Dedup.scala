@@ -344,13 +344,13 @@ object Dedup {
       maxShingleFreq: Int = 0): DataFrame = {
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0, 10000], got $thresholdBp")
-    // native Shingles (element-identical to
-    // array_distinct(shinglesN(text, n))): the column-algebra transform
-    // re-inlines split(trim(text)) inside every lambda element_at (no
-    // CSE across lambda bodies — 5 splits per shingle), and this plan
-    // evaluates the shingle stream five times; the native one-pass
-    // build measured q_containment 32.5 s -> 1.5 s at sf0.1
-    // (3.0 s at sf10 — PERF.md round 13)
+    // native Shingles: the distinct ordered token n-grams of the text
+    // (tokens joined by one space; none below n tokens). A
+    // column-algebra transform re-inlines split(trim(text)) inside
+    // every lambda element_at (no CSE across lambda bodies — 5 splits
+    // per shingle), and this plan evaluates the shingle stream five
+    // times; the native one-pass build measured q_containment
+    // 32.5 s -> 1.5 s at sf0.1 (3.0 s at sf10 — PERF.md round 13)
     val sh = df
       .select(col(id), tokens(col(text)).as("tk"))
       .select(col(id), explode(
@@ -488,17 +488,6 @@ object Dedup {
       transform(sequence(lit(0), size(t) - 3), i =>
         concat_ws(" ",
           element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Ordered token n-gram shingles (tokens joined by one space); empty
-    * for texts with fewer than `n` tokens. Generalizes [[shingles3]].
-    */
-  def shinglesN(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    when(size(t) >= n,
-      transform(sequence(lit(0), size(t) - n), i =>
-        concat_ws(" ", (1 to n).map(k => element_at(t, i + k)): _*)))
       .otherwise(array().cast("array<string>"))
   }
 
@@ -899,60 +888,31 @@ object Dedup {
     * stores) — the small-file fix the phrase-posting and IVF-PQ stores
     * already have ([[Curation.compactPostingStore]],
     * [[Similarity.compactIvfPqIndex]]): a long-running ingest leaves one
-    * `batch=<id>` directory per trigger, so every future batch's
+    * batch directory per trigger, so every future batch's
     * classification join opens O(batches) directories. Compaction
-    * collapses each store to ONE kept layer carrying the highest batch
-    * id seen, published atomically over the store root
-    * (`Stores.publishReplace` — a racing classification sees the old
-    * layout or the new, never a partial).
-    *
-    * The replay contract survives: `dedupIngest` treats rows with
-    * `batch < currentBatchId` as corpus, and compaction (run offline,
-    * i.e. between triggers, after those batches committed) stamps the
-    * kept layer with the max PUBLISHED id — any later or replayed
-    * trigger has a strictly larger id, so the compacted corpus is
-    * visible to exactly the batches that saw the original layers.
-    * Resumed ingest appends `batch=<id>` dirs above the kept one.
+    * collapses each store to ONE kept layer with [[Stores.foldAndSwap]]
+    * (a racing classification sees the old layout or the new, never a
+    * partial). The replay contract survives: the kept layer carries the
+    * highest published id, so the compacted corpus is in the prior view
+    * of exactly the batches that saw the original layers.
     *
     * `filesPerTable` sizes the rewrite (repartition on the lookup key);
     * 1 suits test/demo stores — size to ~index volume / 1 GB in
-    * production. Returns per store (fp, bands): (kept batch id, files
-    * before, files after); (-1, 0, n) when the store is absent or empty.
+    * production. Returns per store (fp, bands) [[Stores.foldAndSwap]]'s
+    * (kept batch id, files before, files after).
     */
   def compactDedupIndex(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
       filesPerTable: Int = 1): Map[String, (Long, Long, Long)] = {
-    import org.apache.hadoop.fs.Path
     require(filesPerTable >= 1, s"filesPerTable must be >= 1, got $filesPerTable")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-    // hidden-ancestor-aware: a crashed publish's temp-sibling contents
-    // (`_tmp_*/batch=<id>/…`) are workspace, not store, and must not
-    // inflate the before/after accounting
-    def dataFiles(dir: String): Long =
-      graft.functions.Stores.committedDataFiles(spark, dir)
     def compactSub(sub: String, keyCols: Seq[String]): (Long, Long, Long) = {
       val dir = s"$stateDir/$sub"
-      val before = dataFiles(dir)
-      if (!fs.exists(new Path(dir))) return (-1L, before, before)
-      val df =
-        try spark.read.parquet(dir)
-        catch {
-          // a crashed pre-atomic legacy write with no committed footers:
-          // nothing readable to compact
-          case _: org.apache.spark.sql.AnalysisException => return (-1L, before, before)
-        }
-      // partition discovery infers small `batch=` values as INTEGER
-      val mb = df.agg(max(col("batch").cast("long"))).head()
-      if (mb.isNullAt(0)) return (-1L, before, before)
-      val maxBatch = mb.getLong(0)
-      val data = df.drop("batch")
-        .repartition(filesPerTable, keyCols.map(col): _*)
-      graft.functions.Stores.publishReplace(spark, dir) { tmp =>
-        data.write.mode("overwrite").parquet(s"$tmp/batch=$maxBatch")
+      Stores.foldAndSwap(spark, dir) { (kept, tmp) =>
+        spark.read.parquet(dir).drop("batch")
+          .repartition(filesPerTable, keyCols.map(col): _*)
+          .write.mode("overwrite").parquet(Stores.batchDir(tmp, kept))
       }
-      (maxBatch, before, dataFiles(dir))
     }
     Map(
       "fp"    -> compactSub("fp", Seq("fp")),

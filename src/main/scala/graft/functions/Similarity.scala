@@ -1849,26 +1849,19 @@ object Similarity {
     // a RETRAIN invalidates every inverted list encoded under the old
     // model — streamed batch=<id> directories included (their codes AND
     // cell routings are meaningless against new centroids/codebooks), so
-    // the whole codes/ tree is dropped before the base build is written
-    // (ADVICE r8). The version stamp below closes the remaining race
-    // (an ingest writing a stale batch AFTER this clear): every batch
-    // directory carries the model fingerprint it was encoded under, and
-    // [[ivfPqAnnIndexed]] refuses to score mismatched batches.
-    val fs = hadoopFs(spark, dir)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/codes"), true)
-    // the base build is batch=-1; streaming ingest
-    // (graft.streaming.Pipelines.ivfPqIngest) appends batch=<id>
-    // directories with the SAME two-level batch=/cell= layout, so
-    // partition discovery stays uniform and cell pruning spans both
-    // explicit-count cell repartition: without it the write inherits
-    // the scan's partitioning (one split at bench SFs) and a single
-    // task opens every cell file sequentially; the explicit count
-    // spreads file creation while keeping one file per cell
-    encodeWithModel(corpus, localCn, books, id, vec)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes/batch=-1")
-    writeVersionMarker(spark, s"$dir/codes/batch=-1", modelVersion(localCn, books))
+    // the whole codes/ tree is replaced by the base build (ADVICE r8).
+    // The version stamp closes the remaining race (an ingest writing a
+    // stale batch AFTER the swap): every batch directory carries the
+    // model fingerprint it was encoded under, and [[ivfPqAnnIndexed]]
+    // refuses to score mismatched batches.
+    Stores.publishReplace(spark, s"$dir/codes") { tmp =>
+      // the base build is batch=-1; streaming ingest
+      // (graft.streaming.Pipelines.ivfPqIngest) appends batch=<id>
+      // directories with the SAME two-level batch=/cell= layout, so
+      // partition discovery stays uniform and cell pruning spans both
+      writeCellLayer(encodeWithModel(corpus, localCn, books, id, vec),
+        Stores.batchDir(tmp, -1), modelVersion(localCn, books))
+    }
     localCn.write.mode("overwrite").parquet(s"$dir/centroids")
     import spark.implicits._
     books.zipWithIndex.toSeq
@@ -1982,20 +1975,14 @@ object Similarity {
     }
   }
 
-  /** The `<sub>/batch=<id>` directories of a persisted index
-    * (`codes/` for IVF-PQ, `assign/` for the semantic-dedup index).
+  /** The committed batch directories of a persisted index's `sub`
+    * store (`codes/` for IVF-PQ, `assign/` for the semantic-dedup index).
     */
   private def listBatchDirs(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
-      sub: String = "codes"): Seq[String] = {
-    val fs = hadoopFs(spark, indexDir)
-    val codes = new org.apache.hadoop.fs.Path(s"$indexDir/$sub")
-    if (!fs.exists(codes)) Seq.empty
-    else fs.listStatus(codes).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.toString)
-  }
+      sub: String = "codes"): Seq[String] =
+    Stores.batchIds(spark, s"$indexDir/$sub").map(Stores.batchDir(s"$indexDir/$sub", _))
 
   /** Every batch directory must carry the CURRENT model's version stamp;
     * a mismatch means lists encoded under a superseded model survived a
@@ -2029,7 +2016,10 @@ object Similarity {
     * lists would bake a superseded encoding into the base) into one
     * file per cell under a fresh `batch=-1`, then atomically swaps the
     * codes/ tree. Search results are identical before and after; cell
-    * pruning is preserved (the layout is exactly the base build's).
+    * pruning is preserved (the layout is exactly the base build's). The
+    * swap is [[Stores.foldAndSwap]]'s; the folded layer is always the
+    * base `batch=-1`, not the highest streamed id, because the base
+    * layout is what a fresh build writes.
     */
   def compactIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -2037,26 +2027,32 @@ object Similarity {
     val (localCn, books) = readIndexModel(spark, indexDir)
     val version = modelVersion(localCn, books)
     requireCurrentModel(spark, indexDir, version, "compactIvfPqIndex")
-    val numSub = books.length
-    val fs = hadoopFs(spark, indexDir)
-    val codesPath = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    val tmpPath   = new org.apache.hadoop.fs.Path(s"$indexDir/codes_compacting")
-    fs.delete(tmpPath, true)
-    // repartition BY the cell column: each cell's rows land in exactly
-    // one task, so partitionBy writes exactly one file per cell (the
-    // explicit count keeps AQE from coalescing the byte-small shuffle
-    // into a couple of tasks that would create the files sequentially)
+    val codes = s"$indexDir/codes"
     val cols = col("neighbor_id") +:
-      (0 until numSub).map(mm => col(s"code$mm")) :+ col("cell")
-    spark.read.parquet(codesPath.toString)
-      .select(cols: _*)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
+      books.indices.map(mm => col(s"code$mm")) :+ col("cell")
+    Stores.foldAndSwap(spark, codes) { (_, tmp) =>
+      writeCellLayer(spark.read.parquet(codes).select(cols: _*),
+        Stores.batchDir(tmp, -1), version)
+    }
+    ()
+  }
+
+  /** Write one cell-partitioned layer (IVF-PQ inverted lists or a
+    * semantic-dedup assignment) at `layerDir` and stamp it with the
+    * model `version`. Repartition BY the cell column with an explicit
+    * count: each cell's rows land in exactly one task, so partitionBy
+    * writes exactly one file per cell, and the explicit count keeps AQE
+    * from coalescing the byte-small shuffle into a couple of tasks that
+    * open the cell files sequentially (measured 0.5 s of a semantic
+    * index build; without any repartition a base build inherits the
+    * scan's partitioning, one split at bench SFs).
+    */
+  private def writeCellLayer(layer: DataFrame, layerDir: String, version: String): Unit = {
+    layer
+      .repartition(layer.sparkSession.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$tmpPath/batch=-1")
-    writeVersionMarker(spark, s"$tmpPath/batch=-1", version)
-    fs.delete(codesPath, true)
-    require(fs.rename(tmpPath, codesPath),
-      s"compactIvfPqIndex: rename $tmpPath -> $codesPath failed")
+      .parquet(layerDir)
+    writeVersionMarker(layer.sparkSession, layerDir, version)
   }
 
   /** IVF-PQ search over a PERSISTED index ([[writeIvfPqIndex]]): same
@@ -2206,21 +2202,12 @@ object Similarity {
       // the max-id scan is independent of the assignment write — overlap
       // the two jobs (guide §2.6); the marker is only written after both
       val mxF = Future(corpus.agg(max(col(id).cast("long"))).head())
-      // EXPLICIT-COUNT repartition by cell: a bare repartition(col) is
-      // AQE-coalescible and the ~√N-cell assignment is byte-small, so
-      // the dynamic-partition write collapsed to 2 tasks each opening
-      // ~½ the cell files sequentially (measured 0.5 s of the build).
-      // The explicit count spreads the file creation across the conf
-      // width while keeping every cell's rows in exactly one task —
-      // still one file per cell.
-      assignWithModel(corpus, id, vec, localCn)
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$tmp/assign/batch=-1")
-      writeVersionMarker(spark, s"$tmp/assign/batch=-1", centroidVersion(localCn))
+      val base = Stores.batchDir(s"$tmp/assign", -1)
+      writeCellLayer(assignWithModel(corpus, id, vec, localCn), base,
+        centroidVersion(localCn))
       val mx = Await.result(mxF, scala.concurrent.duration.Duration.Inf)
       if (!mx.isNullAt(0))
-        writeMaxIdMarker(spark, s"$tmp/assign/batch=-1", mx.getLong(0))
+        writeMaxIdMarker(spark, base, mx.getLong(0))
       localCn.write.mode("overwrite").parquet(s"$tmp/centroids")
     }
   }
@@ -2257,19 +2244,13 @@ object Similarity {
     requireCurrentModel(spark, indexDir, version, "appendSemanticBatch", "assign")
     // replay no-op BEFORE the id guard: a re-delivered batch's own ids
     // are already indexed, so the guard would (wrongly) refuse it
-    if (hadoopFs(spark, indexDir).exists(new org.apache.hadoop.fs.Path(
-        s"$indexDir/assign/batch=$batchId"))) return false
+    if (Stores.batchIds(spark, s"$indexDir/assign").contains(batchId)) return false
     val bounds = batch.agg(
       min(col(id).cast("long")), max(col(id).cast("long"))).head()
     if (bounds.isNullAt(0)) return false // empty batch: nothing to publish
     requireAppendOnlyIds(spark, indexDir, bounds.getLong(0), "appendSemanticBatch")
-    Stores.publishOnce(spark, s"$indexDir/assign/batch=$batchId") { tmp =>
-      // explicit-count cell repartition — same serialized-file-creation
-      // fix as [[writeSemanticIndex]], same one-file-per-cell layout
-      assignWithModel(batch, id, vec, localCn)
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      writeVersionMarker(spark, tmp, version)
+    Stores.publishBatch(spark, s"$indexDir/assign", batchId) { tmp =>
+      writeCellLayer(assignWithModel(batch, id, vec, localCn), tmp, version)
       writeMaxIdMarker(spark, tmp, bounds.getLong(1))
     }
   }

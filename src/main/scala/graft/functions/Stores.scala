@@ -2,29 +2,55 @@ package graft.functions
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Atomic directory publication for persisted store layouts (posting
-  * stores, CDC chunk stores, per-batch decision/report directories,
-  * streamed ANN index partitions).
+/** Atomic directory publication for persisted store layouts, and the
+  * one owner of the per-batch store layout (the cold archive, the
+  * dedup `fp/`/`bands/` index, the SRP `vecs/`/`codes/`, CDC chunks,
+  * phrase postings, BM25 layers, drift reports, IVF-PQ codes, the
+  * semantic `assign/`).
   *
-  * The failure mode these two entry points remove: a per-batch store
-  * partition written with `mode("overwrite")` is delete-then-write, so a
-  * reader (an offline decontamination probe, a serving query) racing the
-  * write can observe the directory HALF-WRITTEN — for a decontamination
-  * tool that is a silent false "not contaminated". Here every directory
-  * is produced in a hidden temp sibling (`_tmp_<name>` — the leading
-  * underscore keeps it invisible to Spark's file listing and partition
-  * discovery) and published with one filesystem `rename`, an atomic
-  * metadata operation on HDFS and local filesystems (object stores
-  * without atomic rename need their usual commit-service arrangement,
-  * exactly as for [[graft.streaming.ParquetUpsertSink]]'s pointer swap).
-  * A reader therefore sees a published directory either absent or
-  * complete — never partial.
+  * The failure mode publication removes: a store directory written with
+  * `mode("overwrite")` is delete-then-write, so a reader (an offline
+  * decontamination probe, a serving query) racing the write can observe
+  * it HALF-WRITTEN — for a decontamination tool that is a silent false
+  * "not contaminated". Here every directory is produced in a hidden
+  * temp sibling (`_tmp_<name>` — the leading underscore keeps it
+  * invisible to Spark's file listing and partition discovery) and
+  * published with one filesystem `rename`, an atomic metadata operation
+  * on HDFS and local filesystems (object stores without atomic rename
+  * need their usual commit-service arrangement, exactly as for
+  * [[graft.streaming.ParquetUpsertSink]]'s pointer swap). A reader
+  * therefore sees a published directory either absent or complete —
+  * never partial.
   *
-  * Single-writer-per-store is assumed (the streaming-query model: one
-  * driver owns a store's ingest), as for every sink in
-  * [[graft.streaming.Sinks]].
+  * The per-batch contract, stated once for every streamed store:
+  *  - Layout: batch `id` of the store at `dir` lives in
+  *    [[batchDir]] `dir/batch=<id>`; [[batchIds]] lists the committed
+  *    ids (hidden temp siblings never count).
+  *  - Publish once per id ([[publishBatch]]): a batch directory only
+  *    ever appears through the atomic rename, so an existing one is
+  *    complete, and a replayed micro-batch (same id re-delivered after a
+  *    crash between sink commit and checkpoint commit) is a no-op.
+  *  - Prior view ([[priorBatches]]): an ingest classifying batch `id`
+  *    against the store reads only the layers with `batch < id`, so a
+  *    replay never matches its own committed layer.
+  *  - Compaction ([[foldAndSwap]]) folds every committed layer into one
+  *    that keeps the HIGHEST published id, so a resumed ingest (strictly
+  *    larger ids) appends above it and the prior view of every later
+  *    batch is unchanged.
+  *  - Single writer between runs: one driver owns a store's ingest while
+  *    it is live (the streaming-query model, as for every sink in
+  *    [[graft.streaming.Sinks]]); compaction and retention run between
+  *    ingest runs.
+  *  - A crash leaves only hidden siblings. A crashed publish or fold
+  *    leaves `_tmp_<name>`, which the next publish of that directory
+  *    overwrites and the next fold deletes before writing. A crash
+  *    between the two renames of a swap leaves the store ABSENT with
+  *    the previous version in `_tmp_<name>.old`; the next
+  *    [[publishReplace]] or [[foldAndSwap]] on that store renames it
+  *    back before it does anything else.
   */
 object Stores {
 
@@ -144,14 +170,9 @@ object Stores {
 
   /** Publish `finalDir` exactly once: run `write` against the hidden
     * temp sibling, then rename it into place. If `finalDir` already
-    * exists the write is SKIPPED entirely and `false` is returned —
-    * the per-batch store contract: a batch directory only ever appears
-    * via the atomic rename, so an existing one is complete, and a
-    * replayed micro-batch (same batch id re-delivered after a crash
-    * between sink commit and checkpoint commit) is a no-op instead of a
-    * delete-then-rewrite that readers could observe half-written. A
-    * crashed attempt leaves only the temp sibling, which the retry
-    * overwrites.
+    * exists the write is SKIPPED entirely and `false` is returned (the
+    * replay no-op of the per-batch contract). A crashed attempt leaves
+    * only the temp sibling, which the retry overwrites.
     */
   def publishOnce(spark: SparkSession, finalDir: String)(write: String => Unit): Boolean = {
     val fs  = fsOf(spark, finalDir)
@@ -169,12 +190,14 @@ object Stores {
 
   /** Publish `finalDir` with replacement — for one-shot stores that
     * support REBUILD (a posting index rebuilt on a new corpus
-    * snapshot). The new contents are fully written to the temp sibling
-    * first; if an old version exists it is renamed aside and deleted
-    * only after the new one is in place, so a concurrent reader sees
-    * the old store or the new store, never a partial one. (The swap is
-    * two metadata renames; a reader listing in exactly that window sees
-    * the directory briefly ABSENT — complete-or-absent, never partial.
+    * snapshot) and for [[foldAndSwap]]. The new contents are fully
+    * written to the temp sibling first (cleared beforehand: a crashed
+    * attempt's leftovers must not be renamed in with the new ones); if
+    * an old version exists it is renamed aside and deleted only after
+    * the new one is in place, so a concurrent reader sees the old store
+    * or the new store, never a partial one. (The swap is two metadata
+    * renames; a reader listing in exactly that window sees the
+    * directory briefly ABSENT — complete-or-absent, never partial.
     * Serving layouts that must never even be absent use the
     * [[graft.streaming.ParquetUpsertSink]] snapshot + pointer idiom
     * instead.)
@@ -183,14 +206,90 @@ object Stores {
     val fs  = fsOf(spark, finalDir)
     val dst = new Path(finalDir)
     val tmp = tmpSibling(finalDir)
+    val old = rollBackSwap(spark, fs, finalDir)
+    fs.delete(tmp, true)
     write(tmp.toString)
     if (fs.exists(dst)) {
-      val old = new Path(tmp.getParent, s"${tmp.getName}.old")
-      fs.delete(old, true)
       rename(spark, fs, dst, old)
       rename(spark, fs, tmp, dst)
       fs.delete(old, true)
     } else rename(spark, fs, tmp, dst)
+  }
+
+  /** Undo a [[publishReplace]] swap that crashed between its two
+    * renames (`finalDir` absent, its previous version aside in
+    * `_tmp_<name>.old`) by renaming the previous version back, and
+    * delete any other `.old` leftover. Returns the `.old` path.
+    */
+  private def rollBackSwap(spark: SparkSession, fs: FileSystem, finalDir: String): Path = {
+    val tmp = tmpSibling(finalDir)
+    val old = new Path(tmp.getParent, s"${tmp.getName}.old")
+    if (fs.exists(old)) {
+      if (fs.exists(new Path(finalDir))) fs.delete(old, true)
+      else rename(spark, fs, old, new Path(finalDir))
+    }
+    old
+  }
+
+  /** The directory of batch `id` in the per-batch store at `dir`. */
+  def batchDir(dir: String, id: Long): String = s"$dir/batch=$id"
+
+  /** Publish batch `id` of the store at `dir` exactly once
+    * ([[publishOnce]] of [[batchDir]]); `false` for a replayed id.
+    */
+  def publishBatch(spark: SparkSession, dir: String, id: Long)(write: String => Unit): Boolean =
+    publishOnce(spark, batchDir(dir, id))(write)
+
+  /** The committed batch ids of the store at `dir`, ascending; empty
+    * for a missing store. One directory listing, no Spark job; hidden
+    * temp siblings never match.
+    */
+  def batchIds(spark: SparkSession, dir: String): Seq[Long] = {
+    val fs = fsOf(spark, dir)
+    val root = new Path(dir)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+      .sorted
+  }
+
+  /** The corpus a replay-safe ingest classifies batch `batchId` against:
+    * the layers under `dir` from batches STRICTLY before this one (a
+    * committed own layer re-read by its own replay would make every row
+    * "match" itself). A missing store is `empty`, and so is one whose
+    * schema cannot be inferred: a pre-atomic-publication (legacy) store
+    * can hold a crashed first write with no committed footers at all,
+    * and inference throws before the batch filter could save the replay.
+    */
+  def priorBatches(
+      spark: SparkSession, dir: String, batchId: Long, empty: => DataFrame): DataFrame =
+    if (!fsOf(spark, dir).exists(new Path(dir))) empty
+    else
+      try spark.read.parquet(dir).filter(col("batch") < batchId)
+      catch { case _: AnalysisException => empty }
+
+  /** Compact the per-batch store at `dir` into one layer: `fold(kept,
+    * tmp)` writes the folded store under the temp root `tmp` (the kept
+    * layer at `batchDir(tmp, kept)`, or whatever layout the store
+    * keeps), reading the committed layers at `dir`; the result is
+    * swapped over `dir` with [[publishReplace]]. `kept` is the highest
+    * committed id, taken from the listing.
+    *
+    * Returns (kept id, committed data files before, after) per
+    * [[committedDataFiles]]; `(-1, n, n)` when nothing is committed,
+    * in which case `fold` never runs.
+    */
+  def foldAndSwap(spark: SparkSession, dir: String)(fold: (Long, String) => Unit)
+      : (Long, Long, Long) = {
+    rollBackSwap(spark, fsOf(spark, dir), dir)
+    val ids = batchIds(spark, dir)
+    val before = committedDataFiles(spark, dir)
+    if (ids.isEmpty) (-1L, before, before)
+    else {
+      publishReplace(spark, dir)(fold(ids.last, _))
+      (ids.last, before, committedDataFiles(spark, dir))
+    }
   }
 
   /** Count committed data files under `dir` whose path contains

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Stores
 import graft.model.SteamModel.Review
 import graft.operators.SteamOps
 
@@ -57,12 +58,11 @@ object Pipelines {
     * `foreachBatch` — a single Kafka read and one checkpoint.
     *
     * Per-trigger work is O(batch), not O(history):
-    *  - cold: the batch lands in its own `batch=<id>` partition directory,
-    *    published atomically ([[graft.functions.Stores.publishOnce]] —
-    *    written beside the archive, renamed into place, a replayed batch
-    *    is a no-op), so nothing is ever appended twice and a reader never
-    *    sees a half-written batch (the built-in file sink's manifest does
-    *    this for the single-sink case; inside foreachBatch we provide it).
+    *  - cold: the batch lands in its own archive batch directory under
+    *    [[Stores]]' per-batch contract (published once, atomically), so
+    *    nothing is ever appended twice and a reader never sees a
+    *    half-written batch (the built-in file sink's manifest does this
+    *    for the single-sink case; inside foreachBatch we provide it).
     *  - hot: per-batch ADDITIVE partials
     *    ([[graft.operators.SteamOps.sentimentAggPartial]] /
     *    `reviewBombAggPartial`) merge into the stored tables via
@@ -98,8 +98,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
         try concurrently(batch.sparkSession)(
-          () => graft.functions.Stores.publishOnce(
-            batch.sparkSession, s"$archiveDir/batch=$batchId")(
+          () => Stores.publishBatch(batch.sparkSession, archiveDir, batchId)(
             batch.write.mode("overwrite").parquet(_)),
           () => sentimentSink.upsertAdditive(
             SteamOps.sentimentAggPartial(batch), batchId,
@@ -145,25 +144,6 @@ object Pipelines {
     }
   }
 
-  /** The corpus a replay-safe ingest classifies batch `batchId` against:
-    * the per-batch partitions under `dir` from batches STRICTLY before
-    * this one. A batch directory only appears complete (atomic
-    * publication), but a committed own partition re-read by its own
-    * replay would make every row "match" itself. A missing store is
-    * `empty`, and so is one whose schema cannot be inferred: a
-    * pre-atomic-publication (legacy) store can hold a crashed first
-    * write with no committed footers at all, and inference throws
-    * before the batch filter could save the replay.
-    */
-  private def priorBatches(
-      spark: SparkSession, dir: String, batchId: Long, empty: => DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) empty
-    else
-      try spark.read.parquet(dir).filter(col("batch") < batchId)
-      catch { case _: org.apache.spark.sql.AnalysisException => empty }
-  }
-
   /** Streaming incremental dedup ingest: each micro-batch is classified
     * against the corpus-so-far via
     * [[graft.functions.Dedup.incrementalDedupAgainst]], decisions land in
@@ -173,12 +153,10 @@ object Pipelines {
     * against them without ever re-reading corpus text.
     *
     * Per-trigger work is O(batch): the corpus contributes only its two
-    * persisted index tables (join-pruned by the batch's keys), and all
-    * writes are per-batch partition directories published atomically
-    * ([[graft.functions.Stores.publishOnce]] — a replayed batch finds
-    * its directory already present and is a no-op, and a concurrent
-    * reader never sees a half-written partition; same idiom as
-    * [[reviewsMultiSink]]). Batch-internal duplicates are intentionally
+    * persisted index tables (join-pruned by the batch's keys), and every
+    * store follows [[Stores]]' per-batch contract (publish once per id,
+    * the corpus is the `batch < id` prior view, so a replayed batch is
+    * a no-op). Batch-internal duplicates are intentionally
     * left to the NEXT batch's corpus view or an in-batch
     * [[graft.functions.Dedup.dropExactDuplicates]] pre-pass — keeping the
     * per-batch classification a pure function of (batch, corpus indexes).
@@ -199,10 +177,10 @@ object Pipelines {
         val spark = batch.sparkSession
         batch.persist()
         try {
-          val corpusFp = priorBatches(spark, s"$stateDir/fp", batchId,
+          val corpusFp = Stores.priorBatches(spark, s"$stateDir/fp", batchId,
             Dedup.fingerprintTable(batch.limit(0), id, text).withColumnRenamed(id, "cid"))
             .select(col("cid"), col("fp"))
-          val corpusBands = priorBatches(spark, s"$stateDir/bands", batchId,
+          val corpusBands = Stores.priorBatches(spark, s"$stateDir/bands", batchId,
             Dedup.bandTable(batch.limit(0), id, text, numHashes, bands)
               .withColumnRenamed(id, "cid"))
             .select(col("cid"), col("band"), col("bkey"))
@@ -210,15 +188,14 @@ object Pipelines {
             .incrementalDedupAgainst(batch, corpusFp, corpusBands, id, text, numHashes, bands)
             .persist()
           try {
-            import graft.functions.Stores
-            Stores.publishOnce(spark, s"$stateDir/decisions/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/decisions", batchId)(
               decisions.write.mode("overwrite").parquet(_))
             val accepted = batch.join(
               decisions.filter(col("dup_kind") === "new").select(id), Seq(id), "left_semi")
-            Stores.publishOnce(spark, s"$stateDir/fp/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/fp", batchId)(
               Dedup.fingerprintTable(accepted, id, text).withColumnRenamed(id, "cid")
                 .write.mode("overwrite").parquet(_))
-            Stores.publishOnce(spark, s"$stateDir/bands/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/bands", batchId)(
               Dedup.bandTable(accepted, id, text, numHashes, bands).withColumnRenamed(id, "cid")
                 .write.mode("overwrite").parquet(_))
           } finally decisions.unpersist()
@@ -232,9 +209,8 @@ object Pipelines {
     * the SRP code index of everything accepted so far
     * ([[graft.functions.Similarity.embedDedupAgainst]]), writes
     * per-batch decisions, and appends only the 'new' vectors' code and
-    * vector rows to the index. Same replay-safety contract as the text
-    * ingest: index partitions are corpus only when their batch id is
-    * strictly smaller than the current one.
+    * vector rows to the index. Same [[Stores]] per-batch contract as
+    * the text ingest.
     *
     * Batch-internal near-duplicates are intentionally NOT detected: a
     * vector is only compared against index partitions with batch id <
@@ -267,26 +243,25 @@ object Pipelines {
           val (emptyVecs, emptyCodes) =
             Similarity.srpIndexTables(
               batch.limit(0), id, vec, dims, bitsPerBand, numBands)
-          val corpusVecs = priorBatches(spark, s"$stateDir/vecs", batchId, emptyVecs)
+          val corpusVecs = Stores.priorBatches(spark, s"$stateDir/vecs", batchId, emptyVecs)
             .select(col("cid"), col("v"), col("vn2"))
-          val corpusCodes = priorBatches(spark, s"$stateDir/codes", batchId, emptyCodes)
+          val corpusCodes = Stores.priorBatches(spark, s"$stateDir/codes", batchId, emptyCodes)
             .select(col("cid"), col("band"), col("bcode"))
           val decisions = Similarity
             .embedDedupAgainst(batch, corpusVecs, corpusCodes,
               id, vec, dims, threshold, bitsPerBand, numBands)
             .persist()
           try {
-            import graft.functions.Stores
-            Stores.publishOnce(spark, s"$stateDir/decisions/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/decisions", batchId)(
               decisions.write.mode("overwrite").parquet(_))
             val accepted = batch.join(
               decisions.filter(col("dup_kind") === "new").select(id),
               Seq(id), "left_semi")
             val (aVecs, aCodes) = Similarity.srpIndexTables(
               accepted, id, vec, dims, bitsPerBand, numBands)
-            Stores.publishOnce(spark, s"$stateDir/vecs/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/vecs", batchId)(
               aVecs.write.mode("overwrite").parquet(_))
-            Stores.publishOnce(spark, s"$stateDir/codes/batch=$batchId")(
+            Stores.publishBatch(spark, s"$stateDir/codes", batchId)(
               aCodes.write.mode("overwrite").parquet(_))
           } finally decisions.unpersist()
         } finally batch.unpersist()
@@ -314,10 +289,8 @@ object Pipelines {
     * batch so an offline retrain is picked up at the next trigger, and
     * broadcast into the join), and scoring is one map-side feature
     * explode + one doc-keyed aggregation. REPLAY SAFETY: scoring is a
-    * pure function of (batch, λ) and each batch's partition directory
-    * is published atomically exactly once
-    * ([[graft.functions.Stores.publishOnce]] — a replay is a no-op) —
-    * same idiom as [[reviewsMultiSink]].
+    * pure function of (batch, λ), and the scores store follows
+    * [[Stores]]' per-batch contract (a replay is a no-op).
     */
   def dsirScoreIngest(
       docs: DataFrame,
@@ -335,7 +308,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val lam = spark.read.parquet(lambdaDir)
-        graft.functions.Stores.publishOnce(spark, s"$stateDir/scores/batch=$batchId")(
+        Stores.publishBatch(spark, s"$stateDir/scores", batchId)(
           Dsir.scoreDocs(batch, lam, id, text, buckets)
             .write.mode("overwrite").parquet(_))
         ()
@@ -352,11 +325,10 @@ object Pipelines {
     * `preds/batch=<id>` partition.
     *
     * REPLAY SAFETY: prediction is a pure function of (batch, model)
-    * and each batch's directory is published atomically exactly once
-    * ([[graft.functions.Stores.publishOnce]]), so a replayed batch is a
-    * no-op. The model is re-read per trigger, so an offline retrain is
-    * picked up at the next one — predictions never mix two models
-    * within a batch.
+    * and the preds store follows [[Stores]]' per-batch contract, so a
+    * replayed batch is a no-op. The model is re-read per trigger, so an
+    * offline retrain is picked up at the next one — predictions never
+    * mix two models within a batch.
     */
   def nbClassifyIngest(
       docs: DataFrame,
@@ -373,7 +345,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val model = Curation.readNbModel(spark, modelDir)
-        graft.functions.Stores.publishOnce(spark, s"$stateDir/preds/batch=$batchId")(
+        Stores.publishBatch(spark, s"$stateDir/preds", batchId)(
           Curation.nbPredict(batch, model, id, text)
             .write.mode("overwrite").parquet(_))
         ()
@@ -389,8 +361,9 @@ object Pipelines {
     * from the layered store ([[Curation.readBm25Store]]) — by the sum
     * algebra of df/totals the served index equals the one built on all
     * batches' union bit-for-bit (spec-pinned). O(batch tokens) work per
-    * trigger; a replayed batch is a publishOnce no-op; empty batches
-    * publish nothing (an all-null totals layer would poison the sum).
+    * trigger; a replayed batch is a no-op ([[Stores]]' per-batch
+    * contract); empty batches publish nothing (an all-null totals layer
+    * would poison the sum).
     */
   def bm25Ingest(
       docs: DataFrame,
@@ -429,10 +402,9 @@ object Pipelines {
     * Per-trigger work is O(batch + baseline-histogram): the batch
     * histogram is one map-combined aggregate, the baseline is a
     * histogram-sized parquet read, the join/windows run over the joined
-    * histogram. Reports are published atomically exactly once
-    * ([[graft.functions.Stores.publishOnce]]) — a replayed batch is a
-    * no-op; the baseline is re-read per trigger, so an offline rebase
-    * is picked up at the next one.
+    * histogram. Reports follow [[Stores]]' per-batch contract — a
+    * replayed batch is a no-op; the baseline is re-read per trigger, so
+    * an offline rebase is picked up at the next one.
     */
   def driftMonitorIngest(
       docs: DataFrame,
@@ -447,7 +419,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val base = spark.read.parquet(baselineDir)
-        graft.functions.Stores.publishOnce(spark, s"$stateDir/drift/batch=$batchId")(
+        Stores.publishBatch(spark, s"$stateDir/drift", batchId)(
           graft.functions.Quality.scoreDriftAgainstHist(base, batch, score)
             .write.mode("overwrite").parquet(_))
         ()
@@ -462,11 +434,11 @@ object Pipelines {
     * NOT additive index state — nothing folds them at read; each is an
     * independent point-in-time diagnostic whose operational value decays
     * (the monitor's consumer is "the last few triggers") — so retention
-    * here is deletion of committed `drift/batch=<id>` directories older
-    * than the newest `keepLast`, not folding.
+    * here is deletion of the committed report batches older than the
+    * newest `keepLast`, not folding.
     *
-    * Run between ingest runs (the single-writer-between-runs discipline
-    * of every store-maintenance entry point). A checkpoint rollback
+    * Run between ingest runs ([[Stores]]' single-writer discipline). A
+    * checkpoint rollback
     * re-delivering a pruned batch id would re-publish it via the
     * publishOnce path — harmless: the report recomputes
     * deterministically from the same batch against the same baseline.
@@ -479,18 +451,12 @@ object Pipelines {
       keepLast: Int = 32): (Long, Long) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val dir = s"$stateDir/drift"
+    val committed = Stores.batchIds(spark, dir)
+    val drop = committed.dropRight(keepLast)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return (0L, 0L)
-    val committed = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(s => s.getPath.getName.stripPrefix("batch=").toLong -> s.getPath)
-      .sortBy(_._1)
-    val (keep, drop) = committed.splitAt(math.max(0, committed.length - keepLast))
-      match { case (old, recent) => (recent, old) }
-    drop.foreach { case (_, path) => fs.delete(path, true) }
-    (keep.length.toLong, drop.length.toLong)
+    drop.foreach(id => fs.delete(new org.apache.hadoop.fs.Path(Stores.batchDir(dir, id)), true))
+    ((committed.length - drop.length).toLong, drop.length.toLong)
   }
 
   /** Persist the baseline score histogram [[driftMonitorIngest]] scores
@@ -508,17 +474,13 @@ object Pipelines {
     * ([[graft.functions.Dedup.cdcIncremental]] — per-doc new-vs-seen
     * chunks and bytes land in `<stateDir>/report/batch=<id>`), and the
     * batch's NOVEL distinct chunks are appended to the store at
-    * `<stateDir>/chunks/batch=<id>` so the next batch dedups against
-    * them without ever re-reading corpus text.
+    * `<stateDir>/chunks` so the next batch dedups against them without
+    * ever re-reading corpus text.
     *
     * Per-trigger work is O(batch): chunking shuffles nothing, the store
     * contributes only its (ch, clen) key table to one hash join, and
-    * per-batch partitions are published atomically exactly once
-    * ([[graft.functions.Stores.publishOnce]] — a replayed batch is a
-    * no-op, and a reader never sees a half-written partition). Same
-    * corpus view as [[dedupIngest]] ([[priorBatches]]): only store
-    * partitions with `batch < batchId` count as corpus, else a replayed
-    * batch would match its own committed chunks.
+    * both stores follow [[Stores]]' per-batch contract (the corpus is
+    * the `batch < id` prior view, so a replayed batch is a no-op).
     */
   def cdcIngest(
       docs: DataFrame,
@@ -533,19 +495,18 @@ object Pipelines {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val store = priorBatches(spark, s"$stateDir/chunks", batchId,
+        val store = Stores.priorBatches(spark, s"$stateDir/chunks", batchId,
           Dedup.cdcChunkTable(batch.limit(0), id, text))
           .select(col("ch"), col("clen"))
         batch.persist()
         try {
-          import graft.functions.Stores
-          Stores.publishOnce(spark, s"$stateDir/report/batch=$batchId")(
+          Stores.publishBatch(spark, s"$stateDir/report", batchId)(
             Dedup.cdcIncremental(batch, store, id, text)
               .write.mode("overwrite").parquet(_))
           // novel distinct chunks only — seen chunks already live in an
           // earlier partition, and duplicate store rows would inflate
           // every later batch's join
-          Stores.publishOnce(spark, s"$stateDir/chunks/batch=$batchId")(
+          Stores.publishBatch(spark, s"$stateDir/chunks", batchId)(
             Dedup.cdcChunkTable(batch, id, text)
               .groupBy(col("ch")).agg(min(col("clen")).as("clen"))
               .join(store.select(col("ch")), Seq("ch"), "left_anti")
@@ -566,15 +527,12 @@ object Pipelines {
     *
     * Per-trigger work is O(batch): the probe touches only the batch's
     * phrase-term postings (broadcast phrase table), the store append
-    * writes only the batch's postings. Replay-safe the [[cdcIngest]]
-    * way: both the report and the posting partition are per-batch
-    * directories published atomically exactly once
-    * ([[graft.functions.Stores.publishOnce]] — written beside the
-    * store, renamed into place, never rewritten once present, so a
-    * restarted batch is a no-op and an offline probe racing ingest sees
-    * each batch either complete or not yet published, never partial;
-    * spec-pinned in StoresSpec). Store contract: batches carry NEW
-    * documents (exact dedup runs upstream).
+    * writes only the batch's postings. Both the report and the posting
+    * store follow [[Stores]]' per-batch contract, so a restarted batch
+    * is a no-op and an offline probe racing ingest sees each batch
+    * either complete or not yet published, never partial (spec-pinned
+    * in StoresSpec). Store contract: batches carry NEW documents (exact
+    * dedup runs upstream).
     */
   def phraseAuditIngest(
       docs: DataFrame,
@@ -591,12 +549,11 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
         try {
-          import graft.functions.Stores
           val spark = batch.sparkSession
-          Stores.publishOnce(spark, s"$stateDir/report/batch=$batchId")(
+          Stores.publishBatch(spark, s"$stateDir/report", batchId)(
             Curation.phraseMatches(batch, id, text, phrases)
               .write.mode("overwrite").parquet(_))
-          Stores.publishOnce(spark, s"$stateDir/postings/batch=$batchId")(
+          Stores.publishBatch(spark, s"$stateDir/postings", batchId)(
             Curation.writePostingsRaw(
               Curation.phrasePostings(batch, id, text), _,
               Curation.PhrasePostingBuckets))
@@ -623,12 +580,12 @@ object Pipelines {
     * trigger so an offline retrain is picked up at the next one).
     *
     * REPLAY SAFETY: encoding is a pure function of (batch, model) and
-    * each batch's directory (codes AND version stamp together) is
-    * published atomically exactly once — same idiom as [[dedupIngest]]. Model DRIFT is the operator's documented
-    * trade-off, as in every production IVF index: vectors far from the
-    * trained distribution degrade recall until an offline retrain;
-    * the [[graft.functions.Similarity.ivfPqProbeSweep]] recall table
-    * over the accumulated index is the monitoring signal.
+    * each batch's codes AND version stamp are published together under
+    * [[Stores]]' per-batch contract. Model DRIFT is the operator's
+    * documented trade-off, as in every production IVF index: vectors far
+    * from the trained distribution degrade recall until an offline
+    * retrain; the [[graft.functions.Similarity.ivfPqProbeSweep]] recall
+    * table over the accumulated index is the monitoring signal.
     */
   def ivfPqIngest(
       vecs: DataFrame,
@@ -644,8 +601,7 @@ object Pipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val (localCn, books) = Similarity.readIndexModel(spark, indexDir)
-        graft.functions.Stores.publishOnce(
-          spark, s"$indexDir/codes/batch=$batchId") { tmp =>
+        Stores.publishBatch(spark, s"$indexDir/codes", batchId) { tmp =>
           Similarity.encodeWithModel(batch, localCn, books, id, vec)
             .write.mode("overwrite").partitionBy("cell").parquet(tmp)
           // stamp the model this batch was encoded under: a retrain

@@ -265,6 +265,78 @@ class StoresSpec extends SparkSpec {
       b1, "doc_id", "text", phrases).collect().map(_.toSeq).toSet
   }
 
+  test("compaction clears a crashed fold's temp first: no planted layer is counted twice") {
+    val root = tmpDir("graft_bm25_stale")
+    val dir = s"$root/bm25"
+    val batches = (0 until 6).map { b =>
+      (0 until 4).map(i => ((b * 4 + i).toLong, s"spark dup window doc$b word$i"))
+        .toDF("doc_id", "text")
+    }
+    batches.zipWithIndex.foreach { case (docs, b) =>
+      Curation.writeBm25Batch(Curation.bm25Index(docs, "doc_id", "text"), dir, b.toLong)
+    }
+    val corpus = batches.reduce(_ unionByName _)
+    def results() =
+      Curation.bm25Search(corpus, Curation.readBm25Store(spark, dir),
+        "doc_id", "text", Seq("dup", "spark", "doc2"), 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val before = results()
+    // an earlier compaction killed mid-write (when batch 3 was the
+    // highest id) left a full layer in the store's temp sibling
+    val stale = Curation.bm25Index(batches.take(4).reduce(_ unionByName _), "doc_id", "text")
+    val tmpLayer = Stores.batchDir(s"$root/_tmp_bm25", 3)
+    stale.df.write.parquet(s"$tmpLayer/df")
+    stale.tot.write.parquet(s"$tmpLayer/tot")
+    val (kept, _, filesAfter) = Curation.compactBm25Store(spark, dir)
+    kept shouldBe 5L
+    results() shouldBe before
+    filesAfter shouldBe 2L
+  }
+
+  test("one compaction contract for BM25, posting and dedup stores: missing, temp-only, populated") {
+    import graft.functions.Dedup
+    type Publish = (String, Long, org.apache.spark.sql.DataFrame) => Unit
+    val bm25: Publish = (dir, b, docs) =>
+      Curation.writeBm25Batch(Curation.bm25Index(docs, "doc_id", "text"), dir, b)
+    val postings: Publish = (dir, b, docs) => publishBatch(dir, b, docs) shouldBe true
+    def index(table: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Publish =
+      (dir, b, docs) => Stores.publishBatch(spark, dir, b)(
+        table(docs).withColumnRenamed("doc_id", "cid").write.parquet(_)) shouldBe true
+    // (store, sub-directory, publish one batch, compact the store at root/sub)
+    val cases: Seq[(String, String, Publish, String => (Long, Long, Long))] = Seq(
+      ("bm25", "bm25", bm25, root => Curation.compactBm25Store(spark, s"$root/bm25")),
+      ("postings", "postings", postings,
+        root => Curation.compactPostingStore(spark, s"$root/postings")),
+      ("dedup fp", "fp", index(Dedup.fingerprintTable(_, "doc_id", "text")),
+        root => Dedup.compactDedupIndex(spark, root)("fp")),
+      ("dedup bands", "bands", index(Dedup.bandTable(_, "doc_id", "text", 16, 4)),
+        root => Dedup.compactDedupIndex(spark, root)("bands")))
+    val ids = Seq(0L, 2L, 7L) // gaps: the kept id comes from the listing
+    cases.foreach { case (name, sub, publish, compact) =>
+      withClue(s"$name: ") {
+        compact(tmpDir("graft_contract_missing")) shouldBe ((-1L, 0L, 0L))
+
+        val tempOnly = tmpDir("graft_contract_tmp")
+        Seq((1L, "crashed attempt")).toDF("doc_id", "text")
+          .write.parquet(s"$tempOnly/$sub/_tmp_batch_0")
+        compact(tempOnly) shouldBe ((-1L, 0L, 0L))
+
+        val root = tmpDir("graft_contract_full")
+        val dir = s"$root/$sub"
+        ids.foreach { b =>
+          publish(dir, b, Seq((b * 2, s"alpha beta gamma doc$b"),
+            (b * 2 + 1, s"beta gamma delta w$b")).toDF("doc_id", "text"))
+        }
+        val filesBefore = Stores.committedDataFiles(spark, dir)
+        val (kept, before, after) = compact(root)
+        kept shouldBe 7L
+        before shouldBe filesBefore
+        after shouldBe Stores.committedDataFiles(spark, dir)
+        Stores.batchIds(spark, dir) shouldBe Seq(7L)
+      }
+    }
+  }
+
   test("sweepStaleScratch reaps only sentinel-recorded, age-expired, unowned paths") {
     // simulates a CRASHED prior JVM: its shutdown hook never ran, so
     // both the nonce dir and its sentinel survive; this JVM's sweep

@@ -1113,6 +1113,56 @@ class StreamingSpec extends SparkSpec {
       include regex "PartitionFilters: \\[[^\\]]*cell"
   }
 
+  test("compactIvfPqIndex: a swap cut between its renames is rolled back; no temp is left behind") {
+    import graft.functions.{Similarity, Stores}
+    def mkVec(i: Long): Array[Double] = {
+      val c = (i % 8).toInt
+      Array.tabulate(16) { d =>
+        val base = if (d % 8 == c) 5.0 else 0.0
+        base + ((i * 31 + d * 7) % 11 - 5) / 10.0
+      }
+    }
+    val base = (0L until 160L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val dir = tmpDir("ivfpq_swap")
+    Similarity.writeIvfPqIndex(base, "vec_id", "embedding", dir,
+      dims = 16, numSub = 4, codesPerSub = 8, numCells = 8)
+    val (localCn, books) = Similarity.readIndexModel(spark, dir)
+    Stores.publishBatch(spark, s"$dir/codes", 0L) { tmp =>
+      Similarity.encodeWithModel(
+        (160L until 200L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
+        localCn, books, "vec_id", "embedding")
+        .write.partitionBy("cell").parquet(tmp)
+      Similarity.writeVersionMarker(spark, tmp, Similarity.modelVersion(localCn, books))
+    } shouldBe true
+    val qs = base.filter(col("vec_id") === 8)
+    def rows() = Similarity.ivfPqAnnIndexed(qs, dir, "vec_id", "embedding", k = 5, nProbe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+    val before = rows()
+    def leftovers() = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("_tmp_") || n.startsWith("codes_compacting")).toSet
+
+    // a compaction killed between its two renames: codes/ is aside, and
+    // the killed fold's half-written temp is still there
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sessionState.newHadoopConf())
+    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/codes"),
+      new org.apache.hadoop.fs.Path(s"$dir/_tmp_codes.old")) shouldBe true
+    Seq((1L, 2L)).toDF("neighbor_id", "cell").write.parquet(s"$dir/_tmp_codes/batch=-1")
+
+    Similarity.compactIvfPqIndex(spark, dir)
+    rows() shouldBe before
+    spark.read.parquet(s"$dir/codes").count() shouldBe 200L
+    new java.io.File(s"$dir/codes").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet shouldBe Set("batch=-1")
+    leftovers() shouldBe empty
+
+    // a clean compaction and a retrain leave no temp either
+    Similarity.compactIvfPqIndex(spark, dir)
+    Similarity.writeIvfPqIndex(base, "vec_id", "embedding", dir,
+      dims = 16, numSub = 4, codesPerSub = 8, numCells = 8)
+    leftovers() shouldBe empty
+  }
+
   test("retrain drops streamed lists; a raced stale batch is refused by version stamp") {
     import graft.functions.Similarity
     def mkVec(i: Long, flip: Boolean): Array[Double] = {
