@@ -6,10 +6,10 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Atomic directory publication for persisted store layouts, and the
-  * one owner of the per-batch store layout (the cold archive, the
-  * dedup `fp/`/`bands/` index, the SRP `vecs/`/`codes/`, CDC chunks,
-  * phrase postings, BM25 layers, drift reports, IVF-PQ codes, the
-  * semantic `assign/`).
+  * one owner of the per-batch store layout (the cold archive, the hot
+  * upsert tables' snapshots, the dedup `fp/`/`bands/` index, the SRP
+  * `vecs/`/`codes/`, CDC chunks, phrase postings, BM25 layers, drift
+  * reports, IVF-PQ codes, the semantic `assign/`).
   *
   * The failure mode publication removes: a store directory written with
   * `mode("overwrite")` is delete-then-write, so a reader (an offline
@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions.col
   * invisible to Spark's file listing and partition discovery) and
   * published with one filesystem `rename`, an atomic metadata operation
   * on HDFS and local filesystems (object stores without atomic rename
-  * need their usual commit-service arrangement, exactly as for
-  * [[graft.streaming.ParquetUpsertSink]]'s pointer swap). A reader
-  * therefore sees a published directory either absent or complete —
-  * never partial.
+  * need their usual commit-service arrangement). A reader therefore
+  * sees a published directory either absent or complete — never
+  * partial. This rename is the only commit record of every store here.
   *
   * The per-batch contract, stated once for every streamed store:
   *  - Layout: batch `id` of the store at `dir` lives in
@@ -198,9 +197,9 @@ object Stores {
     * or the new store, never a partial one. (The swap is two metadata
     * renames; a reader listing in exactly that window sees the
     * directory briefly ABSENT — complete-or-absent, never partial.
-    * Serving layouts that must never even be absent use the
-    * [[graft.streaming.ParquetUpsertSink]] snapshot + pointer idiom
-    * instead.)
+    * Serving layouts that must never even be absent publish each
+    * version as a new batch with [[publishBatch]] and read the highest
+    * committed one, as [[graft.streaming.ParquetUpsertSink]] does.)
     */
   def publishReplace(spark: SparkSession, finalDir: String)(write: String => Unit): Unit = {
     val fs  = fsOf(spark, finalDir)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.Stores
-import graft.model.SteamModel.Review
 import graft.operators.SteamOps
 
 /** The reference's three streaming jobs, assembled from the pure
@@ -76,10 +75,10 @@ object Pipelines {
     * The three writes do not depend on each other, so they run
     * concurrently on driver threads ([[concurrently]]): a trigger waits
     * for the slowest write, not for the sum of all three. Each write keeps
-    * its own exactly-once record (the archive's published directory, each
-    * hot table's pointer), so when one write fails the others still
-    * commit, the query fails with that write's error, and the replayed
-    * batch re-applies only the write that did not land. The two hot
+    * its own exactly-once record (the published batch directory of the
+    * archive and of each hot table), so when one write fails the others
+    * still commit, the query fails with that write's error, and the
+    * replayed batch re-applies only the write that did not land. The two hot
     * tables must be distinct sinks: each is written by one thread per
     * trigger (the single-writer assumption of [[ParquetUpsertSink]]).
     */
@@ -626,70 +625,6 @@ object Pipelines {
     */
   def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(org.apache.spark.sql.functions.broadcast(dim), Seq(key), "left")
-
-  // --------------------------------------------------------------------
-  // Scale path for C8 (SURVEY.md §7.4 risk 1): the reference's lifetime
-  // per-app aggregate forces complete mode + unbounded emitted results.
-  // mapGroupsWithState keeps the same lifetime totals in keyed state and
-  // emits ONLY updated apps each trigger (update mode) — state size is
-  // O(apps), emitted rows are O(changed apps), independent of stream
-  // length. This is the operator the reference needed but didn't have.
-  // --------------------------------------------------------------------
-
-  final case class BombState(
-      total: Long, negative: Long, positive: Long, qualitySum: Double)
-
-  final case class BombUpdate(
-      app_id: String,
-      total_reviews: Long,
-      negative_count: Long,
-      positive_count: Long,
-      avg_quality: Double,
-      negative_ratio: Double,
-      positive_ratio: Double,
-      is_review_bomb: Boolean)
-
-  def updateBombState(
-      appId: String,
-      rows: Iterator[Review],
-      state: GroupState[BombState]): BombUpdate = {
-    var s = state.getOption.getOrElse(BombState(0L, 0L, 0L, 0.0))
-    rows.foreach { r =>
-      val q = Option(r.weighted_vote_score).map(_.toDouble).getOrElse(0.0)
-      s = BombState(
-        s.total + 1,
-        s.negative + (if (r.recommended) 0 else 1),
-        s.positive + (if (r.recommended) 1 else 0),
-        s.qualitySum + q)
-    }
-    state.update(s)
-    val negR = if (s.total == 0) 0.0 else s.negative.toDouble / s.total
-    val posR = if (s.total == 0) 0.0 else s.positive.toDouble / s.total
-    BombUpdate(appId, s.total, s.negative, s.positive,
-      if (s.total == 0) 0.0 else s.qualitySum / s.total,
-      negR, posR,
-      negR > SteamOps.BombNegativeRatio && s.total > SteamOps.BombMinReviews)
-  }
-
-  /** Bounded-state review-bomb detector: update-mode equivalent of
-    * [[graft.operators.SteamOps.reviewBombAgg]].
-    */
-  def reviewBombStateful(reviews: Dataset[Review]): Dataset[BombUpdate] = {
-    import reviews.sparkSession.implicits._
-    reviews
-      .groupByKey(_.app_id)
-      .mapGroupsWithState[BombState, BombUpdate](GroupStateTimeout.NoTimeout)(
-        updateBombState)
-  }
-
-  /** Output mode for the stateful detector (update — only changed apps). */
-  val StatefulOutputMode: OutputMode = OutputMode.Update()
-
-  /** Batch replay of the cold archive through the same aggregations —
-    * the Kappa reprocessing path (A6, reference README.md:284-293).
-    */
-  def replayReviews(archive: DataFrame): (DataFrame, DataFrame) =
-    (SteamOps.sentimentAgg(archive), SteamOps.reviewBombAgg(archive))
 
   // --------------------------------------------------------------------
   // Custom-state sessionization (flatMapGroupsWithState): emits CLOSED

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path => HPath}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, to_date}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -22,7 +20,8 @@ import graft.functions.Stores
   * keyed on the group columns: each trigger touches only changed keys.
   * [[ParquetUpsertSink]] implements the upsert against a snapshot-versioned
   * parquet table (the same merge a Delta/Iceberg MERGE would do, on plain
-  * parquet with an atomic pointer swap — no extra dependencies).
+  * parquet with one atomic directory rename per batch — no extra
+  * dependencies).
   */
 object Sinks {
 
@@ -65,8 +64,8 @@ object Sinks {
     * would produce `lanesPerDate` writer tasks in TOTAL and a hot date
     * would always bottleneck one task. The row count is observed during
     * the write, not a separate scan. Write lands in `dstDir`
-    * (swap-then-delete is the caller's atomic-publish step, same pointer
-    * idiom as [[ParquetUpsertSink]]).
+    * (swap-then-delete is the caller's atomic-publish step, as in
+    * [[Stores.publishReplace]]).
     *
     * Returns (rows, filesBefore, filesAfter) for the job log.
     */
@@ -167,19 +166,20 @@ object Sinks {
 
 /** Keyed upsert into a snapshot-versioned parquet table.
   *
-  * Layout: `root/v<n>/` snapshot directories plus a `root/_CURRENT` pointer
-  * file holding `<version> <lastAppliedBatchId>`. Each upsert writes a full
-  * new snapshot = (old rows whose key is absent from the batch) ∪ (batch
-  * rows), then atomically swaps the pointer. Readers go through [[read]].
+  * Layout: one full snapshot per applied batch, in the per-batch store
+  * layout of [[Stores]]: batch `id`'s table is `root/batch=<id>`,
+  * published once through [[Stores.publishBatch]]. Each upsert writes the
+  * merged table = (old rows whose key is absent from the batch) ∪ (batch
+  * rows) for its batch. The current table is the highest committed batch
+  * ([[Stores.batchIds]]); readers go through [[read]], which reads that
+  * directory alone, so it carries no `batch` partition column.
   *
-  * All filesystem access goes through the Hadoop FileSystem API, so the
-  * layout works on HDFS and object stores, not just the local disk. The
-  * pointer swap is one atomic rename that replaces the old pointer: on the
-  * local disk the pointer is written without a checksum sidecar and
-  * renamed with the raw filesystem (POSIX `rename`), elsewhere it is a
-  * `FileContext.rename(OVERWRITE)` (atomic on HDFS; object stores without
-  * atomic rename need their usual commit-service arrangement). A reader
-  * racing a swap therefore always finds a complete pointer, old or new.
+  * The atomic rename that publishes a snapshot is the commit record: a
+  * snapshot directory appears complete or not at all, and older
+  * snapshots are kept, so a reader racing an upsert reads the old table
+  * or the new one. A crashed attempt leaves only the hidden temp sibling
+  * `_tmp_batch_<id>`, which is never read and is overwritten by the
+  * retry.
   *
   * Single writer per table: one driver owns the table (the streaming-query
   * model), with `synchronized` guarding same-JVM races; readers may run
@@ -189,48 +189,29 @@ object Sinks {
   * the reader after that, which spares every later [[read]] the parquet
   * schema-inference job.
   *
-  * Exactly-once: the pointer records the last applied batchId, written in
-  * the SAME atomic swap as the data pointer. [[upsertAdditive]] is a no-op
-  * for a replayed batch (`batchId <= lastApplied`), so a micro-batch
-  * re-delivered after a failure between sink commit and checkpoint commit
-  * cannot double-count. [[upsert]] needs no skip — re-applying the same
-  * keyed batch converges to the same table — but records the batchId too.
+  * Exactly-once: a batch is applied by publishing its snapshot, and a
+  * replayed batch (re-delivered after a failure between sink commit and
+  * checkpoint commit) finds that snapshot committed and is a no-op, so
+  * [[upsertAdditive]] cannot double-count. [[upsert]] would converge on
+  * replay anyway (re-applying the same keyed batch gives the same table).
   */
 final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends Serializable {
-
-  private def pointer = new HPath(root, "_CURRENT")
-
-  private def hconf(spark: SparkSession) = spark.sessionState.newHadoopConf()
 
   /** Schema shared by every snapshot, inferred on the first read. */
   @transient @volatile private var snapshotSchema: StructType = _
 
-  /** (snapshot version, last applied batchId) from the pointer file. */
-  private def readPointer(spark: SparkSession): Option[(Long, Long)] = {
-    val conf = hconf(spark)
-    val fs = pointer.getFileSystem(conf)
-    if (!fs.exists(pointer)) None
-    else {
-      val in = fs.open(pointer)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s.split("\\s+") match {
-        case Array(v, b) => Some((v.toLong, b.toLong))
-        case Array(v)    => Some((v.toLong, Long.MinValue)) // pre-batchId format
-        case _           => None
-      }
-    }
-  }
+  private def currentBatch(spark: SparkSession): Option[Long] =
+    Stores.batchIds(spark, root).lastOption
 
-  /** Last batchId whose write reached the pointer (MinValue if none). */
+  /** Last batchId whose snapshot is committed (MinValue if none). */
   def lastApplied(spark: SparkSession): Long =
-    readPointer(spark).map(_._2).getOrElse(Long.MinValue)
+    currentBatch(spark).getOrElse(Long.MinValue)
 
   def read(spark: SparkSession): Option[DataFrame] =
-    readPointer(spark).map { case (v, _) => snapshot(spark, v) }
+    currentBatch(spark).map(snapshot(spark, _))
 
-  private def snapshot(spark: SparkSession, version: Long): DataFrame = {
-    val dir = s"$root/v$version"
+  private def snapshot(spark: SparkSession, batchId: Long): DataFrame = {
+    val dir = Stores.batchDir(root, batchId)
     val known = snapshotSchema
     if (known != null) spark.read.schema(known).parquet(dir)
     else {
@@ -240,22 +221,15 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     }
   }
 
-  /** Key-replacing upsert: batch rows replace stored rows per key.
-    * Idempotent by construction (replaying a batch converges), so no
-    * replay skip is needed.
-    */
-  def upsert(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val current = readPointer(batch.sparkSession)
-    // batch first: every snapshot keeps the batch's column order (the
-    // join below would move the keys to the front)
-    val merged = current match {
-      case Some((v, _)) =>
-        batch.unionByName(snapshot(batch.sparkSession, v)
-          .join(batch.select(keys.map(col): _*), keys, "left_anti"))
+  /** Key-replacing upsert: batch rows replace stored rows per key. */
+  def upsert(batch: DataFrame, batchId: Long): Unit =
+    publish(batch.sparkSession, batchId) {
+      // batch first: every snapshot keeps the batch's column order (the
+      // join below would move the keys to the front)
+      case Some(current) =>
+        batch.unionByName(current.join(batch.select(keys.map(col): _*), keys, "left_anti"))
       case None => batch
     }
-    writeSnapshot(merged, current, batchId)
-  }
 
   /** Incremental aggregate maintenance: merge a PER-BATCH partial
     * aggregate additively into the stored table — `sumCols` are summed
@@ -266,51 +240,27 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     * (per-batch deltas) — feeding cumulative update-mode output here
     * would double-count.
     *
-    * NOT idempotent per application, so a replayed batch
-    * (`batchId <= lastApplied`) is skipped — the pointer is the commit
-    * record, swapped atomically after the snapshot lands.
+    * NOT idempotent per application, which the publish-once commit
+    * covers: a replayed batch finds its snapshot committed and is skipped.
     */
-  def upsertAdditive(
-      batch: DataFrame, batchId: Long, sumCols: Seq[String]): Unit = synchronized {
-    val current = readPointer(batch.sparkSession)
-    if (current.exists(_._2 >= batchId)) return
-    def sumByKey(df: DataFrame) =
-      df.groupBy(keys.map(col): _*)
+  def upsertAdditive(batch: DataFrame, batchId: Long, sumCols: Seq[String]): Unit =
+    publish(batch.sparkSession, batchId) { current =>
+      // the first snapshot goes through the same aggregate as every later
+      // one, so all snapshots share its column order and types
+      current.map(_.unionByName(batch)).getOrElse(batch)
+        .groupBy(keys.map(col): _*)
         .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*)
-    // the first snapshot goes through the same aggregate as every later
-    // one, so all snapshots share its column order and types
-    val merged = current match {
-      case Some((v, _)) => sumByKey(snapshot(batch.sparkSession, v).unionByName(batch))
-      case None         => sumByKey(batch)
     }
-    writeSnapshot(merged, current, batchId)
-  }
 
-  /** Write `df` as the snapshot after `current` and swap the pointer. */
-  private def writeSnapshot(df: DataFrame, current: Option[(Long, Long)], batchId: Long): Unit = {
-    val conf = hconf(df.sparkSession)
-    val next = current.map(_._1).getOrElse(-1L) + 1
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
-    // one rename replaces the pointer, so a concurrent reader finds the
-    // old pointer or the new one, never none and never a torn one
-    val tmp = new HPath(root, s"_CURRENT.tmp$batchId")
-    def writeTmp(fs: FileSystem): Unit = {
-      val out = fs.create(tmp, true)
-      try out.write(s"$next $batchId".getBytes("UTF-8")) finally out.close()
+  /** Publish `merge(current table)` as batch `batchId`'s snapshot; a
+    * no-op, which reads nothing, when that snapshot is already committed.
+    */
+  private def publish(spark: SparkSession, batchId: Long)(
+      merge: Option[DataFrame] => DataFrame): Unit = synchronized {
+    Stores.publishBatch(spark, root, batchId) { tmp =>
+      merge(currentBatch(spark).map(snapshot(spark, _)))
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    pointer.getFileSystem(conf) match {
-      case local: ChecksumFileSystem =>
-        // no checksum sidecar: it would be renamed apart from the pointer.
-        // POSIX rename replaces the target atomically.
-        val raw = local.getRawFileSystem
-        writeTmp(raw)
-        raw.delete(local.getChecksumFile(pointer), false) // left by an older writer
-        if (!raw.rename(tmp, pointer))
-          throw new java.io.IOException(s"could not rename $tmp to $pointer")
-      case fs =>
-        writeTmp(fs)
-        FileContext.getFileContext(fs.getUri, conf)
-          .rename(fs.makeQualified(tmp), fs.makeQualified(pointer), Options.Rename.OVERWRITE)
-    }
+    ()
   }
 }

@@ -418,8 +418,7 @@ class CurationSpec extends SparkSpec {
       (i.toLong,
         (0 until (5 + rnd.nextInt(25))).map(_ => vocab(rnd.nextInt(40))).mkString(" "))
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_postings_spec").toString
+    val dir = tmpDir("graft_postings_spec")
     Curation.writePhrasePostings(
       Curation.phrasePostings(docs, "doc_id", "text"), dir)
     val phrases = Seq("w1 w2", "w3", "w4 w5 w6")
@@ -443,8 +442,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("phraseMatchesIndexed: an EMPTY persisted snapshot answers zero hits, not a crash") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_postings_empty").toString
+    val dir = tmpDir("graft_postings_empty")
     val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
     Curation.writePhrasePostings(
       Curation.phrasePostings(none, "doc_id", "text"), dir)

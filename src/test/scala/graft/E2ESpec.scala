@@ -118,7 +118,7 @@ class E2ESpec extends SparkSpec {
 
       // [Kappa replay] batch read of the cold archive reproduces the hot
       // sentiment aggregate bit-for-bit
-      val (replayed, _) = Pipelines.replayReviews(spark.read.parquet(arcReviews))
+      val replayed = graft.operators.SteamOps.sentimentAgg(spark.read.parquet(arcReviews))
       val hotRows = sentiment
         .select(col("window.start"), col("recommended"), col("total_reviews"), col("avg_quality"))
         .collect().map(_.toSeq).toSet

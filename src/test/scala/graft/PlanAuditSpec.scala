@@ -1,8 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-
 /** Catalog-wide physical-plan hygiene gate: no query may plan an
   * unbounded nested-loop join. The exceptions are the oracle-pinned
   * exhaustive BASELINES, which are quadratic by declared intent and
@@ -10,7 +7,7 @@ import org.scalatest.matchers.should.Matchers
   * joins — are separate catalog entries), and scalar (one-row) cross
   * joins that attach a grand total to every row.
   */
-class PlanAuditSpec extends AnyFunSuite with Matchers {
+class PlanAuditSpec extends SparkSpec {
 
   import TestSpark.withGraftSession
 
@@ -304,7 +301,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers {
     import graft.functions.Curation
     withGraftSession { s =>
       val docs = Tables(s, "/root/testdata/sf0.001").documents
-      val dir  = java.nio.file.Files.createTempDirectory("bm25_audit").toString
+      val dir  = tmpDir("bm25_audit")
       Curation.writeBm25Index(Curation.bm25Index(docs, "doc_id", "text"), dir)
       val plan = Curation.bm25Search(docs, Curation.readBm25Index(s, dir),
           "doc_id", "text", Seq("dup", "spark"), 10)

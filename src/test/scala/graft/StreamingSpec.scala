@@ -4,14 +4,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.model.SteamModel.Review
+import graft.functions.Stores
 import graft.operators.SteamOps
 import graft.streaming.{ParquetUpsertSink, Pipelines, Sinks}
 
 /** Structured Streaming specs: the three reference pipelines end-to-end
   * over MemoryStream (A1 stand-in), complete-mode semantics (A3 parity),
-  * the upsert scale path, the parquet cold path (A2), the bounded-state
-  * review-bomb operator, and batch==streaming Kappa parity (A6).
+  * the upsert scale path and its commit protocol, the parquet cold path
+  * (A2), and batch==streaming Kappa parity (A6).
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +19,7 @@ class StreamingSpec extends SparkSpec {
   private def memStream[A](implicit enc: org.apache.spark.sql.Encoder[A]): MemoryStream[A] =
     MemoryStream[A](enc, spark)
 
-  private def reviewJson(app: String, rec: Boolean, score: Double, epoch: Long) =
+  private def reviewJson(app: String, rec: Boolean, score: java.lang.Double, epoch: Long) =
     s"""{"app_id":"$app","review_id":"r$epoch","author_steamid":"s","language":"en",
        |"voted_up":$rec,"votes_up":1,"weighted_vote_score":$score,
        |"timestamp_created":$epoch,"review_text":"x","scraped_at":"2024"}"""
@@ -156,27 +156,6 @@ class StreamingSpec extends SparkSpec {
     scan.metrics("numFiles").value shouldBe 1 // one of the two day dirs read
   }
 
-  test("stateful review-bomb: update mode emits lifetime totals per changed app") {
-    val in = memStream[Review]
-    val updates = Pipelines.reviewBombStateful(in.toDS())
-    val q = updates.writeStream.format("memory").queryName("bomb_updates")
-      .outputMode(Pipelines.StatefulOutputMode).start()
-    try {
-      def r(app: String, rec: Boolean, i: Int) = Review(app, s"r$i", "s", "en",
-        rec, 1, 0.5f, new java.sql.Timestamp(1700000000000L + i), "t")
-      in.addData((1 to 11).map(i => r("b", rec = false, i)): _*)
-      q.processAllAvailable()
-      in.addData(r("b", rec = false, 12)) // 12th negative — state carries over
-      q.processAllAvailable()
-      val last = spark.table("bomb_updates").collect()
-        .filter(_.getAs[String]("app_id") == "b")
-        .maxBy(_.getAs[Long]("total_reviews"))
-      last.getAs[Long]("total_reviews") shouldBe 12L
-      last.getAs[Long]("negative_count") shouldBe 12L
-      last.getAs[Boolean]("is_review_bomb") shouldBe true
-    } finally q.stop()
-  }
-
   test("shared-scan multi-sink: one query feeds archive + both hot tables, O(batch) per trigger") {
     val in  = memStream[String]
     val arc = tmpDir("ms_archive")
@@ -196,18 +175,22 @@ class StreamingSpec extends SparkSpec {
     val q = Pipelines.reviewsMultiSink(
       in.toDF().select(col("value")), arc, s1, s2, tmpDir("ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
+    // app "b": 11 negatives in the first trigger, a 12th in the second —
+    // the lifetime totals carry over between triggers
+    def bombReview(i: Int) = reviewJson("b", rec = false, 0.5, 1700010000L + i)
     try {
-      in.addData(reviewJson("1", rec = true, 0.5, 1700000000L))
+      in.addData(reviewJson("1", rec = true, 0.5, 1700000000L) +: (1 to 11).map(bombReview): _*)
       q.processAllAvailable()
       in.addData(
         reviewJson("1", rec = false, 0.1, 1700000100L),
-        reviewJson("2", rec = true, 0.9, 1700003700L))
+        reviewJson("2", rec = true, 0.9, 1700003700L),
+        bombReview(12))
       q.processAllAvailable()
     } finally q.stop()
 
     // cold path: every streamed row exactly once, in per-batch partitions
     val archive = spark.read.parquet(arc).filter(col("batch") < 999)
-    archive.count() shouldBe 3
+    archive.count() shouldBe 15
 
     // hot tables equal a from-scratch batch aggregation over the streamed
     // rows (complete-mode parity) — and exclude the decoy
@@ -218,12 +201,12 @@ class StreamingSpec extends SparkSpec {
 
     val bombs = s2.read(spark).get.collect()
       .map(r => r.getAs[String]("app_id") -> r.getAs[Long]("total_reviews")).toMap
-    bombs shouldBe Map("1" -> 2L, "2" -> 1L) // no "99": archive never re-read
+    bombs shouldBe Map("1" -> 2L, "2" -> 1L, "b" -> 12L) // no "99": archive never re-read
 
     val derived = SteamOps.reviewBombFromPartials(s2.read(spark).get)
       .collect().map(r => r.getAs[String]("app_id") ->
         (r.getAs[Long]("negative_count"), r.getAs[Boolean]("is_review_bomb"))).toMap
-    derived shouldBe Map("1" -> ((1L, false)), "2" -> ((0L, false)))
+    derived shouldBe Map("1" -> ((1L, false)), "2" -> ((0L, false)), "b" -> ((12L, true)))
   }
 
   test("upsertAdditive skips a replayed batchId (no double-count)") {
@@ -257,11 +240,10 @@ class StreamingSpec extends SparkSpec {
     try {
       in.addData(reviewJson("1", rec = true, 0.5, base), reviewJson("2", rec = false, 0.25, base + 60))
       q1.processAllAvailable()
-      // batch 1's bomb write lands its snapshot, then fails to create the
-      // pointer (a non-empty directory sits on the temp pointer's path):
-      // the crash point between snapshot write and pointer swap
-      val blocker = new java.io.File(bomb, "_CURRENT.tmp1")
-      new java.io.File(blocker, "x").mkdirs() shouldBe true
+      // a file in the bomb table's current snapshot that is not parquet:
+      // batch 1's bomb merge fails to read it, so only that write fails
+      val blocker = new java.io.File(bomb, "batch=0/part-99999-planted.parquet")
+      java.nio.file.Files.write(blocker.toPath, "not parquet".getBytes("UTF-8"))
       in.addData(reviewJson("1", rec = false, 0.75, base + 120),
         reviewJson("3", rec = false, 0.125, base + 4000))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
@@ -270,20 +252,22 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(arc, "batch=1").isDirectory shouldBe true
       new ParquetUpsertSink(sent, Seq("window", "recommended")).lastApplied(spark) shouldBe 1L
       new ParquetUpsertSink(bomb, Seq("app_id")).lastApplied(spark) shouldBe 0L
-      org.apache.commons.io.FileUtils.deleteDirectory(blocker)
+      blocker.delete() shouldBe true
     } finally q1.stop()
 
     // a restarted query replays batch 1, then runs batch 2
     val q2 = start()
     try {
       q2.processAllAvailable()
-      in.addData(reviewJson("2", rec = true, 0.5, base + 180))
+      // a null score: avg_quality must skip it, as reviewBombAgg's avg does
+      in.addData(reviewJson("2", rec = true, 0.5, base + 180),
+        reviewJson("1", rec = false, null, base + 240))
       q2.processAllAvailable()
     } finally q2.stop()
 
     val archive = spark.read.parquet(arc)
-    archive.count() shouldBe 5
-    archive.select("review_id").distinct().count() shouldBe 5
+    archive.count() shouldBe 6
+    archive.select("review_id").distinct().count() shouldBe 6
     val sentiment = SteamOps.sentimentFromPartials(
       new ParquetUpsertSink(sent, Seq("window", "recommended")).read(spark).get)
     val expSent = SteamOps.sentimentAgg(archive)
@@ -316,20 +300,20 @@ class StreamingSpec extends SparkSpec {
     sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(50L)
   }
 
-  test("upsert pointer written by an older version (with a checksum sidecar) still reads and swaps") {
-    val root = tmpDir("legacy")
-    Seq(("a", 1L)).toDF("k", "n").write.parquet(s"$root/v0")
-    // the checksummed local filesystem writes `._CURRENT.crc` beside it
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_CURRENT"), true)
-    try out.write("0 0".getBytes("UTF-8")) finally out.close()
-    new java.io.File(root, "._CURRENT.crc").exists() shouldBe true
+  test("upsert sink: a crashed attempt's temp snapshot is never read, and the retry replaces it") {
+    val root = tmpDir("crashed")
     val sink = new ParquetUpsertSink(root, Seq("k"))
-    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(1L)
-    sink.upsertAdditive(Seq(("a", 2L)).toDF("k", "n"), 1L, Seq("n"))
-    new java.io.File(root, "._CURRENT.crc").exists() shouldBe false
+    sink.upsertAdditive(Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), 0L, Seq("n"))
+    // batch 1's first attempt died after writing wrong rows to its temp
+    Seq(("a", 100L), ("z", 100L)).toDF("k", "n").write.parquet(s"$root/_tmp_batch_1")
+    sink.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
+      Map("a" -> 1L, "b" -> 2L)
+    sink.lastApplied(spark) shouldBe 0L
+    sink.upsertAdditive(Seq(("a", 10L)).toDF("k", "n"), 1L, Seq("n"))
     sink.lastApplied(spark) shouldBe 1L
-    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(3L)
+    sink.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
+      Map("a" -> 11L, "b" -> 2L)
+    new java.io.File(root).list().filter(_.startsWith("_tmp_")) shouldBe empty
   }
 
   /** Spark jobs `body` submits from this thread (listener events are
@@ -376,10 +360,7 @@ class StreamingSpec extends SparkSpec {
     // first snapshot must already have the shape of every later one
     val root = tmpDir("schema_parity")
     val writer = new ParquetUpsertSink(root, Seq("k"))
-    def current = {
-      val v = scala.io.Source.fromFile(s"$root/_CURRENT").mkString.trim.split("\\s+")(0)
-      spark.read.parquet(s"$root/v$v")
-    }
+    def current = spark.read.parquet(Stores.batchDir(root, Stores.batchIds(spark, root).last))
     def sameAsCurrent(sink: ParquetUpsertSink) = {
       val got = sink.read(spark).get
       got.schema shouldBe current.schema
@@ -387,9 +368,11 @@ class StreamingSpec extends SparkSpec {
     }
     writer.upsertAdditive(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L, Seq("n"))
     val reader = new ParquetUpsertSink(root, Seq("k"))
-    sameAsCurrent(reader) // infers the schema from v0
+    sameAsCurrent(reader) // infers the schema from batch 0
+    // exactly the merge's columns: no `batch` partition column
+    reader.read(spark).get.columns.toSeq shouldBe Seq("k", "n")
     writer.upsertAdditive(Seq((10, "a"), (7, "c")).toDF("n", "k"), 1L, Seq("n"))
-    sameAsCurrent(reader) // reads v1 with the schema inferred from v0
+    sameAsCurrent(reader) // reads batch 1 with the schema inferred from batch 0
     sameAsCurrent(new ParquetUpsertSink(root, Seq("k")))
     reader.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
       Map("a" -> 11L, "b" -> 2L, "c" -> 7L)
@@ -398,6 +381,7 @@ class StreamingSpec extends SparkSpec {
     replacing.upsert(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L)
     replacing.read(spark).get.count() shouldBe 2
     replacing.upsert(Seq((5, "a")).toDF("n", "k"), 1L)
+    replacing.read(spark).get.columns.toSeq shouldBe Seq("n", "k")
     val fresh = new ParquetUpsertSink(replacing.root, Seq("k")).read(spark).get
     replacing.read(spark).get.schema shouldBe fresh.schema
     replacing.read(spark).get.collect().toSet shouldBe fresh.collect().toSet
