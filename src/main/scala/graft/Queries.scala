@@ -64,12 +64,8 @@ object Queries {
        |  ${sqlCents("value")} AS cents FROM events""".stripMargin
 
   /** Tokenized documents (distinct tokens per doc), shared by the dedup
-    * queries. `maxId` bounds the quadratic candidate stage.
+    * oracles. `maxId` bounds the quadratic candidate stage.
     */
-  private def docToks(spark: SparkSession, sfDir: String, maxId: Long): DataFrame =
-    Dedup.explodedDistinctTokens(
-      t(spark, sfDir).documents.filter(col("doc_id") < maxId), "doc_id", "text")
-
   private def sqlDocToks(maxId: Long) =
     s"""SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
        |FROM documents WHERE doc_id < $maxId AND length(trim(text)) > 0""".stripMargin
@@ -3660,8 +3656,7 @@ object Queries {
       val cents = Similarity.kmeansCentroids(
         e, "vec_id", "embedding", dims = 64,
         numCells = Queries.IvfNumCells, iters = 2)
-      val local = s.createDataFrame(
-        java.util.Arrays.asList(cents.collect(): _*), cents.schema)
+      val local = Similarity.localModel(cents)
       val total = e.count() // tiny action; at scale read from table stats
       // fail fast on an empty table: the k-means seed selection and the
       // share_bp denominator below are meaningless with zero vectors

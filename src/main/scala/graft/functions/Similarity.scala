@@ -496,14 +496,19 @@ object Similarity {
     // The trained centroid table is ≤ numCells rows but its lineage holds
     // `iters` full corpus passes; ivfSearch references it twice (corpus
     // assignment + query probes), so left lazy the training would run
-    // once per reference. Materializing it into a LocalRelation here is
-    // the index-build step — the same driver-side collect any broadcast
-    // of it would do anyway — and pins training to exactly one run.
-    val spark = corpus.sparkSession
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(cn.collect(): _*), cn.schema)
-    ivfSearch(queries, corpus, id, vec, k, nProbe, local)
+    // once per reference. Materializing it ([[localModel]]) is the
+    // index-build step — the same driver-side collect any broadcast of
+    // it would do anyway — and pins training to exactly one run.
+    ivfSearch(queries, corpus, id, vec, k, nProbe, localModel(cn))
   }
+
+  /** A bounded model table (trained centroids, ≤ numCells rows)
+    * collected once into a driver-side LocalRelation, so every later
+    * reference reads the literal rows instead of re-running the lineage
+    * that produced them.
+    */
+  private[graft] def localModel(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Trained-cell assignment of every corpus vector with the original
     * vector and its norm carried through: (cid, cell, v, vn2). Trains
@@ -760,18 +765,7 @@ object Similarity {
       .select(col("cid"), col("v"), col("vn2"), col("cell"))
 
     // probe list: nProbe nearest cells per query (quantized space)
-    val qs = queries.select(
-        col(id).as("query_id"),
-        toDouble(col(vec)).as("qv0"),
-        quantized(toDouble(col(vec))).as("pqv"))
-      .withColumn("pqn2", norm2(col("pqv")))
-      .withColumn("qn2", norm2(col("qv0")))
-    val probes = qs
-      .join(broadcast(cn))
-      .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("psim").desc, col("cell"))))
+    val probes = probeRanking(queries, id, vec, cn, "query_id", exact = true)
       .filter(col("prn") <= nProbe)
       .select(col("query_id"), col("qv0").as("qv"), col("qn2"), col("cell"))
 
@@ -785,6 +779,33 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("cid").as("neighbor_id"), col("cos_sim"),
         col("rank").cast("int").as("rank"))
+  }
+
+  /** IVF probe routing, the one copy every IVF search uses: each query's
+    * quantized vector `pqv` against the broadcast centroid table (cell,
+    * cv, cn2), cosine `psim` rounded to 4 dp, ranked per query by `prn`
+    * = row_number over (psim desc, cell) — ties to the lowest cell
+    * label. The query id column is named `qid`; with `exact` the
+    * unquantized query vector `qv0` and its norm `qn2` ride along for
+    * an exact re-score. Callers keep `prn <= nProbe`.
+    */
+  private def probeRanking(
+      queries: DataFrame,
+      id: String,
+      vec: String,
+      cn: DataFrame,
+      qid: String = "qid",
+      exact: Boolean = false): DataFrame = {
+    val carried = if (exact) Seq(toDouble(col(vec)).as("qv0")) else Nil
+    val qs = queries
+      .select((col(id).as(qid) +: carried) :+ quantized(toDouble(col(vec))).as("pqv"): _*)
+      .withColumn("pqn2", norm2(col("pqv")))
+    (if (exact) qs.withColumn("qn2", norm2(col("qv0"))) else qs)
+      .join(broadcast(cn))
+      .withColumn("psim",
+        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
+      .withColumn("prn", row_number().over(
+        Window.partitionBy(qid).orderBy(col("psim").desc, col("cell"))))
   }
 
   /** Multi-band SRP-LSH near-duplicate pairs: the scale path for
@@ -1090,12 +1111,7 @@ object Similarity {
       pqIters: Int): (DataFrame, Array[Seq[(Long, Array[Long])]]) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val spark = corpus.sparkSession
-    val cnF = Future {
-      val cn = kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters)
-      spark.createDataFrame(
-        java.util.Arrays.asList(cn.collect(): _*), cn.schema)
-    }
+    val cnF = Future(localModel(kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters)))
     val booksF = Future(
       pqTrain(corpus, id, vec, dims, numSub, codesPerSub, pqIters))
     (Await.result(cnF, scala.concurrent.duration.Duration.Inf),
@@ -1178,13 +1194,26 @@ object Similarity {
   private def pqEncodeWith(
       base: DataFrame,
       books: Array[Seq[(Long, Array[Long])]],
-      sub: Int): DataFrame = {
-    val numSub = books.length
-    base.withColumn("a", pqAssign(col("qv"), books, sub))
-      .select(
-        (col("cid").as("vec_id") +:
-          (0 until numSub).map(mm => col("a")(mm).getField("c").as(s"code$mm"))) :+
-          (0 until numSub).map(mm => col("a")(mm).getField("d")).reduce(_ + _).as("qerr"): _*)
+      sub: Int): DataFrame =
+    pqCoded(base, col("qv"), books, sub, Seq(col("cid").as("vec_id")), qerr = true)
+
+  /** The one PQ code projection: assign `base`'s int64 vector column
+    * `qv` against `books` ([[pqAssign]]) and select the `lead` columns,
+    * then `code0…`, then — with `qerr` — the exact int64 squared
+    * quantization error summed over the subspaces.
+    */
+  private def pqCoded(
+      base: DataFrame,
+      qv: Column,
+      books: Array[Seq[(Long, Array[Long])]],
+      sub: Int,
+      lead: Seq[Column],
+      qerr: Boolean): DataFrame = {
+    val codes = books.indices.map(mm => col("a")(mm).getField("c").as(s"code$mm"))
+    val err =
+      if (qerr) Seq(books.indices.map(mm => col("a")(mm).getField("d")).reduce(_ + _).as("qerr"))
+      else Nil
+    base.withColumn("a", pqAssign(qv, books, sub)).select(lead ++ codes ++ err: _*)
   }
 
   /** Product quantization (Jégou et al., "Product Quantization for
@@ -1256,6 +1285,33 @@ object Similarity {
     rows.map(r => (r.getLong(0), r.getSeq[Long](1)))
   }
 
+  /** The exact int64 ADC distance tables of one query vector `q`
+    * (Jégou et al. TPAMI'11 §IV): per subspace `mm`, the squared L2
+    * distance from `q`'s `mm`-th `sub`-dim slice to every centroid of
+    * codebook `mm`, as (code, distance) pairs in codebook order. The
+    * residual search passes the query's residual against a cell mean.
+    */
+  private def adcTables(
+      q: Seq[Long], books: Array[Seq[(Long, Array[Long])]], sub: Int): Seq[Seq[(Long, Long)]] =
+    books.indices.map { mm =>
+      val qsv = q.slice(mm * sub, (mm + 1) * sub)
+      books(mm).map { case (code, cv) =>
+        (code, cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum)
+      }
+    }
+
+  /** [[adcTables]] as maps for every query of `qRows`, looked up by
+    * (qid, cell): the raw-vector searches share one table set across all
+    * cells a query probes.
+    */
+  private def queryTables(
+      qRows: Array[(Long, Seq[Long])],
+      books: Array[Seq[(Long, Array[Long])]],
+      sub: Int): (Long, Long) => Seq[Map[Long, Long]] = {
+    val dts = qRows.map { case (qid, qv) => qid -> adcTables(qv, books, sub).map(_.toMap) }.toMap
+    (qid, _) => dts(qid)
+  }
+
   /** PQ ANN search by asymmetric distance computation (ADC —
     * Jégou et al. TPAMI'11 §IV): the corpus is represented ONLY by its
     * PQ codes; for each query the `numSub × codesPerSub` table of exact
@@ -1295,11 +1351,7 @@ object Similarity {
     val books = pqTrain(corpus, id, vec, dims, numSub, codesPerSub, iters)
     val codes = pqEncodeWith(pqBase(corpus, id, vec), books, sub)
     val qStructs = qRows.map { case (qid, qv) =>
-      val adc = (0 until numSub).map { mm =>
-        val qsv = qv.slice(mm * sub, (mm + 1) * sub)
-        val tbl = books(mm).map { case (code, cv) =>
-          (code, cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum)
-        }
+      val adc = adcTables(qv, books, sub).zipWithIndex.map { case (tbl, mm) =>
         element_at(
           map_from_arrays(lit(tbl.map(_._1).toArray), lit(tbl.map(_._2).toArray)),
           col(s"code$mm"))
@@ -1331,17 +1383,18 @@ object Similarity {
     * `partitionBy("cell")` so a search touches only probed cells'
     * files.
     *
-    * Search: the probe list (query × nProbe cells) is computed
-    * in-engine against the broadcast centroids — same rounding and
-    * tie rules as [[ivfSearch]] — then collected (≤ [[MaxPqQueries]] ×
-    * nProbe rows) and joined back BROADCAST, each probe row carrying
+    * Search ([[searchProbed]]): the probe list (query × nProbe cells)
+    * is computed in-engine against the broadcast centroids by
+    * [[probeRanking]], the routing [[ivfSearch]] uses too, then
+    * collected (≤ [[MaxPqQueries]] × nProbe rows) and joined back
+    * BROADCAST, each probe row carrying
     * its query's per-subspace ADC distance tables as map columns. The
     * scored row set is the equi-join of the corpus code table with the
     * probe table ON THE CELL ID — no full-corpus fan-out — and the
     * per-query top-k plans as a partial WindowGroupLimit.
     *
-    * Exact int64 ADC, similarities/probes rounded exactly like
-    * [[ivfSearch]], all ties broken by id: fully deterministic,
+    * Exact int64 ADC ([[adcTables]]), probes rounded and tie-broken by
+    * [[probeRanking]], all ties broken by id: fully deterministic,
     * engine-independent. Returns (qid, neighbor_id, adc, rank ≤ k).
     */
   def ivfPqAnn(
@@ -1357,10 +1410,6 @@ object Similarity {
       numCells: Int = 16,
       nProbe: Int = 4,
       ivfIters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
-    val sub   = dims / numSub
-    val spark = corpus.sparkSession
     val qRows = collectPqQueries(queries, id, vec) // fail fast before training
 
     // coarse quantizer (trained IVF centroids, ≤ numCells rows driver-
@@ -1373,46 +1422,51 @@ object Similarity {
     // (broadcast argmax) AND encodes its PQ codes (literal-codebook
     // projection) — the (cell, code0…) inverted-list table
     val codes = encodeWithModel(corpus, localCn, books, id, vec)
+    searchProbed(queries, id, vec, localCn, numSub, k, nProbe)(
+      queryTables(qRows, books, dims / numSub), _ => codes)
+  }
 
-    // query routing: nProbe nearest cells per query, computed in-engine
-    // (identical arithmetic to ivfSearch's probe stage), then collected —
-    // ≤ MaxPqQueries × nProbe rows
-    val qs = queries.select(
-        col(id).as("qid"), quantized(toDouble(col(vec))).as("pqv"))
-      .withColumn("pqn2", norm2(col("pqv")))
-    val probes = qs
-      .join(broadcast(localCn))
-      .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("psim").desc, col("cell"))))
+  /** The probe-limited ADC search every IVF-PQ search ends in: route
+    * each query to its `nProbe` cells ([[probeRanking]], collected —
+    * ≤ MaxPqQueries × nProbe rows), attach each probe's ADC maps
+    * `tables(qid, cell)` to its row ([[probeTable]]), and score the code
+    * table `codes(probed cell ids, ascending)` with [[scoreProbed]]:
+    * an equi-join on the cell id — only codes in probed cells are ever
+    * scored — then the partial-top-k window.
+    */
+  private def searchProbed(
+      queries: DataFrame,
+      id: String,
+      vec: String,
+      localCn: DataFrame,
+      numSub: Int,
+      k: Int,
+      nProbe: Int)(
+      tables: (Long, Long) => Seq[Map[Long, Long]],
+      codes: Seq[Long] => DataFrame): DataFrame = {
+    val probes = probeRanking(queries, id, vec, localCn)
       .filter(col("prn") <= nProbe)
       .select(col("qid"), col("cell"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    val probeDf = probeTable(queries.sparkSession, numSub, probes)(tables)
+    scoreProbed(codes(probes.map(_._2).distinct.sorted), probeDf, numSub, k)
+  }
 
-    // per-query ADC distance tables (exact int64), one map per subspace,
-    // attached to each (qid, cell) probe row — they ride the broadcast
-    val dts: Map[Long, Seq[Map[Long, Long]]] = qRows.map { case (qid, qv) =>
-      qid -> (0 until numSub).map { mm =>
-        val qsv = qv.slice(mm * sub, (mm + 1) * sub)
-        books(mm).map { case (code, cv) =>
-          code -> cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum
-        }.toMap
-      }
-    }.toMap
-    val probeRows: java.util.List[Row] = java.util.Arrays.asList(
-      probes.collect().map { r =>
-        val qid = r.getLong(0)
-        Row.fromSeq(qid +: r.get(1) +: dts(qid))
-      }: _*)
-    val probeSchema = StructType(
-      StructField("qid", LongType) +: probes.schema.fields(1) +:
-        (0 until numSub).map(mm =>
-          StructField(s"dt$mm", MapType(LongType, LongType))))
-    val probeDf = spark.createDataFrame(probeRows, probeSchema)
-
-    // cell-pruned ADC scoring: equi-join on the cell id — only codes in
-    // probed cells are ever scored — then the partial-top-k window
-    scoreProbed(codes, probeDf, numSub, k)
+  /** The broadcast probe table: one row (qid, cell, dt0…) per probed
+    * (query, cell), carrying that probe's per-subspace ADC maps
+    * `tables(qid, cell)`.
+    */
+  private def probeTable(
+      spark: org.apache.spark.sql.SparkSession,
+      numSub: Int,
+      probes: Seq[(Long, Long)])(
+      tables: (Long, Long) => Seq[Map[Long, Long]]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
+    val rows = probes.map { case (qid, cell) => Row.fromSeq(qid +: cell +: tables(qid, cell)) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(StructField("qid", LongType) +: StructField("cell", LongType) +:
+        (0 until numSub).map(mm => StructField(s"dt$mm", MapType(LongType, LongType)))))
   }
 
   /** Assign-and-encode one pass against a TRAINED model: every vector
@@ -1427,20 +1481,23 @@ object Similarity {
       localCn: DataFrame,
       books: Array[Seq[(Long, Array[Long])]],
       id: String,
-      vec: String): DataFrame = {
-    val numSub = books.length
-    val sub    = books.head.head._2.length
-    val corp = vecs.select(
+      vec: String): DataFrame =
+    pqCoded(assignToCells(quantizedBoth(vecs, id, vec), localCn), col("lqv"),
+      books, books.head.head._2.length, Seq(col("cid").as("neighbor_id"), col("cell")),
+      qerr = false)
+
+  /** (cid, qv, lqv, qn2): the quantized vector both as doubles (`qv`,
+    * with its norm `qn2`, for the cosine cell argmax) and as int64
+    * (`lqv`, for PQ and residual arithmetic) — the front of every
+    * assign-and-encode pass.
+    */
+  private def quantizedBoth(vecs: DataFrame, id: String, vec: String): DataFrame =
+    vecs.select(
         col(id).as("cid"),
         quantized(toDouble(col(vec))).as("qv"),
         transform(toDouble(col(vec)),
           x => round(x * lit(1000000.0)).cast("long")).as("lqv"))
       .withColumn("qn2", norm2(col("qv")))
-    assignToCells(corp, localCn)
-      .withColumn("a", pqAssign(col("lqv"), books, sub))
-      .select(col("cid").as("neighbor_id") +: col("cell") +:
-        (0 until numSub).map(mm => col("a")(mm).getField("c").as(s"code$mm")): _*)
-  }
 
   /** The trained model of a persisted index ([[writeIvfPqIndex]]):
     * (centroid LocalRelation, PQ codebooks) — both driver-side bounded.
@@ -1448,9 +1505,7 @@ object Similarity {
   def readIndexModel(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): (DataFrame, Array[Seq[(Long, Array[Long])]]) = {
-    val cn = spark.read.parquet(s"$indexDir/centroids")
-    val localCn = spark.createDataFrame(
-      java.util.Arrays.asList(cn.collect(): _*), cn.schema)
+    val localCn = localModel(spark.read.parquet(s"$indexDir/centroids"))
     val rows = spark.read.parquet(s"$indexDir/codebooks").collect()
     val numSub = rows.map(_.getInt(0)).max + 1
     val books = Array.tabulate(numSub) { mm =>
@@ -1461,8 +1516,8 @@ object Similarity {
     (localCn, books)
   }
 
-  /** The ADC scoring tail shared by [[ivfPqAnn]] and
-    * [[ivfPqAnnIndexed]]: broadcast the probe table (each row carrying
+  /** The ADC scoring tail of [[searchProbed]] and
+    * [[ivfPqProbeSweep]]: broadcast the probe table (each row carrying
     * its query's per-subspace distance maps) onto the code table by
     * cell id, sum the `numSub` map lookups, partial-top-k per query.
     */
@@ -1564,21 +1619,13 @@ object Similarity {
     val sub   = dims / numSub
     val spark = corpus.sparkSession
 
-    // coarse quantizer (identical to ivfPqAnn): trained sum-centroids,
+    // coarse quantizer (ivfPqAnn's): trained sum-centroids,
     // materialized driver-side for broadcast assignment + probe routing
-    val cn = kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters)
-    val localCn = spark.createDataFrame(
-      java.util.Arrays.asList(cn.collect(): _*), cn.schema)
+    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters))
 
     // one corpus pass: quantized vector (double for the cosine argmax,
     // long for the residual arithmetic) + trained-cell assignment
-    val corp = corpus.select(
-        col(id).as("cid"),
-        quantized(toDouble(col(vec))).as("qv"),
-        transform(toDouble(col(vec)),
-          x => round(x * lit(1000000.0)).cast("long")).as("lqv"))
-      .withColumn("qn2", norm2(col("qv")))
-    val asg = assignToCells(corp, localCn)
+    val asg = assignToCells(quantizedBoth(corpus, id, vec), localCn)
 
     // per-cell integer mean centroids: the grouped sums collapse to
     // ≤ numCells rows before this bounded collect; rounded-mean division
@@ -1632,14 +1679,10 @@ object Similarity {
       pqIters: Int = 2,
       numCells: Int = 16,
       ivfIters: Int = 2): DataFrame = {
-    val sub = dims / numSub
     val (_, _, books, rbase) = residualModel(
       corpus, id, vec, dims, numSub, codesPerSub, pqIters, numCells, ivfIters)
-    rbase.withColumn("a", pqAssign(col("qv"), books, sub))
-      .select(
-        (col("cid").as("vec_id") +: col("cell") +:
-          (0 until numSub).map(mm => col("a")(mm).getField("c").as(s"code$mm"))) :+
-          (0 until numSub).map(mm => col("a")(mm).getField("d")).reduce(_ + _).as("qerr"): _*)
+    pqCoded(rbase, col("qv"), books, dims / numSub,
+      Seq(col("cid").as("vec_id"), col("cell")), qerr = true)
   }
 
   /** Residual IVF-PQ ANN search — the TRUE IVFADC of Jégou et al.
@@ -1659,8 +1702,10 @@ object Similarity {
     * cost vs the raw composition is driver-side only: nProbe distance
     * tables per query instead of one.
     *
-    * Exact int64 ADC over residuals, routing/rounding/ties identical to
-    * [[ivfPqAnn]]. Returns (qid, neighbor_id, adc, rank ≤ k).
+    * Exact int64 ADC over residuals ([[adcTables]] of the query
+    * residual), routing/rounding/ties by [[probeRanking]] and scoring by
+    * [[searchProbed]], as in [[ivfPqAnn]]. Returns (qid, neighbor_id,
+    * adc, rank ≤ k).
     */
   def ivfPqAnnResidual(
       queries: DataFrame,
@@ -1675,75 +1720,44 @@ object Similarity {
       numCells: Int = 16,
       nProbe: Int = 4,
       ivfIters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
     val sub   = dims / numSub
-    val spark = corpus.sparkSession
-    val qRows = collectPqQueries(queries, id, vec) // fail fast before training
-    val qMap  = qRows.toMap
+    val qMap  = collectPqQueries(queries, id, vec).toMap // fail fast before training
 
     val (localCn, cmeans, books, rbase) = residualModel(
       corpus, id, vec, dims, numSub, codesPerSub, pqIters, numCells, ivfIters)
 
     // inverted lists: (neighbor_id, cell, code0…) — residual codes
-    val codes = rbase.withColumn("a", pqAssign(col("qv"), books, sub))
-      .select(col("cid").as("neighbor_id") +: col("cell") +:
-        (0 until numSub).map(mm => col("a")(mm).getField("c").as(s"code$mm")): _*)
+    val codes = pqCoded(rbase, col("qv"), books, sub,
+      Seq(col("cid").as("neighbor_id"), col("cell")), qerr = false)
 
-    // probe routing: UNCHANGED from ivfPqAnn — cosine of the raw query
-    // against the sum-centroids (routing reads direction only)
-    val qs = queries.select(
-        col(id).as("qid"), quantized(toDouble(col(vec))).as("pqv"))
-      .withColumn("pqn2", norm2(col("pqv")))
-    val probes = qs
-      .join(broadcast(localCn))
-      .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("psim").desc, col("cell"))))
-      .filter(col("prn") <= nProbe)
-      .select(col("qid"), col("cell"))
-
-    // per-(query, cell) ADC tables from the QUERY RESIDUAL wrt that
-    // cell's mean — ≤ MaxPqQueries × nProbe rows, each numSub bounded maps
-    val probeRows: java.util.List[Row] = java.util.Arrays.asList(
-      probes.collect().map { r =>
-        val qid  = r.getLong(0)
-        val cell = r.getLong(1)
-        val qv   = qMap(qid)
-        val cm   = cmeans(cell)
-        val dts = (0 until numSub).map { mm =>
-          val qsv = Array.tabulate(sub)(i => qv(mm * sub + i) - cm(mm * sub + i))
-          books(mm).map { case (code, cv) =>
-            code -> cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum
-          }.toMap
-        }
-        Row.fromSeq(qid +: cell +: dts)
-      }: _*)
-    val probeSchema = StructType(
-      StructField("qid", LongType) +: StructField("cell", LongType) +:
-        (0 until numSub).map(mm =>
-          StructField(s"dt$mm", MapType(LongType, LongType))))
-    val probeDf = spark.createDataFrame(probeRows, probeSchema)
-    scoreProbed(codes, probeDf, numSub, k)
+    // probe routing is [[probeRanking]]'s, as for ivfPqAnn — cosine of
+    // the raw query against the sum-centroids (routing reads direction
+    // only); the per-(query, cell) ADC tables come from the QUERY
+    // RESIDUAL wrt that cell's mean
+    searchProbed(queries, id, vec, localCn, numSub, k, nProbe)({ (qid, cell) =>
+      val qv = qMap(qid)
+      val cm = cmeans(cell)
+      adcTables(cm.indices.map(i => qv(i) - cm(i)), books, sub).map(_.toMap)
+    }, _ => codes)
   }
 
   /** nProbe sensitivity sweep for [[ivfPqAnn]] — the probe-count
     * analog of [[bandWidthSweep]]: for each `nProbe` in `probeArms`,
-    * one row `(n_probe, n_hits, n_total)` where `n_hits` counts how
+    * one row `(n_probe, n_hits, n_results)` where `n_hits` counts how
     * many of the flat-ADC top-k results (= probing EVERY cell, the
     * [[pqAnn]] scan) the probe-limited search recovers, over all
     * queries. This makes the |corpus|·nProbe/numCells cost-vs-recall
     * trade oracle-OBSERVABLE instead of scaladoc folklore: as nProbe
-    * grows toward numCells, n_hits climbs to n_total while scored-row
+    * grows toward numCells, n_hits climbs to n_results while scored-row
     * cost climbs linearly — the knee is the economical probe count.
     *
     * The index is trained ONCE (same deterministic build as
     * [[ivfPqAnn]]); every arm reuses the same codes, probe ranking and
     * ADC tables, so the sweep costs one training + |arms| scoring
-    * passes over probed cells. Ties and rounding identical to
-    * [[ivfPqAnn]] — the flat reference arm is exactly `nProbe =
-    * numCells`, which the equality spec pins to [[pqAnn]].
+    * passes over probed cells. Each arm is a [[probeTable]] of a
+    * prefix of one [[probeRanking]], scored by [[scoreProbed]] —
+    * [[ivfPqAnn]]'s helpers — so the flat reference arm is exactly
+    * `nProbe = numCells`, which the equality spec pins to [[pqAnn]].
     */
   def ivfPqProbeSweep(
       queries: DataFrame,
@@ -1758,10 +1772,6 @@ object Similarity {
       pqIters: Int = 2,
       numCells: Int = 16,
       ivfIters: Int = 2): DataFrame = Checkpoints.scope { cp =>
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
-    val sub   = dims / numSub
-    val spark = corpus.sparkSession
     val qRows = collectPqQueries(queries, id, vec)
 
     // both quantizers trained concurrently (see [[trainIvfAndPq]])
@@ -1772,34 +1782,12 @@ object Similarity {
       eager = false)
 
     // full probe ranking once; each arm is a prn-prefix of it
-    val qs = queries.select(
-        col(id).as("qid"), quantized(toDouble(col(vec))).as("pqv"))
-      .withColumn("pqn2", norm2(col("pqv")))
-    val ranked = qs
-      .join(broadcast(localCn))
-      .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("psim").desc, col("cell"))))
+    val ranked = probeRanking(queries, id, vec, localCn)
       .select(col("qid"), col("cell"), col("prn"))
-      .collect()
-    val dts: Map[Long, Seq[Map[Long, Long]]] = qRows.map { case (qid, qv) =>
-      qid -> (0 until numSub).map { mm =>
-        val qsv = qv.slice(mm * sub, (mm + 1) * sub)
-        books(mm).map { case (code, cv) =>
-          code -> cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum
-        }.toMap
-      }
-    }.toMap
-    val probeSchema = StructType(
-      StructField("qid", LongType) +: StructField("cell", LongType) +:
-        (0 until numSub).map(mm =>
-          StructField(s"dt$mm", MapType(LongType, LongType))))
-    def probeDfUpTo(nProbe: Int) = spark.createDataFrame(
-      java.util.Arrays.asList(ranked.filter(_.getInt(2) <= nProbe).map { r =>
-        Row.fromSeq(r.getLong(0) +: r.getLong(1) +: dts(r.getLong(0)))
-      }: _*),
-      probeSchema)
+      .collect().toSeq
+    val tables = queryTables(qRows, books, dims / numSub)
+    def probeDfUpTo(nProbe: Int) = probeTable(corpus.sparkSession, numSub,
+      ranked.filter(_.getInt(2) <= nProbe).map(r => (r.getLong(0), r.getLong(1))))(tables)
 
     val full = cp.checkpoint(scoreProbed(codes, probeDfUpTo(numCells), numSub, k)
       .select(col("qid"), col("neighbor_id")), eager = false)
@@ -1893,59 +1881,17 @@ object Similarity {
       .map("%02x".format(_)).mkString
   }
 
-  private def hadoopFs(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[graft] def writeVersionMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      batchDir: String,
-      version: String): Unit = {
-    val out = hadoopFs(spark, batchDir)
-      .create(new org.apache.hadoop.fs.Path(s"$batchDir/_model_version"), true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readVersionMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      batchDir: String): Option[String] = {
-    val fs = hadoopFs(spark, batchDir)
-    val p = new org.apache.hadoop.fs.Path(s"$batchDir/_model_version")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  /** Stamp a batch directory with the max id it contains — the cheap
-    * driver-side record that lets [[requireAppendOnlyIds]] enforce the
-    * append-only id discipline without scanning the store's data files.
+  /** The model-fingerprint stamp of an inverted-list / assignment batch
+    * directory ([[modelVersion]]); the leading underscore keeps it
+    * invisible to parquet partition discovery.
     */
-  private[graft] def writeMaxIdMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      batchDir: String,
-      maxId: Long): Unit = {
-    val out = hadoopFs(spark, batchDir)
-      .create(new org.apache.hadoop.fs.Path(s"$batchDir/_max_cid"), true)
-    try out.write(maxId.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private[graft] val ModelVersionMarker = "_model_version"
 
-  private def readMaxIdMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      batchDir: String): Option[Long] = {
-    val fs = hadoopFs(spark, batchDir)
-    val p = new org.apache.hadoop.fs.Path(s"$batchDir/_max_cid")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+  /** The max-id stamp of a batch directory — the cheap driver-side
+    * record that lets [[requireAppendOnlyIds]] enforce the append-only
+    * id discipline without scanning the store's data files.
+    */
+  private val MaxIdMarker = "_max_cid"
 
   /** Enforce the append-only id discipline the incremental semantic
     * paths' "replay == incremental" contract rests on: every id in the
@@ -1964,7 +1910,7 @@ object Similarity {
       batchMinId: Long,
       op: String): Unit = {
     val maxIndexed = listBatchDirs(spark, indexDir, "assign")
-      .flatMap(d => readMaxIdMarker(spark, d))
+      .flatMap(d => Stores.readMarker(spark, d, MaxIdMarker).map(_.trim.toLong))
     maxIndexed.reduceOption(_ max _).foreach { m =>
       require(batchMinId > m,
         s"$op: batch min id $batchMinId is not above the max indexed id " +
@@ -1996,7 +1942,7 @@ object Similarity {
       op: String,
       sub: String = "codes"): Unit =
     listBatchDirs(spark, indexDir, sub).foreach { d =>
-      val v = readVersionMarker(spark, d)
+      val v = Stores.readMarker(spark, d, ModelVersionMarker)
       require(v.contains(current),
         s"$op: inverted-list directory $d was encoded under model " +
           s"${v.getOrElse("<unstamped>")} but the index model is $current — " +
@@ -2052,7 +1998,7 @@ object Similarity {
       .repartition(layer.sparkSession.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(layerDir)
-    writeVersionMarker(layer.sparkSession, layerDir, version)
+    Stores.writeMarker(layer.sparkSession, layerDir, ModelVersionMarker, version)
   }
 
   /** IVF-PQ search over a PERSISTED index ([[writeIvfPqIndex]]): same
@@ -2079,45 +2025,9 @@ object Similarity {
     // ADC tables and probe ranking
     requireCurrentModel(spark, indexDir,
       modelVersion(localCn, books), "ivfPqAnnIndexed")
-    val numSub = books.length
-    val sub    = books.head.head._2.length
-
-    val qs = queries.select(
-        col(id).as("qid"), quantized(toDouble(col(vec))).as("pqv"))
-      .withColumn("pqn2", norm2(col("pqv")))
-    val probes = qs
-      .join(broadcast(localCn))
-      .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("psim").desc, col("cell"))))
-      .filter(col("prn") <= nProbe)
-      .select(col("qid"), col("cell"))
-      .collect()
-    val dts: Map[Long, Seq[Map[Long, Long]]] = qRows.map { case (qid, qv) =>
-      qid -> (0 until numSub).map { mm =>
-        val qsv = qv.slice(mm * sub, (mm + 1) * sub)
-        books(mm).map { case (code, cv) =>
-          code -> cv.indices.map { i => val d = qsv(i) - cv(i); d * d }.sum
-        }.toMap
-      }
-    }.toMap
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
-    val probeRows: java.util.List[Row] = java.util.Arrays.asList(
-      probes.map { r =>
-        Row.fromSeq(r.getLong(0) +: r.getLong(1) +: dts(r.getLong(0)))
-      }: _*)
-    val probeSchema = StructType(
-      StructField("qid", LongType) +: StructField("cell", LongType) +:
-        (0 until numSub).map(mm =>
-          StructField(s"dt$mm", MapType(LongType, LongType))))
-    val probeDf = spark.createDataFrame(probeRows, probeSchema)
-
-    val codes = pruneToCells(
-      spark.read.parquet(s"$indexDir/codes"),
-      probes.map(_.getLong(1)).distinct.sorted, "ivfPqAnnIndexed")
-    scoreProbed(codes, probeDf, numSub, k)
+    searchProbed(queries, id, vec, localCn, books.length, k, nProbe)(
+      queryTables(qRows, books, books.head.head._2.length),
+      cells => pruneToCells(spark.read.parquet(s"$indexDir/codes"), cells, "ivfPqAnnIndexed"))
   }
 
   /** Restrict a cell-partitioned store scan to a driver-known cell set —
@@ -2151,7 +2061,7 @@ object Similarity {
   // ───────────────────────────────────────────────────────────────────
 
   /** Fingerprint of a trained centroid table alone (the semantic-dedup
-    * index has no PQ codebooks) — same construction as [[modelVersion]].
+    * index has no PQ codebooks): [[modelVersion]] with no codebooks.
     */
   private[graft] def centroidVersion(localCn: DataFrame): String =
     modelVersion(localCn, Array.empty)
@@ -2189,9 +2099,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
-    val cn = kmeansCentroids(corpus, id, vec, dims, cells, iters)
-    val localCn = spark.createDataFrame(
-      java.util.Arrays.asList(cn.collect(): _*), cn.schema)
+    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, cells, iters))
     // stage the complete new index (assignment + marker + centroids +
     // max-id stamp) in the hidden temp sibling, then one atomic swap —
     // a retrain invalidates every assignment encoded under the old
@@ -2207,7 +2115,7 @@ object Similarity {
         centroidVersion(localCn))
       val mx = Await.result(mxF, scala.concurrent.duration.Duration.Inf)
       if (!mx.isNullAt(0))
-        writeMaxIdMarker(spark, base, mx.getLong(0))
+        Stores.writeMarker(spark, base, MaxIdMarker, mx.getLong(0).toString)
       localCn.write.mode("overwrite").parquet(s"$tmp/centroids")
     }
   }
@@ -2216,11 +2124,8 @@ object Similarity {
     * materialized driver-side (bounded: ≤ √N rows under auto-sizing).
     */
   def readSemanticModel(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val cn = spark.read.parquet(s"$dir/centroids")
-    spark.createDataFrame(
-      java.util.Arrays.asList(cn.collect(): _*), cn.schema)
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    localModel(spark.read.parquet(s"$dir/centroids"))
 
   /** Append a new batch's assignment to a persisted semantic-dedup
     * index under `assign/batch=<batchId>` (encode-then-publish, stamped
@@ -2251,7 +2156,7 @@ object Similarity {
     requireAppendOnlyIds(spark, indexDir, bounds.getLong(0), "appendSemanticBatch")
     Stores.publishBatch(spark, s"$indexDir/assign", batchId) { tmp =>
       writeCellLayer(assignWithModel(batch, id, vec, localCn), tmp, version)
-      writeMaxIdMarker(spark, tmp, bounds.getLong(1))
+      Stores.writeMarker(spark, tmp, MaxIdMarker, bounds.getLong(1).toString)
     }
   }
 

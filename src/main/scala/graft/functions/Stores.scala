@@ -253,6 +253,41 @@ object Stores {
       .sorted
   }
 
+  /** Retention: delete every committed batch of the store at `dir` but
+    * the newest `keepLast`. Returns (kept, deleted) batch counts; (0, 0)
+    * for a missing or empty store.
+    */
+  def keepLatestBatches(spark: SparkSession, dir: String, keepLast: Int): (Long, Long) = {
+    val committed = batchIds(spark, dir)
+    val drop = committed.dropRight(keepLast)
+    val fs = fsOf(spark, dir)
+    drop.foreach(id => fs.delete(new Path(batchDir(dir, id)), true))
+    ((committed.length - drop.length).toLong, drop.length.toLong)
+  }
+
+  /** Write `value` to the marker file `dir/name`, replacing any earlier
+    * one. Markers are small stamps inside a store directory (a model
+    * fingerprint, a max id); a hidden name (`_` prefix) keeps them out of
+    * parquet listing and partition discovery.
+    */
+  def writeMarker(spark: SparkSession, dir: String, name: String, value: String): Unit = {
+    val out = fsOf(spark, dir).create(new Path(s"$dir/$name"), true)
+    try out.write(value.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The content of the marker file `dir/name` ([[writeMarker]]), or
+    * `None` when there is none.
+    */
+  def readMarker(spark: SparkSession, dir: String, name: String): Option[String] = {
+    val fs = fsOf(spark, dir)
+    val p = new Path(s"$dir/$name")
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    }
+  }
+
   /** The corpus a replay-safe ingest classifies batch `batchId` against:
     * the layers under `dir` from batches STRICTLY before this one (a
     * committed own layer re-read by its own replay would make every row

@@ -212,18 +212,6 @@ object QuantileSketch {
       values(values.length - 1)
     }
 
-    /** Largest rank slack of any entry (0 in the exact regime). */
-    def maxSlack: Long = {
-      flush()
-      var m = 0L
-      var i = 0
-      while (i < values.length) {
-        m = math.max(m, gs(i) + deltas(i) - 1)
-        i += 1
-      }
-      m
-    }
-
     def serialize(): Array[Byte] = {
       flush()
       val bos = new ByteArrayOutputStream()

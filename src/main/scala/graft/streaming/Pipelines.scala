@@ -24,11 +24,10 @@ object Pipelines {
     * (configmap:69) — inert under complete mode, honored under
     * append/update.
     */
-  def reviewBranches(kafkaShaped: DataFrame, watermark: Boolean = true)
-      : (DataFrame, DataFrame, DataFrame) = {
+  def reviewBranches(kafkaShaped: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val parsed = SteamOps.parseReviews(kafkaShaped)
-    val wm     = if (watermark) parsed.withWatermark("timestamp", "10 minutes") else parsed
-    (parsed, SteamOps.sentimentAgg(wm), SteamOps.reviewBombAgg(parsed))
+    (parsed, SteamOps.sentimentAgg(parsed.withWatermark("timestamp", "10 minutes")),
+      SteamOps.reviewBombAgg(parsed))
   }
 
   /** charts job (configmap:129-206): parse → [cold rows, genre counts]. */
@@ -40,11 +39,9 @@ object Pipelines {
   /** players job (configmap:212-286): parse → [cold rows, 10-min windowed
     * max/avg (5-min watermark, configmap:260)].
     */
-  def playerBranches(kafkaShaped: DataFrame, watermark: Boolean = true)
-      : (DataFrame, DataFrame) = {
+  def playerBranches(kafkaShaped: DataFrame): (DataFrame, DataFrame) = {
     val parsed = SteamOps.parsePlayers(kafkaShaped)
-    val wm     = if (watermark) parsed.withWatermark("timestamp", "5 minutes") else parsed
-    (parsed, SteamOps.playerWindowAgg(wm))
+    (parsed, SteamOps.playerWindowAgg(parsed.withWatermark("timestamp", "5 minutes")))
   }
 
   /** Shared-scan multi-sink: ONE streaming query feeding the cold archive
@@ -99,13 +96,8 @@ object Pipelines {
         try concurrently(batch.sparkSession)(
           () => Stores.publishBatch(batch.sparkSession, archiveDir, batchId)(
             batch.write.mode("overwrite").parquet(_)),
-          () => sentimentSink.upsertAdditive(
-            SteamOps.sentimentAggPartial(batch), batchId,
-            Seq("total_reviews", "quality_sum", "quality_cnt")),
-          () => bombSink.upsertAdditive(
-            SteamOps.reviewBombAggPartial(batch), batchId,
-            Seq("total_reviews", "negative_count", "positive_count",
-              "quality_sum", "quality_cnt")))
+          () => sentimentSink.upsertAdditive(SteamOps.sentimentAggPartial(batch), batchId),
+          () => bombSink.upsertAdditive(SteamOps.reviewBombAggPartial(batch), batchId))
         finally batch.unpersist()
         ()
       }
@@ -449,13 +441,7 @@ object Pipelines {
       stateDir: String,
       keepLast: Int = 32): (Long, Long) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val dir = s"$stateDir/drift"
-    val committed = Stores.batchIds(spark, dir)
-    val drop = committed.dropRight(keepLast)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sessionState.newHadoopConf())
-    drop.foreach(id => fs.delete(new org.apache.hadoop.fs.Path(Stores.batchDir(dir, id)), true))
-    ((committed.length - drop.length).toLong, drop.length.toLong)
+    Stores.keepLatestBatches(spark, s"$stateDir/drift", keepLast)
   }
 
   /** Persist the baseline score histogram [[driftMonitorIngest]] scores
@@ -609,7 +595,7 @@ object Pipelines {
           // it. Written INSIDE the publish, so codes and stamp appear
           // together in the one rename — no window where the batch is
           // visible unstamped.
-          Similarity.writeVersionMarker(spark, tmp,
+          Stores.writeMarker(spark, tmp, Similarity.ModelVersionMarker,
             Similarity.modelVersion(localCn, books))
         }
         ()

@@ -232,9 +232,9 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     }
 
   /** Incremental aggregate maintenance: merge a PER-BATCH partial
-    * aggregate additively into the stored table — `sumCols` are summed
-    * with the existing row per key, other non-key columns must be derived
-    * from sums on read (store sum+count, not avg). Each trigger costs
+    * aggregate additively into the stored table — every non-key column
+    * of the partial is summed with the existing row per key, so anything
+    * else must be derived from sums on read (store sum+count, not avg). Each trigger costs
     * O(|batch| + |touched keys|); the archive is never re-read, unlike a
     * from-scratch re-aggregation. The caller aggregates the RAW batch
     * (per-batch deltas) — feeding cumulative update-mode output here
@@ -243,13 +243,14 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     * NOT idempotent per application, which the publish-once commit
     * covers: a replayed batch finds its snapshot committed and is skipped.
     */
-  def upsertAdditive(batch: DataFrame, batchId: Long, sumCols: Seq[String]): Unit =
+  def upsertAdditive(batch: DataFrame, batchId: Long): Unit =
     publish(batch.sparkSession, batchId) { current =>
+      val sums = batch.columns.toSeq.filterNot(keys.contains)
       // the first snapshot goes through the same aggregate as every later
       // one, so all snapshots share its column order and types
       current.map(_.unionByName(batch)).getOrElse(batch)
         .groupBy(keys.map(col): _*)
-        .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*)
+        .agg(sum(sums.head).as(sums.head), sums.tail.map(c => sum(c).as(c)): _*)
     }
 
   /** Publish `merge(current table)` as batch `batchId`'s snapshot; a

@@ -466,6 +466,39 @@ class FunctionsSpec extends SparkSpec {
     full shouldBe flat
   }
 
+  test("ivfPqProbeSweep: each arm's n_hits is ivfPqAnn's overlap with the flat pqAnn top-k") {
+    // the sweep scores prn-prefixes of one probe ranking; each arm must
+    // count exactly the flat-scan neighbors that the standalone
+    // probe-limited search at that nProbe returns. 16 cells over 8
+    // clusters split clusters across cells, so small arms miss neighbors.
+    val vecs = (0L until 200L).map { i =>
+      val c = (i % 8).toInt
+      (i, Array.tabulate(16) { d =>
+        val base = if (d % 8 == c) 5.0f else 0.0f
+        base + ((i * 31 + d * 7) % 11 - 5) / 10.0f
+      })
+    }.toDF("vec_id", "embedding")
+    val qs = vecs.filter(col("vec_id") >= 8 && col("vec_id") < 20)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val flat = pairs(Similarity.pqAnn(qs, vecs, "vec_id", "embedding",
+      k = 10, dims = 16, numSub = 4, codesPerSub = 8))
+    val arms = Seq(1, 2, 4, 16)
+    val sweep = Similarity.ivfPqProbeSweep(qs, vecs, "vec_id", "embedding",
+        k = 10, probeArms = arms, dims = 16, numSub = 4, codesPerSub = 8, numCells = 16)
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    sweep.keySet shouldBe arms.toSet
+    arms.foreach { p =>
+      val hits = pairs(Similarity.ivfPqAnn(qs, vecs, "vec_id", "embedding",
+        k = 10, dims = 16, numSub = 4, codesPerSub = 8, numCells = 16, nProbe = p))
+        .count(flat.contains)
+      withClue(s"nProbe=$p: ") { sweep(p)._1 shouldBe hits.toLong }
+    }
+    sweep(16)._1 shouldBe sweep(16)._2
+    sweep(1)._1 should be < sweep(16)._1 // the one-cell arm does lose neighbors here
+  }
+
+
   test("IVF-PQ recall: nProbe=4 of 8 cells recovers >=80% of flat-ADC and exact top-3") {
     val vecs = (0L until 200L).map { i =>
       val c = (i % 8).toInt

@@ -213,10 +213,10 @@ class StreamingSpec extends SparkSpec {
     val sink = new ParquetUpsertSink(tmpDir("replay"), Seq("k"))
     val b0 = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
     val b1 = Seq(("a", 10L)).toDF("k", "n")
-    sink.upsertAdditive(b0, 0L, Seq("n"))
-    sink.upsertAdditive(b1, 1L, Seq("n"))
+    sink.upsertAdditive(b0, 0L)
+    sink.upsertAdditive(b1, 1L)
     // failure between sink commit and checkpoint commit → batch 1 replayed
-    sink.upsertAdditive(b1, 1L, Seq("n"))
+    sink.upsertAdditive(b1, 1L)
     val got = sink.read(spark).get.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     got shouldBe Map("a" -> 11L, "b" -> 2L) // not 21: replay was a no-op
@@ -303,13 +303,13 @@ class StreamingSpec extends SparkSpec {
   test("upsert sink: a crashed attempt's temp snapshot is never read, and the retry replaces it") {
     val root = tmpDir("crashed")
     val sink = new ParquetUpsertSink(root, Seq("k"))
-    sink.upsertAdditive(Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), 0L, Seq("n"))
+    sink.upsertAdditive(Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), 0L)
     // batch 1's first attempt died after writing wrong rows to its temp
     Seq(("a", 100L), ("z", 100L)).toDF("k", "n").write.parquet(s"$root/_tmp_batch_1")
     sink.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
       Map("a" -> 1L, "b" -> 2L)
     sink.lastApplied(spark) shouldBe 0L
-    sink.upsertAdditive(Seq(("a", 10L)).toDF("k", "n"), 1L, Seq("n"))
+    sink.upsertAdditive(Seq(("a", 10L)).toDF("k", "n"), 1L)
     sink.lastApplied(spark) shouldBe 1L
     sink.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
       Map("a" -> 11L, "b" -> 2L)
@@ -345,11 +345,11 @@ class StreamingSpec extends SparkSpec {
 
   test("upsert sink schema: inferred once per instance, then reads submit no Spark job") {
     val sink = new ParquetUpsertSink(tmpDir("schema_jobs"), Seq("k"))
-    sink.upsertAdditive(Seq(("a", 1L)).toDF("k", "n"), 0L, Seq("n"))
+    sink.upsertAdditive(Seq(("a", 1L)).toDF("k", "n"), 0L)
     val fresh = new ParquetUpsertSink(sink.root, Seq("k"))
     jobsSubmittedBy(fresh.read(spark).get) should be >= 1 // parquet schema inference
     jobsSubmittedBy(fresh.read(spark).get) shouldBe 0
-    sink.upsertAdditive(Seq(("a", 2L), ("b", 5L)).toDF("k", "n"), 1L, Seq("n"))
+    sink.upsertAdditive(Seq(("a", 2L), ("b", 5L)).toDF("k", "n"), 1L)
     jobsSubmittedBy(fresh.read(spark).get) shouldBe 0
     fresh.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
       Map("a" -> 3L, "b" -> 5L)
@@ -366,12 +366,12 @@ class StreamingSpec extends SparkSpec {
       got.schema shouldBe current.schema
       got.collect().toSet shouldBe current.collect().toSet
     }
-    writer.upsertAdditive(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L, Seq("n"))
+    writer.upsertAdditive(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L)
     val reader = new ParquetUpsertSink(root, Seq("k"))
     sameAsCurrent(reader) // infers the schema from batch 0
     // exactly the merge's columns: no `batch` partition column
     reader.read(spark).get.columns.toSeq shouldBe Seq("k", "n")
-    writer.upsertAdditive(Seq((10, "a"), (7, "c")).toDF("n", "k"), 1L, Seq("n"))
+    writer.upsertAdditive(Seq((10, "a"), (7, "c")).toDF("n", "k"), 1L)
     sameAsCurrent(reader) // reads batch 1 with the schema inferred from batch 0
     sameAsCurrent(new ParquetUpsertSink(root, Seq("k")))
     reader.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
@@ -420,7 +420,7 @@ class StreamingSpec extends SparkSpec {
           .agg(count(lit(1)).as("n"), sum(col("weighted_vote_score")).as("s"))
           .select(col("window.start").as("w_start"), col("recommended"),
             col("n"), col("s"))
-        sink.upsertAdditive(partial, id, Seq("n", "s"))
+        sink.upsertAdditive(partial, id)
         ()
       }.start()
     val base = 1700000000L // batches split across + within the same hour
@@ -1009,7 +1009,7 @@ class StreamingSpec extends SparkSpec {
     spark.read.parquet(s"$dir/codebooks").write.parquet(s"$dir2/codebooks")
     Similarity.encodeWithModel(union, localCn, books, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir2/codes/batch=-1")
-    Similarity.writeVersionMarker(spark, s"$dir2/codes/batch=-1",
+    Stores.writeMarker(spark, s"$dir2/codes/batch=-1", Similarity.ModelVersionMarker,
       Similarity.modelVersion(localCn, books))
     val qs = base.filter(col("vec_id") === 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1029,7 +1029,7 @@ class StreamingSpec extends SparkSpec {
     Similarity.encodeWithModel(b0.toDF("vec_id", "embedding"), localCn, books,
       "vec_id", "embedding")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes/batch=0")
-    Similarity.writeVersionMarker(spark, s"$dir/codes/batch=0",
+    Stores.writeMarker(spark, s"$dir/codes/batch=0", Similarity.ModelVersionMarker,
       Similarity.modelVersion(localCn, books))
     spark.read.parquet(s"$dir/codes").count() shouldBe 200L
     rows(Similarity.ivfPqAnnIndexed(qs, dir, "vec_id", "embedding",
@@ -1116,7 +1116,8 @@ class StreamingSpec extends SparkSpec {
         (160L until 200L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
         localCn, books, "vec_id", "embedding")
         .write.partitionBy("cell").parquet(tmp)
-      Similarity.writeVersionMarker(spark, tmp, Similarity.modelVersion(localCn, books))
+      Stores.writeMarker(spark, tmp, Similarity.ModelVersionMarker,
+        Similarity.modelVersion(localCn, books))
     } shouldBe true
     val qs = base.filter(col("vec_id") === 8)
     def rows() = Similarity.ivfPqAnnIndexed(qs, dir, "vec_id", "embedding", k = 5, nProbe = 2)
@@ -1167,7 +1168,7 @@ class StreamingSpec extends SparkSpec {
       (160L until 180L).map(i => (i, mkVec(i, flip = false)))
         .toDF("vec_id", "embedding"), oldCn, oldBooks, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/codes/batch=0")
-    Similarity.writeVersionMarker(spark, s"$dir/codes/batch=0",
+    Stores.writeMarker(spark, s"$dir/codes/batch=0", Similarity.ModelVersionMarker,
       Similarity.modelVersion(oldCn, oldBooks))
 
     // RETRAIN on different data -> different model, codes/ tree rebuilt:
@@ -1189,7 +1190,7 @@ class StreamingSpec extends SparkSpec {
       (160L until 180L).map(i => (i, mkVec(i, flip = false)))
         .toDF("vec_id", "embedding"), oldCn, oldBooks, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/codes/batch=1")
-    Similarity.writeVersionMarker(spark, s"$dir/codes/batch=1",
+    Stores.writeMarker(spark, s"$dir/codes/batch=1", Similarity.ModelVersionMarker,
       Similarity.modelVersion(oldCn, oldBooks))
     val qs = retrained.filter(col("vec_id") === 8)
     val ex = intercept[IllegalArgumentException] {
@@ -1268,7 +1269,7 @@ class StreamingSpec extends SparkSpec {
         "vec_id", "embedding", oldCn)
       .repartition(col("cell"))
       .write.partitionBy("cell").parquet(s"$dir/assign/batch=1")
-    Similarity.writeVersionMarker(spark, s"$dir/assign/batch=1",
+    Stores.writeMarker(spark, s"$dir/assign/batch=1", Similarity.ModelVersionMarker,
       Similarity.centroidVersion(oldCn))
     val ex = intercept[IllegalArgumentException] {
       Similarity.semanticDedupIncremental(spark, dir,
