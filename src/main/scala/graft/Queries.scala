@@ -5474,7 +5474,7 @@ object Queries {
       Curation.writeBm25Index(
         Curation.bm25Index(docs.filter(col("doc_id") < Bm25SnapDoc),
           "doc_id", "text"), dir)
-      Curation.bm25Search(docs, Curation.readBm25Index(s, dir),
+      Curation.bm25Search(docs, Curation.readBm25Store(s, dir),
         "doc_id", "text", Bm25Terms, Bm25K)
     },
     Some {
@@ -6409,7 +6409,7 @@ object Queries {
         graft.functions.Curation.phrasePostings(
           t(s, d).documents.filter(col("doc_id") < PhraseSnapDoc),
           "doc_id", "text"), dir)
-      graft.functions.Curation.phraseMatchesIndexed(s, dir, ServedPhrases)
+      graft.functions.Curation.phraseMatchesStore(s, dir, ServedPhrases)
     },
     Some {
       val ph = phraseValuesSql(ServedPhrases)
@@ -6483,9 +6483,7 @@ object Queries {
   private def publishPostingBatch(
       s: SparkSession, dir: String, batch: Long, docs: DataFrame): Boolean =
     graft.functions.Stores.publishBatch(s, dir, batch)(
-      Curation.writePostingsRaw(
-        Curation.phrasePostings(docs, "doc_id", "text"), _,
-        Curation.PhrasePostingBuckets))
+      Curation.writePostingsRaw(Curation.phrasePostings(docs, "doc_id", "text"), _))
 
   /** Publish the two ingest batches of [[qPhraseStore]]'s split into
     * `dir`; returns the batches' documents in id order.

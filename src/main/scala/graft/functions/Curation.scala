@@ -65,8 +65,8 @@ object Curation {
     * ALL-token document-frequency table (vocab-scale), `tot` the one-row
     * (n_docs, t_toks) totals. Production builds this once per corpus
     * snapshot ([[writeBm25Index]], the [[NbModel]] idiom) and serves
-    * every query from it; [[bm25TopK]] composes build + search in one
-    * plan as the self-contained demo.
+    * every query from the store ([[readBm25Store]]); [[bm25TopK]]
+    * composes build + search in one plan as the self-contained demo.
     */
   final case class Bm25Index(df: DataFrame, tot: DataFrame)
 
@@ -79,13 +79,25 @@ object Curation {
     Bm25Index(df, tot)
   }
 
-  def writeBm25Index(ix: Bm25Index, dir: String): Unit = {
-    ix.df.write.mode("overwrite").parquet(s"$dir/df")
-    ix.tot.write.mode("overwrite").parquet(s"$dir/tot")
-  }
+  /** (Re)build the BM25 store at `dir` from one corpus snapshot: the
+    * whole store is replaced ([[Stores.publishReplace]]) by a single
+    * base layer `batch=-1` — the layout [[writeBm25Batch]] appends to
+    * and [[readBm25Store]] serves, so a rebuild also drops every
+    * streamed layer of the previous snapshot. A search racing the
+    * rebuild reads the old store or the new one, never the new `df`
+    * with the old `tot` (StoresSpec).
+    */
+  def writeBm25Index(ix: Bm25Index, dir: String): Unit =
+    Stores.publishReplace(ix.df.sparkSession, dir)(
+      tmp => writeBm25Layer(ix, Stores.batchDir(tmp, -1)))
 
-  def readBm25Index(spark: org.apache.spark.sql.SparkSession, dir: String): Bm25Index =
-    Bm25Index(spark.read.parquet(s"$dir/df"), spark.read.parquet(s"$dir/tot"))
+  /** The one layer write of every BM25 store: `df/` and `tot/` side by
+    * side in the layer directory `layer` (inside a publish's temp).
+    */
+  private def writeBm25Layer(ix: Bm25Index, layer: String): Unit = {
+    ix.df.write.mode("overwrite").parquet(s"$layer/df")
+    ix.tot.write.mode("overwrite").parquet(s"$layer/tot")
+  }
 
   /** Search half: ONE corpus scan computes each doc's length and its
     * query-term tfs in the same per-doc aggregate (conditional sums,
@@ -151,17 +163,14 @@ object Curation {
     * would in any additive aggregate.
     */
   def writeBm25Batch(ix: Bm25Index, dir: String, batchId: Long): Unit = {
-    Stores.publishBatch(ix.df.sparkSession, dir, batchId) { tmp =>
-      ix.df.write.mode("overwrite").parquet(s"$tmp/df")
-      ix.tot.write.mode("overwrite").parquet(s"$tmp/tot")
-    }
+    Stores.publishBatch(ix.df.sparkSession, dir, batchId)(writeBm25Layer(ix, _))
     ()
   }
 
   /** Serve a [[Bm25Index]] from a layered store written by
-    * [[writeBm25Batch]]: df layers sum per token, totals layers sum to
-    * one row (both read from the committed batch directories,
-    * [[Stores.batchIds]]). Both reads are vocab- (not corpus-) scale;
+    * [[writeBm25Index]] and [[writeBm25Batch]]: df layers sum per
+    * token, totals layers sum to one row (both read from the committed
+    * batch directories, [[Stores.batchIds]]). Both reads are vocab- (not corpus-) scale;
     * the fold is a keyed aggregation a search plan then broadcasts, same
     * as the monolithic index.
     */
@@ -190,22 +199,16 @@ object Curation {
     * sums), so pre-folding the layers into the one kept layer is exact:
     * searches served before and after are bit-identical. Publication,
     * the kept id and the return value are [[Stores.foldAndSwap]]'s.
-    * `dfFiles` sizes the folded df rewrite (coalesce — the fold's agg
-    * output narrows without a shuffle); 1 suits test stores, size to
-    * ~vocab volume / 1 GB in production.
+    * The folded layer is one `df` file and one `tot` file (coalesce —
+    * the fold's agg output narrows without a shuffle).
     */
   def compactBm25Store(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      dfFiles: Int = 1): (Long, Long, Long) = {
-    require(dfFiles >= 1, s"dfFiles must be >= 1, got $dfFiles")
+      spark: org.apache.spark.sql.SparkSession, dir: String): (Long, Long, Long) =
     Stores.foldAndSwap(spark, dir) { (kept, tmp) =>
       val folded = readBm25Store(spark, dir)
-      val layer = Stores.batchDir(tmp, kept)
-      folded.df.coalesce(dfFiles).write.mode("overwrite").parquet(s"$layer/df")
-      folded.tot.coalesce(1).write.mode("overwrite").parquet(s"$layer/tot")
+      writeBm25Layer(Bm25Index(folded.df.coalesce(1), folded.tot.coalesce(1)),
+        Stores.batchDir(tmp, kept))
     }
-  }
 
   // ─────────────────────────────────────────────────────────────────
   // Query-likelihood retrieval + reciprocal-rank fusion
@@ -490,11 +493,14 @@ object Curation {
       .agg(count_distinct(col("doc_id")).as("n_docs"),
         count(lit(1)).cast("long").as("n_occurrences"))
 
-  /** Term-hash bucket count of a persisted posting store: 64 buckets
-    * keep the layout's partition directory small while a typical probe
-    * (a handful of phrases) touches only its own few buckets.
+  /** Term-hash bucket count of every posting store: 64 buckets keep
+    * the layout's partition directory small while a typical probe (a
+    * handful of phrases) touches only its own few buckets. One constant
+    * for writer and reader — a probe planned with a different count
+    * than the layer was written with would prune to the wrong
+    * directories and answer zero hits.
     */
-  val PhrasePostingBuckets: Int = 64
+  private val PhrasePostingBuckets: Int = 64
 
   /** First 60 bits of md5(term) mod `buckets` — the persisted posting
     * store's partition key, computed identically by the Spark writer
@@ -520,78 +526,81 @@ object Curation {
   private[graft] def termBucketCol(term: Column, buckets: Int): Column =
     pmod(conv(substring(md5(term), 1, 15), 16, 10).cast("long"), lit(buckets))
 
-  /** Persist a posting table ([[phrasePostings]] output) partitioned by
-    * the term-hash bucket: the decontamination-index layout a pipeline
-    * builds ONCE per corpus snapshot and probes many times —
-    * [[phraseMatchesIndexed]] reads only the probed phrases' buckets
-    * (physical partition pruning), so probe cost scales with the
-    * phrase list, not the corpus. Published atomically
-    * ([[Stores.publishReplace]]): the store is fully written beside its
-    * final path and swapped in by rename, so a concurrent probe sees
-    * the old snapshot or the new one, never a partial write.
+  /** (Re)build the posting store at `dir` from one corpus snapshot
+    * ([[phrasePostings]] output): the decontamination index a pipeline
+    * builds ONCE per snapshot and probes many times with
+    * [[phraseMatchesStore]]. The whole store is replaced
+    * ([[Stores.publishReplace]]) by a single base layer
+    * `batch=-1/tb=K` — the layout the streaming ingest
+    * ([[graft.streaming.Pipelines.phraseAuditIngest]]) appends to — so
+    * a concurrent probe sees the old snapshot or the new one, never a
+    * partial write.
     */
-  def writePhrasePostings(
-      postings: DataFrame,
-      dir: String,
-      buckets: Int = PhrasePostingBuckets): Unit =
+  def writePhrasePostings(postings: DataFrame, dir: String): Unit =
     Stores.publishReplace(postings.sparkSession, dir)(
-      writePostingsRaw(postings, _, buckets))
+      tmp => writePostingsRaw(postings, Stores.batchDir(tmp, -1)))
 
-  /** The unpublished write (no atomicity) — [[writePhrasePostings]] and
-    * the streaming ingest ([[graft.streaming.Pipelines.phraseAuditIngest]])
-    * aim it at a temp directory and publish with one rename.
+  /** Every posting store's columns: the layer's postings and the
+    * `batch`/`tb` partition columns. Readers pass it explicitly because
+    * a layer of zero postings (a partitioned write of no rows) holds no
+    * parquet file to infer it from.
     */
-  private[graft] def writePostingsRaw(
-      postings: DataFrame,
-      dir: String,
-      buckets: Int): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+  private val PostingStoreSchema = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    StructType(Seq(
+      StructField("term", StringType), StructField("doc_id", LongType),
+      StructField("pos", LongType), StructField("batch", LongType),
+      StructField("tb", LongType)))
+  }
+
+  /** One posting layer, partitioned by the term-hash bucket, written to
+    * `dir` unpublished — every caller aims it at a publish's temp
+    * directory ([[writePhrasePostings]], [[compactPostingStore]], the
+    * streaming ingest).
+    */
+  private[graft] def writePostingsRaw(postings: DataFrame, dir: String): Unit =
     postings
-      .withColumn("tb", termBucketCol(col("term"), buckets))
+      .withColumn("tb", termBucketCol(col("term"), PhrasePostingBuckets))
       .write.mode("overwrite").partitionBy("tb").parquet(dir)
-  }
 
-  /** [[phraseMatches]] served from a PERSISTED posting store: the scan
-    * is restricted to the probe terms' hash buckets (directory-level
-    * partition pruning — the bucket set is computed on the driver from
-    * the phrase list alone) and then to the terms themselves
-    * (row-group pushdown), so the corpus text is never touched and
-    * non-probed terms are never read. Same output contract as
-    * [[phraseMatches]] over the indexed snapshot.
-    */
-  def phraseMatchesIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      phrases: Seq[String],
-      buckets: Int = PhrasePostingBuckets): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField}
-    probePostings(spark, dir, phrases, buckets,
-      Seq(StructField("tb", LongType)))
-  }
-
-  /** [[phraseMatchesIndexed]] over a STREAMED posting store — the
-    * layout [[graft.streaming.Pipelines.phraseAuditIngest]] maintains:
-    * one `batch=N` layer above the term-hash buckets
-    * (`postings/batch=N/tb=K/`). Batches follow [[Stores]]' per-batch
-    * contract, so a probe running concurrently with ingest sees each
-    * batch either complete or not yet published, never partial.
-    * Directory pruning on `tb` spans every batch. Contract, as
-    * for the CDC store: batches carry NEW documents (a doc re-ingested
-    * in two batches would double its postings — dedup is the
-    * exact-dedup stage's job, upstream).
+  /** [[phraseMatches]] served from a posting store — the
+    * `batch=N/tb=K` layout [[writePhrasePostings]] builds and
+    * [[graft.streaming.Pipelines.phraseAuditIngest]] appends to. The
+    * scan is restricted to the probe terms' hash buckets
+    * (directory-level partition pruning across every batch — the bucket
+    * set is computed on the driver from the phrase list alone) and then
+    * to the terms themselves (row-group pushdown), so the corpus text
+    * is never touched and non-probed terms are never read. Batches
+    * follow [[Stores]]' per-batch contract, so a probe running
+    * concurrently with ingest sees each batch either complete or not
+    * yet published, never partial. Contract, as for the CDC store:
+    * batches carry NEW documents (a doc re-ingested in two batches
+    * would double its postings — dedup is the exact-dedup stage's job,
+    * upstream).
+    *
+    * A layer of zero postings answers zero hits (the explicit
+    * [[PostingStoreSchema]]), and so does a store with no committed
+    * batch yet (a probe before the first ingest batch commits).
     */
   def phraseMatchesStore(
       spark: org.apache.spark.sql.SparkSession,
       storeDir: String,
-      phrases: Seq[String],
-      buckets: Int = PhrasePostingBuckets): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField}
-    probePostings(spark, storeDir, phrases, buckets,
-      Seq(StructField("batch", LongType), StructField("tb", LongType)))
+      phrases: Seq[String]): DataFrame = {
+    val terms = phraseTerms(spark, phrases)
+    val termStrs = phrases.flatMap(_.trim.split("\\s+").toSeq).distinct
+    val tbs = termStrs.map(termBucket(_, PhrasePostingBuckets)).distinct
+    val store =
+      if (Stores.batchIds(spark, storeDir).isEmpty)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PostingStoreSchema)
+      else spark.read.schema(PostingStoreSchema).parquet(storeDir)
+    matchVotes(
+      store.filter(col("tb").isin(tbs: _*) && col("term").isin(termStrs: _*))
+        .select(col("term"), col("doc_id"), col("pos")),
+      terms)
   }
 
-  /** Compact a STREAMED posting store (the `batch=N/tb=K` layout
-    * [[graft.streaming.Pipelines.phraseAuditIngest]] maintains): rewrite
+  /** Compact a posting store (the `batch=N/tb=K` layout): rewrite
     * every committed batch into ONE batch layer with
     * [[Stores.foldAndSwap]] (a concurrent probe sees the old store or
     * the compacted one, never a partial tree; kept id and return value
@@ -607,60 +616,13 @@ object Curation {
     * checkpoint is retained.
     */
   def compactPostingStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      buckets: Int = PhrasePostingBuckets): (Long, Long, Long) = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    // explicit schema: a layer of zero postings holds no parquet file
-    val schema = StructType(Seq(
-      StructField("term", StringType), StructField("doc_id", LongType),
-      StructField("pos", LongType), StructField("batch", LongType),
-      StructField("tb", LongType)))
+      spark: org.apache.spark.sql.SparkSession, storeDir: String): (Long, Long, Long) =
     Stores.foldAndSwap(spark, storeDir) { (kept, tmp) =>
       writePostingsRaw(
-        spark.read.schema(schema).parquet(storeDir)
+        spark.read.schema(PostingStoreSchema).parquet(storeDir)
           .select(col("term"), col("doc_id"), col("pos")),
-        Stores.batchDir(tmp, kept), buckets)
+        Stores.batchDir(tmp, kept))
     }
-  }
-
-  /** Shared probe path of [[phraseMatchesIndexed]] / [[phraseMatchesStore]]
-    * (they differ only in the store's partition-column layering). Two
-    * robustness contracts live here: the read carries an EXPLICIT
-    * schema so an existing-but-empty store (a partitioned overwrite of
-    * zero rows writes no parquet files) answers zero hits instead of
-    * failing schema inference, and a store directory that does not
-    * exist yet (probe before the first ingest batch commits) answers
-    * zero hits too.
-    */
-  private def probePostings(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      phrases: Seq[String],
-      buckets: Int,
-      partitionFields: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val terms = phraseTerms(spark, phrases)
-    val termStrs = phrases.flatMap(_.trim.split("\\s+").toSeq).distinct
-    val tbs = termStrs.map(termBucket(_, buckets)).distinct
-    val dataFields = Seq(
-      StructField("term", StringType),
-      StructField("doc_id", LongType),
-      StructField("pos", LongType))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sessionState.newHadoopConf())
-    val postings =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(dataFields))
-      else
-        spark.read.schema(StructType(dataFields ++ partitionFields))
-          .parquet(dir)
-          .filter(col("tb").isin(tbs: _*) && col("term").isin(termStrs: _*))
-          .select(col("term"), col("doc_id"), col("pos"))
-    matchVotes(postings, terms)
-  }
 
   // ─────────────────────────────────────────────────────────────────
   // Dedup-aware (leakage-free) splitting
@@ -783,14 +745,19 @@ object Curation {
 
   /** Persist / load an [[NbModel]] as two parquet tables under `dir`
     * (`tok_lp/`, `cls_stats/`) — the offline half of the streaming
-    * classify path ([[graft.streaming.Pipelines.nbClassifyIngest]]);
-    * a retrain overwrites both atomically enough for per-trigger
-    * re-reads (each trigger reads one consistent model or the next).
+    * classify path ([[graft.streaming.Pipelines.nbClassifyIngest]]).
+    * A (re)train publishes both tables in ONE [[Stores.publishReplace]]:
+    * a retrain that fails part-way leaves the previous model in place,
+    * and a reader finds both tables of one model or the directory
+    * absent, never one table of each model. A read whose two listings
+    * straddle the swap does not mix models either: the files it listed
+    * before the swap are gone, so its job fails instead.
     */
-  def writeNbModel(m: NbModel, dir: String): Unit = {
-    m.tokLp.write.mode("overwrite").parquet(s"$dir/tok_lp")
-    m.clsStats.write.mode("overwrite").parquet(s"$dir/cls_stats")
-  }
+  def writeNbModel(m: NbModel, dir: String): Unit =
+    Stores.publishReplace(m.tokLp.sparkSession, dir) { tmp =>
+      m.tokLp.write.parquet(s"$tmp/tok_lp")
+      m.clsStats.write.parquet(s"$tmp/cls_stats")
+    }
 
   def readNbModel(spark: org.apache.spark.sql.SparkSession, dir: String): NbModel =
     NbModel(spark.read.parquet(s"$dir/tok_lp"), spark.read.parquet(s"$dir/cls_stats"))

@@ -896,21 +896,18 @@ object Dedup {
     * highest published id, so the compacted corpus is in the prior view
     * of exactly the batches that saw the original layers.
     *
-    * `filesPerTable` sizes the rewrite (repartition on the lookup key);
-    * 1 suits test/demo stores — size to ~index volume / 1 GB in
-    * production. Returns per store (fp, bands) [[Stores.foldAndSwap]]'s
-    * (kept batch id, files before, files after).
+    * Each store's kept layer is one file (a single hash partition on
+    * the lookup key). Returns per store (fp, bands)
+    * [[Stores.foldAndSwap]]'s (kept batch id, files before, files after).
     */
   def compactDedupIndex(
       spark: org.apache.spark.sql.SparkSession,
-      stateDir: String,
-      filesPerTable: Int = 1): Map[String, (Long, Long, Long)] = {
-    require(filesPerTable >= 1, s"filesPerTable must be >= 1, got $filesPerTable")
+      stateDir: String): Map[String, (Long, Long, Long)] = {
     def compactSub(sub: String, keyCols: Seq[String]): (Long, Long, Long) = {
       val dir = s"$stateDir/$sub"
       Stores.foldAndSwap(spark, dir) { (kept, tmp) =>
         spark.read.parquet(dir).drop("batch")
-          .repartition(filesPerTable, keyCols.map(col): _*)
+          .repartition(1, keyCols.map(col): _*)
           .write.mode("overwrite").parquet(Stores.batchDir(tmp, kept))
       }
     }

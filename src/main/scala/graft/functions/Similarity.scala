@@ -1837,25 +1837,26 @@ object Similarity {
     // a RETRAIN invalidates every inverted list encoded under the old
     // model — streamed batch=<id> directories included (their codes AND
     // cell routings are meaningless against new centroids/codebooks), so
-    // the whole codes/ tree is replaced by the base build (ADVICE r8).
-    // The version stamp closes the remaining race (an ingest writing a
-    // stale batch AFTER the swap): every batch directory carries the
-    // model fingerprint it was encoded under, and [[ivfPqAnnIndexed]]
-    // refuses to score mismatched batches.
-    Stores.publishReplace(spark, s"$dir/codes") { tmp =>
+    // the whole index (codes/ tree and model) is replaced in one swap by
+    // the base build (ADVICE r8): a reader never pairs new codes with an
+    // old model. The version stamp closes the remaining race (an ingest
+    // writing a stale batch AFTER the swap): every batch directory
+    // carries the model fingerprint it was encoded under, and
+    // [[ivfPqAnnIndexed]] refuses to score mismatched batches.
+    Stores.publishReplace(spark, dir) { tmp =>
       // the base build is batch=-1; streaming ingest
       // (graft.streaming.Pipelines.ivfPqIngest) appends batch=<id>
       // directories with the SAME two-level batch=/cell= layout, so
       // partition discovery stays uniform and cell pruning spans both
       writeCellLayer(encodeWithModel(corpus, localCn, books, id, vec),
-        Stores.batchDir(tmp, -1), modelVersion(localCn, books))
+        Stores.batchDir(s"$tmp/codes", -1), modelVersion(localCn, books))
+      localCn.write.parquet(s"$tmp/centroids")
+      import spark.implicits._
+      books.zipWithIndex.toSeq
+        .flatMap { case (bk, mm) => bk.map { case (c, cv) => (mm, c, cv.toSeq) } }
+        .toDF("m", "code", "cv")
+        .coalesce(1).write.parquet(s"$tmp/codebooks")
     }
-    localCn.write.mode("overwrite").parquet(s"$dir/centroids")
-    import spark.implicits._
-    books.zipWithIndex.toSeq
-      .flatMap { case (bk, mm) => bk.map { case (c, cv) => (mm, c, cv.toSeq) } }
-      .toDF("m", "code", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
   }
 
   /** Deterministic fingerprint of a trained IVF-PQ model (centroids +

@@ -8,8 +8,12 @@ import org.apache.spark.sql.functions.col
 /** Atomic directory publication for persisted store layouts, and the
   * one owner of the per-batch store layout (the cold archive, the hot
   * upsert tables' snapshots, the dedup `fp/`/`bands/` index, the SRP
-  * `vecs/`/`codes/`, CDC chunks, phrase postings, BM25 layers, drift
-  * reports, IVF-PQ codes, the semantic `assign/`).
+  * `vecs/`/`codes/`, CDC chunks, drift reports, and the four indexes
+  * whose one-shot build is the base layer `batch=-1` that streamed
+  * batches append to: phrase postings, BM25 `df/`+`tot/`, IVF-PQ
+  * `codes/`, the semantic `assign/`). One-shot tables outside that
+  * layout (the NB model, the drift baseline) are replaced whole with
+  * [[publishReplace]].
   *
   * The failure mode publication removes: a store directory written with
   * `mode("overwrite")` is delete-then-write, so a reader (an offline
@@ -254,10 +258,12 @@ object Stores {
   }
 
   /** Retention: delete every committed batch of the store at `dir` but
-    * the newest `keepLast`. Returns (kept, deleted) batch counts; (0, 0)
-    * for a missing or empty store.
+    * the newest `keepLast` (at least 1: retention never empties a
+    * store). Returns (kept, deleted) batch counts; (0, 0) for a missing
+    * or empty store.
     */
   def keepLatestBatches(spark: SparkSession, dir: String, keepLast: Int): (Long, Long) = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val committed = batchIds(spark, dir)
     val drop = committed.dropRight(keepLast)
     val fs = fsOf(spark, dir)

@@ -53,17 +53,20 @@ object Pipelines {
     * micro-batch is read once, cached, and fanned out inside
     * `foreachBatch` — a single Kafka read and one checkpoint.
     *
-    * Per-trigger work is O(batch), not O(history):
-    *  - cold: the batch lands in its own archive batch directory under
-    *    [[Stores]]' per-batch contract (published once, atomically), so
-    *    nothing is ever appended twice and a reader never sees a
-    *    half-written batch (the built-in file sink's manifest does this
-    *    for the single-sink case; inside foreachBatch we provide it).
+    * Per-trigger work never re-reads the archive (the history):
+    *  - cold: O(batch) — the batch lands in its own archive batch
+    *    directory under [[Stores]]' per-batch contract (published
+    *    once, atomically), so nothing is ever appended twice and a
+    *    reader never sees a half-written batch (the built-in file
+    *    sink's manifest does this for the single-sink case; inside
+    *    foreachBatch we provide it).
     *  - hot: per-batch ADDITIVE partials
     *    ([[graft.operators.SteamOps.sentimentAggPartial]] /
     *    `reviewBombAggPartial`) merge into the stored tables via
-    *    [[ParquetUpsertSink.upsertAdditive]] — the archive is never
-    *    re-read, and a replayed batch is a no-op (batchId commit record).
+    *    [[ParquetUpsertSink.upsertAdditive]] — O(batch + hot table):
+    *    each merge reads the whole current table and writes it whole
+    *    as the next snapshot, and a replayed batch is a no-op (batchId
+    *    commit record).
     *    Read the user-facing shapes back with
     *    [[graft.operators.SteamOps.sentimentFromPartials]] /
     *    `reviewBombFromPartials`; equality with a from-scratch
@@ -439,19 +442,20 @@ object Pipelines {
   def pruneDriftReports(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String,
-      keepLast: Int = 32): (Long, Long) = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+      keepLast: Int = 32): (Long, Long) =
     Stores.keepLatestBatches(spark, s"$stateDir/drift", keepLast)
-  }
 
   /** Persist the baseline score histogram [[driftMonitorIngest]] scores
-    * against: `(s, n_base)`, one row per occupied bucket.
+    * against: `(s, n_base)`, one row per occupied bucket. A rebase
+    * replaces the table in one [[Stores.publishReplace]], so a trigger
+    * reads the old histogram or the new one, never a partial write.
     */
   def writeBaselineHist(
       docs: DataFrame, score: Column, dir: String): Unit =
-    docs.select(score.cast("long").as("s"))
-      .groupBy(col("s")).agg(count(lit(1)).as("n_base"))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+    Stores.publishReplace(docs.sparkSession, dir)(
+      docs.select(score.cast("long").as("s"))
+        .groupBy(col("s")).agg(count(lit(1)).as("n_base"))
+        .coalesce(1).write.parquet(_))
 
   /** Streaming CDC chunk-store maintenance — the sub-document analog of
     * [[dedupIngest]]: each micro-batch is content-defined-chunked
@@ -539,9 +543,7 @@ object Pipelines {
             Curation.phraseMatches(batch, id, text, phrases)
               .write.mode("overwrite").parquet(_))
           Stores.publishBatch(spark, s"$stateDir/postings", batchId)(
-            Curation.writePostingsRaw(
-              Curation.phrasePostings(batch, id, text), _,
-              Curation.PhrasePostingBuckets))
+            Curation.writePostingsRaw(Curation.phrasePostings(batch, id, text), _))
         } finally batch.unpersist()
         ()
       }

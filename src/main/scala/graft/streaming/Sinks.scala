@@ -17,11 +17,13 @@ import graft.functions.Stores
   * trigger (`outputMode("complete")`, configmap:104-111) — O(result) work
   * per trigger and unbounded state, which does not survive 100 TB. The
   * idiomatic replacement is `update` output mode + `foreachBatch` upsert
-  * keyed on the group columns: each trigger touches only changed keys.
-  * [[ParquetUpsertSink]] implements the upsert against a snapshot-versioned
-  * parquet table (the same merge a Delta/Iceberg MERGE would do, on plain
-  * parquet with one atomic directory rename per batch — no extra
-  * dependencies).
+  * keyed on the group columns: each trigger ships only the changed keys
+  * and the state store stays bounded. [[ParquetUpsertSink]] implements
+  * the upsert against a snapshot-versioned parquet table (the same merge
+  * a Delta/Iceberg MERGE would do, on plain parquet with one atomic
+  * directory rename per batch — no extra dependencies). Its write is
+  * still O(table) per trigger: every snapshot is a full copy of the
+  * table, read whole and rewritten whole.
   */
 object Sinks {
 
@@ -234,11 +236,13 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
   /** Incremental aggregate maintenance: merge a PER-BATCH partial
     * aggregate additively into the stored table — every non-key column
     * of the partial is summed with the existing row per key, so anything
-    * else must be derived from sums on read (store sum+count, not avg). Each trigger costs
-    * O(|batch| + |touched keys|); the archive is never re-read, unlike a
-    * from-scratch re-aggregation. The caller aggregates the RAW batch
-    * (per-batch deltas) — feeding cumulative update-mode output here
-    * would double-count.
+    * else must be derived from sums on read (store sum+count, not avg).
+    * Each trigger reads the whole current table and writes the whole
+    * merged table as the next snapshot, so it costs O(|batch| + |table|),
+    * not O(|touched keys|); what it saves against a from-scratch
+    * re-aggregation is the archive, which is never re-read. The caller
+    * aggregates the RAW batch (per-batch deltas) — feeding cumulative
+    * update-mode output here would double-count.
     *
     * NOT idempotent per application, which the publish-once commit
     * covers: a replayed batch finds its snapshot committed and is skipped.

@@ -83,7 +83,7 @@ class CurationSpec extends SparkSpec {
     val df  = tinyCorpus.toDF("doc_id", "text")
     val dir = tmpDir("bm25_ix")
     Curation.writeBm25Index(Curation.bm25Index(df, "doc_id", "text"), dir)
-    val viaIndex = Curation.bm25Search(df, Curation.readBm25Index(spark, dir),
+    val viaIndex = Curation.bm25Search(df, Curation.readBm25Store(spark, dir),
         "doc_id", "text", Seq("dup", "spark", "window"), 10)
       .as[(Long, Long)].collect().toSeq
     val composed = Curation.bm25TopK(df, "doc_id", "text",
@@ -411,7 +411,7 @@ class CurationSpec extends SparkSpec {
     got.contains("absent phrase") shouldBe false
   }
 
-  test("phraseMatchesIndexed: persisted store equals in-plan, scan prunes to probe buckets") {
+  test("writePhrasePostings: persisted store equals in-plan, scan prunes to probe buckets") {
     val rnd = new scala.util.Random(29)
     val vocab = (0 until 40).map(i => s"w$i")
     val docs = (0 until 80).map { i =>
@@ -422,7 +422,7 @@ class CurationSpec extends SparkSpec {
     Curation.writePhrasePostings(
       Curation.phrasePostings(docs, "doc_id", "text"), dir)
     val phrases = Seq("w1 w2", "w3", "w4 w5 w6")
-    val served = Curation.phraseMatchesIndexed(spark, dir, phrases)
+    val served = Curation.phraseMatchesStore(spark, dir, phrases)
     val inPlan = Curation.phraseMatches(docs, "doc_id", "text", phrases)
     served.collect().map(_.toSeq).toSet shouldBe
       inPlan.collect().map(_.toSeq).toSet
@@ -441,12 +441,12 @@ class CurationSpec extends SparkSpec {
     got("runs fast") shouldBe ((1L, 1L))
   }
 
-  test("phraseMatchesIndexed: an EMPTY persisted snapshot answers zero hits, not a crash") {
+  test("writePhrasePostings: an EMPTY persisted snapshot answers zero hits, not a crash") {
     val dir = tmpDir("graft_postings_empty")
     val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
     Curation.writePhrasePostings(
       Curation.phrasePostings(none, "doc_id", "text"), dir)
-    Curation.phraseMatchesIndexed(spark, dir, Seq("anything at all"))
+    Curation.phraseMatchesStore(spark, dir, Seq("anything at all"))
       .collect() shouldBe empty
   }
 

@@ -303,7 +303,7 @@ class PlanAuditSpec extends SparkSpec {
       val docs = Tables(s, "/root/testdata/sf0.001").documents
       val dir  = tmpDir("bm25_audit")
       Curation.writeBm25Index(Curation.bm25Index(docs, "doc_id", "text"), dir)
-      val plan = Curation.bm25Search(docs, Curation.readBm25Index(s, dir),
+      val plan = Curation.bm25Search(docs, Curation.readBm25Store(s, dir),
           "doc_id", "text", Seq("dup", "spark"), 10)
         .queryExecution.executedPlan.toString
       "documents\\.parquet".r.findAllIn(plan).size shouldBe 1

@@ -25,9 +25,7 @@ class StoresSpec extends SparkSpec {
   private def publishBatch(dir: String, batch: Long,
       docs: org.apache.spark.sql.DataFrame): Boolean =
     Stores.publishOnce(spark, s"$dir/batch=$batch")(
-      Curation.writePostingsRaw(
-        Curation.phrasePostings(docs, "doc_id", "text"), _,
-        Curation.PhrasePostingBuckets))
+      Curation.writePostingsRaw(Curation.phrasePostings(docs, "doc_id", "text"), _))
 
   private def b0 = Seq(
     (1L, "alpha beta gamma end"),
@@ -48,11 +46,11 @@ class StoresSpec extends SparkSpec {
     Stores.publishOnce(spark, s"$dir/batch=1") { tmp =>
       Curation.writePostingsRaw(
         Curation.phrasePostings(b1.filter($"doc_id" === 3L), "doc_id", "text"),
-        tmp, Curation.PhrasePostingBuckets)
+        tmp)
       midWrite = probe(dir) // the racing reader
       Curation.writePostingsRaw(
         Curation.phrasePostings(b1, "doc_id", "text"),
-        tmp, Curation.PhrasePostingBuckets)
+        tmp)
     } shouldBe true
     midWrite shouldBe before // old state exactly — the half batch is invisible
     val after = probe(dir)
@@ -83,7 +81,7 @@ class StoresSpec extends SparkSpec {
       Stores.publishOnce(spark, s"$dir/batch=1") { tmp =>
         Curation.writePostingsRaw(
           Curation.phrasePostings(b1.filter($"doc_id" === 3L), "doc_id", "text"),
-          tmp, Curation.PhrasePostingBuckets)
+          tmp)
         throw new RuntimeException("simulated writer crash")
       }
     }
@@ -249,20 +247,71 @@ class StoresSpec extends SparkSpec {
     val dir = s"$root/postings"
     Curation.writePhrasePostings(
       Curation.phrasePostings(b0, "doc_id", "text"), dir)
-    def probeIndexed() = Curation.phraseMatchesIndexed(spark, dir, phrases)
-      .collect().map(_.toSeq).toSet
-    val v1 = probeIndexed()
+    val v1 = probe(dir)
     v1 should not be empty
     var midRebuild: Set[Seq[Any]] = null
     Stores.publishReplace(spark, dir) { tmp =>
       Curation.writePostingsRaw(
-        Curation.phrasePostings(b1, "doc_id", "text"), tmp,
-        Curation.PhrasePostingBuckets)
-      midRebuild = probeIndexed() // reader racing the rebuild
+        Curation.phrasePostings(b1, "doc_id", "text"), Stores.batchDir(tmp, -1))
+      midRebuild = probe(dir) // reader racing the rebuild
     }
     midRebuild shouldBe v1 // old snapshot served throughout the write
-    probeIndexed() shouldBe Curation.phraseMatches(
+    probe(dir) shouldBe Curation.phraseMatches(
       b1, "doc_id", "text", phrases).collect().map(_.toSeq).toSet
+
+    // BM25: df and tot of one build are one layer under one swap, so a
+    // search racing the rebuild scores with the old index until the
+    // swap — never the new df with the old tot
+    val bm25 = s"$root/bm25"
+    val corpus = b0.unionByName(b1)
+    val terms = Seq("alpha", "beta", "gamma")
+    def search() = Curation.bm25Search(corpus, Curation.readBm25Store(spark, bm25),
+        "doc_id", "text", terms, 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def scores(ix: Curation.Bm25Index) =
+      Curation.bm25Search(corpus, ix, "doc_id", "text", terms, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val first = Curation.bm25Index(b0, "doc_id", "text")
+    val rebuilt = Curation.bm25Index(corpus, "doc_id", "text")
+    Curation.writeBm25Index(first, bm25)
+    val old = search()
+    old shouldBe scores(first)
+    // a torn read would be visible: new df with old tot scores otherwise
+    scores(Curation.Bm25Index(rebuilt.df, first.tot)) should not be old
+    val mid = scala.collection.mutable.Buffer.empty[Seq[(Long, Long)]]
+    Stores.publishReplace(spark, bm25) { tmp =>
+      val layer = Stores.batchDir(tmp, -1)
+      rebuilt.df.write.parquet(s"$layer/df")
+      mid += search() // the new df is on disk, its tot is not
+      rebuilt.tot.write.parquet(s"$layer/tot")
+      mid += search() // the new layer is whole but not yet swapped in
+    }
+    mid shouldBe Seq(old, old)
+    val fresh = search()
+    fresh shouldBe scores(rebuilt)
+    fresh should not be old
+    // writeBm25Index commits the same way: a second rebuild
+    // replaces the layer, it does not add a second one
+    Curation.writeBm25Index(rebuilt, bm25)
+    Stores.batchIds(spark, bm25) shouldBe Seq(-1L)
+    search() shouldBe fresh
+  }
+
+  test("keepLatestBatches rejects keepLast < 1 and deletes nothing") {
+    val dir = tmpDir("graft_keep") + "/reports"
+    (0 until 3).foreach { b =>
+      Stores.publishBatch(spark, dir, b.toLong)(
+        Seq((b.toLong, 1L)).toDF("s", "n").write.parquet(_)) shouldBe true
+    }
+    Seq(0, -1).foreach { k =>
+      withClue(s"keepLast = $k: ") {
+        an[IllegalArgumentException] should be thrownBy
+          Stores.keepLatestBatches(spark, dir, k)
+        Stores.batchIds(spark, dir) shouldBe Seq(0L, 1L, 2L)
+      }
+    }
+    Stores.keepLatestBatches(spark, dir, 1) shouldBe ((1L, 2L))
+    Stores.batchIds(spark, dir) shouldBe Seq(2L)
   }
 
   test("compaction clears a crashed fold's temp first: no planted layer is counted twice") {

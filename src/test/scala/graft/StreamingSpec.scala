@@ -968,6 +968,29 @@ class StreamingSpec extends SparkSpec {
     preds() shouldBe got
   }
 
+  test("writeNbModel: a retrain whose second table write throws leaves the previous model readable and unchanged") {
+    import graft.functions.Curation
+    val modelDir = tmpDir("nb_atomic") + "/model"
+    def fit(rows: Seq[(Long, String, String)]) =
+      Curation.nbFit(rows.toDF("doc_id", "text", "cls"), "text", "cls")
+    def tables(m: Curation.NbModel) =
+      (m.tokLp.collect().map(_.toSeq).toSet, m.clsStats.collect().map(_.toSeq).toSet)
+    val v1 = fit(Seq((1L, "alpha beta", "A"), (2L, "x y", "B")))
+    Curation.writeNbModel(v1, modelDir)
+    val before = tables(Curation.readNbModel(spark, modelDir))
+    before shouldBe tables(v1)
+    // the retrain's tok_lp write succeeds, its cls_stats write fails
+    val v2 = fit(Seq((3L, "gamma gamma delta", "A"), (4L, "z z w", "C")))
+    val crashing = Curation.NbModel(v2.tokLp,
+      v2.clsStats.withColumn("lp0", raise_error(lit("simulated crash")).cast("long")))
+    val ex = intercept[Exception](Curation.writeNbModel(crashing, modelDir))
+    ex.getMessage should include("simulated crash")
+    tables(Curation.readNbModel(spark, modelDir)) shouldBe before
+    // the next retrain publishes cleanly over the crashed attempt
+    Curation.writeNbModel(v2, modelDir)
+    tables(Curation.readNbModel(spark, modelDir)) shouldBe tables(v2)
+  }
+
   test("ivfPqIngest: streamed batches extend the persisted index; accumulation == monolithic build") {
     import graft.functions.Similarity
     def mkVec(i: Long): Array[Double] = {
