@@ -709,6 +709,53 @@ object Queries {
   private val MinhashHashes = 16
   private val MinhashBands  = 4
 
+  /** The connected components of the pair CTE `p` = (a, b), for a
+    * `WITH RECURSIVE` head: `e` symmetrizes `p`, the recursive
+    * min-label walk `reach` closes it, `cc` = (node, cluster_id).
+    */
+  private val sqlPairComponentCtes: String =
+    """e AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
+      |reach AS (
+      |  SELECT a AS node, a AS lab FROM e
+      |  UNION
+      |  SELECT e.b AS node, r.lab FROM reach r JOIN e ON e.a = r.node
+      |),
+      |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node)""".stripMargin
+
+  /** `toks` (the docs below `maxId`), the [[sqlMinhashSigs]] CTEs and
+    * `bands` = the LSH band rows of every signature.
+    */
+  private def sqlMinhashBandCtes(maxId: Long): String =
+    s"""toks AS (${sqlDocToks(maxId)}),
+       |${sqlMinhashSigs(MinhashHashes)},
+       |bands AS (
+       |${sqlMinhashBands(MinhashHashes, MinhashBands)}
+       |)""".stripMargin
+
+  /** The LSH-cluster CTEs of the docs below 500 (a `WITH RECURSIVE`
+    * head): band-collision pairs `p`, closed by a recursive min-label
+    * walk into `cc` = (node, cluster_id).
+    */
+  private val sqlMinhashComponentCtes: String =
+    s"""${sqlMinhashBandCtes(500)},
+       |p AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |$sqlPairComponentCtes""".stripMargin
+
+  /** The exact-Jaccard ground truth over `toks`: `name` = every doc
+    * pair with token-set Jaccard ≥ 0.8.
+    */
+  private def sqlJaccardTruthCtes(name: String): String =
+    s"""sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nt FROM toks GROUP BY 1),
+       |c AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |    CAST(count(*) AS BIGINT) AS common
+       |  FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2),
+       |$name AS (SELECT doc_a, doc_b FROM c
+       |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
+       |  WHERE common / (sa.nt + sb.nt - common) >= 0.8)""".stripMargin
+
   private val qDedupMinhash = Q(
     "q_dedup_minhash",
     "MinHash + LSH banding near-dup candidates",
@@ -717,11 +764,7 @@ object Queries {
         t(s, d).documents.filter(col("doc_id") < 2000),
         "doc_id", "text", MinhashHashes, MinhashBands, maxBucket = 0),
     Some {
-      s"""WITH toks AS (${sqlDocToks(2000)}),
-         |${sqlMinhashSigs(MinhashHashes)},
-         |bands AS (
-         |${sqlMinhashBands(MinhashHashes, MinhashBands)}
-         |)
+      s"""WITH ${sqlMinhashBandCtes(2000)}
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id""".stripMargin
     })
@@ -744,11 +787,7 @@ object Queries {
     Some {
       val nMatch = (0 until MinhashHashes)
         .map(i => s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""WITH toks AS (${sqlDocToks(500)}),
-         |${sqlMinhashSigs(MinhashHashes)},
-         |bands AS (
-         |${sqlMinhashBands(MinhashHashes, MinhashBands)}
-         |),
+      s"""WITH ${sqlMinhashBandCtes(500)},
          |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
          |est AS (SELECT doc_a, doc_b, ($nMatch) / ${MinhashHashes}.0 AS est_jaccard
@@ -814,6 +853,31 @@ object Queries {
   private val MmrN        = 16
   private val MmrK        = 5
   private val MmrLambdaBp = 7000
+
+  /** The MMR candidate CTEs `q` … `ps` of both MMR oracles: `cand` =
+    * each of the [[MmrQueries]] queries' cosine top-`n` with its integer
+    * relevance, `ps` = every within-query candidate pair's integer
+    * similarity.
+    */
+  private def sqlMmrCandCtes(n: Int): String =
+    s"""q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+       |  FROM embeddings WHERE vec_id < $MmrQueries),
+       |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
+       |  FROM embeddings),
+       |s AS (SELECT query_id, neighbor_id, cv,
+       |  round(list_dot_product(qv, cv)
+       |    / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)), 4) AS cos_sim
+       |FROM q, c),
+       |cand AS (SELECT query_id, neighbor_id, cv,
+       |    CAST(round(cos_sim * 10000) AS BIGINT) AS rel_sc FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM s) WHERE rnk <= $n),
+       |ps AS (SELECT x.query_id, x.neighbor_id AS a, y.neighbor_id AS b,
+       |    CAST(round(round(list_dot_product(x.cv, y.cv)
+       |      / sqrt(list_dot_product(x.cv, x.cv) * list_dot_product(y.cv, y.cv)), 4)
+       |      * 10000) AS BIGINT) AS sim_sc
+       |  FROM cand x JOIN cand y
+       |    ON x.query_id = y.query_id AND x.neighbor_id <> y.neighbor_id)""".stripMargin
 
   /** The MMR greedy unrolled as DuckDB CTEs — one (ms, pick, sel) triple
     * per rank 2‥k over the candidate/pair-sim CTEs, the mirror of
@@ -885,24 +949,7 @@ object Queries {
         "vec_id", "embedding", n = MmrBatchN, k = MmrBatchK,
         lambdaBp = MmrLambdaBp, pickBatch = MmrBatchB)
     },
-    Some(s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-            |  FROM embeddings WHERE vec_id < $MmrQueries),
-            |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-            |  FROM embeddings),
-            |s AS (SELECT query_id, neighbor_id, cv,
-            |  round(list_dot_product(qv, cv)
-            |    / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)), 4) AS cos_sim
-            |FROM q, c),
-            |cand AS (SELECT query_id, neighbor_id, cv,
-            |    CAST(round(cos_sim * 10000) AS BIGINT) AS rel_sc FROM (
-            |  SELECT *, row_number() OVER (PARTITION BY query_id
-            |    ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM s) WHERE rnk <= $MmrBatchN),
-            |ps AS (SELECT x.query_id, x.neighbor_id AS a, y.neighbor_id AS b,
-            |    CAST(round(round(list_dot_product(x.cv, y.cv)
-            |      / sqrt(list_dot_product(x.cv, x.cv) * list_dot_product(y.cv, y.cv)), 4)
-            |      * 10000) AS BIGINT) AS sim_sc
-            |  FROM cand x JOIN cand y
-            |    ON x.query_id = y.query_id AND x.neighbor_id <> y.neighbor_id),
+    Some(s"""WITH ${sqlMmrCandCtes(MmrBatchN)},
             |sel1 AS (SELECT query_id, CAST(rn AS BIGINT) AS mmr_rank, neighbor_id,
             |    rel_sc, CAST(0 AS BIGINT) AS maxsim_sc,
             |    $MmrLambdaBp * rel_sc AS score_sc FROM (
@@ -922,24 +969,7 @@ object Queries {
       Similarity.mmrRerank(e.filter(col("vec_id") < MmrQueries), e,
         "vec_id", "embedding", n = MmrN, k = MmrK, lambdaBp = MmrLambdaBp)
     },
-    Some(s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-            |  FROM embeddings WHERE vec_id < $MmrQueries),
-            |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-            |  FROM embeddings),
-            |s AS (SELECT query_id, neighbor_id, cv,
-            |  round(list_dot_product(qv, cv)
-            |    / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)), 4) AS cos_sim
-            |FROM q, c),
-            |cand AS (SELECT query_id, neighbor_id, cv,
-            |    CAST(round(cos_sim * 10000) AS BIGINT) AS rel_sc FROM (
-            |  SELECT *, row_number() OVER (PARTITION BY query_id
-            |    ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM s) WHERE rnk <= $MmrN),
-            |ps AS (SELECT x.query_id, x.neighbor_id AS a, y.neighbor_id AS b,
-            |    CAST(round(round(list_dot_product(x.cv, y.cv)
-            |      / sqrt(list_dot_product(x.cv, x.cv) * list_dot_product(y.cv, y.cv)), 4)
-            |      * 10000) AS BIGINT) AS sim_sc
-            |  FROM cand x JOIN cand y
-            |    ON x.query_id = y.query_id AND x.neighbor_id <> y.neighbor_id),
+    Some(s"""WITH ${sqlMmrCandCtes(MmrN)},
             |sel1 AS (SELECT query_id, CAST(1 AS BIGINT) AS mmr_rank, neighbor_id,
             |    rel_sc, CAST(0 AS BIGINT) AS maxsim_sc,
             |    $MmrLambdaBp * rel_sc AS score_sc FROM (
@@ -1229,40 +1259,45 @@ object Queries {
             |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
             |FROM c GROUP BY 1, 2""".stripMargin))
 
+  /** The padding-waste report oracle over the shard key that `shard`
+    * (the head of `dd`'s select list: ` … AS shard, doc_id,`) defines:
+    * per shard, batches of 32 in arrival order (`b1`) and in length
+    * order (`b2`), one report row per arm.
+    */
+  private def sqlLengthBatch(shard: String): String = {
+    val batches = (1 to 2).map(i =>
+      s"""b$i AS (SELECT shard, (rn - 1) // 32 AS batch, CAST(count(*) AS BIGINT) AS bn,
+         |    CAST(max(nt) AS BIGINT) AS mx, CAST(sum(nt) AS BIGINT) AS st
+         |  FROM a$i GROUP BY 1, 2)""".stripMargin).mkString(",\n")
+    val arms = Seq("arrival", "length").zip(1 to 2).map { case (arm, i) =>
+      s"""  SELECT shard, '$arm' AS arm, CAST(count(*) AS BIGINT) AS n_batches,
+         |    CAST(sum(st) AS BIGINT) AS sum_tokens,
+         |    CAST(sum(bn * mx) AS BIGINT) AS slot_tokens,
+         |    CAST(sum(bn * mx - st) AS BIGINT) AS padded_tokens
+         |  FROM b$i GROUP BY 1""".stripMargin
+    }.mkString("\n  UNION ALL\n")
+    s"""WITH dd AS (SELECT$shard
+       |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($sqlToks) END AS BIGINT) AS nt
+       |  FROM documents),
+       |a1 AS (SELECT shard, nt,
+       |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM dd),
+       |a2 AS (SELECT shard, nt,
+       |    row_number() OVER (PARTITION BY shard ORDER BY nt DESC, doc_id) AS rn FROM dd),
+       |$batches,
+       |u AS (
+       |$arms)
+       |SELECT shard, arm, n_batches, sum_tokens, slot_tokens, padded_tokens,
+       |  CASE WHEN slot_tokens > 0 THEN (padded_tokens * 10000) // slot_tokens
+       |    ELSE 0 END AS waste_bp
+       |FROM u""".stripMargin
+  }
+
   private val qLengthBatch = Q(
     "q_length_batch",
     "length-grouped batching padding-waste report, lang-keyed A/B arm (5 labels = per-language single-task sort, 2.1x slower at sf100; production uses q_length_batch_sharded)",
     (s, d) => graft.operators.Sharding.lengthBatchReport(
       t(s, d).documents, "doc_id", "text", "lang", batchSize = 32),
-    Some(s"""WITH dd AS (SELECT lang AS shard, doc_id,
-            |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($sqlToks) END AS BIGINT) AS nt
-            |  FROM documents),
-            |a1 AS (SELECT shard, nt,
-            |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM dd),
-            |a2 AS (SELECT shard, nt,
-            |    row_number() OVER (PARTITION BY shard ORDER BY nt DESC, doc_id) AS rn FROM dd),
-            |b1 AS (SELECT shard, (rn - 1) // 32 AS batch, CAST(count(*) AS BIGINT) AS bn,
-            |    CAST(max(nt) AS BIGINT) AS mx, CAST(sum(nt) AS BIGINT) AS st
-            |  FROM a1 GROUP BY 1, 2),
-            |b2 AS (SELECT shard, (rn - 1) // 32 AS batch, CAST(count(*) AS BIGINT) AS bn,
-            |    CAST(max(nt) AS BIGINT) AS mx, CAST(sum(nt) AS BIGINT) AS st
-            |  FROM a2 GROUP BY 1, 2),
-            |u AS (
-            |  SELECT shard, 'arrival' AS arm, CAST(count(*) AS BIGINT) AS n_batches,
-            |    CAST(sum(st) AS BIGINT) AS sum_tokens,
-            |    CAST(sum(bn * mx) AS BIGINT) AS slot_tokens,
-            |    CAST(sum(bn * mx - st) AS BIGINT) AS padded_tokens
-            |  FROM b1 GROUP BY 1
-            |  UNION ALL
-            |  SELECT shard, 'length' AS arm, CAST(count(*) AS BIGINT) AS n_batches,
-            |    CAST(sum(st) AS BIGINT) AS sum_tokens,
-            |    CAST(sum(bn * mx) AS BIGINT) AS slot_tokens,
-            |    CAST(sum(bn * mx - st) AS BIGINT) AS padded_tokens
-            |  FROM b2 GROUP BY 1)
-            |SELECT shard, arm, n_batches, sum_tokens, slot_tokens, padded_tokens,
-            |  CASE WHEN slot_tokens > 0 THEN (padded_tokens * 10000) // slot_tokens
-            |    ELSE 0 END AS waste_bp
-            |FROM u""".stripMargin))
+    Some(sqlLengthBatch(" lang AS shard, doc_id,")))
 
   /** Shard count for [[qLengthBatchSharded]] — the production
     * parameterization of the padding-waste report: window parallelism
@@ -1281,38 +1316,10 @@ object Queries {
       t(s, d).documents.withColumn("loader_shard",
         graft.operators.Sharding.shardKey(col("doc_id"), LengthShardCount)),
       "doc_id", "text", "loader_shard", batchSize = 32),
-    Some(s"""WITH dd AS (SELECT
-            |    CAST('0x' || substr(md5('ep0:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-            |      % $LengthShardCount AS shard,
-            |    doc_id,
-            |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($sqlToks) END AS BIGINT) AS nt
-            |  FROM documents),
-            |a1 AS (SELECT shard, nt,
-            |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM dd),
-            |a2 AS (SELECT shard, nt,
-            |    row_number() OVER (PARTITION BY shard ORDER BY nt DESC, doc_id) AS rn FROM dd),
-            |b1 AS (SELECT shard, (rn - 1) // 32 AS batch, CAST(count(*) AS BIGINT) AS bn,
-            |    CAST(max(nt) AS BIGINT) AS mx, CAST(sum(nt) AS BIGINT) AS st
-            |  FROM a1 GROUP BY 1, 2),
-            |b2 AS (SELECT shard, (rn - 1) // 32 AS batch, CAST(count(*) AS BIGINT) AS bn,
-            |    CAST(max(nt) AS BIGINT) AS mx, CAST(sum(nt) AS BIGINT) AS st
-            |  FROM a2 GROUP BY 1, 2),
-            |u AS (
-            |  SELECT shard, 'arrival' AS arm, CAST(count(*) AS BIGINT) AS n_batches,
-            |    CAST(sum(st) AS BIGINT) AS sum_tokens,
-            |    CAST(sum(bn * mx) AS BIGINT) AS slot_tokens,
-            |    CAST(sum(bn * mx - st) AS BIGINT) AS padded_tokens
-            |  FROM b1 GROUP BY 1
-            |  UNION ALL
-            |  SELECT shard, 'length' AS arm, CAST(count(*) AS BIGINT) AS n_batches,
-            |    CAST(sum(st) AS BIGINT) AS sum_tokens,
-            |    CAST(sum(bn * mx) AS BIGINT) AS slot_tokens,
-            |    CAST(sum(bn * mx - st) AS BIGINT) AS padded_tokens
-            |  FROM b2 GROUP BY 1)
-            |SELECT shard, arm, n_batches, sum_tokens, slot_tokens, padded_tokens,
-            |  CASE WHEN slot_tokens > 0 THEN (padded_tokens * 10000) // slot_tokens
-            |    ELSE 0 END AS waste_bp
-            |FROM u""".stripMargin))
+    Some(sqlLengthBatch(s"""
+      |    CAST('0x' || substr(md5('ep0:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+      |      % $LengthShardCount AS shard,
+      |    doc_id,""".stripMargin)))
 
   // Data-loader shard assignment — operators/Sharding.shardManifest
   // (see its scaladoc for the determinism and parallelism-=-shards
@@ -1708,9 +1715,13 @@ object Queries {
             |  event_type, CAST(count(*) AS BIGINT) AS n
             |FROM s GROUP BY event_type, sid""".stripMargin))
 
-  private val qAsofJoin = Q(
-    "q_asof_join",
-    "as-of join: latest click at-or-before each purchase, per user",
+  /** An as-of join query: each purchase of a user below 50 with that
+    * user's latest click at or before it, joined by `join` (left,
+    * right). The oracle is the same for every implementation.
+    */
+  private def asofQ(
+      name: String, operators: String, join: (DataFrame, DataFrame) => DataFrame): Q = Q(
+    name, operators,
     (s, d) => {
       val e = t(s, d).events
       val l = e.filter(col("event_type") === "purchase" && col("user_id") < 50)
@@ -1719,8 +1730,7 @@ object Queries {
       val r = e.filter(col("event_type") === "click")
         .groupBy(col("user_id"), col("ts"))
         .agg(max(cents(col("value"))).as("click_cents"))
-      graft.operators.AsofJoin
-        .asofJoin(l, r, "user_id", "ts", "ts", Seq("click_cents"))
+      join(l, r)
         .select(
           col("user_id"), col("event_id"),
           date_format(col("ts"), Fmt).as("p_ts"),
@@ -1735,32 +1745,15 @@ object Queries {
             |  r.click_cents, strftime(r.ts, '$DuckFmt') AS click_ts
             |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin))
 
-  private val qAsofJoinExec = Q(
+  private val qAsofJoin = asofQ(
+    "q_asof_join",
+    "as-of join: latest click at-or-before each purchase, per user",
+    graft.operators.AsofJoin.asofJoin(_, _, "user_id", "ts", "ts", Seq("click_cents")))
+
+  private val qAsofJoinExec = asofQ(
     "q_asof_join_exec",
     "as-of join via the custom physical operator (AsofJoinPlan/Strategy/Exec)",
-    (s, d) => {
-      val e = t(s, d).events
-      val l = e.filter(col("event_type") === "purchase" && col("user_id") < 50)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          cents(col("value")).as("p_cents"))
-      val r = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(cents(col("value"))).as("click_cents"))
-      graft.operators.AsofJoin
-        .asofJoinMerge(l, r, "user_id", "ts", "ts", Seq("click_cents"))
-        .select(
-          col("user_id"), col("event_id"),
-          date_format(col("ts"), Fmt).as("p_ts"),
-          col("click_cents"),
-          date_format(col("asof_ts"), Fmt).as("click_ts"))
-    },
-    Some(s"""WITH l AS (SELECT user_id, event_id, ts, ${sqlCents("value")} AS p_cents
-            |  FROM events WHERE event_type = 'purchase' AND user_id < 50),
-            |r AS (SELECT user_id, ts, max(${sqlCents("value")}) AS click_cents
-            |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-            |SELECT l.user_id, l.event_id, strftime(l.ts, '$DuckFmt') AS p_ts,
-            |  r.click_cents, strftime(r.ts, '$DuckFmt') AS click_ts
-            |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin))
+    graft.operators.AsofJoin.asofJoinMerge(_, _, "user_id", "ts", "ts", Seq("click_cents")))
 
   private val PivotTypes = Seq("click", "error", "purchase", "signup", "view")
 
@@ -2430,13 +2423,7 @@ object Queries {
        |p AS (SELECT a.doc_id AS a, b.doc_id AS b
        |  FROM wdw a JOIN wdw b ON a.wh = b.wh AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2),
-       |e AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-       |reach AS (
-       |  SELECT a AS node, a AS lab FROM e
-       |  UNION
-       |  SELECT e.b AS node, r.lab FROM reach r JOIN e ON e.a = r.node
-       |),
-       |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+       |$sqlPairComponentCtes,
        |asg AS (SELECT d.doc_id, d.n_chars,
        |    coalesce(cc.cluster_id, d.doc_id) AS cluster_id
        |  FROM documents d LEFT JOIN cc ON cc.node = d.doc_id),
@@ -3120,21 +3107,7 @@ object Queries {
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     },
     Some {
-      s"""WITH RECURSIVE toks AS (${sqlDocToks(500)}),
-         |${sqlMinhashSigs(MinhashHashes)},
-         |bands AS (
-         |${sqlMinhashBands(MinhashHashes, MinhashBands)}
-         |),
-         |p AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         |e AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-         |reach AS (
-         |  SELECT a AS node, a AS lab FROM e
-         |  UNION
-         |  SELECT e.b AS node, r.lab FROM reach r JOIN e ON e.a = r.node
-         |),
-         |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+      s"""WITH RECURSIVE $sqlMinhashComponentCtes,
          |asg AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
          |  FROM documents d LEFT JOIN cc ON cc.node = d.doc_id
          |  WHERE d.doc_id < 500),
@@ -3526,6 +3499,32 @@ object Queries {
            |FROM q, th GROUP BY 1""".stripMargin
     })
 
+  /** The SemDeDup keep rule over the trained assignment `af`: `p` =
+    * the in-cell smaller-id pairs (narrowed by `pairScope`), `agg` =
+    * each vector's cosine ≥ `tau` priors, then the per-vector decision
+    * over `af` joined by `from`.
+    */
+  private def sqlSemanticKeep(tau: Double, pairScope: String, from: String): String =
+    s"""p AS (SELECT a.cid AS da, b.cid AS db,
+       |    round(list_dot_product(a.v, b.v) / sqrt(a.vn2 * b.vn2), 4) AS cos
+       |  FROM af a JOIN af b ON a.cell = b.cell AND a.cid < b.cid$pairScope),
+       |agg AS (SELECT db, CAST(count(*) AS BIGINT) AS n_prior_near,
+       |    min(da) AS dup_of
+       |  FROM p WHERE cos >= $tau GROUP BY 1)
+       |SELECT af.cid AS vec_id, af.cell,
+       |  COALESCE(n_prior_near, 0) AS n_prior_near,
+       |  COALESCE(dup_of, -1) AS dup_of,
+       |  (dup_of IS NULL) AS kept
+       |FROM af $from""".stripMargin
+
+  /** The whole-corpus SemDeDup oracle at threshold `tau`, with the
+    * √N auto-sized cell count.
+    */
+  private def sqlSemanticDedup(tau: Double): String =
+    s"""WITH ${sqlIvfCellCtesWith(
+         "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM bn)")},
+       |${sqlSemanticKeep(tau, "", "LEFT JOIN agg ON agg.db = af.cid")}""".stripMargin
+
   private val qSemanticDedup = Q(
     "q_semantic_dedup",
     "SemDeDup: k-means cells bound the pair space, smaller-id near-neighbor marks dups",
@@ -3544,19 +3543,7 @@ object Queries {
       Similarity.semanticDedup(
         t(s, d).embeddings, "vec_id", "embedding", threshold = 0.4,
         numCells = 0),
-    Some(s"""WITH ${sqlIvfCellCtesWith(
-             "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM bn)")},
-            |p AS (SELECT a.cid AS da, b.cid AS db,
-            |    round(list_dot_product(a.v, b.v) / sqrt(a.vn2 * b.vn2), 4) AS cos
-            |  FROM af a JOIN af b ON a.cell = b.cell AND a.cid < b.cid),
-            |agg AS (SELECT db, CAST(count(*) AS BIGINT) AS n_prior_near,
-            |    min(da) AS dup_of
-            |  FROM p WHERE cos >= 0.4 GROUP BY 1)
-            |SELECT af.cid AS vec_id, af.cell,
-            |  COALESCE(n_prior_near, 0) AS n_prior_near,
-            |  COALESCE(dup_of, -1) AS dup_of,
-            |  (dup_of IS NULL) AS kept
-            |FROM af LEFT JOIN agg ON agg.db = af.cid""".stripMargin))
+    Some(sqlSemanticDedup(0.4)))
 
   /** High-τ parameterization for [[qSemanticPrefilter]]: at 0.92 the
     * SRP prefilter's auto Hamming cut (65/256 bits) sits 6σ above the
@@ -3582,19 +3569,7 @@ object Queries {
       Similarity.semanticDedupPrefiltered(
         t(s, d).embeddings, "vec_id", "embedding",
         threshold = SemanticHiThreshold, numCells = 0),
-    Some(s"""WITH ${sqlIvfCellCtesWith(
-             "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM bn)")},
-            |p AS (SELECT a.cid AS da, b.cid AS db,
-            |    round(list_dot_product(a.v, b.v) / sqrt(a.vn2 * b.vn2), 4) AS cos
-            |  FROM af a JOIN af b ON a.cell = b.cell AND a.cid < b.cid),
-            |agg AS (SELECT db, CAST(count(*) AS BIGINT) AS n_prior_near,
-            |    min(da) AS dup_of
-            |  FROM p WHERE cos >= $SemanticHiThreshold GROUP BY 1)
-            |SELECT af.cid AS vec_id, af.cell,
-            |  COALESCE(n_prior_near, 0) AS n_prior_near,
-            |  COALESCE(dup_of, -1) AS dup_of,
-            |  (dup_of IS NULL) AS kept
-            |FROM af LEFT JOIN agg ON agg.db = af.cid""".stripMargin))
+    Some(sqlSemanticDedup(SemanticHiThreshold)))
 
   private val qSemanticIncr = Q(
     "q_semantic_incr",
@@ -3629,19 +3604,8 @@ object Queries {
              "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM bt)",
              "cid < (SELECT 3 * count(*) // 5 FROM bn)")},
             |bb AS (SELECT 4 * count(*) // 5 AS b2 FROM bn),
-            |p AS (SELECT a.cid AS da, b.cid AS db,
-            |    round(list_dot_product(a.v, b.v) / sqrt(a.vn2 * b.vn2), 4) AS cos
-            |  FROM af a JOIN af b ON a.cell = b.cell AND a.cid < b.cid
-            |  CROSS JOIN bb WHERE b.cid >= bb.b2),
-            |agg AS (SELECT db, CAST(count(*) AS BIGINT) AS n_prior_near,
-            |    min(da) AS dup_of
-            |  FROM p WHERE cos >= 0.4 GROUP BY 1)
-            |SELECT af.cid AS vec_id, af.cell,
-            |  COALESCE(n_prior_near, 0) AS n_prior_near,
-            |  COALESCE(dup_of, -1) AS dup_of,
-            |  (dup_of IS NULL) AS kept
-            |FROM af CROSS JOIN bb LEFT JOIN agg ON agg.db = af.cid
-            |WHERE af.cid >= bb.b2""".stripMargin))
+            |${sqlSemanticKeep(0.4, "\n  CROSS JOIN bb WHERE b.cid >= bb.b2",
+                "CROSS JOIN bb LEFT JOIN agg ON agg.db = af.cid\nWHERE af.cid >= bb.b2")}""".stripMargin))
 
   private val qClusterBalance = Q(
     "q_cluster_balance",
@@ -4074,6 +4038,22 @@ object Queries {
     */
   private val SuffixSpanMaxDoc = 5000L
 
+  /** `p` = every suffix (doc_id, pos, suf) of the non-empty docs below
+    * `maxDoc` — the brute-force side of the suffix oracles.
+    */
+  private def sqlSuffixes(maxDoc: Long): String =
+    raw"""p AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos,
+         |    substr(text, g.i) AS suf
+         |  FROM documents CROSS JOIN LATERAL
+         |    (SELECT unnest(generate_series(1, length(text))) AS i) g
+         |  WHERE doc_id < $maxDoc AND length(text) >= 1)""".stripMargin
+
+  /** [[sqlSuffixes]] plus `rk` = each suffix with its dense rank. */
+  private def sqlSuffixRanks(maxDoc: Long): String =
+    raw"""${sqlSuffixes(maxDoc)},
+         |rk AS (SELECT doc_id, pos, suf,
+         |    CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) - 1 AS srank FROM p)""".stripMargin
+
   private val qSuffixArray = Q(
     "q_suffix_array",
     "distributed suffix array (prefix doubling): dense suffix ranks, oracle = brute suffix sort",
@@ -4089,11 +4069,7 @@ object Queries {
         t(s, d).documents.filter(col("doc_id") < SuffixMaxDoc),
         "doc_id", "text"),
     Some(
-      raw"""WITH p AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos,
-           |    substr(text, g.i) AS suf
-           |  FROM documents CROSS JOIN LATERAL
-           |    (SELECT unnest(generate_series(1, length(text))) AS i) g
-           |  WHERE doc_id < $SuffixMaxDoc AND length(text) >= 1)
+      raw"""WITH ${sqlSuffixes(SuffixMaxDoc)}
            |SELECT doc_id, pos,
            |  CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) - 1 AS srank
            |FROM p""".stripMargin))
@@ -4117,13 +4093,7 @@ object Queries {
         .select(col("srank"), col("doc_a"), col("pos_a"), col("doc_b"),
           col("pos_b"), col("lcp").as("lcp_c")),
     Some(
-      raw"""WITH p AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos,
-           |    substr(text, g.i) AS suf
-           |  FROM documents CROSS JOIN LATERAL
-           |    (SELECT unnest(generate_series(1, length(text))) AS i) g
-           |  WHERE doc_id < $SuffixMaxDoc AND length(text) >= 1),
-           |rk AS (SELECT doc_id, pos, suf,
-           |    CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) - 1 AS srank FROM p),
+      raw"""WITH ${sqlSuffixRanks(SuffixMaxDoc)},
            |rep AS (SELECT srank, doc_id, pos, suf FROM (
            |    SELECT *, row_number() OVER (
            |      PARTITION BY srank ORDER BY doc_id, pos) AS rn FROM rk)
@@ -4159,13 +4129,7 @@ object Queries {
     * (accounting tail) and `q_dup_scrub` (text-rebuild tail).
     */
   private def dupSpanCtes(maxDoc: Long, cap: Long) =
-    raw"""WITH p AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos,
-         |    substr(text, g.i) AS suf
-         |  FROM documents CROSS JOIN LATERAL
-         |    (SELECT unnest(generate_series(1, length(text))) AS i) g
-         |  WHERE doc_id < $maxDoc AND length(text) >= 1),
-         |rk AS (SELECT doc_id, pos, suf,
-         |    CAST(dense_rank() OVER (ORDER BY suf) AS BIGINT) - 1 AS srank FROM p),
+    raw"""WITH ${sqlSuffixRanks(maxDoc)},
          |rep AS (SELECT srank, suf FROM (
          |    SELECT srank, suf, row_number() OVER (
          |      PARTITION BY srank ORDER BY doc_id, pos) AS rn FROM rk)
@@ -4766,36 +4730,44 @@ object Queries {
            |FROM j, t2""".stripMargin))
 
 
+  /** The per-source-pair Jensen–Shannon divergence oracle over the
+    * source pairs `pairs` selects (`… AS sa, … AS sb FROM tot …`):
+    * add-one smoothing over each pair's joint vocabulary, summed in
+    * integer micro-bits.
+    */
+  private def sqlSourceJsd(pairs: String): String =
+    raw"""WITH tk AS (SELECT source AS src,
+         |    unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  FROM documents WHERE length(trim(text)) > 0),
+         |cnt AS (SELECT src, tok, CAST(count(*) AS BIGINT) AS c
+         |  FROM tk GROUP BY 1, 2),
+         |tot AS (SELECT src, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY 1),
+         |pr AS (SELECT $pairs),
+         |ty AS (SELECT pr.sa, pr.sb, c.tok,
+         |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sa THEN c.c END), 0) AS BIGINT) AS ca,
+         |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sb THEN c.c END), 0) AS BIGINT) AS cb
+         |  FROM pr JOIN cnt c ON c.src IN (pr.sa, pr.sb) GROUP BY 1, 2, 3),
+         |v AS (SELECT sa, sb, CAST(count(*) AS BIGINT) AS v_types
+         |  FROM ty GROUP BY 1, 2),
+         |w AS (SELECT ty.sa, ty.sb, v.v_types, ta.n AS na, tb.n AS nb,
+         |    (CAST(ca + 1 AS DOUBLE) / CAST(ta.n + v.v_types AS DOUBLE)) AS p,
+         |    (CAST(cb + 1 AS DOUBLE) / CAST(tb.n + v.v_types AS DOUBLE)) AS q
+         |  FROM ty JOIN v USING (sa, sb)
+         |    JOIN tot ta ON ta.src = ty.sa JOIN tot tb ON tb.src = ty.sb),
+         |ct AS (SELECT sa, sb, v_types, na, nb,
+         |    CAST(round((p * log2(2*p/(p+q)) + q * log2(2*q/(p+q)))
+         |      * 500000) AS BIGINT) AS mb
+         |  FROM w)
+         |SELECT sa, sb, v_types, na, nb, CAST(sum(mb) AS BIGINT) AS jsd_mub
+         |FROM ct GROUP BY 1, 2, 3, 4, 5""".stripMargin
+
   private val qSourceJsd = Q(
     "q_source_jsd",
     "pairwise Jensen–Shannon divergence between source unigram distributions (micro-bits, add-one smoothing)",
     (s, d) => graft.functions.Quality.jsDivergenceBySource(
       t(s, d).documents, "source", "text"),
-    Some(raw"""WITH tk AS (SELECT source AS src,
-            |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-            |  FROM documents WHERE length(trim(text)) > 0),
-            |cnt AS (SELECT src, tok, CAST(count(*) AS BIGINT) AS c
-            |  FROM tk GROUP BY 1, 2),
-            |tot AS (SELECT src, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY 1),
-            |pr AS (SELECT a.src AS sa, b.src AS sb
-            |  FROM tot a JOIN tot b ON a.src < b.src),
-            |ty AS (SELECT pr.sa, pr.sb, c.tok,
-            |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sa THEN c.c END), 0) AS BIGINT) AS ca,
-            |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sb THEN c.c END), 0) AS BIGINT) AS cb
-            |  FROM pr JOIN cnt c ON c.src IN (pr.sa, pr.sb) GROUP BY 1, 2, 3),
-            |v AS (SELECT sa, sb, CAST(count(*) AS BIGINT) AS v_types
-            |  FROM ty GROUP BY 1, 2),
-            |w AS (SELECT ty.sa, ty.sb, v.v_types, ta.n AS na, tb.n AS nb,
-            |    (CAST(ca + 1 AS DOUBLE) / CAST(ta.n + v.v_types AS DOUBLE)) AS p,
-            |    (CAST(cb + 1 AS DOUBLE) / CAST(tb.n + v.v_types AS DOUBLE)) AS q
-            |  FROM ty JOIN v USING (sa, sb)
-            |    JOIN tot ta ON ta.src = ty.sa JOIN tot tb ON tb.src = ty.sb),
-            |ct AS (SELECT sa, sb, v_types, na, nb,
-            |    CAST(round((p * log2(2*p/(p+q)) + q * log2(2*q/(p+q)))
-            |      * 500000) AS BIGINT) AS mb
-            |  FROM w)
-            |SELECT sa, sb, v_types, na, nb, CAST(sum(mb) AS BIGINT) AS jsd_mub
-            |FROM ct GROUP BY 1, 2, 3, 4, 5""".stripMargin))
+    Some(sqlSourceJsd("""a.src AS sa, b.src AS sb
+      |  FROM tot a JOIN tot b ON a.src < b.src""".stripMargin)))
 
   /** Reference source for [[qSourceJsdRef]] — the production drift
     * shape: S−1 pairs against one named reference, not the S²
@@ -4810,31 +4782,8 @@ object Queries {
     "Jensen–Shannon divergence of every source against ONE reference source (S-1 pairs — the linear drift-monitoring shape)",
     (s, d) => graft.functions.Quality.jsDivergenceAgainstRef(
       t(s, d).documents, "source", "text", JsdRefSource),
-    Some(raw"""WITH tk AS (SELECT source AS src,
-            |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-            |  FROM documents WHERE length(trim(text)) > 0),
-            |cnt AS (SELECT src, tok, CAST(count(*) AS BIGINT) AS c
-            |  FROM tk GROUP BY 1, 2),
-            |tot AS (SELECT src, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY 1),
-            |pr AS (SELECT '$JsdRefSource' AS sa, src AS sb
-            |  FROM tot WHERE src <> '$JsdRefSource'),
-            |ty AS (SELECT pr.sa, pr.sb, c.tok,
-            |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sa THEN c.c END), 0) AS BIGINT) AS ca,
-            |    CAST(COALESCE(sum(CASE WHEN c.src = pr.sb THEN c.c END), 0) AS BIGINT) AS cb
-            |  FROM pr JOIN cnt c ON c.src IN (pr.sa, pr.sb) GROUP BY 1, 2, 3),
-            |v AS (SELECT sa, sb, CAST(count(*) AS BIGINT) AS v_types
-            |  FROM ty GROUP BY 1, 2),
-            |w AS (SELECT ty.sa, ty.sb, v.v_types, ta.n AS na, tb.n AS nb,
-            |    (CAST(ca + 1 AS DOUBLE) / CAST(ta.n + v.v_types AS DOUBLE)) AS p,
-            |    (CAST(cb + 1 AS DOUBLE) / CAST(tb.n + v.v_types AS DOUBLE)) AS q
-            |  FROM ty JOIN v USING (sa, sb)
-            |    JOIN tot ta ON ta.src = ty.sa JOIN tot tb ON tb.src = ty.sb),
-            |ct AS (SELECT sa, sb, v_types, na, nb,
-            |    CAST(round((p * log2(2*p/(p+q)) + q * log2(2*q/(p+q)))
-            |      * 500000) AS BIGINT) AS mb
-            |  FROM w)
-            |SELECT sa, sb, v_types, na, nb, CAST(sum(mb) AS BIGINT) AS jsd_mub
-            |FROM ct GROUP BY 1, 2, 3, 4, 5""".stripMargin))
+    Some(sqlSourceJsd(s"""'$JsdRefSource' AS sa, src AS sb
+      |  FROM tot WHERE src <> '$JsdRefSource'""".stripMargin)))
 
   private val qBpePairs = Q(
     "q_bpe_pairs",
@@ -4959,6 +4908,42 @@ object Queries {
        |sub AS (SELECT cid, $sqlPqSubCols FROM qb),
        |${sqlPqTrainCtes("")}""".stripMargin
 
+  /** ADC distance tables `dt0…dt{PqM−1}` = (`qCols`, code, d): each
+    * query subvector's exact squared L2 to every final centroid of the
+    * `${p}c{PqIters}m*` codebooks, over the query rows `qFrom` (alias
+    * `q`).
+    */
+  private def sqlPqDts(qCols: String, qFrom: String, p: String): String =
+    (0 until PqM).map { mm =>
+      s"""dt$mm AS (SELECT $qCols, c.code, ${sqlPqDist(s"q.sv$mm", "c.cv")} AS d
+         |  FROM $qFrom, ${p}c${PqIters}m$mm c)""".stripMargin
+    }.mkString(",\n")
+
+  /** [[sqlPqDts]] of the raw-vector PQ oracles' three query vectors. */
+  private val sqlPqQueryDts: String =
+    sqlPqDts("q.cid AS qid", "(SELECT * FROM sub WHERE cid < 3) q", "")
+
+  /** Joins of the codes `${p}f1…` onto `${p}f0` by corpus id. */
+  private def sqlPqCodeJoins(p: String): String =
+    (1 until PqM).map(mm => s"JOIN ${p}f$mm ON ${p}f$mm.cid = ${p}f0.cid").mkString(" ")
+
+  /** Joins of the tables `dt1…` onto `dt0` by query and subspace code. */
+  private val sqlPqDtJoins: String = (1 until PqM)
+    .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.code = f$mm.code")
+    .mkString("\n  ")
+
+  /** The ADC score: the sum of the per-subspace table lookups. */
+  private val sqlPqAdc: String =
+    s"CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc"
+
+  /** `pr` = each query vector's 4 most-similar trained cells. */
+  private val sqlIvfProbeCte: String =
+    """pr AS (SELECT qid, cell FROM (
+      |  SELECT b.cid AS qid, c.cell,
+      |    row_number() OVER (PARTITION BY b.cid
+      |      ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS prn
+      |  FROM bn b, c2 c WHERE b.cid < 3) WHERE prn <= 4)""".stripMargin
+
   private val qPqAnn = Q(
     "q_pq_ann",
     "PQ/ADC flat-scan ANN baseline: asymmetric-distance top-k over PQ codes (cell-pruned path: q_ivfpq_ann)",
@@ -4975,25 +4960,13 @@ object Queries {
         k = 10, dims = 64, numSub = PqM, codesPerSub = PqK, iters = PqIters)
     },
     Some {
-      val dts = (0 until PqM).map { mm =>
-        val dist = (1 to PqSubDim)
-          .map(i => s"(q.sv$mm[$i]-c.cv[$i])*(q.sv$mm[$i]-c.cv[$i])")
-          .mkString(" + ")
-        s"""dt$mm AS (SELECT q.cid AS qid, c.code, $dist AS d
-           |  FROM (SELECT * FROM sub WHERE cid < 3) q, c${PqIters}m$mm c)""".stripMargin
-      }.mkString(",\n")
-      val dtJoins = (1 until PqM)
-        .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.code = f$mm.code")
-        .mkString("\n  ")
-      val fJoins = (1 until PqM)
-        .map(mm => s"JOIN f$mm ON f$mm.cid = f0.cid").mkString(" ")
       s"""WITH $sqlPqCtes,
-         |$dts,
+         |$sqlPqQueryDts,
          |adc AS (SELECT dt0.qid, f0.cid AS neighbor_id,
-         |    CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc
-         |  FROM f0 $fJoins
+         |    $sqlPqAdc
+         |  FROM f0 ${sqlPqCodeJoins("")}
          |  JOIN dt0 ON dt0.code = f0.code
-         |  $dtJoins)
+         |  $sqlPqDtJoins)
          |SELECT qid, neighbor_id, adc, rank FROM (
          |  SELECT qid, neighbor_id, adc,
          |    row_number() OVER (PARTITION BY qid ORDER BY adc, neighbor_id) AS rank
@@ -5026,39 +4999,28 @@ object Queries {
       numCells = IvfNumCells, nProbe = 4, ivfIters = 2)
   }
 
-  private lazy val ivfPqAnnOracle: String = {
-    val dts = (0 until PqM).map { mm =>
-      val dist = (1 to PqSubDim)
-        .map(i => s"(q.sv$mm[$i]-c.cv[$i])*(q.sv$mm[$i]-c.cv[$i])")
-        .mkString(" + ")
-      s"""dt$mm AS (SELECT q.cid AS qid, c.code, $dist AS d
-         |  FROM (SELECT * FROM sub WHERE cid < 3) q, c${PqIters}m$mm c)""".stripMargin
-    }.mkString(",\n")
-    val fJoins = (1 until PqM)
-      .map(mm => s"JOIN f$mm ON f$mm.cid = f0.cid").mkString(" ")
-    val dtJoins = (1 until PqM)
-      .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.code = f$mm.code")
-      .mkString("\n  ")
+  /** The probe-limited ADC chain of the IVF-PQ oracles, through
+    * `adcs` = (qid, neighbor_id, adc) for every code in a probed cell.
+    */
+  private lazy val sqlIvfPqAdcsCtes: String =
     s"""WITH $sqlIvfCellCtes,
        |$sqlPqCtes,
-       |pr AS (SELECT qid, cell FROM (
-       |  SELECT b.cid AS qid, c.cell,
-       |    row_number() OVER (PARTITION BY b.cid
-       |      ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS prn
-       |  FROM bn b, c2 c WHERE b.cid < 3) WHERE prn <= 4),
-       |$dts,
+       |$sqlIvfProbeCte,
+       |$sqlPqQueryDts,
        |adcs AS (SELECT dt0.qid, f0.cid AS neighbor_id,
-       |    CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc
-       |  FROM f0 $fJoins
+       |    $sqlPqAdc
+       |  FROM f0 ${sqlPqCodeJoins("")}
        |  JOIN af ON af.cid = f0.cid
        |  JOIN pr ON pr.cell = af.cell
        |  JOIN dt0 ON dt0.qid = pr.qid AND dt0.code = f0.code
-       |  $dtJoins)
+       |  $sqlPqDtJoins)""".stripMargin
+
+  private lazy val ivfPqAnnOracle: String =
+    s"""$sqlIvfPqAdcsCtes
        |SELECT qid, neighbor_id, adc, rank FROM (
        |  SELECT qid, neighbor_id, adc,
        |    row_number() OVER (PARTITION BY qid ORDER BY adc, neighbor_id) AS rank
        |  FROM adcs) WHERE rank <= 10""".stripMargin
-  }
 
   private val qIvfPqIndexed = Q(
     "q_ivfpq_indexed",
@@ -5104,33 +5066,7 @@ object Queries {
         numCells = IvfNumCells, nProbe = 4, ivfIters = 2)
     },
     Some {
-      val dts = (0 until PqM).map { mm =>
-        val dist = (1 to PqSubDim)
-          .map(i => s"(q.sv$mm[$i]-c.cv[$i])*(q.sv$mm[$i]-c.cv[$i])")
-          .mkString(" + ")
-        s"""dt$mm AS (SELECT q.cid AS qid, c.code, $dist AS d
-           |  FROM (SELECT * FROM sub WHERE cid < 3) q, c${PqIters}m$mm c)""".stripMargin
-      }.mkString(",\n")
-      val fJoins = (1 until PqM)
-        .map(mm => s"JOIN f$mm ON f$mm.cid = f0.cid").mkString(" ")
-      val dtJoins = (1 until PqM)
-        .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.code = f$mm.code")
-        .mkString("\n  ")
-      s"""WITH $sqlIvfCellCtes,
-         |$sqlPqCtes,
-         |pr AS (SELECT qid, cell FROM (
-         |  SELECT b.cid AS qid, c.cell,
-         |    row_number() OVER (PARTITION BY b.cid
-         |      ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS prn
-         |  FROM bn b, c2 c WHERE b.cid < 3) WHERE prn <= 4),
-         |$dts,
-         |adcs AS (SELECT dt0.qid, f0.cid AS neighbor_id,
-         |    CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc
-         |  FROM f0 $fJoins
-         |  JOIN af ON af.cid = f0.cid
-         |  JOIN pr ON pr.cell = af.cell
-         |  JOIN dt0 ON dt0.qid = pr.qid AND dt0.code = f0.code
-         |  $dtJoins),
+      s"""$sqlIvfPqAdcsCtes,
          |cand AS (SELECT qid, neighbor_id FROM (
          |  SELECT qid, neighbor_id,
          |    row_number() OVER (PARTITION BY qid ORDER BY adc, neighbor_id) AS crank
@@ -5157,9 +5093,11 @@ object Queries {
       // the probe-count analog of q_band_sweep: the index is trained
       // once; each arm scores only its prn-prefix of the probe ranking
       // and is measured against the every-cell arm (= q_pq_ann's flat
-      // scan). n_hits/n_results climbing to 1 as n_probe → numCells is
-      // the |corpus|·nProbe/numCells cost-vs-recall trade, in a
-      // hash-pinned table.
+      // scan). n_results is each arm's own result count (below
+      // queries × k when its probed cells hold fewer than k codes), so
+      // recall is n_hits over the FULL arm's n_results; its climb to 1
+      // as n_probe → numCells is the |corpus|·nProbe/numCells
+      // cost-vs-recall trade, in a hash-pinned table.
       val e = t(s, d).embeddings
       Similarity.ivfPqProbeSweep(e.filter(col("vec_id") < 3), e,
         "vec_id", "embedding", k = 10, probeArms = IvfPqSweepArms,
@@ -5167,18 +5105,6 @@ object Queries {
         numCells = IvfNumCells, ivfIters = 2)
     },
     Some {
-      val dts = (0 until PqM).map { mm =>
-        val dist = (1 to PqSubDim)
-          .map(i => s"(q.sv$mm[$i]-c.cv[$i])*(q.sv$mm[$i]-c.cv[$i])")
-          .mkString(" + ")
-        s"""dt$mm AS (SELECT q.cid AS qid, c.code, $dist AS d
-           |  FROM (SELECT * FROM sub WHERE cid < 3) q, c${PqIters}m$mm c)""".stripMargin
-      }.mkString(",\n")
-      val fJoins = (1 until PqM)
-        .map(mm => s"JOIN f$mm ON f$mm.cid = f0.cid").mkString(" ")
-      val dtJoins = (1 until PqM)
-        .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.code = f$mm.code")
-        .mkString("\n  ")
       // MATERIALIZED: the arm top-ks all read adcb (which itself reads
       // the trained-cell and PQ chains) — without materialization DuckDB
       // inlines the whole training pipeline once per arm reference and
@@ -5204,13 +5130,13 @@ object Queries {
          |    row_number() OVER (PARTITION BY b.cid
          |      ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS prn
          |  FROM bn b, c2 c WHERE b.cid < 3),
-         |$dts,
+         |$sqlPqQueryDts,
          |adcb AS MATERIALIZED (SELECT dt0.qid, f0.cid AS neighbor_id, af.cell,
-         |    CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc
-         |  FROM f0 $fJoins
+         |    $sqlPqAdc
+         |  FROM f0 ${sqlPqCodeJoins("")}
          |  JOIN af ON af.cid = f0.cid
          |  JOIN dt0 ON dt0.code = f0.code
-         |  $dtJoins),
+         |  $sqlPqDtJoins),
          |$topks
          |$unions""".stripMargin
     })
@@ -5261,35 +5187,22 @@ object Queries {
     },
     Some {
       val qdiffs = (1 to 64).map(i => s"q.qv[$i]-m.cv[$i]").mkString(", ")
-      val dts = (0 until PqM).map { mm =>
-        val dist = (1 to PqSubDim)
-          .map(i => s"(q.sv$mm[$i]-c.cv[$i])*(q.sv$mm[$i]-c.cv[$i])")
-          .mkString(" + ")
-        s"""dt$mm AS (SELECT q.qid, q.cell, c.code, $dist AS d
-           |  FROM qrs q, rc${PqIters}m$mm c)""".stripMargin
-      }.mkString(",\n")
-      val fJoins = (1 until PqM)
-        .map(mm => s"JOIN rf$mm ON rf$mm.cid = rf0.cid").mkString(" ")
       val dtJoins = (1 until PqM)
         .map(mm => s"JOIN dt$mm ON dt$mm.qid = dt0.qid AND dt$mm.cell = a.cell AND dt$mm.code = rf$mm.code")
         .mkString("\n  ")
       s"""WITH $sqlIvfCellCtes,
          |$sqlIvfPqResidualCtes,
-         |pr AS (SELECT qid, cell FROM (
-         |  SELECT b.cid AS qid, c.cell,
-         |    row_number() OVER (PARTITION BY b.cid
-         |      ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS prn
-         |  FROM bn b, c2 c WHERE b.cid < 3) WHERE prn <= 4),
+         |$sqlIvfProbeCte,
          |qres AS (SELECT p.qid, p.cell, list_value($qdiffs) AS qv
          |  FROM pr p
          |  JOIN (SELECT cid, list_transform(qv, x -> CAST(x AS BIGINT)) AS qv
          |        FROM bn WHERE cid < 3) q ON q.cid = p.qid
          |  JOIN cm m ON m.cell = p.cell),
          |qrs AS (SELECT qid, cell, $sqlPqSubCols FROM qres),
-         |$dts,
+         |${sqlPqDts("q.qid, q.cell", "qrs q", "r")},
          |adcs AS (SELECT dt0.qid, rf0.cid AS neighbor_id,
-         |    CAST(${(0 until PqM).map(mm => s"dt$mm.d").mkString(" + ")} AS BIGINT) AS adc
-         |  FROM rf0 $fJoins
+         |    $sqlPqAdc
+         |  FROM rf0 ${sqlPqCodeJoins("r")}
          |  JOIN afq a ON a.cid = rf0.cid
          |  JOIN dt0 ON dt0.cell = a.cell AND dt0.code = rf0.code
          |  $dtJoins)
@@ -5423,33 +5336,68 @@ object Queries {
     */
   private val Bm25Terms = Seq("dup", "spark", "window")
   private val Bm25K     = 20
+  private val sqlBm25Terms = Bm25Terms.map(t => s"'$t'").mkString(", ")
+
+  /** `toks`: every token occurrence of every non-empty document. */
+  private val sqlBm25Toks: String =
+    raw"""toks AS (SELECT doc_id,
+         |    unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  FROM documents WHERE length(trim(text)) > 0)""".stripMargin
+
+  /** The CTE `name` = each (doc, query term)'s integer BM25
+    * contribution over `tf`, `dl`, `df` and `tot`.
+    */
+  private def sqlBm25Contrib(name: String): String =
+    raw"""$name AS (SELECT tf.doc_id,
+         |    CAST(round(
+         |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
+         |      * (CAST(44*t_toks*tf AS DOUBLE)
+         |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
+         |      * 10000) AS BIGINT) AS contrib
+         |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot)""".stripMargin
+
+  /** The whole-corpus BM25 chain `toks` … `df`, ending in the
+    * contribution CTE named `contrib` — the head of [[qBm25Topk]]'s
+    * oracle and of [[sqlHybridArmCtes]].
+    */
+  private def sqlBm25Ctes(contrib: String): String =
+    raw"""$sqlBm25Toks,
+         |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(dl) AS BIGINT) AS t_toks FROM dl),
+         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
+         |  WHERE tok IN ($sqlBm25Terms) GROUP BY 1, 2),
+         |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+         |${sqlBm25Contrib(contrib)}""".stripMargin
+
+  /** The stale-stats BM25 oracle: df and totals come from the index
+    * snapshot (docs below `snapDoc`), tf and dl from the whole corpus.
+    * One chain for the persisted, streamed and compacted index queries.
+    */
+  private def sqlBm25Snapshot(snapDoc: Long): String =
+    raw"""WITH $sqlBm25Toks,
+         |ixdl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks
+         |  WHERE doc_id < $snapDoc GROUP BY 1),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(dl) AS BIGINT) AS t_toks FROM ixdl),
+         |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+         |  FROM toks WHERE doc_id < $snapDoc AND tok IN ($sqlBm25Terms)
+         |  GROUP BY 1),
+         |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
+         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
+         |  WHERE tok IN ($sqlBm25Terms) GROUP BY 1, 2),
+         |${sqlBm25Contrib("c")}
+         |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
+         |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin
 
   private val qBm25Topk = Q(
     "q_bm25_topk",
     "Okapi BM25 top-k retrieval (k1=1.2, b=0.75, Lucene idf) with exact-rational tf saturation",
     (s, d) =>
       Curation.bm25TopK(t(s, d).documents, "doc_id", "text", Bm25Terms, Bm25K),
-    Some {
-      val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-      raw"""WITH toks AS (SELECT doc_id,
-           |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(dl) AS BIGINT) AS t_toks FROM dl),
-           |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-           |  WHERE tok IN ($termList) GROUP BY 1, 2),
-           |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-           |c AS (SELECT tf.doc_id,
-           |    CAST(round(
-           |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
-           |      * (CAST(44*t_toks*tf AS DOUBLE)
-           |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
-           |      * 10000) AS BIGINT) AS contrib
-           |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
-           |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin
-    })
+    Some(raw"""WITH ${sqlBm25Ctes("c")}
+      |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
+      |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin))
 
   /** Index snapshot bound for [[qBm25Indexed]]: the persisted index is
     * built from docs below this id, the search corpus is EVERYTHING —
@@ -5477,31 +5425,7 @@ object Queries {
       Curation.bm25Search(docs, Curation.readBm25Store(s, dir),
         "doc_id", "text", Bm25Terms, Bm25K)
     },
-    Some {
-      val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-      raw"""WITH toks AS (SELECT doc_id,
-           |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |ixdl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks
-           |  WHERE doc_id < $Bm25SnapDoc GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(dl) AS BIGINT) AS t_toks FROM ixdl),
-           |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-           |  FROM toks WHERE doc_id < $Bm25SnapDoc AND tok IN ($termList)
-           |  GROUP BY 1),
-           |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-           |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-           |  WHERE tok IN ($termList) GROUP BY 1, 2),
-           |c AS (SELECT tf.doc_id,
-           |    CAST(round(
-           |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
-           |      * (CAST(44*t_toks*tf AS DOUBLE)
-           |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
-           |      * 10000) AS BIGINT) AS contrib
-           |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
-           |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin
-    })
+    Some(sqlBm25Snapshot(Bm25SnapDoc)))
 
   /** [[qBm25Stream]]'s layered-store snapshot: batch 0 = docs < 200,
     * batch 1 = 200 ≤ doc < 350 — the union is the index snapshot the
@@ -5511,56 +5435,39 @@ object Queries {
   private val Bm25StreamB0 = 200L
   private val Bm25StreamB1 = 350L
 
+  /** Publish [[qBm25Stream]]'s two batches into a fresh scratch store
+    * (`prefix` + UUID nonce) exactly as Pipelines.bm25Ingest publishes
+    * them: one additive (df, tot) layer per batch. Returns the corpus
+    * and the store dir. The dir is UNIQUE per invocation: a shared
+    * pid+basename key raced two concurrent evaluations (wipe-then-
+    * rewrite vs an in-flight reader) and collided two datasets sharing
+    * a basename in one JVM; a fresh dir never pre-exists, so
+    * publishOnce's replay no-op path can't silently serve stale stats
+    * either (that path is spec-covered in StreamingSpec/StoresSpec).
+    * Swept at JVM exit (scratch registry).
+    */
+  private def publishBm25Batches(
+      s: SparkSession, d: String, prefix: String): (DataFrame, String) = {
+    val dir = graft.functions.Stores.scratchDir(prefix, new java.io.File(d).getName)
+    val docs = t(s, d).documents
+    Curation.writeBm25Batch(
+      Curation.bm25Index(docs.filter(col("doc_id") < Bm25StreamB0),
+        "doc_id", "text"), dir, 0L)
+    Curation.writeBm25Batch(
+      Curation.bm25Index(docs.filter(col("doc_id") >= Bm25StreamB0 &&
+        col("doc_id") < Bm25StreamB1), "doc_id", "text"), dir, 1L)
+    (docs, dir)
+  }
+
   private val qBm25Stream = Q(
     "q_bm25_stream",
     "BM25 search served from a STREAMED additive index store: per-batch df/tot layers summed at read",
     (s, d) => {
-      // the layered store exactly as Pipelines.bm25Ingest publishes it:
-      // one additive (df, tot) layer per batch. The dir is UNIQUE per
-      // invocation (UUID nonce, the q_phrase_compact idiom): a shared
-      // pid+basename key raced two concurrent evaluations of this
-      // lambda (wipe-then-rewrite vs an in-flight reader) and collided
-      // two datasets sharing a basename in one JVM; a fresh dir never
-      // pre-exists, so publishOnce's replay no-op path can't silently
-      // serve stale stats either (that path is spec-covered in
-      // StreamingSpec/StoresSpec). Swept at JVM exit (scratch registry).
-      val dir = graft.functions.Stores.scratchDir(
-        "graft_bm25s_", new java.io.File(d).getName)
-      val docs = t(s, d).documents
-      Curation.writeBm25Batch(
-        Curation.bm25Index(docs.filter(col("doc_id") < Bm25StreamB0),
-          "doc_id", "text"), dir, 0L)
-      Curation.writeBm25Batch(
-        Curation.bm25Index(docs.filter(col("doc_id") >= Bm25StreamB0 &&
-          col("doc_id") < Bm25StreamB1), "doc_id", "text"), dir, 1L)
+      val (docs, dir) = publishBm25Batches(s, d, "graft_bm25s_")
       Curation.bm25Search(docs, Curation.readBm25Store(s, dir),
         "doc_id", "text", Bm25Terms, Bm25K)
     },
-    Some {
-      val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-      raw"""WITH toks AS (SELECT doc_id,
-           |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |ixdl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks
-           |  WHERE doc_id < $Bm25StreamB1 GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(dl) AS BIGINT) AS t_toks FROM ixdl),
-           |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-           |  FROM toks WHERE doc_id < $Bm25StreamB1 AND tok IN ($termList)
-           |  GROUP BY 1),
-           |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-           |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-           |  WHERE tok IN ($termList) GROUP BY 1, 2),
-           |c AS (SELECT tf.doc_id,
-           |    CAST(round(
-           |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
-           |      * (CAST(44*t_toks*tf AS DOUBLE)
-           |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
-           |      * 10000) AS BIGINT) AS contrib
-           |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
-           |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin
-    })
+    Some(sqlBm25Snapshot(Bm25StreamB1)))
 
   private val qBm25Compact = Q(
     "q_bm25_compact",
@@ -5571,45 +5478,13 @@ object Queries {
       // no-op contract): two additive ingest layers, folded to one
       // atomically-published layer, searched through the same serving
       // fold. The oracle is q_bm25_stream's snapshot SQL verbatim —
-      // compaction must be invisible to a searcher. Swept at JVM exit.
-      val dir = graft.functions.Stores.scratchDir(
-        "graft_bm25c_", new java.io.File(d).getName)
-      val docs = t(s, d).documents
-      Curation.writeBm25Batch(
-        Curation.bm25Index(docs.filter(col("doc_id") < Bm25StreamB0),
-          "doc_id", "text"), dir, 0L)
-      Curation.writeBm25Batch(
-        Curation.bm25Index(docs.filter(col("doc_id") >= Bm25StreamB0 &&
-          col("doc_id") < Bm25StreamB1), "doc_id", "text"), dir, 1L)
+      // compaction must be invisible to a searcher.
+      val (docs, dir) = publishBm25Batches(s, d, "graft_bm25c_")
       Curation.compactBm25Store(s, dir)
       Curation.bm25Search(docs, Curation.readBm25Store(s, dir),
         "doc_id", "text", Bm25Terms, Bm25K)
     },
-    Some {
-      val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-      raw"""WITH toks AS (SELECT doc_id,
-           |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |ixdl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks
-           |  WHERE doc_id < $Bm25StreamB1 GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(dl) AS BIGINT) AS t_toks FROM ixdl),
-           |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-           |  FROM toks WHERE doc_id < $Bm25StreamB1 AND tok IN ($termList)
-           |  GROUP BY 1),
-           |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-           |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-           |  WHERE tok IN ($termList) GROUP BY 1, 2),
-           |c AS (SELECT tf.doc_id,
-           |    CAST(round(
-           |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
-           |      * (CAST(44*t_toks*tf AS DOUBLE)
-           |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
-           |      * 10000) AS BIGINT) AS contrib
-           |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_sc
-           |FROM c GROUP BY 1 ORDER BY score_sc DESC, doc_id LIMIT $Bm25K""".stripMargin
-    })
+    Some(sqlBm25Snapshot(Bm25StreamB1)))
 
   /** Arm depth / fused size / RRF constant for [[qHybridRrf]] — shared
     * with the oracle so the two sides cannot drift. μ = 2000 is Zhai &
@@ -5624,32 +5499,16 @@ object Queries {
     * `qlr`) shared verbatim by the [[qHybridRrf]] and [[qRbo]] oracles —
     * one copy so the two cannot desynchronize.
     */
-  private val sqlHybridArmCtes: String = {
-    val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
-    raw"""toks AS (SELECT doc_id,
-         |    unnest(string_split_regex(trim(text), '\s+')) AS tok
-         |  FROM documents WHERE length(trim(text)) > 0),
-         |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY 1),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(dl) AS BIGINT) AS t_toks FROM dl),
-         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks
-         |  WHERE tok IN ($termList) GROUP BY 1, 2),
-         |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |bmc AS (SELECT tf.doc_id,
-         |    CAST(round(
-         |      ln(CAST(2*n_docs + 2 AS DOUBLE) / CAST(2*df + 1 AS DOUBLE))
-         |      * (CAST(44*t_toks*tf AS DOUBLE)
-         |         / CAST(20*t_toks*tf + 6*t_toks + 18*dl*n_docs AS DOUBLE))
-         |      * 10000) AS BIGINT) AS contrib
-         |  FROM tf JOIN dl USING (doc_id) JOIN df USING (tok) CROSS JOIN tot),
+  private val sqlHybridArmCtes: String =
+    raw"""${sqlBm25Ctes("bmc")},
          |bms AS (SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score
          |  FROM bmc GROUP BY 1),
          |bmr AS (SELECT doc_id, rank FROM (SELECT doc_id,
          |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM bms)
          |  WHERE rank <= $HybridN),
          |cf AS (SELECT tok, CAST(count(*) AS BIGINT) AS cf FROM toks
-         |  WHERE tok IN ($termList) GROUP BY 1),
-         |qt AS (SELECT unnest([$termList]) AS tok),
+         |  WHERE tok IN ($sqlBm25Terms) GROUP BY 1),
+         |qt AS (SELECT unnest([$sqlBm25Terms]) AS tok),
          |qtf AS (SELECT c.doc_id, q.tok, COALESCE(tf.tf, 0) AS tf
          |  FROM (SELECT DISTINCT doc_id FROM tf) c CROSS JOIN qt q
          |  LEFT JOIN tf ON tf.doc_id = c.doc_id AND tf.tok = q.tok),
@@ -5663,7 +5522,6 @@ object Queries {
          |qlr AS (SELECT doc_id, rank FROM (SELECT doc_id,
          |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM qls)
          |  WHERE rank <= $HybridN)""".stripMargin
-  }
 
   private val qHybridRrf = Q(
     "q_hybrid_rrf",
@@ -5900,22 +5758,11 @@ object Queries {
         .withColumn("recall_bp",
           expr("CASE WHEN n_true > 0 THEN (n_hit * 10000) DIV n_true ELSE 0 END"))
     },
-    Some(s"""WITH toks AS (${sqlDocToks(500)}),
-            |${sqlMinhashSigs(MinhashHashes)},
-            |bands AS (
-            |${sqlMinhashBands(MinhashHashes, MinhashBands)}
-            |),
+    Some(s"""WITH ${sqlMinhashBandCtes(500)},
             |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             |  FROM bands a JOIN bands b
             |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-            |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nt FROM toks GROUP BY 1),
-            |c AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            |    CAST(count(*) AS BIGINT) AS common
-            |  FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-            |  GROUP BY 1, 2),
-            |truth AS (SELECT doc_a, doc_b FROM c
-            |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-            |  WHERE common / (sa.nt + sb.nt - common) >= 0.8),
+            |${sqlJaccardTruthCtes("truth")},
             |hit AS (SELECT * FROM cand JOIN truth USING (doc_a, doc_b)),
             |m AS (SELECT
             |  (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_true,
@@ -5957,32 +5804,11 @@ object Queries {
       val truth = Await.result(truthF, scala.concurrent.duration.Duration.Inf)
       graft.functions.Quality.bcubed(pred, truth)
     },
-    Some(s"""WITH RECURSIVE toks AS (${sqlDocToks(500)}),
-            |${sqlMinhashSigs(MinhashHashes)},
-            |bands AS (
-            |${sqlMinhashBands(MinhashHashes, MinhashBands)}
-            |),
-            |p AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-            |  FROM bands a JOIN bands b
-            |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-            |e AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-            |reach AS (
-            |  SELECT a AS node, a AS lab FROM e
-            |  UNION
-            |  SELECT e.b AS node, r.lab FROM reach r JOIN e ON e.a = r.node
-            |),
-            |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
+    Some(s"""WITH RECURSIVE $sqlMinhashComponentCtes,
             |pa AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS ca
             |  FROM documents d LEFT JOIN cc ON cc.node = d.doc_id
             |  WHERE d.doc_id < 500),
-            |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nt FROM toks GROUP BY 1),
-            |c AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            |    CAST(count(*) AS BIGINT) AS common
-            |  FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-            |  GROUP BY 1, 2),
-            |tp AS (SELECT doc_a, doc_b FROM c
-            |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-            |  WHERE common / (sa.nt + sb.nt - common) >= 0.8),
+            |${sqlJaccardTruthCtes("tp")},
             |te AS (SELECT doc_a AS a, doc_b AS b FROM tp
             |  UNION SELECT doc_b, doc_a FROM tp),
             |treach AS (
@@ -6048,16 +5874,43 @@ object Queries {
   private val MaxMatchK   = 200
   private val MaxMatchLen = 4
 
+  /** `toks`/`wf`/`pos`: every word occurrence, the word-frequency table
+    * and each word's character positions — the head of the subword
+    * tokenizer oracles.
+    */
+  private val sqlWordPosCtes: String =
+    raw"""toks AS (SELECT doc_id,
+         |    unnest(string_split_regex(trim(text), '\s+')) AS w
+         |  FROM documents WHERE length(trim(text)) > 0),
+         |wf AS (SELECT w, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY 1),
+         |pos AS (SELECT w, f, unnest(generate_series(1, length(w))) AS p FROM wf)""".stripMargin
+
+  /** [[sqlWordPosCtes]] plus the unigram seed model: `gc` = every
+    * gram's corpus count, `vs` = (gram, packed cost) over all single
+    * characters and the top-[[MaxMatchK]] longer grams.
+    */
+  private val sqlUnigramSeedCtes: String =
+    raw"""$sqlWordPosCtes,
+         |g AS (SELECT substr(w, CAST(p AS INT), CAST(len AS INT)) AS gram, f FROM (
+         |    SELECT w, f, p,
+         |      unnest(generate_series(1, least($MaxMatchLen, length(w) - p + 1))) AS len
+         |    FROM pos)),
+         |gc AS (SELECT gram, CAST(sum(f) AS BIGINT) AS cnt FROM g GROUP BY 1),
+         |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM gc),
+         |vs AS (SELECT gram,
+         |    (CAST(length(bin(t)) - length(bin(cnt)) AS BIGINT) * 1024 + 1) AS cost
+         |  FROM (SELECT gram FROM gc WHERE length(gram) = 1
+         |        UNION
+         |        SELECT gram FROM (SELECT gram FROM gc WHERE length(gram) >= 2
+         |                          ORDER BY cnt DESC, gram LIMIT $MaxMatchK)) v
+         |  JOIN gc USING (gram), tot)""".stripMargin
+
   private val qMaxmatchTokenize = Q(
     "q_maxmatch_tokenize",
     "WordPiece-style greedy longest-match tokenizer: frequency-induced vocab, codegen'd fold walk",
     (s, d) => graft.functions.MaxMatch.tokenizeCounts(
       t(s, d).documents, "doc_id", "text", MaxMatchK, MaxMatchLen),
-    Some(raw"""WITH RECURSIVE toks AS (SELECT doc_id,
-            |    unnest(string_split_regex(trim(text), '\s+')) AS w
-            |  FROM documents WHERE length(trim(text)) > 0),
-            |wf AS (SELECT w, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY 1),
-            |pos AS (SELECT w, f, unnest(generate_series(1, length(w))) AS p FROM wf),
+    Some(raw"""WITH RECURSIVE $sqlWordPosCtes,
             |chars AS (SELECT DISTINCT substr(w, p, 1) AS gram FROM pos),
             |topg AS (SELECT gram FROM (
             |    SELECT substr(w, p, len) AS gram, sum(f) AS cnt
@@ -6096,41 +5949,8 @@ object Queries {
     // the packed cost (surp*1024 + 1) makes one min() resolve the
     // (total surprisal, piece count) tie-break identically in both
     // engines — zero floats anywhere
-    Some(raw"""WITH RECURSIVE toks AS (SELECT doc_id,
-            |    unnest(string_split_regex(trim(text), '\s+')) AS w
-            |  FROM documents WHERE length(trim(text)) > 0),
-            |wf AS (SELECT w, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY 1),
-            |pos AS (SELECT w, f, unnest(generate_series(1, length(w))) AS p FROM wf),
-            |g AS (SELECT substr(w, CAST(p AS INT), CAST(len AS INT)) AS gram, f FROM (
-            |    SELECT w, f, p,
-            |      unnest(generate_series(1, least($MaxMatchLen, length(w) - p + 1))) AS len
-            |    FROM pos)),
-            |gc AS (SELECT gram, CAST(sum(f) AS BIGINT) AS cnt FROM g GROUP BY 1),
-            |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM gc),
-            |vs AS (SELECT gram,
-            |    (CAST(length(bin(t)) - length(bin(cnt)) AS BIGINT) * 1024 + 1) AS cost
-            |  FROM (SELECT gram FROM gc WHERE length(gram) = 1
-            |        UNION
-            |        SELECT gram FROM (SELECT gram FROM gc WHERE length(gram) >= 2
-            |                          ORDER BY cnt DESC, gram LIMIT $MaxMatchK)) v
-            |  JOIN gc USING (gram), tot),
-            |mt AS (SELECT c.w, c.p,
-            |    list({'len': c.len, 'cost': v.cost} ORDER BY c.len) AS cands
-            |  FROM (SELECT w, p,
-            |      unnest(generate_series(1, least($MaxMatchLen, length(w) - p + 1))) AS len
-            |    FROM pos) c
-            |  JOIN vs v ON substr(c.w, CAST(c.p AS INT), CAST(c.len AS INT)) = v.gram
-            |  GROUP BY 1, 2),
-            |grid AS (SELECT w, CAST(length(w) AS BIGINT) AS L,
-            |    list(cands ORDER BY p) AS mt FROM mt GROUP BY 1, 2),
-            |dp AS (
-            |  SELECT w, L, mt, CAST(1 AS BIGINT) AS i, [CAST(0 AS BIGINT)] AS br
-            |  FROM grid
-            |  UNION ALL
-            |  SELECT w, L, mt, i + 1,
-            |    list_append(br, list_min(list_transform(mt[CAST(L + 1 - i AS INT)],
-            |      c -> c.cost + br[CAST(i - c.len + 1 AS INT)])))
-            |  FROM dp WHERE i <= L),
+    Some(raw"""WITH RECURSIVE $sqlUnigramSeedCtes,
+            |${sqlUnigramDpCtes("", "vs")},
             |pieces AS (SELECT w, br[CAST(L + 1 AS INT)] // 1024 AS surp_bits,
             |    br[CAST(L + 1 AS INT)] % 1024 AS n_pieces
             |  FROM dp WHERE i = L + 1)
@@ -6141,15 +5961,12 @@ object Queries {
             |    AS avg_piece_cb
             |FROM toks JOIN pieces USING (w) GROUP BY 1""".stripMargin))
 
-  /** The shared seed-model + Viterbi-DP + walk CTE chain of the unigram
-    * oracles, parameterized by the score table name so the refit oracle
-    * can run it twice (seed model `vs`, refit model `vs2`). Emits
-    * `seg$sfx` = (w, pieces list). The walk reconstructs the ACTUAL
-    * optimal segmentation: at each position the longest candidate
-    * achieving `cost + best[p+len] = best[p]` — [[graft.functions
-    * .Unigram.wordPieces]]' tie rule verbatim.
+  /** The Viterbi-DP CTEs `mt$sfx`/`grid$sfx`/`dp$sfx` of the unigram
+    * oracles over the score table `scoreCte`: `dp$sfx` rows carry the
+    * growing best-cost list the Spark fold builds, complete at
+    * `i = L + 1`.
     */
-  private def sqlUnigramWalkCtes(sfx: String, scoreCte: String): String =
+  private def sqlUnigramDpCtes(sfx: String, scoreCte: String): String =
     raw"""mt$sfx AS (SELECT c.w, c.p,
          |    list({'len': c.len, 'cost': v.cost} ORDER BY c.len) AS cands
          |  FROM (SELECT w, p,
@@ -6166,7 +5983,18 @@ object Queries {
          |  SELECT w, L, mt, i + 1,
          |    list_append(br, list_min(list_transform(mt[CAST(L + 1 - i AS INT)],
          |      c -> c.cost + br[CAST(i - c.len + 1 AS INT)])))
-         |  FROM dp$sfx WHERE i <= L),
+         |  FROM dp$sfx WHERE i <= L)""".stripMargin
+
+  /** The shared seed-model + Viterbi-DP + walk CTE chain of the unigram
+    * oracles, parameterized by the score table name so the refit oracle
+    * can run it twice (seed model `vs`, refit model `vs2`). Emits
+    * `seg$sfx` = (w, pieces list). The walk reconstructs the ACTUAL
+    * optimal segmentation: at each position the longest candidate
+    * achieving `cost + best[p+len] = best[p]` — [[graft.functions
+    * .Unigram.wordPieces]]' tie rule verbatim.
+    */
+  private def sqlUnigramWalkCtes(sfx: String, scoreCte: String): String =
+    raw"""${sqlUnigramDpCtes(sfx, scoreCte)},
          |dpf$sfx AS (SELECT w, L, mt, br FROM dp$sfx WHERE i = L + 1),
          |walk$sfx AS (
          |  SELECT w, L, mt, br, CAST(1 AS BIGINT) AS p,
@@ -6191,24 +6019,7 @@ object Queries {
     "unigram-LM hard-EM refit: usage-fitted piece scores, pruned vocab, per-round corpus cost",
     (s, d) => graft.functions.Unigram.refitStats(
       t(s, d).documents, "text", MaxMatchK, MaxMatchLen),
-    Some(raw"""WITH RECURSIVE toks AS (SELECT doc_id,
-            |    unnest(string_split_regex(trim(text), '\s+')) AS w
-            |  FROM documents WHERE length(trim(text)) > 0),
-            |wf AS (SELECT w, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY 1),
-            |pos AS (SELECT w, f, unnest(generate_series(1, length(w))) AS p FROM wf),
-            |g AS (SELECT substr(w, CAST(p AS INT), CAST(len AS INT)) AS gram, f FROM (
-            |    SELECT w, f, p,
-            |      unnest(generate_series(1, least($MaxMatchLen, length(w) - p + 1))) AS len
-            |    FROM pos)),
-            |gc AS (SELECT gram, CAST(sum(f) AS BIGINT) AS cnt FROM g GROUP BY 1),
-            |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM gc),
-            |vs AS (SELECT gram,
-            |    (CAST(length(bin(t)) - length(bin(cnt)) AS BIGINT) * 1024 + 1) AS cost
-            |  FROM (SELECT gram FROM gc WHERE length(gram) = 1
-            |        UNION
-            |        SELECT gram FROM (SELECT gram FROM gc WHERE length(gram) >= 2
-            |                          ORDER BY cnt DESC, gram LIMIT $MaxMatchK)) v
-            |  JOIN gc USING (gram), tot),
+    Some(raw"""WITH RECURSIVE $sqlUnigramSeedCtes,
             |${sqlUnigramWalkCtes("", "vs")},
             |su AS (SELECT s.w, wf.f, unnest(s.pieces) AS gram
             |  FROM seg s JOIN wf USING (w)),
@@ -6359,6 +6170,30 @@ object Queries {
       }
     }.mkString(",\n|    ")
 
+  /** The phrase-count oracle over the documents that `docs` (a
+    * `FROM documents …` clause) selects: every candidate start a
+    * phrase term votes for, counted when all its terms vote. One chain
+    * for the transient, served and streamed-store phrase queries.
+    */
+  private def sqlPhraseCounts(phrases: Seq[String], docs: String): String = {
+    val ph = phraseValuesSql(phrases)
+    raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+         |  $docs),
+         |po AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, toks[g.i] AS term
+         |  FROM tk CROSS JOIN LATERAL
+         |    (SELECT unnest(generate_series(1, len(toks))) AS i) g),
+         |ph(phrase, ti, term, plen) AS (VALUES
+         |    $ph),
+         |m AS (SELECT ph.phrase, ph.plen, po.doc_id, po.pos - ph.ti AS start,
+         |    count(*) AS votes
+         |  FROM po JOIN ph ON po.term = ph.term
+         |  GROUP BY 1, 2, 3, 4)
+         |SELECT phrase, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         |  CAST(count(*) AS BIGINT) AS n_occurrences
+         |FROM m WHERE votes = plen AND start >= 1
+         |GROUP BY 1""".stripMargin
+  }
+
   private val qPhraseMatch = Q(
     "q_phrase_match",
     "positional inverted index + exact multi-token phrase occurrence counts (decontamination probe)",
@@ -6369,24 +6204,8 @@ object Queries {
       // ever shuffle, keyed by (phrase, doc, start)
       graft.functions.Curation.phraseMatches(
         t(s, d).documents, "doc_id", "text", AuditPhrases),
-    Some {
-      val ph = phraseValuesSql(AuditPhrases)
-      raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |po AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, toks[g.i] AS term
-           |  FROM tk CROSS JOIN LATERAL
-           |    (SELECT unnest(generate_series(1, len(toks))) AS i) g),
-           |ph(phrase, ti, term, plen) AS (VALUES
-           |    $ph),
-           |m AS (SELECT ph.phrase, ph.plen, po.doc_id, po.pos - ph.ti AS start,
-           |    count(*) AS votes
-           |  FROM po JOIN ph ON po.term = ph.term
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT phrase, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           |  CAST(count(*) AS BIGINT) AS n_occurrences
-           |FROM m WHERE votes = plen AND start >= 1
-           |GROUP BY 1""".stripMargin
-    })
+    Some(sqlPhraseCounts(AuditPhrases,
+      "FROM documents WHERE length(trim(text)) > 0")))
 
   /** Snapshot bound for [[qPhraseServed]]: postings are persisted for
     * docs below this id (the indexed corpus snapshot) and probes are
@@ -6411,25 +6230,8 @@ object Queries {
           "doc_id", "text"), dir)
       graft.functions.Curation.phraseMatchesStore(s, dir, ServedPhrases)
     },
-    Some {
-      val ph = phraseValuesSql(ServedPhrases)
-      raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-           |  FROM documents
-           |  WHERE doc_id < $PhraseSnapDoc AND length(trim(text)) > 0),
-           |po AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, toks[g.i] AS term
-           |  FROM tk CROSS JOIN LATERAL
-           |    (SELECT unnest(generate_series(1, len(toks))) AS i) g),
-           |ph(phrase, ti, term, plen) AS (VALUES
-           |    $ph),
-           |m AS (SELECT ph.phrase, ph.plen, po.doc_id, po.pos - ph.ti AS start,
-           |    count(*) AS votes
-           |  FROM po JOIN ph ON po.term = ph.term
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT phrase, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           |  CAST(count(*) AS BIGINT) AS n_occurrences
-           |FROM m WHERE votes = plen AND start >= 1
-           |GROUP BY 1""".stripMargin
-    })
+    Some(sqlPhraseCounts(ServedPhrases, s"""FROM documents
+      |  WHERE doc_id < $PhraseSnapDoc AND length(trim(text)) > 0""".stripMargin)))
 
   /** [[qPhraseStore]]'s two-ingest-batch split: docs below the boundary
     * are "batch 0", the rest up to the snapshot are "batch 1" — the
@@ -6502,25 +6304,9 @@ object Queries {
     * (q_phrase_store) and the compacted store's probe (q_phrase_compact)
     * must hash-match the same flat phrase count over the snapshot.
     */
-  private lazy val phraseStoreOracle: String = {
-      val ph = phraseValuesSql(StorePhrases)
-      raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-           |  FROM documents
-           |  WHERE doc_id < $StoreSnapDoc AND length(trim(text)) > 0),
-           |po AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, toks[g.i] AS term
-           |  FROM tk CROSS JOIN LATERAL
-           |    (SELECT unnest(generate_series(1, len(toks))) AS i) g),
-           |ph(phrase, ti, term, plen) AS (VALUES
-           |    $ph),
-           |m AS (SELECT ph.phrase, ph.plen, po.doc_id, po.pos - ph.ti AS start,
-           |    count(*) AS votes
-           |  FROM po JOIN ph ON po.term = ph.term
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT phrase, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           |  CAST(count(*) AS BIGINT) AS n_occurrences
-           |FROM m WHERE votes = plen AND start >= 1
-           |GROUP BY 1""".stripMargin
-  }
+  private lazy val phraseStoreOracle: String =
+    sqlPhraseCounts(StorePhrases, s"""FROM documents
+      |  WHERE doc_id < $StoreSnapDoc AND length(trim(text)) > 0""".stripMargin)
 
   /** Full catalog. */
   val all: Seq[Q] = Seq(

@@ -1746,10 +1746,14 @@ object Similarity {
     * one row `(n_probe, n_hits, n_results)` where `n_hits` counts how
     * many of the flat-ADC top-k results (= probing EVERY cell, the
     * [[pqAnn]] scan) the probe-limited search recovers, over all
-    * queries. This makes the |corpus|·nProbe/numCells cost-vs-recall
-    * trade oracle-OBSERVABLE instead of scaladoc folklore: as nProbe
-    * grows toward numCells, n_hits climbs to n_results while scored-row
-    * cost climbs linearly — the knee is the economical probe count.
+    * queries, and `n_results` is the ARM'S OWN result count: below
+    * queries × k when its probed cells hold fewer than k codes. Recall
+    * against the flat top-k is therefore `n_hits` over the full arm's
+    * `n_results`, not over the arm's own. This makes the
+    * |corpus|·nProbe/numCells cost-vs-recall trade oracle-OBSERVABLE
+    * instead of scaladoc folklore: as nProbe grows toward numCells,
+    * n_hits climbs to the full arm's n_results while scored-row cost
+    * climbs linearly — the knee is the economical probe count.
     *
     * The index is trained ONCE (same deterministic build as
     * [[ivfPqAnn]]); every arm reuses the same codes, probe ranking and

@@ -298,9 +298,10 @@ object Stores {
     * the layers under `dir` from batches STRICTLY before this one (a
     * committed own layer re-read by its own replay would make every row
     * "match" itself). A missing store is `empty`, and so is one whose
-    * schema cannot be inferred: a pre-atomic-publication (legacy) store
-    * can hold a crashed first write with no committed footers at all,
-    * and inference throws before the batch filter could save the replay.
+    * schema cannot be inferred: a store whose first publish crashed
+    * holds only that attempt's hidden `_tmp_batch_<id>` directory, no
+    * committed layer, and inference throws before the batch filter
+    * could save the replay.
     */
   def priorBatches(
       spark: SparkSession, dir: String, batchId: Long, empty: => DataFrame): DataFrame =

@@ -3,7 +3,6 @@ package graft.functions.expressions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -73,16 +72,7 @@ case class CdcChunks(child: Expression, maskBits: Int) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("cdcChunksExpr", this)
-    val in   = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${in.code}
-        |boolean ${ev.isNull} = ${in.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${in.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -2,7 +2,6 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -190,16 +189,7 @@ case class HtmlUnescape(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("htmlUnescapeExpr", this)
-    val in   = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${in.code}
-        |boolean ${ev.isNull} = ${in.isNull};
-        |UTF8String ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${in.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

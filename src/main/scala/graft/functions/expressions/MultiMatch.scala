@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -66,16 +65,7 @@ case class MultiMatch(child: Expression, phrases: Seq[String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("multiMatchExpr", this)
-    val in  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${in.code}
-        |boolean ${ev.isNull} = ${in.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $ref.compute(${in.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

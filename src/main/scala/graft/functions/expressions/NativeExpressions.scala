@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -303,16 +302,7 @@ case class SimHash(child: Expression, bits: Int = 32) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("simhashExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |long ${ev.value} = -1L;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -388,16 +378,7 @@ case class ShingleSimHash(child: Expression, n: Int, bits: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("shingleSimhashExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |long ${ev.value} = -1L;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -464,16 +445,7 @@ case class Shingles(child: Expression, n: Int, distinct: Boolean)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("shinglesExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -535,16 +507,7 @@ case class SrpBank(child: Expression, dims: Int, bitsPerBand: Int, numBands: Int
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("srpBankExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -619,16 +582,7 @@ case class PqAssignAll(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("pqAssignExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -756,17 +710,8 @@ case class MinHashSig(child: Expression, numHashes: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("minhashSigExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |  ${ev.isNull} = (${ev.value} == null);
-        |}
-      """.stripMargin)
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = $expr.compute($c);\n${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -806,16 +751,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("nfcExpr", this)
-    val in   = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${in.code}
-        |boolean ${ev.isNull} = ${in.isNull};
-        |org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${in.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -3,7 +3,6 @@ package graft.functions.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -67,16 +66,7 @@ case class RollingFp(child: Expression, w: Int) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("rollingFpExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |InternalRow ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = (InternalRow) $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

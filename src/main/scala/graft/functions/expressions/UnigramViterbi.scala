@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -186,16 +185,8 @@ case class UnigramViterbi(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("unigramViterbiExpr", this)
-    val in  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${in.code}
-        |org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-        |if (!${in.isNull}) {
-        |  ${ev.value} = $ref.compute(${in.value});
-        |}
-        |boolean ${ev.isNull} = ${ev.value} == null;
-      """.stripMargin)
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = $ref.compute($c);\n${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -3,7 +3,6 @@ package graft.functions.expressions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -111,16 +110,7 @@ case class WinnowFp(child: Expression, k: Int, w: Int) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val expr = ctx.addReferenceObj("winnowFpExpr", this)
-    val arr  = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${arr.code}
-        |boolean ${ev.isNull} = ${arr.isNull};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $expr.compute(${arr.value});
-        |}
-      """.stripMargin)
+    defineCodeGen(ctx, ev, c => s"$expr.compute($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

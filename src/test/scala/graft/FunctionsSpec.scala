@@ -1791,4 +1791,74 @@ class FunctionsSpec extends SparkSpec {
     val relabeled = truth.map { case (d, c) => (d, c + 100L) }
     run(pred, relabeled) shouldBe run(pred, truth)
   }
+
+  test("native expressions: generated code equals interpreted eval on null and non-nullable children") {
+    import graft.functions.expressions.NativeExpressions
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // the inputs round-trip through parquet: a local relation would be
+    // evaluated by the interpreter at plan time (ConvertToLocalRelation)
+    // and the generated code would never run
+    val dir = tmpDir("codegen_parity") + "/in"
+    def toks(t: String) = t.split(" ").filter(_.nonEmpty).toSeq
+    val texts = Seq(
+      "Caf&eacute; the cat sat on the mat ab ab b the cat",
+      "",
+      "e\u0301te\u0301 &lt;x&gt; the the",
+      "the")
+    texts.zipWithIndex.map { case (t, i) =>
+      (i.toLong, Option(t), Option(toks(t)),
+        Option(Seq.tabulate(8)(j => (i - j) * 0.25)), Option(Seq.tabulate(8)(j => (i * j - 4).toLong)))
+    }.:+((9L, None, None, None, None))
+      .toDF("id", "text", "toks", "v", "qv").write.parquet(dir)
+    val books = Seq.tabulate(2)(m => Seq((0L, Seq.fill(4)(0L)), (1L, Seq.fill(4)(3L + m))))
+    val vocab = Seq("t" -> 3073L, "h" -> 3073L, "e" -> 2049L, "th" -> 1025L, "he" -> 2049L)
+    val noToks = typedLit(Seq.empty[String])
+    // (name, input column, non-null default, expression)
+    val cases: Seq[(String, String, Column, Column => Column)] = Seq(
+      ("cdc_chunks", "text", lit(""), NativeExpressions.cdcChunks(_, 2)),
+      ("html_unescape", "text", lit(""), TF.unescapeHtml),
+      ("multi_match", "text", lit(""), NativeExpressions.multiMatch(_, Seq("ab", "b", "the"))),
+      ("rolling_fp", "text", lit(""), TF.rollingFingerprint),
+      ("unigram_viterbi", "text", lit(""), NativeExpressions.unigramSegment(_, vocab, spark)),
+      ("winnow_fp", "toks", noToks, NativeExpressions.winnowFp(_, 2, 2)),
+      ("simhash", "toks", noToks, NativeExpressions.simhash(_, 32)),
+      ("shingle_simhash", "toks", noToks, NativeExpressions.shingleSimhash(_, 2, 64)),
+      ("shingles", "toks", noToks, NativeExpressions.shingles(_, 2, distinct = true)),
+      ("srp_bank", "v", typedLit(Seq.fill(8)(0.0)), NativeExpressions.srpBank(_, 8, 4, 2)),
+      ("pq_assign_all", "qv", typedLit(Seq.fill(8)(0L)), NativeExpressions.pqAssignAll(_, books, 4)),
+      ("minhash_sig", "toks", noToks, NativeExpressions.minhashSig(_, 8)),
+      ("nfc_normalize", "text", lit(""), NativeExpressions.nfcNormalize))
+    val in = spark.read.parquet(dir)
+    val nonNull = cases.map { case (name, c, dflt, _) => coalesce(col(c), dflt).as(name) }
+    in.select(nonNull: _*).schema.map(_.nullable).distinct shouldBe Seq(false)
+    val outs = col("id") +: cases.flatMap { case (name, c, dflt, f) =>
+      Seq(f(col(c)).as(s"${name}_null"), f(coalesce(col(c), dflt)).as(s"${name}_nonnull"))
+    }
+    def run(wholeStage: Boolean, mode: String) = {
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      val prev = keys.map(k => spark.conf.getOption(k))
+      try {
+        spark.conf.set(keys(0), wholeStage.toString)
+        spark.conf.set(keys(1), mode)
+        val df = in.select(outs: _*)
+        val fused = df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+        fused.nonEmpty shouldBe wholeStage
+        df.collect().sortBy(_.getLong(0)).toSeq
+      } finally keys.zip(prev).foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+    val generated = run(wholeStage = true, "CODEGEN_ONLY")
+    val interpreted = run(wholeStage = false, "NO_CODEGEN")
+    generated should have size (texts.size + 1L)
+    interpreted should have size generated.size.toLong
+    // the all-null row yields null from every nullable-child column
+    generated.last.toSeq.zipWithIndex.collect { case (v, i) if i % 2 == 1 => v }
+      .forall(_ == null) shouldBe true
+    generated.zip(interpreted).foreach { case (g, i) =>
+      withClue(s"id=${g.getLong(0)}: ") { g shouldBe i }
+    }
+  }
 }

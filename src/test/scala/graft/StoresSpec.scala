@@ -368,6 +368,8 @@ class StoresSpec extends SparkSpec {
         val tempOnly = tmpDir("graft_contract_tmp")
         Seq((1L, "crashed attempt")).toDF("doc_id", "text")
           .write.parquet(s"$tempOnly/$sub/_tmp_batch_0")
+        val empty = spark.emptyDataFrame
+        Stores.priorBatches(spark, s"$tempOnly/$sub", 1L, empty) should be theSameInstanceAs empty
         compact(tempOnly) shouldBe ((-1L, 0L, 0L))
 
         val root = tmpDir("graft_contract_full")
