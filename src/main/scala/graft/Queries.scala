@@ -903,6 +903,19 @@ object Queries {
     }.mkString(",\n")
   }
 
+  /** The MMR oracles' first round `sel1`: the `keep` filter over each
+    * query's candidates ranked by relevance alone (the selection is still
+    * empty, so `maxsim_sc` is 0), ranked `rank`.
+    */
+  private def sqlMmrFirstRound(rank: String, keep: String): String =
+    s"""sel1 AS (SELECT query_id, CAST($rank AS BIGINT) AS mmr_rank, neighbor_id,
+       |    rel_sc, CAST(0 AS BIGINT) AS maxsim_sc,
+       |    $MmrLambdaBp * rel_sc AS score_sc FROM (
+       |  SELECT query_id, neighbor_id, rel_sc,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY $MmrLambdaBp * rel_sc DESC, neighbor_id) AS rn
+       |  FROM cand) WHERE $keep)""".stripMargin
+
   /** [[qMmrBatched]] constants — k/b chosen so the unrolled oracle has
     * both full rounds and a PARTIAL last round (16 = 6 + 6 + 4 at
     * b = 6), exercising the short-take arm a divisible k would skip.
@@ -950,13 +963,7 @@ object Queries {
         lambdaBp = MmrLambdaBp, pickBatch = MmrBatchB)
     },
     Some(s"""WITH ${sqlMmrCandCtes(MmrBatchN)},
-            |sel1 AS (SELECT query_id, CAST(rn AS BIGINT) AS mmr_rank, neighbor_id,
-            |    rel_sc, CAST(0 AS BIGINT) AS maxsim_sc,
-            |    $MmrLambdaBp * rel_sc AS score_sc FROM (
-            |  SELECT query_id, neighbor_id, rel_sc,
-            |    row_number() OVER (PARTITION BY query_id
-            |      ORDER BY $MmrLambdaBp * rel_sc DESC, neighbor_id) AS rn
-            |  FROM cand) WHERE rn <= $MmrBatchB),
+            |${sqlMmrFirstRound("rn", s"rn <= $MmrBatchB")},
             |${sqlMmrBatchedSteps(MmrBatchK, MmrBatchB, MmrLambdaBp)}
             |SELECT query_id, mmr_rank, neighbor_id, rel_sc, maxsim_sc, score_sc
             |FROM sel${(MmrBatchK + MmrBatchB - 1) / MmrBatchB}""".stripMargin))
@@ -970,13 +977,7 @@ object Queries {
         "vec_id", "embedding", n = MmrN, k = MmrK, lambdaBp = MmrLambdaBp)
     },
     Some(s"""WITH ${sqlMmrCandCtes(MmrN)},
-            |sel1 AS (SELECT query_id, CAST(1 AS BIGINT) AS mmr_rank, neighbor_id,
-            |    rel_sc, CAST(0 AS BIGINT) AS maxsim_sc,
-            |    $MmrLambdaBp * rel_sc AS score_sc FROM (
-            |  SELECT query_id, neighbor_id, rel_sc,
-            |    row_number() OVER (PARTITION BY query_id
-            |      ORDER BY $MmrLambdaBp * rel_sc DESC, neighbor_id) AS rn
-            |  FROM cand) WHERE rn = 1),
+            |${sqlMmrFirstRound("1", "rn = 1")},
             |${sqlMmrSteps(MmrK, MmrLambdaBp)}
             |SELECT query_id, mmr_rank, neighbor_id, rel_sc, maxsim_sc, score_sc
             |FROM sel$MmrK""".stripMargin))
@@ -1175,6 +1176,30 @@ object Queries {
 
   private val sqlToks = """string_split_regex(trim(text), '\s+')"""
 
+  /** DuckDB twin of `TF.langIdGuess`: one `sc_<lang>` marker-count column
+    * per language ([[sqlLangScores]]), folded into the guess
+    * ([[sqlLangGuess]]) exactly as the Spark side folds — strict >, the
+    * earlier language wins ties.
+    */
+  private val sqlLangScores = TF.LangMarkers.map { case (lang, marks) =>
+    val ms = marks.map(m => s"'$m'").mkString(", ")
+    s"len(list_filter($sqlToks, t -> t IN ($ms))) AS sc_$lang"
+  }.mkString(",\n  ")
+  private val sqlLangGuess = TF.LangMarkers.foldLeft(("'und'", "0")) { case ((bl, bs), (lang, _)) =>
+    (s"(CASE WHEN sc_$lang > $bs THEN '$lang' ELSE $bl END)", s"greatest(sc_$lang, $bs)")
+  }._1
+
+  /** The en-marker token count of `text`, the score [[qAuc]] and
+    * [[qPrCurve]] evaluate ([[sqlEnScore]] is its DuckDB twin).
+    */
+  private def enScore: Column =
+    size(filter(TF.tokens(col("text")),
+      t2 => t2.isin(TF.LangMarkers.toMap.apply("en").map(lit): _*)))
+  private val sqlEnScore = {
+    val ms = TF.LangMarkers.toMap.apply("en").map(m => s"'$m'").mkString(", ")
+    s"CAST(len(list_filter($sqlToks, t -> t IN ($ms))) AS BIGINT)"
+  }
+
   private val qTextQuality = Q(
     "q_text_quality",
     "quality scoring + language-ID + fingerprint",
@@ -1197,28 +1222,20 @@ object Queries {
     },
     Some {
       val stops = TF.Stopwords.map(w => s"'$w'").mkString(", ")
-      // mirror TF.langIdGuess's fold exactly: strict >, earlier language wins ties
-      val scoreDefs = TF.LangMarkers.map { case (lang, marks) =>
-        val ms = marks.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter($sqlToks, t -> t IN ($ms))) AS sc_$lang"
-      }.mkString(",\n  ")
-      val fold = TF.LangMarkers.foldLeft(("'und'", "0")) { case ((bl, bs), (lang, _)) =>
-        (s"(CASE WHEN sc_$lang > $bs THEN '$lang' ELSE $bl END)", s"greatest(sc_$lang, $bs)")
-      }._1
       s"""WITH base AS (SELECT doc_id, text,
          |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($sqlToks) END AS BIGINT) AS n_tokens,
          |  CAST(length(text) AS BIGINT) AS n_chars_actual,
          |  CASE WHEN length(text) = 0 THEN 0.0
          |       ELSE (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / length(text) END AS punct_ratio,
          |  len(list_filter($sqlToks, t -> t IN ($stops))) AS n_stop,
-         |  $scoreDefs,
+         |  $sqlLangScores,
          |  md5(list_aggregate(list_sort(list_distinct($sqlToks)), 'string_agg', ' ')) AS fp
          |FROM documents),
          |m AS (SELECT doc_id, n_tokens, n_chars_actual, punct_ratio,
          |  CASE WHEN n_tokens = 0 THEN 0.0 ELSE n_stop / n_tokens END AS stopword_ratio,
          |  (least(n_tokens, 64) / 64.0) * 0.5 + (1.0 - punct_ratio) * 0.3
          |    + least((CASE WHEN n_tokens = 0 THEN 0.0 ELSE n_stop / n_tokens END) * 4.0, 1.0) * 0.2 AS quality,
-         |  $fold AS lang_guess, fp
+         |  $sqlLangGuess AS lang_guess, fp
          |FROM base)
          |SELECT doc_id, n_tokens, n_chars_actual, punct_ratio, stopword_ratio, quality,
          |  lang_guess, fp, (count(*) OVER (PARTITION BY fp)) > 1 AS is_dup
@@ -1421,26 +1438,18 @@ object Queries {
           (sum(col("n_chars")) / count(lit(1))).as("avg_chars"),
           sum(col("nt")).as("sum_tokens"),
           sum(when(col("guess") === col("lang"), 1).otherwise(0)).as("langid_agree")),
-    Some {
-      val scoreDefs = TF.LangMarkers.map { case (lang, marks) =>
-        val ms = marks.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter($sqlToks, t -> t IN ($ms))) AS sc_$lang"
-      }.mkString(",\n  ")
-      val fold = TF.LangMarkers.foldLeft(("'und'", "0")) { case ((bl, bs), (lang, _)) =>
-        (s"(CASE WHEN sc_$lang > $bs THEN '$lang' ELSE $bl END)", s"greatest(sc_$lang, $bs)")
-      }._1
+    Some(
       s"""WITH base AS (SELECT lang, n_chars,
          |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len($sqlToks) END AS BIGINT) AS nt,
-         |  $scoreDefs
+         |  $sqlLangScores
          |FROM documents),
-         |g AS (SELECT lang, n_chars, nt, $fold AS guess FROM base)
+         |g AS (SELECT lang, n_chars, nt, $sqlLangGuess AS guess FROM base)
          |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |  CAST(sum(n_chars) AS BIGINT) / count(*) AS avg_chars,
          |  CAST(sum(nt) AS BIGINT) AS sum_tokens,
          |  CAST(sum(CASE WHEN guess = lang THEN 1 ELSE 0 END) AS BIGINT) AS langid_agree
-         |FROM g GROUP BY 1""".stripMargin
-    })
+         |FROM g GROUP BY 1""".stripMargin))
 
   private val qAuc = Q(
     "q_auc",
@@ -1453,13 +1462,11 @@ object Queries {
       // for the final x10000 scaling (see Quality.rocAuc).
       graft.functions.Quality.rocAuc(
         t(s, d).documents,
-        size(filter(TF.tokens(col("text")),
-          t2 => t2.isin(TF.LangMarkers.toMap.apply("en").map(lit): _*))),
+        enScore,
         col("lang") === "en"),
-    Some {
-      val ms = TF.LangMarkers.toMap.apply("en").map(m => s"'$m'").mkString(", ")
+    Some(
       raw"""WITH sc AS (SELECT
-           |    CAST(len(list_filter($sqlToks, t -> t IN ($ms))) AS BIGINT) AS s,
+           |    $sqlEnScore AS s,
            |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
            |  FROM documents),
            |hist AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt,
@@ -1475,8 +1482,7 @@ object Queries {
            |  CAST(CASE WHEN np > 0 AND nn > 0
            |    THEN (10000 * (rs2 - np * (np + 1))) // (2 * np * nn)
            |    ELSE -1 END AS BIGINT) AS auc_bp
-           |FROM a""".stripMargin
-    })
+           |FROM a""".stripMargin))
 
   private val qPrCurve = Q(
     "q_pr_curve",
@@ -1487,13 +1493,11 @@ object Queries {
       // what a curation pipeline reads to pick its deployed cutoff
       graft.functions.Quality.prCurve(
         t(s, d).documents,
-        size(filter(TF.tokens(col("text")),
-          t2 => t2.isin(TF.LangMarkers.toMap.apply("en").map(lit): _*))),
+        enScore,
         col("lang") === "en"),
-    Some {
-      val ms = TF.LangMarkers.toMap.apply("en").map(m => s"'$m'").mkString(", ")
+    Some(
       raw"""WITH sc AS (SELECT
-           |    CAST(len(list_filter($sqlToks, t -> t IN ($ms))) AS BIGINT) AS thr,
+           |    $sqlEnScore AS thr,
            |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
            |  FROM documents),
            |hist AS (SELECT thr, CAST(count(*) AS BIGINT) AS cnt,
@@ -1509,8 +1513,7 @@ object Queries {
            |  CAST((tp * 10000) // n_pred AS BIGINT) AS precision_bp,
            |  CAST(CASE WHEN np > 0 THEN (tp * 10000) // np ELSE -1 END AS BIGINT)
            |    AS recall_bp
-           |FROM cum""".stripMargin
-    })
+           |FROM cum""".stripMargin))
 
   // ===========================================================================
   // Multimodal pipeline (binary content + typed metadata; operators/Multimodal)

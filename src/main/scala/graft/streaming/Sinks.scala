@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, to_date}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
@@ -23,7 +23,14 @@ import graft.functions.Stores
   * a Delta/Iceberg MERGE would do, on plain parquet with one atomic
   * directory rename per batch — no extra dependencies). Its write is
   * still O(table) per trigger: every snapshot is a full copy of the
-  * table, read whole and rewritten whole.
+  * table, read whole and rewritten whole. A hot table is small (a
+  * dashboard's rows), so while it holds at most
+  * [[ParquetUpsertSink.DriverRows]] rows each trigger collects its merged
+  * table to the driver, writes the snapshot from those rows as one file
+  * and keeps them: dashboard reads through the writing sink instance
+  * then serve the current snapshot from driver memory, with no parquet
+  * scan and no Spark job. Larger tables take the plain parquet write
+  * and read path.
   */
 object Sinks {
 
@@ -174,33 +181,55 @@ object Sinks {
   * merged table = (old rows whose key is absent from the batch) ∪ (batch
   * rows) for its batch. The current table is the highest committed batch
   * ([[Stores.batchIds]]); readers go through [[read]], which reads that
-  * directory alone, so it carries no `batch` partition column.
+  * batch alone, so it carries no `batch` partition column.
+  *
+  * Write path: the merge always reads the current snapshot from parquet.
+  * While the current table is known to hold at most
+  * [[ParquetUpsertSink.DriverRows]] rows, a publish collects the merged
+  * table to the driver once, writes the snapshot from those rows as one
+  * parquet file and, after the commit rename, keeps `(batchId, rows)` on
+  * this instance. A [[read]] whose newest committed id is the kept one
+  * returns the kept rows as a local relation: no file listing of the
+  * snapshot, no parquet scan, no Spark job. Any other read scans the
+  * snapshot. Above the bound, or when this instance does not know the
+  * current table's size (a new instance over an existing root), the
+  * merged table is written straight from the merge plan, its rows are
+  * counted during that write, and nothing is kept; the next publish
+  * decides from that count. So the driver never holds more than the
+  * bound plus one batch's rows, and every publish evaluates the merge
+  * plan (and the batch under it) exactly once.
   *
   * The atomic rename that publishes a snapshot is the commit record: a
   * snapshot directory appears complete or not at all, and older
   * snapshots are kept, so a reader racing an upsert reads the old table
   * or the new one. A crashed attempt leaves only the hidden temp sibling
   * `_tmp_batch_<id>`, which is never read and is overwritten by the
-  * retry.
+  * retry. Kept rows are served only under the id they were committed
+  * as, so they can never be staler than the listing.
   *
   * Single writer per table: one driver owns the table (the streaming-query
   * model), with `synchronized` guarding same-JVM races; readers may run
   * concurrently from any thread. Every snapshot is written by the same
   * merge plan, so all of a table's snapshots share one schema: a sink
-  * instance infers it from the first snapshot it reads and passes it to
-  * the reader after that, which spares every later [[read]] the parquet
-  * schema-inference job.
+  * instance takes it from the first snapshot it reads or publishes and
+  * passes it to the reader after that, which spares every later [[read]]
+  * the parquet schema-inference job.
   *
   * Exactly-once: a batch is applied by publishing its snapshot, and a
   * replayed batch (re-delivered after a failure between sink commit and
-  * checkpoint commit) finds that snapshot committed and is a no-op, so
-  * [[upsertAdditive]] cannot double-count. [[upsert]] would converge on
-  * replay anyway (re-applying the same keyed batch gives the same table).
+  * checkpoint commit) finds that snapshot committed and is a no-op that
+  * leaves the kept rows as they are, so [[upsertAdditive]] cannot
+  * double-count. [[upsert]] would converge on replay anyway (re-applying
+  * the same keyed batch gives the same table).
   */
 final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends Serializable {
+  import ParquetUpsertSink.{DriverRows, Published}
 
-  /** Schema shared by every snapshot, inferred on the first read. */
+  /** Schema shared by every snapshot, as `spark.read.parquet` reads it. */
   @transient @volatile private var snapshotSchema: StructType = _
+
+  /** The snapshot this instance published last; null before the first. */
+  @transient @volatile private var published: Published = _
 
   private def currentBatch(spark: SparkSession): Option[Long] =
     Stores.batchIds(spark, root).lastOption
@@ -210,7 +239,12 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
     currentBatch(spark).getOrElse(Long.MinValue)
 
   def read(spark: SparkSession): Option[DataFrame] =
-    currentBatch(spark).map(snapshot(spark, _))
+    currentBatch(spark).map { id =>
+      val last = published
+      if (last != null && last.batchId == id && last.rows != null)
+        spark.createDataFrame(last.rows, snapshotSchema)
+      else snapshot(spark, id)
+    }
 
   private def snapshot(spark: SparkSession, batchId: Long): DataFrame = {
     val dir = Stores.batchDir(root, batchId)
@@ -259,13 +293,46 @@ final class ParquetUpsertSink(val root: String, val keys: Seq[String]) extends S
 
   /** Publish `merge(current table)` as batch `batchId`'s snapshot; a
     * no-op, which reads nothing, when that snapshot is already committed.
+    * The merged frame is evaluated once, on whichever write path the
+    * current table's known size picks.
     */
   private def publish(spark: SparkSession, batchId: Long)(
       merge: Option[DataFrame] => DataFrame): Unit = synchronized {
-    Stores.publishBatch(spark, root, batchId) { tmp =>
-      merge(currentBatch(spark).map(snapshot(spark, _)))
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
+    var next: Published = null
+    val committed = Stores.publishBatch(spark, root, batchId) { tmp =>
+      val current = currentBatch(spark)
+      val last = published
+      // the current table is known to be small: there is none yet, or
+      // this instance wrote it and counted its rows
+      val small = current.isEmpty ||
+        (last != null && current.contains(last.batchId) && last.count <= DriverRows)
+      val merged = merge(current.map(snapshot(spark, _)))
+      next =
+        if (small) {
+          val rows = java.util.Arrays.asList(merged.collect(): _*)
+          spark.createDataFrame(rows, merged.schema).coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(tmp)
+          // the schema the file reads back with: nullable all the way down
+          if (snapshotSchema == null) snapshotSchema = merged.schema.toNullable
+          Published(batchId, rows.size.toLong, if (rows.size <= DriverRows) rows else null)
+        } else {
+          val obs = Observation()
+          merged.observe(obs, count(lit(1)).as("rows"))
+            .write.mode(SaveMode.Overwrite).parquet(tmp)
+          Published(batchId, obs.get("rows").asInstanceOf[Long], null)
+        }
     }
-    ()
+    if (committed) published = next
   }
+}
+
+object ParquetUpsertSink {
+
+  /** Largest table a publish collects to the driver and keeps for reads. */
+  private[graft] final val DriverRows = 100000L
+
+  /** A committed snapshot this instance wrote: its batch id, its row
+    * count, and its rows when they were kept (null otherwise).
+    */
+  private final case class Published(batchId: Long, count: Long, rows: java.util.List[Row])
 }

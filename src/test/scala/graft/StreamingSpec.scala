@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 import graft.functions.Stores
 import graft.operators.SteamOps
@@ -281,23 +283,39 @@ class StreamingSpec extends SparkSpec {
     expBomb.except(bombs).count() shouldBe 0
   }
 
-  test("upsert pointer swap: reads racing 50 upserts never fail") {
+  test("upsert sink: reads racing 50 upserts never fail, on kept rows and on parquet") {
     val sink = new ParquetUpsertSink(tmpDir("race"), Seq("k"))
     sink.upsert(Seq(("a", 0L)).toDF("k", "n"), 0L)
+    // a second instance keeps no rows, so its reads scan parquet
+    val other = new ParquetUpsertSink(sink.root, Seq("k"))
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    var reads = 0
-    val reader = new Thread(() =>
+    val reads = new java.util.concurrent.atomic.AtomicIntegerArray(2)
+    def reader(s: ParquetUpsertSink, i: Int) = new Thread(() => {
+      var last = -1L
       while (!done.get()) {
-        try { sink.read(spark).get.count() shouldBe 1L; reads += 1 }
-        catch { case e: Throwable => errors.add(e) }
-      })
-    reader.start()
+        try {
+          val df = s.read(spark).get
+          if (s eq other) df.inputFiles should not be empty
+          val rows = df.collect()
+          rows.length shouldBe 1
+          rows.head.getString(0) shouldBe "a"
+          rows.head.isNullAt(1) shouldBe false
+          rows.head.getLong(1) should be >= last // never an older table
+          last = rows.head.getLong(1)
+          reads.incrementAndGet(i)
+        } catch { case e: Throwable => errors.add(e) }
+      }
+    })
+    val readers = Seq(reader(sink, 0), reader(other, 1))
+    readers.foreach(_.start())
     try (1 to 50).foreach(i => sink.upsert(Seq(("a", i.toLong)).toDF("k", "n"), i.toLong))
-    finally { done.set(true); reader.join() }
+    finally { done.set(true); readers.foreach(_.join()) }
     withClue(errors.toArray.take(3).mkString("; "))(errors.size shouldBe 0)
-    reads should be > 0
-    sink.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(50L)
+    reads.get(0) should be > 0
+    reads.get(1) should be > 0
+    sink.read(spark).get.inputFiles shouldBe empty // the writer serves its kept rows
+    Seq(sink, other).foreach(_.read(spark).get.collect().map(_.getLong(1)).toSeq shouldBe Seq(50L))
   }
 
   test("upsert sink: a crashed attempt's temp snapshot is never read, and the retry replaces it") {
@@ -367,11 +385,13 @@ class StreamingSpec extends SparkSpec {
       got.collect().toSet shouldBe current.collect().toSet
     }
     writer.upsertAdditive(Seq((1, "a"), (2, "b")).toDF("n", "k"), 0L)
+    sameAsCurrent(writer) // the writer's kept rows
     val reader = new ParquetUpsertSink(root, Seq("k"))
     sameAsCurrent(reader) // infers the schema from batch 0
     // exactly the merge's columns: no `batch` partition column
     reader.read(spark).get.columns.toSeq shouldBe Seq("k", "n")
     writer.upsertAdditive(Seq((10, "a"), (7, "c")).toDF("n", "k"), 1L)
+    sameAsCurrent(writer)
     sameAsCurrent(reader) // reads batch 1 with the schema inferred from batch 0
     sameAsCurrent(new ParquetUpsertSink(root, Seq("k")))
     reader.read(spark).get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
@@ -385,6 +405,143 @@ class StreamingSpec extends SparkSpec {
     val fresh = new ParquetUpsertSink(replacing.root, Seq("k")).read(spark).get
     replacing.read(spark).get.schema shouldBe fresh.schema
     replacing.read(spark).get.collect().toSet shouldBe fresh.collect().toSet
+
+    // non-nullable nested keys: the kept rows read back nullable all the
+    // way down, as the parquet file does
+    val nested = new ParquetUpsertSink(tmpDir("schema_nested"), Seq("k", "tags"))
+    val batch = spark.range(2).select(struct(col("id"), lit("a").as("s")).as("k"),
+      array(lit("x")).as("tags"), lit(1L).as("n"))
+    batch.schema("tags").dataType shouldBe ArrayType(StringType, containsNull = false)
+    batch.schema("k").dataType.asInstanceOf[StructType].forall(!_.nullable) shouldBe true
+    nested.upsertAdditive(batch, 0L)
+    val kept = nested.read(spark).get
+    kept.inputFiles shouldBe empty
+    kept.schema shouldBe spark.read.parquet(Stores.batchDir(nested.root, 0L)).schema
+  }
+
+  /** Part files of batch `id`'s snapshot under `root`. */
+  private def dataFiles(root: String, id: Long): Int =
+    new java.io.File(Stores.batchDir(root, id)).list()
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
+  /** Runs `body` with AQE partition coalescing off, so a write straight
+    * from a shuffled merge plan leaves one file per non-empty shuffle
+    * partition, while a write from the driver's rows leaves one file.
+    */
+  private def uncoalesced[A](body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try body finally spark.conf.unset(key)
+  }
+
+  private val merges = Seq[(String, (ParquetUpsertSink, DataFrame, Long) => Unit)](
+    "upsert" -> ((s, b, id) => s.upsert(b, id)),
+    "upsertAdditive" -> ((s, b, id) => s.upsertAdditive(b, id)))
+
+  merges.foreach { case (name, merge) =>
+    test(s"upsert sink kept rows ($name): the writer reads the new table with no Spark job; " +
+        "a replay keeps them; a newer batch from another instance is read from parquet") {
+      val root = tmpDir(s"kept_$name")
+      val writer = new ParquetUpsertSink(root, Seq("k"))
+      def table(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      merge(writer, Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), 0L)
+      merge(writer, Seq(("a", 10L)).toDF("k", "n"), 1L)
+      val expected = if (name == "upsert") Map("a" -> 10L, "b" -> 2L) else Map("a" -> 11L, "b" -> 2L)
+      var got: DataFrame = null
+      jobsSubmittedBy { got = writer.read(spark).get } shouldBe 0
+      got.inputFiles shouldBe empty // a local relation: no snapshot file is scanned
+      var rows: Map[String, Long] = null
+      jobsSubmittedBy { rows = table(got) } shouldBe 0
+      rows shouldBe expected
+      got.schema shouldBe spark.read.parquet(Stores.batchDir(root, 1L)).schema
+
+      // a replay of batch 1 with other rows is a no-op for the kept rows too
+      merge(writer, Seq(("a", 100L), ("z", 100L)).toDF("k", "n"), 1L)
+      writer.read(spark).get.inputFiles shouldBe empty
+      table(writer.read(spark).get) shouldBe expected
+
+      // another instance commits batch 2: the writer's kept batch 1 is
+      // no longer the newest, so the writer scans batch 2
+      merge(new ParquetUpsertSink(root, Seq("k")), Seq(("c", 5L)).toDF("k", "n"), 2L)
+      val newer = writer.read(spark).get
+      newer.inputFiles should not be empty
+      table(newer) shouldBe expected + ("c" -> 5L)
+    }
+  }
+
+  test("upsert sink bound: a table crossing DriverRows keeps no rows and is written from the merge plan next") {
+    val bound = ParquetUpsertSink.DriverRows
+    val root = tmpDir("bound")
+    val sink = new ParquetUpsertSink(root, Seq("k"))
+    val b0 = spark.range(bound).select(col("id").as("k"), lit(1L).as("n"))
+    val b1 = Seq((bound, 1L), (0L, 1L)).toDF("k", "n")
+    val b2 = Seq((1L, 5L), (bound + 1, 2L)).toDF("k", "n")
+    uncoalesced {
+      sink.upsertAdditive(b0, 0L) // exactly the bound: written from the driver and kept
+      dataFiles(root, 0L) shouldBe 1
+      sink.read(spark).get.inputFiles shouldBe empty
+      sink.upsertAdditive(b1, 1L) // bound + 1 rows: written from the driver, not kept
+      dataFiles(root, 1L) shouldBe 1
+      sink.read(spark).get.inputFiles should not be empty
+      sink.upsertAdditive(b2, 2L) // over the bound: written from the merge plan
+      dataFiles(root, 2L) should be > 1
+      sink.read(spark).get.inputFiles should not be empty
+    }
+    val got = sink.read(spark).get
+    val recomputed = b0.union(b1).union(b2).groupBy("k").agg(sum("n").as("n"))
+    got.count() shouldBe bound + 2
+    got.exceptAll(recomputed).count() shouldBe 0
+    recomputed.exceptAll(got).count() shouldBe 0
+  }
+
+  test("upsert sink: a new instance over an existing root writes from the merge plan, then from the driver") {
+    val root = tmpDir("new_writer")
+    val first = (0 until 20).map(i => (s"k$i", 1L)).toDF("k", "n")
+    new ParquetUpsertSink(root, Seq("k")).upsertAdditive(first, 0L)
+    val sink = new ParquetUpsertSink(root, Seq("k"))
+    uncoalesced {
+      // the current table's size is unknown to this instance: the write
+      // runs from the merge plan and counts the rows it writes
+      sink.upsertAdditive(Seq(("k0", 1L)).toDF("k", "n"), 1L)
+      dataFiles(root, 1L) should be > 1
+      sink.read(spark).get.inputFiles should not be empty
+      // that count (20) is under the bound: the next publish is a driver one
+      sink.upsertAdditive(Seq(("k1", 1L), ("new", 3L)).toDF("k", "n"), 2L)
+      dataFiles(root, 2L) shouldBe 1
+    }
+    var got: DataFrame = null
+    jobsSubmittedBy { got = sink.read(spark).get } shouldBe 0
+    got.inputFiles shouldBe empty
+    val table = got.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    table shouldBe (0 until 20).map(i => s"k$i" -> 1L).toMap ++
+      Map("k0" -> 2L, "k1" -> 2L, "new" -> 3L)
+  }
+
+  test("upsert sink: each publish evaluates its batch once, on the driver path and the parquet path") {
+    val evals = spark.sparkContext.longAccumulator("batch_evals")
+    val tick = udf { (n: Long) => evals.add(1); n }
+    // repartitioned: the UDF runs in tasks, not folded into a local relation
+    def counted(rows: (String, Long)*) =
+      rows.toDF("k", "n").repartition(2).select(col("k"), tick(col("n")).as("n"))
+    merges.foreach { case (name, merge) =>
+      def evalsOf(sink: ParquetUpsertSink, batch: DataFrame, id: Long): Long = {
+        evals.reset()
+        merge(sink, batch, id)
+        evals.value
+      }
+      val root = tmpDir(s"once_$name")
+      val writer = new ParquetUpsertSink(root, Seq("k"))
+      withClue(s"$name, driver path: ") {
+        evalsOf(writer, counted(("a", 1L), ("b", 2L)), 0L) shouldBe 2
+        evalsOf(writer, counted(("a", 3L)), 1L) shouldBe 1
+        writer.read(spark).get.inputFiles shouldBe empty
+      }
+      withClue(s"$name, parquet path: ") {
+        val fresh = new ParquetUpsertSink(root, Seq("k"))
+        evalsOf(fresh, counted(("c", 4L), ("a", 1L)), 2L) shouldBe 2
+        fresh.read(spark).get.inputFiles should not be empty
+      }
+    }
   }
 
   test("stream-static enrichment join broadcasts the dimension") {
