@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession

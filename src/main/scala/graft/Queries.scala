@@ -72,8 +72,9 @@ object Queries {
 
   /** Shared SQL mirror of `Similarity.kmeansCentroids` +
     * `cellAssignments` (quantized integer space — exact,
-    * order-independent sums; md5-stratified seeds; 2 Lloyd iterations
-    * with sum-centroids, cosine being scale-invariant): CTEs `base` …
+    * order-independent sums; md5-stratified seeds;
+    * [[Similarity.LloydIters]] Lloyd iterations with sum-centroids,
+    * cosine being scale-invariant): CTEs `base` …
     * `af`, where `af` = (cid, v, vn2, cell) is every corpus vector's
     * final trained-cell assignment. Prefix of the IVF-search and
     * semantic-dedup oracles.
@@ -86,7 +87,7 @@ object Queries {
     * oracles keep the fixed literal.
     *
     * `trainWhere` (SQL predicate over `cid`, default all rows) narrows
-    * the TRAINING set — seeds and both Lloyd updates run over `bt`
+    * the TRAINING set — seeds and every Lloyd update run over `bt`
     * (= bn filtered) while the final `af` assignment routes EVERY
     * vector to the trained cells: the incremental-dedup oracle trains
     * on the indexed corpus split and assigns corpus + batch alike,
@@ -95,11 +96,15 @@ object Queries {
   private def sqlIvfCellCtesWith(
       limitExpr: String, trainWhere: String = "TRUE"): String = {
     val sums = (1 to 64).map(i => s"sum(qv[$i])").mkString(", ")
-    def asg(cent: String): String =
-      s"""SELECT cid, qv, qn2, cell FROM (
+    // one assignment + sum-centroid update per Lloyd round
+    val rounds = (1 to Similarity.LloydIters).map { it =>
+      s"""a$it AS (SELECT cid, qv, qn2, cell FROM (
          |  SELECT b.cid, b.qv, b.qn2, c.cell, row_number() OVER (PARTITION BY b.cid
          |    ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS arn
-         |  FROM bt b, $cent c) WHERE arn = 1""".stripMargin
+         |  FROM bt b, c${it - 1} c) WHERE arn = 1),
+         |c$it AS (SELECT cell, cv, list_dot_product(cv, cv) AS cn2 FROM (
+         |  SELECT cell, list_value($sums) AS cv FROM a$it GROUP BY cell)),""".stripMargin
+    }.mkString("\n")
     s"""base AS (SELECT vec_id AS cid,
        |    list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000.0)) AS qv,
        |    CAST(embedding AS DOUBLE[]) AS v
@@ -110,16 +115,11 @@ object Queries {
        |c0 AS (SELECT cell, cv, list_dot_product(cv, cv) AS cn2 FROM (
        |  SELECT cid AS cell, qv AS cv FROM bt
        |  ORDER BY md5(CAST(cid AS VARCHAR)), cid LIMIT $limitExpr)),
-       |a1 AS (${asg("c0")}),
-       |c1 AS (SELECT cell, cv, list_dot_product(cv, cv) AS cn2 FROM (
-       |  SELECT cell, list_value($sums) AS cv FROM a1 GROUP BY cell)),
-       |a2 AS (${asg("c1")}),
-       |c2 AS (SELECT cell, cv, list_dot_product(cv, cv) AS cn2 FROM (
-       |  SELECT cell, list_value($sums) AS cv FROM a2 GROUP BY cell)),
+       |$rounds
        |af AS (SELECT cid, v, vn2, cell FROM (
        |  SELECT b.cid, b.v, b.vn2, c.cell, row_number() OVER (PARTITION BY b.cid
        |    ORDER BY round(list_dot_product(b.qv, c.cv) / sqrt(b.qn2 * c.cn2), 4) DESC, c.cell) AS arn
-       |  FROM bn b, c2 c) WHERE arn = 1)""".stripMargin
+       |  FROM bn b, c${Similarity.LloydIters} c) WHERE arn = 1)""".stripMargin
   }
 
   /** `hp` + `sigs` CTE bodies of the MinHash family
@@ -706,9 +706,6 @@ object Queries {
            |FROM c JOIN sz ON sz.doc_id = doc_a
            |WHERE (common * 10000) // sz.na >= $ContainTbp""".stripMargin))
 
-  private val MinhashHashes = 16
-  private val MinhashBands  = 4
-
   /** The connected components of the pair CTE `p` = (a, b), for a
     * `WITH RECURSIVE` head: `e` symmetrizes `p`, the recursive
     * min-label walk `reach` closes it, `cc` = (node, cluster_id).
@@ -727,9 +724,9 @@ object Queries {
     */
   private def sqlMinhashBandCtes(maxId: Long): String =
     s"""toks AS (${sqlDocToks(maxId)}),
-       |${sqlMinhashSigs(MinhashHashes)},
+       |${sqlMinhashSigs(Dedup.MinhashHashes)},
        |bands AS (
-       |${sqlMinhashBands(MinhashHashes, MinhashBands)}
+       |${sqlMinhashBands(Dedup.MinhashHashes, Dedup.MinhashBands)}
        |)""".stripMargin
 
   /** The LSH-cluster CTEs of the docs below 500 (a `WITH RECURSIVE`
@@ -762,7 +759,7 @@ object Queries {
     (s, d) =>
       Dedup.minhashCandidates(
         t(s, d).documents.filter(col("doc_id") < 2000),
-        "doc_id", "text", MinhashHashes, MinhashBands, maxBucket = 0),
+        "doc_id", "text", maxBucket = 0),
     Some {
       s"""WITH ${sqlMinhashBandCtes(2000)}
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -775,7 +772,7 @@ object Queries {
     (s, d) => {
       val docs = t(s, d).documents.filter(col("doc_id") < 500)
       val est = Dedup.minhashJaccardEstimate(
-        docs, "doc_id", "text", MinhashHashes, MinhashBands)
+        docs, "doc_id", "text")
       // exact Jaccard for the same pairs (0 when no shared token), so the
       // result doubles as an estimator-quality report
       val exact = Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.0)
@@ -785,12 +782,12 @@ object Queries {
           abs(col("est_jaccard") - coalesce(col("jaccard"), lit(0.0))).as("abs_err"))
     },
     Some {
-      val nMatch = (0 until MinhashHashes)
+      val nMatch = (0 until Dedup.MinhashHashes)
         .map(i => s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)").mkString(" + ")
       s"""WITH ${sqlMinhashBandCtes(500)},
          |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         |est AS (SELECT doc_a, doc_b, ($nMatch) / ${MinhashHashes}.0 AS est_jaccard
+         |est AS (SELECT doc_a, doc_b, ($nMatch) / ${Dedup.MinhashHashes}.0 AS est_jaccard
          |  FROM cand JOIN sigs sa ON sa.doc_id = doc_a JOIN sigs sb ON sb.doc_id = doc_b),
          |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nt FROM toks GROUP BY 1),
          |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
@@ -1029,7 +1026,7 @@ object Queries {
       // candidate floor stays linear in n instead of quadratic at a
       // fixed 16-bit width.
       Similarity.nearDupBanded(aug, "vec_id", "v", dims = 64, threshold = 0.95,
-        bitsPerBand = 0, numBands = 16)
+        bitsPerBand = 0)
     },
     Some("""WITH base AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
            |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1053,7 +1050,6 @@ object Queries {
   // oracle rebuilds the SRP band codes in SQL from the same md5-derived
   // planes (planeComponent is engine-independent by construction).
   private val SweepWidths = Seq(12, 16, 20, 24)
-  private val SweepBands  = 8
 
   /** The sweep's DECLARED input slice (the suffix-family bounded-
     * diagnostic convention): the sweep deliberately includes too-narrow
@@ -1084,14 +1080,14 @@ object Queries {
         (col("vec_id") + col("off")).as("vec_id"),
         transform(col("v"), x => x + lit(0.01)).as("v")))
       Similarity.bandWidthSweep(aug, "vec_id", "v", dims = 64, threshold = 0.95,
-        widths = SweepWidths, numBands = SweepBands)
+        widths = SweepWidths)
     },
     Some {
-      val nPlanes = SweepBands * SweepWidths.max
+      val nPlanes = Similarity.SweepBands * SweepWidths.max
       // per-width grid of (band, global plane index, bit value) literals —
       // plane p = band*bits + i, bit value 2^i, exactly SrpBank's layout
       val grids = SweepWidths.map { bits =>
-        val rows = (for { band <- 0 until SweepBands; i <- 0 until bits }
+        val rows = (for { band <- 0 until Similarity.SweepBands; i <- 0 until bits }
           yield s"($band, ${band * bits + i}, ${1L << i})").mkString(", ")
         s"g$bits(band, p, bv) AS (VALUES $rows)"
       }
@@ -1156,7 +1152,7 @@ object Queries {
       val survivors = aug.groupBy(col("v")).agg(min(col("vec_id")).as("vec_id"))
         .select(col("vec_id"), col("v"))
       Similarity.nearDupBanded(survivors, "vec_id", "v", dims = 64,
-        threshold = 0.95, bitsPerBand = 0, numBands = 16)
+        threshold = 0.95, bitsPerBand = 0)
     },
     Some("""WITH base AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
            |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1587,7 +1583,7 @@ object Queries {
       val e = t(s, d).embeddings
       Similarity.ivfKnnCosine(
         e.filter(col("vec_id") < 10), e, "vec_id", "embedding",
-        k = 5, numCells = IvfNumCells, nProbe = 4, iters = 2)
+        k = 5, numCells = IvfNumCells, nProbe = 4)
     },
     Some {
       s"""WITH $sqlIvfCellCtes,
@@ -1629,7 +1625,7 @@ object Queries {
         .select(
           col("doc_id"),
           TF.rollingFingerprint(col("text")).as("fp_roll"),
-          TF.minShingleFingerprint(col("text"), 3).as("min_shingle")),
+          TF.minShingleFingerprint(col("text")).as("min_shingle")),
     Some {
       val t16s =
         s"""list_transform(
@@ -2402,22 +2398,19 @@ object Queries {
   // Substring dedup → duplicate clusters → canonical selection
   // ===========================================================================
 
-  private val SubstrWin    = 40
-  private val SubstrStride = 8
-
   /** Distinct (doc_id, window-hash) rows — the shared CTE for the
     * substring-dedup family. Mirrors [[Clustering.sharedWindowPairs]]'s
-    * window generation exactly: offsets 1, 1+stride, … ≤ len−win+1.
+    * window generation exactly: offsets 1, 1+Stride, … ≤ len−Win+1.
     * `extraWhere` appends an input bound (the uncapped pair-evidence
     * diagnostic runs a bounded slice — see [[SubstrPairMaxDoc]]).
     */
   private def sqlWindowsWhere(extraWhere: String): String =
     s"""SELECT DISTINCT doc_id,
-       |  CAST('0x' || substr(md5(substr(text, CAST(i AS INT), $SubstrWin)), 1, 15)
+       |  CAST('0x' || substr(md5(substr(text, CAST(i AS INT), ${Clustering.Win})), 1, 15)
        |    AS BIGINT) AS wh
        |FROM documents CROSS JOIN LATERAL
-       |  unnest(range(1, len(text) - ${SubstrWin - 1} + 1, $SubstrStride)) AS g(i)
-       |WHERE len(text) >= $SubstrWin$extraWhere""".stripMargin
+       |  unnest(range(1, len(text) - ${Clustering.Win - 1} + 1, ${Clustering.Stride})) AS g(i)
+       |WHERE len(text) >= ${Clustering.Win}$extraWhere""".stripMargin
 
   private def sqlWindows: String = sqlWindowsWhere("")
 
@@ -2435,14 +2428,14 @@ object Queries {
   private def windowPairs(s: SparkSession, d: String) =
     Clustering.sharedWindowPairs(
       t(s, d).documents.filter(col("doc_id") < SubstrPairMaxDoc),
-      "doc_id", "text", SubstrWin, SubstrStride)
+      "doc_id", "text")
 
   // connectivity-only edges for the component queries: identical
   // components, k−1 star edges per window bucket instead of k(k−1)/2
   // pairs (linear vs quadratic on replica/boilerplate-heavy corpora)
   private def windowStarEdges(s: SparkSession, d: String) =
     Clustering.sharedWindowStarEdges(
-      t(s, d).documents, "doc_id", "text", SubstrWin, SubstrStride)
+      t(s, d).documents, "doc_id", "text")
 
   /** Input bound of the UNCAPPED pair-evidence diagnostic: its output is
     * inherently quadratic on clique-heavy corpora (a k-doc dup clique
@@ -2481,21 +2474,13 @@ object Queries {
     "substring-dedup pair evidence at the production boilerplate cap (linear output)",
     (s, d) =>
       Clustering.sharedWindowPairs(
-        t(s, d).documents, "doc_id", "text", SubstrWin, SubstrStride,
-        maxWindowFreq = SubstrMaxFreq),
+        t(s, d).documents, "doc_id", "text", maxWindowFreq = SubstrMaxFreq),
     Some(s"""WITH wdw AS ($sqlWindows),
             |hot AS (SELECT wh FROM wdw GROUP BY wh HAVING count(*) > $SubstrMaxFreq),
             |kept AS (SELECT * FROM wdw WHERE wh NOT IN (SELECT wh FROM hot))
             |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
             |FROM kept a JOIN kept b ON a.wh = b.wh AND a.doc_id < b.doc_id
             |GROUP BY 1, 2""".stripMargin))
-
-  /** The winnowing parameters of the long-span scale path: one
-    * fingerprint selected per [[WinnowSpanW]] consecutive window hashes
-    * → any shared span ≥ win + stride·(w−1) = 64 chars is guaranteed
-    * caught while only ~2/(w+1) of the window rows shuffle.
-    */
-  private val WinnowSpanW = 4
 
   private val qSubstrWinnow = Q(
     "q_substr_winnow",
@@ -2509,18 +2494,17 @@ object Queries {
     // uncapped quadratic diagnostic lives at q_substr_dedup's slice)
     (s, d) =>
       Clustering.winnowedSpanCandidates(
-        t(s, d).documents, "doc_id", "text", SubstrWin, SubstrStride,
-        WinnowSpanW, maxFpFreq = SubstrMaxFreq),
+        t(s, d).documents, "doc_id", "text", maxFpFreq = SubstrMaxFreq),
     Some(s"""WITH wseq AS (
             |  SELECT doc_id,
-            |    list_transform(range(1, len(text) - ${SubstrWin - 1} + 1, $SubstrStride),
-            |      i -> CAST('0x' || substr(md5(substr(text, CAST(i AS INT), $SubstrWin)), 1, 15)
+            |    list_transform(range(1, len(text) - ${Clustering.Win - 1} + 1, ${Clustering.Stride}),
+            |      i -> CAST('0x' || substr(md5(substr(text, CAST(i AS INT), ${Clustering.Win})), 1, 15)
             |        AS BIGINT)) AS whs
-            |  FROM documents WHERE len(text) >= $SubstrWin),
+            |  FROM documents WHERE len(text) >= ${Clustering.Win}),
             |fps AS (
             |  SELECT DISTINCT doc_id,
-            |    unnest(list_transform(range(0, greatest(len(whs) - $WinnowSpanW, 0) + 1),
-            |      s -> list_min(whs[CAST(s + 1 AS INT):CAST(s + $WinnowSpanW AS INT)]))) AS fp
+            |    unnest(list_transform(range(0, greatest(len(whs) - ${Clustering.WinnowW}, 0) + 1),
+            |      s -> list_min(whs[CAST(s + 1 AS INT):CAST(s + ${Clustering.WinnowW} AS INT)]))) AS fp
             |  FROM wseq),
             |hot AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) > $SubstrMaxFreq),
             |kept AS (SELECT * FROM fps WHERE fp NOT IN (SELECT fp FROM hot))
@@ -2569,7 +2553,7 @@ object Queries {
       Dedup.contamination(
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 5)
+        "doc_id", "text")
     },
     Some(raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
             |  FROM documents),
@@ -2838,15 +2822,15 @@ object Queries {
       val docs = t(s, d).documents
       Dedup.incrementalDedup(
         docs.filter(col("doc_id") >= 400), docs.filter(col("doc_id") < 400),
-        "doc_id", "text", MinhashHashes, MinhashBands)
+        "doc_id", "text")
     },
     Some {
       raw"""WITH toks AS (SELECT DISTINCT doc_id,
            |    unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents
            |  WHERE length(trim(text)) > 0),
-           |${sqlMinhashSigs(MinhashHashes)},
+           |${sqlMinhashSigs(Dedup.MinhashHashes)},
            |bands AS (
-           |${sqlMinhashBands(MinhashHashes, MinhashBands)}
+           |${sqlMinhashBands(Dedup.MinhashHashes, Dedup.MinhashBands)}
            |),
            |fp AS (SELECT doc_id, $sqlBagFp AS k FROM documents),
            |ex AS (SELECT b.doc_id, min(c.doc_id) AS exact_id FROM fp b
@@ -3105,7 +3089,7 @@ object Queries {
       Clustering
         .clustersOf(docs,
           Dedup.minhashCandidates(docs, "doc_id", "text",
-            MinhashHashes, MinhashBands, maxBucket = 0),
+            maxBucket = 0),
           "doc_id")
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     },
@@ -3622,7 +3606,7 @@ object Queries {
       val e = t(s, d).embeddings
       val cents = Similarity.kmeansCentroids(
         e, "vec_id", "embedding", dims = 64,
-        numCells = Queries.IvfNumCells, iters = 2)
+        numCells = Queries.IvfNumCells)
       val local = Similarity.localModel(cents)
       val total = e.count() // tiny action; at scale read from table stats
       // fail fast on an empty table: the k-means seed selection and the
@@ -4231,8 +4215,8 @@ object Queries {
            |FROM dl d LEFT JOIN sc USING (doc_id)""".stripMargin))
 
   private val TrIters   = 3
-  private val TrTeleport = (10000L - graft.functions.Graph.DefaultDampingBp) *
-    graft.functions.Graph.DefaultScale / 10000L
+  private val TrTeleport = (10000L - graft.functions.Graph.DampingBp) *
+    graft.functions.Graph.Scale / 10000L
 
   private val qTextrank = Q(
     "q_textrank",
@@ -4250,7 +4234,7 @@ object Queries {
         TrIters)
         .select(col("node").as("tok"), col("rk").as("rank_fp")),
     Some {
-      val d = graft.functions.Graph.DefaultDampingBp
+      val d = graft.functions.Graph.DampingBp
       val iter = (k: Int) =>
         raw"""i$k AS (SELECT ew.dst AS node,
              |    CAST(sum((r.rk * ew.w) // ew.wout) AS BIGINT) AS infl
@@ -4271,7 +4255,7 @@ object Queries {
            |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM e GROUP BY 1),
            |ew AS (SELECT e.src, e.dst, e.w, ow.wout FROM e JOIN ow USING (src)),
            |nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT dst FROM e),
-           |r0 AS (SELECT node, CAST(${graft.functions.Graph.DefaultScale} AS BIGINT) AS rk
+           |r0 AS (SELECT node, CAST(${graft.functions.Graph.Scale} AS BIGINT) AS rk
            |  FROM nodes),
            |${(1 to TrIters).map(iter).mkString(",\n")}
            |SELECT node AS tok, rk AS rank_fp FROM r$TrIters""".stripMargin
@@ -4842,12 +4826,11 @@ object Queries {
   /** Product-quantization geometry shared by [[Similarity.pqEncode]] and
     * the DuckDB oracle mirror [[sqlPqCtes]]: 64-dim vectors split into
     * `PqM` subspaces of `PqSubDim` dims, `PqK` codes per codebook,
-    * `PqIters` Lloyd rounds.
+    * [[Similarity.LloydIters]] Lloyd rounds.
     */
   val PqM: Int       = 4
   val PqSubDim: Int  = 16
   val PqK: Int       = 16
-  val PqIters: Int   = 2
 
   /** DuckDB mirror of [[Similarity.pqEncode]]'s training + encode: CTEs
     * `qb`…`f{m}` where `f{m}` = (cid, code, d) is every vector's final
@@ -4889,11 +4872,11 @@ object Queries {
       s"""${p}f$mm AS (SELECT cid, code, d FROM (
          |  SELECT s.cid, c.code, ${sqlPqDist(s"s.sv$mm", "c.cv")} AS d,
          |    row_number() OVER (PARTITION BY s.cid ORDER BY ${sqlPqDist(s"s.sv$mm", "c.cv")}, c.code) AS rn
-         |  FROM ${p}sub s, ${p}c${PqIters}m$mm c) WHERE rn = 1)""".stripMargin
+         |  FROM ${p}sub s, ${p}c${Similarity.LloydIters}m$mm c) WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
     s"""${p}seeds AS (SELECT * FROM ${p}sub ORDER BY md5(CAST(cid AS VARCHAR)), cid LIMIT $PqK),
        |$c0,
-       |${(1 to PqIters).map(round).mkString(",\n")},
+       |${(1 to Similarity.LloydIters).map(round).mkString(",\n")},
        |$fin""".stripMargin
   }
 
@@ -4913,13 +4896,13 @@ object Queries {
 
   /** ADC distance tables `dt0…dt{PqM−1}` = (`qCols`, code, d): each
     * query subvector's exact squared L2 to every final centroid of the
-    * `${p}c{PqIters}m*` codebooks, over the query rows `qFrom` (alias
+    * `${p}c{LloydIters}m*` codebooks, over the query rows `qFrom` (alias
     * `q`).
     */
   private def sqlPqDts(qCols: String, qFrom: String, p: String): String =
     (0 until PqM).map { mm =>
       s"""dt$mm AS (SELECT $qCols, c.code, ${sqlPqDist(s"q.sv$mm", "c.cv")} AS d
-         |  FROM $qFrom, ${p}c${PqIters}m$mm c)""".stripMargin
+         |  FROM $qFrom, ${p}c${Similarity.LloydIters}m$mm c)""".stripMargin
     }.mkString(",\n")
 
   /** [[sqlPqDts]] of the raw-vector PQ oracles' three query vectors. */
@@ -4960,7 +4943,7 @@ object Queries {
       // (partial WindowGroupLimit). Exact int64 ADC, ties by neighbor.
       val e = t(s, d).embeddings
       Similarity.pqAnn(e.filter(col("vec_id") < 3), e, "vec_id", "embedding",
-        k = 10, dims = 64, numSub = PqM, codesPerSub = PqK, iters = PqIters)
+        k = 10, dims = 64, numSub = PqM, codesPerSub = PqK)
     },
     Some {
       s"""WITH $sqlPqCtes,
@@ -4998,8 +4981,8 @@ object Queries {
     // full-corpus fan-out. Exact int64 ADC, ties by neighbor.
     val e = t(s, d).embeddings
     Similarity.ivfPqAnn(e.filter(col("vec_id") < 3), e, "vec_id", "embedding",
-      k = 10, dims = 64, numSub = PqM, codesPerSub = PqK, pqIters = PqIters,
-      numCells = IvfNumCells, nProbe = 4, ivfIters = 2)
+      k = 10, dims = 64, numSub = PqM, codesPerSub = PqK,
+      numCells = IvfNumCells, nProbe = 4)
   }
 
   /** The probe-limited ADC chain of the IVF-PQ oracles, through
@@ -5040,17 +5023,12 @@ object Queries {
       val dir = graft.functions.Stores.scratchDir(
         "graft_ivfpq_index_", new java.io.File(d).getName)
       Similarity.writeIvfPqIndex(e, "vec_id", "embedding", dir,
-        dims = 64, numSub = PqM, codesPerSub = PqK, pqIters = PqIters,
-        numCells = IvfNumCells, ivfIters = 2)
+        dims = 64, numSub = PqM, codesPerSub = PqK,
+        numCells = IvfNumCells)
       Similarity.ivfPqAnnIndexed(e.filter(col("vec_id") < 3), dir,
         "vec_id", "embedding", k = 10, nProbe = 4)
     },
     Some(ivfPqAnnOracle))
-
-  /** Re-rank candidate multiple of [[qIvfPqRerank]] (k′ = factor × k),
-    * one constant for the Spark call and the oracle's CTE chain.
-    */
-  val IvfPqRerankFactor: Int = 4
 
   private val qIvfPqRerank = Q(
     "q_ivfpq_rerank",
@@ -5064,16 +5042,16 @@ object Queries {
       // are re-scored instead of |corpus|.
       val e = t(s, d).embeddings
       Similarity.ivfPqAnnRerank(e.filter(col("vec_id") < 3), e,
-        "vec_id", "embedding", k = 10, rerankFactor = IvfPqRerankFactor,
-        dims = 64, numSub = PqM, codesPerSub = PqK, pqIters = PqIters,
-        numCells = IvfNumCells, nProbe = 4, ivfIters = 2)
+        "vec_id", "embedding", k = 10,
+        dims = 64, numSub = PqM, codesPerSub = PqK,
+        numCells = IvfNumCells, nProbe = 4)
     },
     Some {
       s"""$sqlIvfPqAdcsCtes,
          |cand AS (SELECT qid, neighbor_id FROM (
          |  SELECT qid, neighbor_id,
          |    row_number() OVER (PARTITION BY qid ORDER BY adc, neighbor_id) AS crank
-         |  FROM adcs) WHERE crank <= ${10 * IvfPqRerankFactor}),
+         |  FROM adcs) WHERE crank <= ${10 * Similarity.RerankFactor}),
          |rr AS (SELECT c.qid, c.neighbor_id,
          |    round(list_dot_product(q.v, n.v) / sqrt(q.vn2 * n.vn2), 4) AS cos_sim
          |  FROM cand c JOIN bn q ON q.cid = c.qid JOIN bn n ON n.cid = c.neighbor_id)
@@ -5104,8 +5082,8 @@ object Queries {
       val e = t(s, d).embeddings
       Similarity.ivfPqProbeSweep(e.filter(col("vec_id") < 3), e,
         "vec_id", "embedding", k = 10, probeArms = IvfPqSweepArms,
-        dims = 64, numSub = PqM, codesPerSub = PqK, pqIters = PqIters,
-        numCells = IvfNumCells, ivfIters = 2)
+        dims = 64, numSub = PqM, codesPerSub = PqK,
+        numCells = IvfNumCells)
     },
     Some {
       // MATERIALIZED: the arm top-ks all read adcb (which itself reads
@@ -5151,7 +5129,7 @@ object Queries {
     * residual subtraction needs true means), `rb` = residuals
     * `qv − cm(cell)`, `rsub` = their subspace split, then the
     * r-prefixed PQ trainer ([[sqlPqTrainCtes]]) over the residuals —
-    * final codes `rf*`, codebooks `rc{PqIters}m*`.
+    * final codes `rf*`, codebooks `rc{LloydIters}m*`.
     */
   private val sqlIvfPqResidualCtes: String = {
     val sums = (1 to 64).map(i => s"CAST(sum(qv[$i]) AS BIGINT) AS s$i").mkString(", ")
@@ -5185,8 +5163,7 @@ object Queries {
       val e = t(s, d).embeddings
       Similarity.ivfPqAnnResidual(e.filter(col("vec_id") < 3), e,
         "vec_id", "embedding", k = 10, dims = 64, numSub = PqM,
-        codesPerSub = PqK, pqIters = PqIters, numCells = IvfNumCells,
-        nProbe = 4, ivfIters = 2)
+        codesPerSub = PqK, numCells = IvfNumCells, nProbe = 4)
     },
     Some {
       val qdiffs = (1 to 64).map(i => s"q.qv[$i]-m.cv[$i]").mkString(", ")
@@ -5219,7 +5196,7 @@ object Queries {
     "q_pq_encode",
     "product quantization: per-subspace k-means codebooks, shuffle-free encode to code ids + exact error",
     (s, d) => Similarity.pqEncode(t(s, d).embeddings, "vec_id", "embedding",
-      dims = 64, numSub = PqM, codesPerSub = PqK, iters = PqIters),
+      dims = 64, numSub = PqM, codesPerSub = PqK),
     Some(
       s"""WITH $sqlPqCtes
          |SELECT f0.cid AS vec_id, f0.code AS code0, f1.code AS code1,
@@ -5489,13 +5466,12 @@ object Queries {
     },
     Some(sqlBm25Snapshot(Bm25StreamB1)))
 
-  /** Arm depth / fused size / RRF constant for [[qHybridRrf]] — shared
-    * with the oracle so the two sides cannot drift. μ = 2000 is Zhai &
-    * Lafferty's default.
+  /** Arm depth / fused size / μ for [[qHybridRrf]] — shared with the
+    * oracle so the two sides cannot drift (the RRF constant is
+    * [[Curation.RrfK]]). μ = 2000 is Zhai & Lafferty's default.
     */
   private val HybridN    = 20
   private val HybridK    = 10
-  private val HybridRrfK = 60
   private val HybridMu   = 2000
 
   /** The BM25 + Dirichlet-QL ranking-arm CTE chain (`toks` … `bmr`,
@@ -5531,13 +5507,13 @@ object Queries {
     "hybrid retrieval: BM25 + Dirichlet query-likelihood arms fused by reciprocal-rank fusion",
     (s, d) => Curation.hybridRrfTopK(
       t(s, d).documents, "doc_id", "text", Bm25Terms,
-      n = HybridN, k = HybridK, rrfK = HybridRrfK, mu = HybridMu),
+      n = HybridN, k = HybridK, mu = HybridMu),
     Some {
       raw"""WITH $sqlHybridArmCtes,
            |u AS (SELECT doc_id, rank, 'bm25' AS arm FROM bmr
            |  UNION ALL SELECT doc_id, rank, 'ql' AS arm FROM qlr),
            |f AS (SELECT doc_id,
-           |    CAST(sum(1000000 // ($HybridRrfK + rank)) AS BIGINT) AS rrf_sc,
+           |    CAST(sum(1000000 // (${Curation.RrfK} + rank)) AS BIGINT) AS rrf_sc,
            |    CAST(COALESCE(max(CASE WHEN arm = 'bm25' THEN rank END), 0) AS BIGINT) AS rank_bm25,
            |    CAST(COALESCE(max(CASE WHEN arm = 'ql' THEN rank END), 0) AS BIGINT) AS rank_ql
            |  FROM u GROUP BY 1)
@@ -5743,7 +5719,7 @@ object Queries {
       val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.8)
         .select(col("doc_a"), col("doc_b"))
       val cand = Dedup.minhashCandidates(
-        docs, "doc_id", "text", MinhashHashes, MinhashBands, maxBucket = 0)
+        docs, "doc_id", "text", maxBucket = 0)
       // ONE evaluation of each pair set: the previous three-aggregate
       // crossJoin shape instantiated the expensive truth subtree (the
       // quadratic exact-Jaccard join) and the candidate subtree TWICE
@@ -5797,7 +5773,7 @@ object Queries {
       import scala.concurrent.ExecutionContext.Implicits.global
       val predF = Future(Clustering.clustersOf(docs,
         Dedup.minhashCandidates(docs, "doc_id", "text",
-          MinhashHashes, MinhashBands, maxBucket = 0),
+          maxBucket = 0),
         "doc_id").select(col("doc_id"), col("cluster_id")))
       val truthF = Future(Clustering.clustersOf(docs,
         Dedup.jaccardPairs(docs, "doc_id", "text", 0.8)

@@ -33,8 +33,22 @@ import org.apache.spark.sql.graftbridge.Checkpoints
   */
 object Clustering {
 
+  /** Character width of the windows every substring-dedup operator
+    * hashes ([[sharedWindowPairs]], [[sharedWindowStarEdges]],
+    * [[winnowedSpanCandidates]]); their oracles read it from here.
+    */
+  val Win: Int = 40
+
+  /** Offset step between consecutive windows. */
+  val Stride: Int = 8
+
+  /** Winnowing span of [[winnowedSpanCandidates]]: one minimum per
+    * `WinnowW` consecutive window hashes.
+    */
+  val WinnowW: Int = 4
+
   /** Connected components by iterative min-label propagation over an
-    * undirected edge list `(a, b)`. Returns `(node, cluster_id)` where
+    * undirected edge list `(doc_a, doc_b)`. Returns `(node, cluster_id)` where
     * `cluster_id` is the minimum node id in the component. Only nodes
     * that appear in at least one edge are returned — callers union in
     * their singleton population (see [[clustersOf]]).
@@ -48,14 +62,12 @@ object Clustering {
     */
   def connectedComponents(
       edges: DataFrame,
-      a: String = "doc_a",
-      b: String = "doc_b",
       maxRounds: Int = 100,
       onRound: Graph.RoundProbe = Graph.NoProbe): DataFrame = Checkpoints.scope { cp =>
     val sym = cp.checkpoint(
       edges
-        .select(col(a).as("src"), col(b).as("dst"))
-        .union(edges.select(col(b).as("src"), col(a).as("dst")))
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .distinct())
     // init = the first propagation hop, unrolled: lab₀ = min(node,
     // min(neighbors)) costs one aggregation over the edge list (vs a
@@ -156,13 +168,14 @@ object Clustering {
   /** Repeated-substring duplicate evidence (the signal behind
     * suffix-array dedup, Lee et al., "Deduplicating Training Data Makes
     * Language Models Better", ACL'22): fixed-width character windows at
-    * a fixed stride; two documents sharing any verbatim window are
-    * near-dup candidates. Returns `(doc_a, doc_b, n_shared)` — the
-    * number of distinct shared window CONTENTS per pair.
+    * a fixed stride ([[Win]] chars every [[Stride]]); two documents
+    * sharing any verbatim window are near-dup candidates. Returns
+    * `(doc_a, doc_b, n_shared)` — the number of distinct shared window
+    * CONTENTS per pair.
     *
     * Scale shape (bucket doc-set collapse, round 9): windows are
     * generated map-side (`explode` over a `sequence` of offsets —
-    * `win/stride`× row blowup, each row one md5) and shuffle by window
+    * `Win/Stride`× row blowup, each row one md5) and shuffle by window
     * hash ONCE (the old formulation self-joined two aliases of the same
     * subtree — two full scans + two full shuffles). Each window bucket
     * is collapsed to its sorted doc-id set, and buckets with the SAME
@@ -185,10 +198,8 @@ object Clustering {
       df: DataFrame,
       id: String,
       text: String,
-      win: Int = 40,
-      stride: Int = 8,
       maxWindowFreq: Int = 0): DataFrame = {
-    val capped = windowHashes(df, id, text, win, stride, maxWindowFreq)
+    val capped = windowHashes(df, id, text, maxWindowFreq)
     collapsedPairCounts(capped, id, "wh", "n_shared")
   }
 
@@ -232,18 +243,18 @@ object Clustering {
     * "Winnowing: Local Algorithms for Document Fingerprinting",
     * SIGMOD'03, applied to the character-window hash sequence): each
     * doc's stride-grid window hashes are winnowed — one minimum
-    * selected from every `w` consecutive hashes — and only the
+    * selected from every [[WinnowW]] consecutive hashes — and only the
     * selected fingerprints join. Returns `(doc_a, doc_b, n_shared_fp)`.
     *
     * Contract vs [[sharedWindowPairs]] (the exact evidence): this is
-    * the SCALE PATH for long-span dedup, shuffling ~`2/(w+1)` of the
-    * window rows. The winnowing guarantee holds for runs of `w`
+    * the SCALE PATH for long-span dedup, shuffling ~`2/(WinnowW+1)` of the
+    * window rows. The winnowing guarantee holds for runs of `WinnowW`
     * consecutive shared grid windows — any shared span of at least
-    * `win + stride·(w−1)` characters (64 chars at the 40/8/4 defaults,
+    * `Win + Stride·(WinnowW−1)` characters (64 chars at 40/8/4,
     * the Lee et al. ACL'22 long-duplicate regime) yields a shared
     * selected minimum, so such pairs are ALWAYS found; pairs sharing
     * only shorter overlaps may be missed (candidates ⊆ the exact
-    * pairs, spec-pinned). Docs with fewer than `w` windows contribute
+    * pairs, spec-pinned). Docs with fewer than `WinnowW` windows contribute
     * the minimum of their whole sequence, so short docs still
     * fingerprint. Selection is by VALUE minimum (deterministic,
     * engine-independent — no position tie-break needed since the
@@ -253,14 +264,11 @@ object Clustering {
       df: DataFrame,
       id: String,
       text: String,
-      win: Int = 40,
-      stride: Int = 8,
-      w: Int = 4,
       maxFpFreq: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def wh64(c: Column): Column =
       conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-    val eligible = df.filter(length(col(text)) >= win)
+    val eligible = df.filter(length(col(text)) >= Win)
     // ORDERED hash sequence (winnowing is positional — no distinct
     // here), materialized once per row so the per-window selection
     // lambda below never recomputes an md5. Giant documents are the
@@ -277,32 +285,32 @@ object Clustering {
     // the slice-clamp semantics at the tail / g < w (A/B spec-pinned
     // against the slice formulation)
     def slidingMin(s: Column): Column =
-      least((0 until w).map(j => try_element_at(col("whs"), s + lit(j + 1))): _*)
+      least((0 until WinnowW).map(j => try_element_at(col("whs"), s + lit(j + 1))): _*)
     val smallFps = eligible
       .filter(length(col(text)) <= bigDocChars)
       .select(col(id), transform(
-        sequence(lit(1), length(col(text)) - (win - 1), lit(stride)),
-        off => wh64(col(text).substr(off, lit(win)))).as("whs"))
+        sequence(lit(1), length(col(text)) - (Win - 1), lit(Stride)),
+        off => wh64(col(text).substr(off, lit(Win)))).as("whs"))
       .select(col(id),
         explode(array_distinct(transform(
-          sequence(lit(0), greatest(size(col("whs")) - w, lit(0))),
+          sequence(lit(0), greatest(size(col("whs")) - WinnowW, lit(0))),
           s => slidingMin(s)))).as("fp"))
     val bigWin = Window.partitionBy(col(id)).orderBy(col("p"))
-      .rowsBetween(0, w - 1)
+      .rowsBetween(0, WinnowW - 1)
     val bigFps = eligible
       .filter(length(col(text)) > bigDocChars)
       .select(col(id), col(text),
-        posexplode(sequence(lit(1), length(col(text)) - (win - 1), lit(stride)))
+        posexplode(sequence(lit(1), length(col(text)) - (Win - 1), lit(Stride)))
           .as(Seq("p", "off")),
-        (length(col(text)) - (win - 1) + stride - 1).divide(stride)
+        (length(col(text)) - (Win - 1) + Stride - 1).divide(Stride)
           .cast("long").as("g"))
       .select(col(id), col("p"), col("g"),
-        wh64(col(text).substr(col("off"), lit(win))).as("wh"))
+        wh64(col(text).substr(col("off"), lit(Win))).as("wh"))
       .withColumn("fp", min(col("wh")).over(bigWin))
       // windows starting past g−w are suffixes shorter than w — they
       // exist in the array path only when g < w (slice clamps); the
       // ordered path keeps exactly position 0 in that case
-      .filter(col("p") <= greatest(col("g") - w, lit(0)))
+      .filter(col("p") <= greatest(col("g") - WinnowW, lit(0)))
       .select(col(id), col("fp"))
       .distinct()
     val fps = smallFps.unionAll(bigFps)
@@ -331,12 +339,9 @@ object Clustering {
   def sharedWindowStarEdges(
       df: DataFrame,
       id: String,
-      text: String,
-      win: Int = 40,
-      stride: Int = 8,
-      maxWindowFreq: Int = 0): DataFrame = {
+      text: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    windowHashes(df, id, text, win, stride, maxWindowFreq)
+    windowHashes(df, id, text, maxWindowFreq = 0)
       .withColumn("hub", min(col(id)).over(Window.partitionBy(col("wh"))))
       .filter(col(id) =!= col("hub"))
       .select(col("hub").as("doc_a"), col(id).as("doc_b"))
@@ -350,8 +355,6 @@ object Clustering {
       df: DataFrame,
       id: String,
       text: String,
-      win: Int,
-      stride: Int,
       maxWindowFreq: Int): DataFrame = {
     // substring+hash are evaluated before the shuffle, so only
     // (id, 60-bit int64 hash) rows move — never the document text, and
@@ -371,18 +374,18 @@ object Clustering {
       conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     def windows(rows: DataFrame) = rows.select(
       col(id),
-      explode(sequence(lit(1), length(col(text)) - (win - 1), lit(stride))).as("off"),
+      explode(sequence(lit(1), length(col(text)) - (Win - 1), lit(Stride))).as("off"),
       col(text))
-    val eligible = df.filter(length(col(text)) >= win)
+    val eligible = df.filter(length(col(text)) >= Win)
     val small = eligible
       .filter(length(col(text)) <= bigDocChars)
       .select(
         col(id),
         explode(array_distinct(transform(
-          sequence(lit(1), length(col(text)) - (win - 1), lit(stride)),
-          off => wh64(col(text).substr(off, lit(win)))))).as("wh"))
+          sequence(lit(1), length(col(text)) - (Win - 1), lit(Stride)),
+          off => wh64(col(text).substr(off, lit(Win)))))).as("wh"))
     val big = windows(eligible.filter(length(col(text)) > bigDocChars))
-      .select(col(id), wh64(col(text).substr(col("off"), lit(win))).as("wh"))
+      .select(col(id), wh64(col(text).substr(col("off"), lit(Win))).as("wh"))
       .distinct()
     val hashed = small.unionAll(big)
     if (maxWindowFreq > 0) {

@@ -277,13 +277,16 @@ object Curation {
       .limit(k)
   }
 
+  /** The RRF rank offset of [[rrfFuse]]: the paper's 60. */
+  val RrfK: Int = 60
+
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher SIGIR'09) of
-    * labeled (id, rank) lists: fused(d) = Σ_arms ⌊10⁶/(rrfK + rank)⌋,
+    * labeled (id, rank) lists: fused(d) = Σ_arms ⌊10⁶/(RrfK + rank)⌋,
     * summed over the arms that retrieved d — exact integer floor
     * division, so the fused score is order-independent and
     * hash-comparable (the float 1/(k+r) sum would not be). Emits each
     * arm's rank alongside (0 = not retrieved by that arm) so the fused
-    * list is auditable. rrfK defaults to the paper's 60.
+    * list is auditable.
     *
     * Scale shape: arms are top-N lists (constant-size by construction),
     * so the union/aggregate is constant work per query regardless of
@@ -292,8 +295,7 @@ object Curation {
   def rrfFuse(
       arms: Seq[(String, DataFrame)],
       idCol: String,
-      k: Int,
-      rrfK: Int = 60): DataFrame = {
+      k: Int): DataFrame = {
     require(arms.nonEmpty, "rrfFuse needs at least one ranking arm")
     // arm names become column aliases (rank_<name>) — restrict them to
     // safe identifiers so a name with dots, spaces, or backticks can't
@@ -316,7 +318,7 @@ object Curation {
         .as(s"rank_$name")
     }
     tagged.groupBy(col(idCol))
-      .agg(sum(expr(s"1000000 DIV ($rrfK + rank)")).as("rrf_sc"), armRanks: _*)
+      .agg(sum(expr(s"1000000 DIV ($RrfK + rank)")).as("rrf_sc"), armRanks: _*)
       .orderBy(col("rrf_sc").desc, col(idCol))
       .limit(k)
   }
@@ -404,14 +406,13 @@ object Curation {
       terms: Seq[String],
       n: Int,
       k: Int,
-      rrfK: Int = 60,
       mu: Int = 2000): DataFrame =
     rrfFuse(
       Seq(
         "bm25" -> rankOf(bm25TopK(docs, idCol, textCol, terms, n), idCol, "score_sc"),
         "ql" -> rankOf(
           qlDirichletTopK(docs, idCol, textCol, terms, n, mu), idCol, "score_sc")),
-      idCol, k, rrfK)
+      idCol, k)
 
   // ─────────────────────────────────────────────────────────────────
   // Positional inverted index + exact phrase matching

@@ -62,6 +62,15 @@ object Dedup {
     md5(concat_ws("|", cols: _*))
   }
 
+  /** Signature length of every MinHash operator ([[minhashCandidates]],
+    * [[bandTable]], [[minhashJaccardEstimate]], the incremental dedup);
+    * the MinHash oracles read it from here.
+    */
+  val MinhashHashes: Int = 16
+
+  /** LSH band count of the MinHash operators that fix it. */
+  val MinhashBands: Int = 4
+
   /** MinHash-LSH candidate pairs: docs sharing at least one band bucket.
     * Returns distinct (doc_a < doc_b) id pairs.
     *
@@ -75,13 +84,12 @@ object Dedup {
       df: DataFrame,
       id: String,
       text: String,
-      numHashes: Int = 16,
-      bands: Int = 4,
+      bands: Int = MinhashBands,
       maxBucket: Int = 1000): DataFrame = {
     // signature build + banding + bucket cap all live in [[bandTable]]
     // (shared with the incremental-dedup index) so the banding scheme
     // has exactly one implementation
-    val capped = bandTable(df, id, text, numHashes, bands, maxBucket)
+    val capped = bandTable(df, id, text, bands, maxBucket)
     val a = capped.select(col(id).as("doc_a"), col("band"), col("bkey"))
     val b = capped.select(col(id).as("doc_b"), col("band"), col("bkey"))
     a.join(b, Seq("band", "bkey"))
@@ -92,20 +100,18 @@ object Dedup {
 
   /** MinHash Jaccard ESTIMATE for LSH candidate pairs: the fraction of
     * matching signature components. E[est] = true Jaccard (the classic
-    * MinHash property), with stderr ≈ √(J(1−J)/numHashes); fully
+    * MinHash property), with stderr ≈ √(J(1−J)/MinhashHashes); fully
     * deterministic here (md5-min signatures), so the estimate reproduces
     * bit-for-bit in the SQL oracle. At scale this is the cheap scorer
     * between candidate generation (bands) and any expensive exact
     * verifier: signatures are already materialized for banding, so
-    * scoring a pair is numHashes string compares — no token sets are
+    * scoring a pair is MinhashHashes string compares — no token sets are
     * ever re-read.
     */
   def minhashJaccardEstimate(
       df: DataFrame,
       id: String,
-      text: String,
-      numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
+      text: String): DataFrame = {
     // same cheap-predicate + parallelism-floor shape as [[bandTable]]
     // (a filter on the sig column would duplicate the signature
     // expression below the projection; the single-split scan would
@@ -113,18 +119,18 @@ object Dedup {
     val sigs = Spread.floor(
         df.select(col(id), col(text)).filter(length(trim(col(text))) > 0),
         col(id))
-      .select(col(id), minhashSig(col(text), numHashes).as("sig"))
-    val cand = minhashCandidates(df, id, text, numHashes, bands, maxBucket = 0)
+      .select(col(id), minhashSig(col(text), MinhashHashes).as("sig"))
+    val cand = minhashCandidates(df, id, text, maxBucket = 0)
     val a = sigs.select(col(id).as("doc_a"), col("sig").as("sig_a"))
     val b = sigs.select(col(id).as("doc_b"), col("sig").as("sig_b"))
-    val nMatch = (0 until numHashes)
+    val nMatch = (0 until MinhashHashes)
       .map(i => when(col("sig_a").getItem(i) === col("sig_b").getItem(i), 1).otherwise(0))
       .reduce(_ + _)
     cand
       .join(a, Seq("doc_a"))
       .join(b, Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (nMatch.cast("double") / numHashes).as("est_jaccard"))
+        (nMatch.cast("double") / MinhashHashes).as("est_jaccard"))
   }
 
   /** Exact n-gram (word n=1 shingle) Jaccard similarity for all pairs that
@@ -340,8 +346,8 @@ object Dedup {
       id: String,
       text: String,
       thresholdBp: Long,
-      n: Int = 5,
       maxShingleFreq: Int = 0): DataFrame = {
+    val n = 5
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0, 10000], got $thresholdBp")
     // native Shingles: the distinct ordered token n-grams of the text
@@ -407,9 +413,9 @@ object Dedup {
     * expression: one md5 per token per row instead of the 32-pass
     * interpreted bit-vote of [[simhashFoldExpr]] (same bits, ~10× faster).
     */
-  def simhashExpr(text: Column, bits: Int = SimhashBits): Column =
+  def simhashExpr(text: Column): Column =
     graft.functions.expressions.NativeExpressions.simhash(
-      array_distinct(tokens(text)), bits)
+      array_distinct(tokens(text)), SimhashBits)
 
   /** Reference formulation of [[simhashExpr]] in pure column algebra;
     * kept for A/B testing the native expression.
@@ -509,8 +515,8 @@ object Dedup {
       corpus: DataFrame,
       bench: DataFrame,
       id: String,
-      text: String,
-      n: Int = 5): DataFrame = {
+      text: String): DataFrame = {
+    val n = 5
     def grams(df: DataFrame) =
       df.select(col(id), explode(
         graft.functions.expressions.NativeExpressions
@@ -525,7 +531,7 @@ object Dedup {
       .withColumn("contam_bps", expr("n_contaminated * 10000 div n_grams"))
   }
 
-  /** `bits`-wide SimHash over the DISTINCT 3-gram shingles of a text —
+  /** 64-bit SimHash over the DISTINCT 3-gram shingles of a text —
     * the ORDER-SENSITIVE sketch. Unigram SimHash hashes the token set,
     * so a low-entropy vocabulary (every doc built from the same few
     * dozen words) collapses most of the corpus into a handful of
@@ -534,38 +540,38 @@ object Dedup {
     * one-pass expression; [[shingleSimhashFold]] is the column-algebra
     * A/B reference.
     */
-  def shingleSimhash(text: Column, bits: Int = 64): Column =
+  def shingleSimhash(text: Column): Column =
     graft.functions.expressions.NativeExpressions.shingleSimhash(
-      tokens(text), 3, bits)
+      tokens(text), 3, 64)
 
   /** Column-algebra reference formulation of [[shingleSimhash]]; kept
     * for A/B testing the native expression (~30× slower: interpreted
     * shingle materialization).
     */
-  def shingleSimhashFold(text: Column, bits: Int = 64): Column =
+  def shingleSimhashFold(text: Column): Column =
     graft.functions.expressions.NativeExpressions.simhash(
-      array_distinct(shingles3(text)), bits)
+      array_distinct(shingles3(text)), 64)
 
   /** Wide-bucket shingle-SimHash candidate pairs for downstream exact
     * verification (Levenshtein, Jaccard, …): pairs sharing any of
-    * `bands` bucket keys of `bits/bands` bits each over a `bits`-wide
+    * 4 bucket keys of 16 bits each over the 64-bit
     * [[shingleSimhash]]. Docs with fewer than 3 tokens carry no shingle
     * evidence and are excluded.
     *
-    * Scale shape: with the 64-bit / 4-band default the bucket space is
+    * Scale shape: with 64 bits in 4 bands the bucket space is
     * 2¹⁶ per band, and the order-sensitive sketch keeps bucket loads at
     * near-dup-cluster size (measured max 4 on a 5k-doc corpus whose
     * unigram-set sketch put 1/3 of all docs into ONE bucket) — candidate
     * volume tracks |true near-dups|, not |corpus|². Candidates are
-    * pigeonhole-complete for Hamming ≤ bands-1 and high-probability for
-    * moderate distances; callers define precision via their verifier, so
-    * no Hamming filter is applied here.
+    * pigeonhole-complete for Hamming ≤ 3 (one band stays clean) and
+    * high-probability for moderate distances; callers define precision
+    * via their verifier, so no Hamming filter is applied here.
     *
     * `maxBucketFreq > 0` drops buckets holding more than that many docs
     * before the pair join — the same guard as [[minhashCandidates]]'s
     * band cap and `Similarity.nearDupBanded(maxBandFreq)`: mass-
     * identical documents (undeduplicated replicas, boilerplate) put
-    * k-doc cliques into one bucket per band — k²·bands join rows no
+    * k-doc cliques into one bucket per band — k²·4 join rows no
     * sketch entropy dilutes (the r9 sf100 study measured the uncapped
     * q_edit_distance at 99× per 10× data from exactly this, the C(k,2)
     * clique-pair signature). Exact duplicates are the exact-dedup
@@ -575,14 +581,13 @@ object Dedup {
       df: DataFrame,
       id: String,
       text: String,
-      bits: Int = 64,
-      bands: Int = 4,
       maxBucketFreq: Int = 0): DataFrame = {
-    val w = bits / bands
-    val mask = if (w == 64) -1L else (1L << w) - 1
+    val bands = 4
+    val w = 64 / bands // bits per band of the 64-bit sketch
+    val mask = (1L << w) - 1
     val sh = df
       .filter(size(tokens(col(text))) >= 3)
-      .select(col(id), shingleSimhash(col(text), bits).as("simhash"))
+      .select(col(id), shingleSimhash(col(text)).as("simhash"))
     // all band keys from ONE evaluation of the sketch (a per-band union
     // would re-tokenize and re-hash the corpus `bands` times)
     val keys = array((0 until bands).map { bnd =>
@@ -682,14 +687,12 @@ object Dedup {
       batch: DataFrame,
       corpus: DataFrame,
       id: String,
-      text: String,
-      numHashes: Int = 16,
-      bands: Int = 4): DataFrame =
+      text: String): DataFrame =
     incrementalDedupAgainst(
       batch,
       fingerprintTable(corpus, id, text).withColumnRenamed(id, "cid"),
-      bandTable(corpus, id, text, numHashes, bands).withColumnRenamed(id, "cid"),
-      id, text, numHashes, bands)
+      bandTable(corpus, id, text).withColumnRenamed(id, "cid"),
+      id, text)
 
   /** (id, fp) token-set fingerprint table — the exact-dedup index an
     * incremental pipeline persists and appends to.
@@ -710,10 +713,9 @@ object Dedup {
       df: DataFrame,
       id: String,
       text: String,
-      numHashes: Int = 16,
-      bands: Int = 4,
+      bands: Int = MinhashBands,
       maxBucket: Int = 0): DataFrame = {
-    val r = numHashes / bands
+    val r = MinhashHashes / bands
     // per-row native signature: no explode, no aggregation — the only
     // shuffle left in candidate generation is the band-bucket join.
     // Tokenless docs (null sig) have no signature to band, exactly like
@@ -730,7 +732,7 @@ object Dedup {
     val sigs = Spread.floor(
         df.select(col(id), col(text)).filter(length(trim(col(text))) > 0),
         col(id))
-      .select(col(id), minhashSig(col(text), numHashes).as("sig"))
+      .select(col(id), minhashSig(col(text), MinhashHashes).as("sig"))
     // all band keys from ONE evaluation of the signature (a per-band
     // union would recompute the signatures `bands` times — same pattern
     // as simhashBucketCandidates)
@@ -762,14 +764,12 @@ object Dedup {
       corpusFp: DataFrame,
       corpusBands: DataFrame,
       id: String,
-      text: String,
-      numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
+      text: String): DataFrame = {
     val exact = fingerprintTable(batch, id, text)
       .join(corpusFp, Seq("fp"))
       .groupBy(col(id))
       .agg(min(col("cid")).as("exact_id"))
-    val near = bandTable(batch, id, text, numHashes, bands)
+    val near = bandTable(batch, id, text)
       .join(corpusBands, Seq("band", "bkey"))
       .groupBy(col(id))
       .agg(min(col("cid")).as("near_id"))

@@ -19,37 +19,37 @@ import graft.functions.expressions.NativeExpressions
   * graph centrality is part of the training-data extension surface.
   *
   * Everything is FIXED-POINT integer arithmetic (ranks scaled by
-  * `scale`, damping in basis points, contributions via integer `DIV`)
+  * [[Graph.Scale]], damping in basis points, contributions via integer `DIV`)
   * so the iteration is bit-deterministic and a SQL oracle can replay it
   * exactly — the same discipline as the catalog's k-means / DSIR / KN
   * queries. Integer floors leak ≤ 1 rank unit per (edge, iteration):
-  * at the default scale of 10⁶ that is a ≤ 10⁻⁴ relative perturbation
+  * at the scale of 10⁶ that is a ≤ 10⁻⁴ relative perturbation
   * for realistic degrees, far below any ranking consumer's resolution.
   */
 object Graph {
 
   /** Damping factor 0.85 in basis points — the standard PageRank d. */
-  val DefaultDampingBp: Long = 8500L
+  val DampingBp: Long = 8500L
 
-  /** Default rank fixed-point scale: rank 1.0 == 10⁶ units. */
-  val DefaultScale: Long = 1000000L
+  /** Rank fixed-point scale: rank 1.0 == 10⁶ units. */
+  val Scale: Long = 1000000L
 
   /** Fixed-iteration weighted PageRank.
     *
     * `edges` must have columns (src, dst, w) with positive integral
     * weights. Iteration (all integer):
     *
-    *   rk₀(v)   = scale
+    *   rk₀(v)   = Scale
     *   inflow(v) = Σ_{u→v} (rkᵢ(u)·w(u,v)) DIV wout(u)
-    *   rkᵢ₊₁(v) = ((10⁴−d)·scale) DIV 10⁴ + (d·inflow(v)) DIV 10⁴
+    *   rkᵢ₊₁(v) = ((10⁴−d)·Scale) DIV 10⁴ + (d·inflow(v)) DIV 10⁴
     *
     * Nodes are the union of edge endpoints; sink nodes (no out-edges)
     * keep receiving rank but redistribute none — the "leaky" PageRank
     * variant, which preserves ranking order and is exactly what the
     * oracle replays. Undirected graphs (each edge in both directions,
     * e.g. [[textRankEdges]]) have no sinks, and on them a regular graph
-    * is an exact fixed point: inflow ≡ scale, so every iteration
-    * returns scale on every node (spec-pinned).
+    * is an exact fixed point: inflow ≡ Scale, so every iteration
+    * returns Scale on every node (spec-pinned).
     *
     * Scale shape: the edge table joins the rank table on `src` (hash
     * shuffle on node id) and re-aggregates on `dst` per iteration —
@@ -63,18 +63,14 @@ object Graph {
     * production centrality runs use 3-20 iterations, and the spec pins
     * flatness at 16+ via the `onRound` probe). Overflow headroom:
     * needs max-rank · max-weight < 2⁶³; rank mass is bounded by
-    * n_nodes·scale, so vocab-sized graphs (≤10⁹ weight, ≤10⁷·scale
+    * n_nodes·Scale, so vocab-sized graphs (≤10⁹ weight, ≤10⁷·Scale
     * rank) sit 4 orders of magnitude inside the bound.
     */
   def pageRank(
       edges: DataFrame,
       iters: Int,
-      dampingBp: Long = DefaultDampingBp,
-      scale: Long = DefaultScale,
       onRound: RoundProbe = NoProbe): DataFrame = Checkpoints.scope { cp =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampingBp >= 0 && dampingBp <= 10000,
-      s"dampingBp must be in [0, 10000], got $dampingBp")
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("wout"))
     // static sides are NOT checkpointed: within one fused window the
     // repeated `ew`/`nodes` subtrees canonicalize to the SAME exchanges
@@ -86,8 +82,8 @@ object Graph {
     val ew = edges.join(outw, Seq("src"))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
-    val teleport = ((10000L - dampingBp) * scale) / 10000L
-    var ranks = nodes.select(col("node"), lit(scale).as("rk"))
+    val teleport = ((10000L - DampingBp) * Scale) / 10000L
+    var ranks = nodes.select(col("node"), lit(Scale).as("rk"))
     for (i <- 1 to iters) {
       val t0 = System.nanoTime()
       val inflow = ew
@@ -97,7 +93,7 @@ object Graph {
       ranks = nodes.join(inflow, Seq("node"), "left")
         .select(col("node"),
           (lit(teleport) +
-            expr(s"($dampingBp * coalesce(inflow, 0L)) DIV 10000")).as("rk"))
+            expr(s"($DampingBp * coalesce(inflow, 0L)) DIV 10000")).as("rk"))
       // lineage cut every [[CheckpointEvery]] iterations: short
       // centrality runs (TextRank's 3) keep ONE fully-fused plan —
       // Catalyst optimizes across the unrolled window, measured 4x

@@ -103,10 +103,11 @@ object Quality {
   }
 
   /** Gopher-style heuristic document filter (A1.1's quality family,
-    * thresholds scaled to short synthetic documents): word-count bounds,
-    * mean-word-length bounds, alphabetic-token fraction, and a minimum
-    * stopword count. Emits the per-rule measurements, each rule's verdict,
-    * and the conjunction — keeping the measurements in the output is what
+    * thresholds scaled to short synthetic documents): 20–1000 words,
+    * mean word length 3–10 chars, ≥ 80% alphabetic tokens and ≥ 2
+    * stopwords — the thresholds the catalog's oracle hard-codes too.
+    * Emits the per-rule measurements, each rule's verdict, and the
+    * conjunction — keeping the measurements in the output is what
     * makes threshold sweeps a filter-free re-aggregation instead of a
     * corpus re-scan.
     *
@@ -116,13 +117,7 @@ object Quality {
   def gopherQuality(
       df: DataFrame,
       id: String,
-      text: String,
-      minWords: Int = 20,
-      maxWords: Int = 1000,
-      minWordLenBp: Long = 30000L,
-      maxWordLenBp: Long = 100000L,
-      minAlphaBp: Long = 8000L,
-      minStopwords: Int = 2): DataFrame = {
+      text: String): DataFrame = {
     val tk = tokens(col(text))
     val base = df.select(
       col(id),
@@ -135,12 +130,11 @@ object Quality {
       .withColumn("mean_word_len_bp", bp(col("sum_len"), col("n_words")))
       .withColumn("alpha_bp", bp(col("n_alpha"), col("n_words")))
       .withColumn("ok_words",
-        col("n_words") >= minWords && col("n_words") <= maxWords)
+        col("n_words") >= 20 && col("n_words") <= 1000)
       .withColumn("ok_word_len",
-        col("mean_word_len_bp") >= minWordLenBp &&
-          col("mean_word_len_bp") <= maxWordLenBp)
-      .withColumn("ok_alpha", col("alpha_bp") >= minAlphaBp)
-      .withColumn("ok_stop", col("n_stop") >= minStopwords)
+        col("mean_word_len_bp") >= 30000L && col("mean_word_len_bp") <= 100000L)
+      .withColumn("ok_alpha", col("alpha_bp") >= 8000L)
+      .withColumn("ok_stop", col("n_stop") >= 2)
       .withColumn("passes",
         col("ok_words") && col("ok_word_len") && col("ok_alpha") && col("ok_stop"))
       .drop("sum_len", "n_alpha")
@@ -333,7 +327,7 @@ object Quality {
     * disjoint vocabularies approach the 10⁶-micro-bit maximum.
     *
     * Scale shape: one corpus scan builds (source, token, count); the
-    * source list is collected (bounded by `maxSources` — a limit+1
+    * source list is collected (bounded by [[MaxJsSources]] — a limit+1
     * contract check, sources are a provenance dimension) and the pair
     * table built driver-side, so no theta join ever plans; per-pair
     * per-type rows come from ONE equi-join of the count table onto the
@@ -344,9 +338,8 @@ object Quality {
   def jsDivergenceBySource(
       docs: DataFrame,
       sourceCol: String,
-      textCol: String,
-      maxSources: Int = MaxJsSources): DataFrame = {
-    val srcs = collectSources(docs, sourceCol, maxSources)
+      textCol: String): DataFrame = {
+    val srcs = collectSources(docs, sourceCol)
     jsdOverPairs(docs, sourceCol, textCol,
       for { i <- srcs.indices; j <- (i + 1) until srcs.length }
         yield (srcs(i), srcs(j)))
@@ -365,9 +358,8 @@ object Quality {
       docs: DataFrame,
       sourceCol: String,
       textCol: String,
-      refSource: String,
-      maxSources: Int = MaxJsSources): DataFrame = {
-    val srcs = collectSources(docs, sourceCol, maxSources)
+      refSource: String): DataFrame = {
+    val srcs = collectSources(docs, sourceCol)
     require(srcs.contains(refSource),
       s"refSource '$refSource' is not among the input's sources: " +
         srcs.mkString("[", ", ", "]"))
@@ -378,22 +370,21 @@ object Quality {
   /** The bounded source dimension both JSD entry points collect — a
     * column-pruned distinct over the source column ONLY (collecting
     * from the tokenization aggregate would run it a second time just to
-    * read ≤ maxSources names). Null sources are dropped explicitly
+    * read ≤ MaxJsSources names). Null sources are dropped explicitly
     * BEFORE the collect: a null provenance has no distribution to
     * compare (and would otherwise NPE the sort here while silently
     * vanishing from the pair table's inner joins).
     */
-  private def collectSources(
-      docs: DataFrame, sourceCol: String, maxSources: Int): Seq[String] = {
+  private def collectSources(docs: DataFrame, sourceCol: String): Seq[String] = {
     val srcs = docs
       .select(col(sourceCol).cast("string").as("src"))
       .filter(col("src").isNotNull)
       .distinct()
-      .limit(maxSources + 1).collect().map(_.getString(0)).toSeq.sorted
-    require(srcs.length <= maxSources,
-      s"jsDivergenceBySource bounds the source dimension at maxSources=" +
-        s"$maxSources and the input exceeds it — sources are corpus " +
-        "provenances, not a data-scale key; raise maxSources deliberately")
+      .limit(MaxJsSources + 1).collect().map(_.getString(0)).toSeq.sorted
+    require(srcs.length <= MaxJsSources,
+      s"jsDivergenceBySource bounds the source dimension at MaxJsSources=" +
+        s"$MaxJsSources and the input exceeds it — sources are corpus " +
+        "provenances, not a data-scale key; raise MaxJsSources deliberately")
     srcs
   }
 
@@ -460,7 +451,7 @@ object Quality {
     * the two bp means, 0 when both are 0. One row:
     * (n_docs, bcubed_p_bp, bcubed_r_bp, bcubed_f1_bp).
     *
-    * Inputs are (docCol, clusterCol) assignment tables — compose with
+    * Inputs are (doc_id, cluster_id) assignment tables — compose with
     * [[graft.functions.Clustering.clustersOf]] over any candidate
     * generator for `pred` and over exact-verified pairs for `truth`.
     * Docs missing from either side are dropped (inner join): the metric
@@ -473,11 +464,9 @@ object Quality {
     */
   def bcubed(
       pred: DataFrame,
-      truth: DataFrame,
-      docCol: String = "doc_id",
-      clusterCol: String = "cluster_id"): DataFrame = {
-    val a = pred.select(col(docCol).as("_d"), col(clusterCol).as("ca"))
-    val b = truth.select(col(docCol).as("_d"), col(clusterCol).as("cb"))
+      truth: DataFrame): DataFrame = {
+    val a = pred.select(col("doc_id").as("_d"), col("cluster_id").as("ca"))
+    val b = truth.select(col("doc_id").as("_d"), col("cluster_id").as("cb"))
     val j = a.join(b, "_d")
     val szA   = j.groupBy(col("ca")).agg(count(lit(1)).as("na"))
     val szB   = j.groupBy(col("cb")).agg(count(lit(1)).as("nb"))

@@ -23,6 +23,19 @@ import org.apache.spark.sql.graftbridge.Checkpoints
   */
 object Similarity {
 
+  /** Decimals every cosine similarity is rounded to before it is ranked,
+    * thresholded or tie-broken: the catalog's cross-engine rule (double
+    * summation order varies in the last ulp, 4 dp does not).
+    */
+  val CosineDp: Int = 4
+
+  /** Lloyd rounds of every trained quantizer: the IVF k-means centroids
+    * ([[kmeansCentroids]]) and the PQ codebooks ([[pqTrain]], the
+    * residual codebooks). The IVF and PQ oracles in [[graft.Queries]]
+    * unroll the same count.
+    */
+  val LloydIters: Int = 2
+
   /** Cast an array<float> column to array<double> (exact widening). */
   def toDouble(v: Column): Column = v.cast("array<double>")
 
@@ -50,7 +63,7 @@ object Similarity {
     dot(a, b) / sqrt(norm2(a) * norm2(b))
 
   /** Brute-force cosine top-k: for every query vector, the k most similar
-    * corpus vectors. Similarities are rounded to `roundTo` decimals before
+    * corpus vectors. Similarities are rounded to [[CosineDp]] decimals before
     * ranking and ties broken by corpus id, making the result deterministic
     * across engines (double summation order varies in the last ulp).
     *
@@ -62,8 +75,7 @@ object Similarity {
       corpus: DataFrame,
       id: String,
       vec: String,
-      k: Int,
-      roundTo: Int = 4): DataFrame = {
+      k: Int): DataFrame = {
     val q = queries.select(
       col(id).as("query_id"),
       toDouble(col(vec)).as("qv"))
@@ -75,7 +87,7 @@ object Similarity {
       .select(
         col("query_id"),
         col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), roundTo).as("cos_sim"))
+        round(cosine(col("qv"), col("cv")), CosineDp).as("cos_sim"))
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     scored
       .withColumn("rank", row_number().over(w))
@@ -145,7 +157,7 @@ object Similarity {
       a.join(b, "query_id")
         .filter(col("a") =!= col("b"))
         .select(col("query_id"), col("a"), col("b"),
-          round(round(cosine(col("av"), col("bv")), 4) * 10000)
+          round(round(cosine(col("av"), col("bv")), CosineDp) * 10000)
             .cast("long").as("sim_sc")))
     val byScore = Window.partitionBy(col("query_id"))
       .orderBy(col("score_sc").desc, col("neighbor_id"))
@@ -210,15 +222,14 @@ object Similarity {
       evalSet: DataFrame,
       id: String,
       vec: String,
-      threshold: Double,
-      roundTo: Int = 4): DataFrame = {
+      threshold: Double): DataFrame = {
     val c = corpus.select(col(id), toDouble(col(vec)).as("v"))
       .withColumn("vn2", norm2(col("v")))
     val e = evalSet.select(col(id).as("eval_id"), toDouble(col(vec)).as("ev"))
       .withColumn("en2", norm2(col("ev")))
     c.join(broadcast(e))
       .withColumn("sim",
-        round(dot(col("v"), col("ev")) / sqrt(col("vn2") * col("en2")), roundTo))
+        round(dot(col("v"), col("ev")) / sqrt(col("vn2") * col("en2")), CosineDp))
       .groupBy(col(id))
       .agg(
         max(col("sim")).as("max_sim"),
@@ -238,24 +249,23 @@ object Similarity {
       df: DataFrame,
       id: String,
       vec: String,
-      threshold: Double,
-      roundTo: Int = 4): DataFrame = {
+      threshold: Double): DataFrame = {
     val v = df.select(col(id), toDouble(col(vec)).as("v"), norm2(toDouble(col(vec))).as("n2"))
     val a = v.select(col(id).as("vec_a"), col("v").as("va"), col("n2").as("na"))
     val b = v.select(col(id).as("vec_b"), col("v").as("vb"), col("n2").as("nb"))
     a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim", round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), roundTo))
+      .withColumn("cos_sim", round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
       .filter(col("cos_sim") >= threshold)
       .select("vec_a", "vec_b", "cos_sim")
   }
 
   /** The SRP hyperplanes as plain doubles — used to mirror [[srpCode]] in
     * the SQL oracle (shortest-round-trip double literals parse back to
-    * the identical bits in any engine). `fromPlane` selects a contiguous
-    * run of the global deterministic plane sequence (for banding).
+    * the identical bits in any engine): the first `bitsB` planes of the
+    * global deterministic plane sequence.
     */
-  def srpPlanes(dims: Int, bitsB: Int, fromPlane: Int = 0): Seq[Seq[Double]] =
-    (fromPlane until fromPlane + bitsB).map(p => (0 until dims).map(d => planeComponent(p, d)))
+  def srpPlanes(dims: Int, bitsB: Int): Seq[Seq[Double]] =
+    (0 until bitsB).map(p => (0 until dims).map(d => planeComponent(p, d)))
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * md5-derived value in [-0.5, 0.5). Engine-independent, no RNG state.
@@ -404,8 +414,7 @@ object Similarity {
       id: String,
       vec: String,
       dims: Int,
-      numCells: Int = 16,
-      iters: Int = 2): DataFrame = {
+      numCells: Int = 16): DataFrame = {
     val base = corpus
       .select(col(id).as("cid"), quantized(toDouble(col(vec))).as("qv"))
       .withColumn("qn2", norm2(col("qv")))
@@ -414,7 +423,7 @@ object Similarity {
       .limit(numCells)
       .select(col("cid").as("cell"), col("qv").as("cv"))
     var cents = seeds.withColumn("cn2", norm2(col("cv")))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to LloydIters) {
       val assigned = assignToCells(base, cents)
       val sums = (0 until dims).map(dd => sum(col("qv")(dd)).as(s"s$dd"))
       cents = assigned
@@ -465,7 +474,7 @@ object Similarity {
     * search that [[knnCosine]] is the brute-force baseline for.
     *
     * Index build: [[kmeansCentroids]] trains `numCells` deterministic
-    * Lloyd-k-means centroids (hash-stratified seeds, `iters` update
+    * Lloyd-k-means centroids (hash-stratified seeds, [[LloydIters]] update
     * rounds) in quantized space; every corpus vector is assigned to its
     * most-cosine-similar centroid. Search: each query probes its `nProbe`
     * nearest cells and ranks only the vectors in those cells by exact
@@ -490,11 +499,10 @@ object Similarity {
       k: Int,
       numCells: Int = 16,
       nProbe: Int = 4,
-      iters: Int = 2,
       dims: Int = 64): DataFrame = {
-    val cn = kmeansCentroids(corpus, id, vec, dims, numCells, iters)
+    val cn = kmeansCentroids(corpus, id, vec, dims, numCells)
     // The trained centroid table is ≤ numCells rows but its lineage holds
-    // `iters` full corpus passes; ivfSearch references it twice (corpus
+    // LloydIters full corpus passes; ivfSearch references it twice (corpus
     // assignment + query probes), so left lazy the training would run
     // once per reference. Materializing it ([[localModel]]) is the
     // index-build step — the same driver-side collect any broadcast of
@@ -522,10 +530,9 @@ object Similarity {
       id: String,
       vec: String,
       dims: Int = 64,
-      numCells: Int = 16,
-      iters: Int = 2): DataFrame =
+      numCells: Int = 16): DataFrame =
     assignWithModel(corpus, id, vec,
-      kmeansCentroids(corpus, id, vec, dims, numCells, iters))
+      kmeansCentroids(corpus, id, vec, dims, numCells))
 
   /** [[cellAssignments]] against an ALREADY-TRAINED centroid table —
     * the serving shape: the model is read from a persisted index (or
@@ -546,7 +553,7 @@ object Similarity {
 
   /** The √N cell-count rule [[semanticDedup]] auto-sizes with (numCells
     * = 0): within-cell verify costs O(N²/cells · d) while k-means
-    * assignment costs O(N · cells · d · iters), so the total is
+    * assignment costs O(N · cells · d · LloydIters), so the total is
     * minimized at cells ≈ √N — and the EXPONENT drops from the fixed-
     * cell quadratic to N^1.5 (measured: the fixed-16-cell catalog
     * parameterization read 33×/decade at sf10 under materialization;
@@ -596,15 +603,14 @@ object Similarity {
       vec: String,
       threshold: Double,
       dims: Int = 64,
-      numCells: Int = 0,
-      iters: Int = 2): DataFrame = Checkpoints.scope { cp =>
+      numCells: Int = 0): DataFrame = Checkpoints.scope { cp =>
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
     // the assignment is referenced three times (both sides of the
     // within-cell pair join + the final keep/left join) — checkpoint it
     // so it is computed once, exactly as production would persist the
     // cell-partitioned assignment before the verify
-    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells, iters),
+    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells),
       eager = false)
     val a = asg.select(
       col("cid").as("doc_a"), col("cell"),
@@ -615,7 +621,7 @@ object Similarity {
     val near = a.join(b, Seq("cell"))
       .filter(col("doc_a") < col("doc_b"))
       .withColumn("cos",
-        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 4))
+        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
       .filter(col("cos") >= threshold)
     dedupDecision(asg, near, id)
   }
@@ -681,7 +687,6 @@ object Similarity {
       threshold: Double,
       dims: Int = 64,
       numCells: Int = 0,
-      iters: Int = 2,
       maxHamming: Int = -1): DataFrame = Checkpoints.scope { cp =>
     require(threshold >= 0.8,
       s"SRP-code prefiltering is only recall-safe at high thresholds " +
@@ -699,7 +704,7 @@ object Similarity {
       }
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
-    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells, iters)
+    val asg = cp.checkpoint(cellAssignments(corpus, id, vec, dims, cells)
       .withColumn("code", graft.functions.expressions.NativeExpressions
         .srpBank(col("v"), dims, bitsPerBand, numBands)), eager = false)
     val a = asg.select(col("cid").as("doc_a"), col("cell"), col("code").as("ca"))
@@ -718,7 +723,7 @@ object Similarity {
       .join(av, Seq("doc_a"))
       .join(bv, Seq("doc_b"))
       .withColumn("cos",
-        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 4))
+        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
       .filter(col("cos") >= threshold)
     dedupDecision(asg, near, id)
   }
@@ -773,7 +778,7 @@ object Similarity {
     broadcast(probes)
       .join(assigned, Seq("cell"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("v")) / sqrt(col("qn2") * col("vn2")), 4))
+        round(dot(col("qv"), col("v")) / sqrt(col("qn2") * col("vn2")), CosineDp))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("cid"))))
       .filter(col("rank") <= k)
@@ -803,7 +808,7 @@ object Similarity {
     (if (exact) qs.withColumn("qn2", norm2(col("qv0"))) else qs)
       .join(broadcast(cn))
       .withColumn("psim",
-        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), 4))
+        round(dot(col("pqv"), col("cv")) / sqrt(col("pqn2") * col("cn2")), CosineDp))
       .withColumn("prn", row_number().over(
         Window.partitionBy(qid).orderBy(col("psim").desc, col("cell"))))
   }
@@ -814,7 +819,7 @@ object Similarity {
     * Each vector is coded with `numBands` independent `bitsPerBand`-bit SRP
     * codes (bands `j` uses global planes `[j*bitsPerBand, (j+1)*bitsPerBand)`);
     * candidates are pairs sharing ANY band's full code; candidates are then
-    * exact-verified (`cosine` rounded to `roundTo` ≥ `threshold`) and
+    * exact-verified (`cosine` rounded to [[CosineDp]] ≥ `threshold`) and
     * dedup'd. The completeness guarantee is the SimHash pigeonhole
     * (Manku et al., WWW'07, applied to SRP codes): a pair whose
     * `numBands*bitsPerBand`-plane codes differ in at most `numBands - 1`
@@ -849,7 +854,7 @@ object Similarity {
     * near-dups (measured in the 10× scaling study: ~49k random
     * candidates at 20k vectors with 16-bit bands). Pass
     * `bitsPerBand = 0` to auto-size via [[autoBitsPerBand]]
-    * (⌈log₂ n⌉ + slack, one narrow count of the input) — the floor then
+    * (⌈log₂ n⌉ + 6, one narrow count of the input) — the floor then
     * stays LINEAR in n at every scale. Recall at true near-dup
     * thresholds is unaffected: per-plane agreement ≈ 0.994 at cos 0.997
     * makes P(no band collides) < 1e-12 for any bits ≤ 48.
@@ -861,13 +866,12 @@ object Similarity {
       dims: Int,
       threshold: Double,
       bitsPerBand: Int = 16,
-      numBands: Int = 16,
-      roundTo: Int = 4,
       maxBandFreq: Int = 0): DataFrame = {
+    val numBands = 16
     val base = df.select(col(id), toDouble(col(vec)).as("v"))
     val bits =
       if (bitsPerBand > 0) bitsPerBand
-      else autoBitsPerBand(base.select(col(id)).count(), numBands)
+      else autoBitsPerBand(base.select(col(id)).count())
     val codedAll = base
       .withColumn("codes",
         graft.functions.expressions.NativeExpressions
@@ -902,23 +906,28 @@ object Similarity {
       .join(vecs.select(col(id).as("vec_b"), col("v").as("vb"), col("n2").as("nb")),
         Seq("vec_b"))
       .withColumn("cos_sim",
-        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), roundTo))
+        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
       .filter(col("cos_sim") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos_sim"))
   }
 
   /** Band width for [[nearDupBanded]] sized to the corpus count: with
-    * `bits = ⌈log₂ n⌉ + slack`, expected random band collisions are
-    * n²·numBands/2^(bits+1) ≈ n·numBands/2^(slack+1) — linear in n at
-    * every scale (≈ n/8 at the defaults) instead of the quadratic floor
+    * `bits = ⌈log₂ n⌉ + 6`, expected random band collisions are
+    * n²·numBands/2^(bits+1) ≈ n·numBands/2^7 — linear in n at
+    * every scale (≈ n/8 at its 16 bands) instead of the quadratic floor
     * a fixed width hits. Clamped to [16, 48]: 16 matches the historical
     * default at small corpora (the planted-pair oracle regime), 48 keeps
     * the packed code well inside an int64.
     */
-  def autoBitsPerBand(n: Long, numBands: Int = 16, slack: Int = 6): Int = {
+  def autoBitsPerBand(n: Long): Int = {
     val ceilLog2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-    math.min(48, math.max(16, ceilLog2 + slack))
+    math.min(48, math.max(16, ceilLog2 + 6))
   }
+
+  /** Bands per swept width in [[bandWidthSweep]]; its oracle reads it
+    * from here.
+    */
+  val SweepBands: Int = 8
 
   /** Band-width sensitivity sweep for [[nearDupBanded]]: for each
     * `bitsPerBand` in `widths`, one row
@@ -926,7 +935,7 @@ object Similarity {
     * band-collision candidate pairs and how many of them exact-verify at
     * `threshold`. This makes the sizing rule [[autoBitsPerBand]] encodes
     * oracle-OBSERVABLE instead of scaladoc folklore: as bits grow, the
-    * random-candidate floor n²·numBands/2^bits collapses while
+    * random-candidate floor n²·SweepBands/2^bits collapses while
     * n_true_found stays flat (per-plane agreement at true near-dup
     * cosines keeps P(no clean band) negligible at every swept width), so
     * the knee of the candidates curve is the economical width.
@@ -943,16 +952,14 @@ object Similarity {
       vec: String,
       dims: Int,
       threshold: Double,
-      widths: Seq[Int],
-      numBands: Int = 8,
-      roundTo: Int = 4): DataFrame = {
+      widths: Seq[Int]): DataFrame = {
     val base = df.select(col(id), toDouble(col(vec)).as("v"))
     val vecs = base.select(col(id), col("v"), norm2(col("v")).as("n2"))
     widths.map { bits =>
       val coded = base
         .withColumn("codes",
           graft.functions.expressions.NativeExpressions
-            .srpBank(col("v"), dims, bits, numBands))
+            .srpBank(col("v"), dims, bits, SweepBands))
         .select(col(id), posexplode(col("codes")).as(Seq("band", "bcode")))
       val a = coded.select(col(id).as("vec_a"), col("band"), col("bcode"))
       val b = coded.select(col(id).as("vec_b"), col("band"), col("bcode"))
@@ -966,7 +973,7 @@ object Similarity {
         .join(vecs.select(col(id).as("vec_b"), col("v").as("vb"), col("n2").as("nb")),
           Seq("vec_b"))
         .withColumn("cos_sim",
-          round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), roundTo))
+          round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
         .agg(
           count(lit(1)).as("n_candidates"),
           coalesce(sum(when(col("cos_sim") >= threshold, 1L).otherwise(0L)), lit(0L))
@@ -1016,8 +1023,7 @@ object Similarity {
       dims: Int,
       threshold: Double,
       bitsPerBand: Int = 16,
-      numBands: Int = 16,
-      roundTo: Int = 4): DataFrame = {
+      numBands: Int = 16): DataFrame = {
     val (bVecs, bCodes) = srpIndexTables(batch, id, vec, dims, bitsPerBand, numBands)
     val cand = bCodes
       .join(
@@ -1032,7 +1038,7 @@ object Similarity {
           col("cid").as("ccid"), col("v").as("cv"), col("vn2").as("cn2")),
         Seq("ccid"))
       .withColumn("cos",
-        round(dot(col("v"), col("cv")) / sqrt(col("vn2") * col("cn2")), roundTo))
+        round(dot(col("v"), col("cv")) / sqrt(col("vn2") * col("cn2")), CosineDp))
       .filter(col("cos") >= threshold)
     val agg = verified.groupBy(col("cid"))
       .agg(min(col("ccid")).as("match_id"))
@@ -1105,15 +1111,13 @@ object Similarity {
       vec: String,
       dims: Int,
       numCells: Int,
-      ivfIters: Int,
       numSub: Int,
-      codesPerSub: Int,
-      pqIters: Int): (DataFrame, Array[Seq[(Long, Array[Long])]]) = {
+      codesPerSub: Int): (DataFrame, Array[Seq[(Long, Array[Long])]]) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val cnF = Future(localModel(kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters)))
+    val cnF = Future(localModel(kmeansCentroids(corpus, id, vec, dims, numCells)))
     val booksF = Future(
-      pqTrain(corpus, id, vec, dims, numSub, codesPerSub, pqIters))
+      pqTrain(corpus, id, vec, dims, numSub, codesPerSub))
     (Await.result(cnF, scala.concurrent.duration.Duration.Inf),
       Await.result(booksF, scala.concurrent.duration.Duration.Inf))
   }
@@ -1137,10 +1141,9 @@ object Similarity {
       vec: String,
       dims: Int = 64,
       numSub: Int = 4,
-      codesPerSub: Int = 16,
-      iters: Int = 2): Array[Seq[(Long, Array[Long])]] = {
+      codesPerSub: Int = 16): Array[Seq[(Long, Array[Long])]] = {
     require(dims % numSub == 0, s"dims=$dims not divisible by numSub=$numSub")
-    pqTrainOnBase(pqBase(corpus, id, vec), dims / numSub, numSub, codesPerSub, iters)
+    pqTrainOnBase(pqBase(corpus, id, vec), dims / numSub, numSub, codesPerSub)
   }
 
   /** [[pqTrain]] over an ALREADY-QUANTIZED `(cid, qv: array<long>)`
@@ -1154,8 +1157,7 @@ object Similarity {
       base: DataFrame,
       sub: Int,
       numSub: Int,
-      codesPerSub: Int,
-      iters: Int): Array[Seq[(Long, Array[Long])]] = {
+      codesPerSub: Int): Array[Seq[(Long, Array[Long])]] = {
     val seeds = base
       .orderBy(md5(col("cid").cast("string")), col("cid"))
       .limit(codesPerSub)
@@ -1164,7 +1166,7 @@ object Similarity {
       seeds.toSeq.map(r => (r.getLong(0),
         r.getSeq[Long](1).slice(mm * sub, (mm + 1) * sub).toArray))
     }
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to LloydIters) {
       val sums = (0 until sub).map(i => sum(col("sv")(i)).as(s"s$i"))
       val upd = base
         .withColumn("a", pqAssign(col("qv"), books, sub))
@@ -1241,7 +1243,7 @@ object Similarity {
     * argmin projection, and the update aggregates `numSub` rows per
     * vector down to ≤ numSub·codesPerSub rows with map-side partials.
     * The final encode is a single shuffle-free projection. Total:
-    * `iters` + 1 corpus scans, no corpus shuffle anywhere.
+    * [[LloydIters]] + 1 corpus scans, no corpus shuffle anywhere.
     *
     * Returns (vec_id, code0…code{numSub−1}, qerr) with `qerr` the exact
     * int64 squared quantization error of the encoded vector.
@@ -1252,9 +1254,8 @@ object Similarity {
       vec: String,
       dims: Int = 64,
       numSub: Int = 4,
-      codesPerSub: Int = 16,
-      iters: Int = 2): DataFrame = {
-    val books = pqTrain(corpus, id, vec, dims, numSub, codesPerSub, iters)
+      codesPerSub: Int = 16): DataFrame = {
+    val books = pqTrain(corpus, id, vec, dims, numSub, codesPerSub)
     pqEncodeWith(pqBase(corpus, id, vec), books, dims / numSub)
   }
 
@@ -1344,11 +1345,10 @@ object Similarity {
       k: Int = 10,
       dims: Int = 64,
       numSub: Int = 4,
-      codesPerSub: Int = 16,
-      iters: Int = 2): DataFrame = {
+      codesPerSub: Int = 16): DataFrame = {
     val sub = dims / numSub
     val qRows = collectPqQueries(queries, id, vec) // fail fast before training
-    val books = pqTrain(corpus, id, vec, dims, numSub, codesPerSub, iters)
+    val books = pqTrain(corpus, id, vec, dims, numSub, codesPerSub)
     val codes = pqEncodeWith(pqBase(corpus, id, vec), books, sub)
     val qStructs = qRows.map { case (qid, qv) =>
       val adc = adcTables(qv, books, sub).zipWithIndex.map { case (tbl, mm) =>
@@ -1406,17 +1406,15 @@ object Similarity {
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
       numCells: Int = 16,
-      nProbe: Int = 4,
-      ivfIters: Int = 2): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     val qRows = collectPqQueries(queries, id, vec) // fail fast before training
 
     // coarse quantizer (trained IVF centroids, ≤ numCells rows driver-
     // side) and fine quantizer (PQ codebooks, ≤ numSub × codesPerSub)
     // trained concurrently — independent chains, see [[trainIvfAndPq]]
     val (localCn, books) = trainIvfAndPq(
-      corpus, id, vec, dims, numCells, ivfIters, numSub, codesPerSub, pqIters)
+      corpus, id, vec, dims, numCells, numSub, codesPerSub)
 
     // corpus index: ONE pass assigns each vector to its IVF cell
     // (broadcast argmax) AND encodes its PQ codes (literal-codebook
@@ -1533,12 +1531,15 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("qid"), col("neighbor_id"), col("adc"), col("rank"))
 
+  /** Candidate multiple of [[ivfPqAnnRerank]]: k′ = RerankFactor × k. */
+  val RerankFactor: Int = 4
+
   /** IVF-PQ search with exact re-ranking (Jégou et al. TPAMI'11 §V-C):
     * the ADC scores that rank candidates inside [[ivfPqAnn]] are
     * quantization APPROXIMATIONS — the final ordering can be wrong
     * within a few rank positions even when the true neighbor set is
     * probed. The §V-C refinement takes a candidate top-k′ (k′ =
-    * `rerankFactor` × k) from the probe-limited ADC search, joins back
+    * [[RerankFactor]] × k) from the probe-limited ADC search, joins back
     * ONLY those k′ candidates' original vectors, and re-ranks them by
     * exact cosine — recovering exact-ordering quality at the cost of
     * k′ full-vector distance computations per query instead of
@@ -1563,17 +1564,14 @@ object Similarity {
       id: String,
       vec: String,
       k: Int = 10,
-      rerankFactor: Int = 4,
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
       numCells: Int = 16,
-      nProbe: Int = 4,
-      ivfIters: Int = 2): DataFrame = {
-    val kPrime = k * rerankFactor
+      nProbe: Int = 4): DataFrame = {
+    val kPrime = k * RerankFactor
     val cand = ivfPqAnn(queries, corpus, id, vec, kPrime, dims, numSub,
-        codesPerSub, pqIters, numCells, nProbe, ivfIters)
+        codesPerSub, numCells, nProbe)
       .select(col("qid"), col("neighbor_id"))
     val nbrs = corpus.select(col(id).as("neighbor_id"), toDouble(col(vec)).as("nv"))
     val qs   = queries.select(col(id).as("qid"), toDouble(col(vec)).as("rqv"))
@@ -1609,9 +1607,7 @@ object Similarity {
       dims: Int,
       numSub: Int,
       codesPerSub: Int,
-      pqIters: Int,
-      numCells: Int,
-      ivfIters: Int): (DataFrame, Map[Long, Array[Long]],
+      numCells: Int): (DataFrame, Map[Long, Array[Long]],
         Array[Seq[(Long, Array[Long])]], DataFrame) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
@@ -1621,7 +1617,7 @@ object Similarity {
 
     // coarse quantizer (ivfPqAnn's): trained sum-centroids,
     // materialized driver-side for broadcast assignment + probe routing
-    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, numCells, ivfIters))
+    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, numCells))
 
     // one corpus pass: quantized vector (double for the cosine argmax,
     // long for the residual arithmetic) + trained-cell assignment
@@ -1656,7 +1652,7 @@ object Similarity {
     // fine quantizer trained on the RESIDUALS (Jégou §V: residual
     // energy ≪ vector energy, so the same code budget quantizes finer)
     val books = pqTrainOnBase(
-      rbase.select(col("cid"), col("qv")), sub, numSub, codesPerSub, pqIters)
+      rbase.select(col("cid"), col("qv")), sub, numSub, codesPerSub)
     (localCn, cmeans, books, rbase)
   }
 
@@ -1676,11 +1672,9 @@ object Similarity {
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
-      numCells: Int = 16,
-      ivfIters: Int = 2): DataFrame = {
+      numCells: Int = 16): DataFrame = {
     val (_, _, books, rbase) = residualModel(
-      corpus, id, vec, dims, numSub, codesPerSub, pqIters, numCells, ivfIters)
+      corpus, id, vec, dims, numSub, codesPerSub, numCells)
     pqCoded(rbase, col("qv"), books, dims / numSub,
       Seq(col("cid").as("vec_id"), col("cell")), qerr = true)
   }
@@ -1716,15 +1710,13 @@ object Similarity {
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
       numCells: Int = 16,
-      nProbe: Int = 4,
-      ivfIters: Int = 2): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     val sub   = dims / numSub
     val qMap  = collectPqQueries(queries, id, vec).toMap // fail fast before training
 
     val (localCn, cmeans, books, rbase) = residualModel(
-      corpus, id, vec, dims, numSub, codesPerSub, pqIters, numCells, ivfIters)
+      corpus, id, vec, dims, numSub, codesPerSub, numCells)
 
     // inverted lists: (neighbor_id, cell, code0…) — residual codes
     val codes = pqCoded(rbase, col("qv"), books, sub,
@@ -1773,14 +1765,12 @@ object Similarity {
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
-      numCells: Int = 16,
-      ivfIters: Int = 2): DataFrame = Checkpoints.scope { cp =>
+      numCells: Int = 16): DataFrame = Checkpoints.scope { cp =>
     val qRows = collectPqQueries(queries, id, vec)
 
     // both quantizers trained concurrently (see [[trainIvfAndPq]])
     val (localCn, books) = trainIvfAndPq(
-      corpus, id, vec, dims, numCells, ivfIters, numSub, codesPerSub, pqIters)
+      corpus, id, vec, dims, numCells, numSub, codesPerSub)
     // one assignment+encode pass for all arms
     val codes = cp.checkpoint(encodeWithModel(corpus, localCn, books, id, vec),
       eager = false)
@@ -1831,13 +1821,11 @@ object Similarity {
       dims: Int = 64,
       numSub: Int = 4,
       codesPerSub: Int = 16,
-      pqIters: Int = 2,
-      numCells: Int = 16,
-      ivfIters: Int = 2): Unit = {
+      numCells: Int = 16): Unit = {
     val spark = corpus.sparkSession
     // both quantizers trained concurrently (see [[trainIvfAndPq]])
     val (localCn, books) = trainIvfAndPq(
-      corpus, id, vec, dims, numCells, ivfIters, numSub, codesPerSub, pqIters)
+      corpus, id, vec, dims, numCells, numSub, codesPerSub)
     // a RETRAIN invalidates every inverted list encoded under the old
     // model — streamed batch=<id> directories included (their codes AND
     // cell routings are meaningless against new centroids/codebooks), so
@@ -2099,12 +2087,11 @@ object Similarity {
       vec: String,
       dir: String,
       dims: Int = 64,
-      numCells: Int = 0,
-      iters: Int = 2): Unit = {
+      numCells: Int = 0): Unit = {
     val spark = corpus.sparkSession
     val cells =
       if (numCells > 0) numCells else autoCellCount(corpus.count())
-    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, cells, iters))
+    val localCn = localModel(kmeansCentroids(corpus, id, vec, dims, cells))
     // stage the complete new index (assignment + marker + centroids +
     // max-id stamp) in the hidden temp sibling, then one atomic swap —
     // a retrain invalidates every assignment encoded under the old
@@ -2226,7 +2213,7 @@ object Similarity {
     val near = a.join(b, Seq("cell"))
       .filter(col("doc_a") < col("doc_b"))
       .withColumn("cos",
-        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 4))
+        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), CosineDp))
       .filter(col("cos") >= threshold)
     dedupDecision(bAsg, near, id)
   }

@@ -97,14 +97,14 @@ object Stores {
 
   /** Best-effort reap of scratch dirs stranded by crashed/killed JVMs:
     * delete every sentinel-recorded path whose sentinel is older than
-    * `maxAgeHours` and that this JVM does not own. Called at Bench /
-    * Verify / Smoke startup. The age gate (default 6 h, ≥ any single
+    * 6 h and that this JVM does not own. Called at Bench /
+    * Verify / Smoke startup. The age gate (≥ any single
     * run's lifetime here) keeps a CONCURRENT healthy run's live scratch
     * out of reach; errors are swallowed — a failed sweep must never
     * fail the run it piggybacks on.
     */
-  def sweepStaleScratch(maxAgeHours: Double = 6.0): Int = {
-    val cutoff = System.currentTimeMillis() - (maxAgeHours * 3600e3).toLong
+  def sweepStaleScratch(): Int = {
+    val cutoff = System.currentTimeMillis() - (6.0 * 3600e3).toLong
     var n = 0
     try {
       val ms = Option(sentinelDir.listFiles()).getOrElse(Array.empty)

@@ -61,9 +61,9 @@ import org.apache.spark.sql.graftbridge.{Checkpoints, GraftBridge}
   *     the distinct AND the join-back — then distinct pairs bucket by
   *     `r DIV blockSize` (monotone in the pair order, so bucket
   *     boundaries are exact global-order boundaries), per-bucket window
-  *     ranks are offset by a prefix sum over the ≤`buckets`-row
+  *     ranks are offset by a prefix sum over the ≤`Buckets`-row
   *     per-bucket counts (a single-partition window over the bucket
-  *     aggregate — bounded by `buckets`, never by data) — no driver
+  *     aggregate — bounded by `Buckets`, never by data) — no driver
   *     collect, no recompute. The result is repartitioned back to the
   *     document id to keep the zero-exchange window invariant.
   *
@@ -104,6 +104,12 @@ object Suffix {
 
   private val MaxDom = BigInt(Long.MaxValue)
 
+  /** Rank buckets of a densify round: its distinct pairs bucket by
+    * `r DIV blockSize` into at most this many ranges, and the prefix-sum
+    * window runs over ≤ Buckets per-bucket counts.
+    */
+  private val Buckets = 512
+
   /** Runs the doubling rounds and returns the full-suffix DENSE rank
     * table (did, pos, r). Only densify outputs materialize (combine
     * windows chain lazily into the next densify), and predecessors are
@@ -133,10 +139,8 @@ object Suffix {
       docs: DataFrame,
       id: String,
       text: String,
-      buckets: Int,
       maxPrefix: Long = Long.MaxValue,
       materializeLast: Boolean = true): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val base = docs.filter(length(col(text)) >= 1)
       .select(col(id).as("did"), col(text).as("txt"))
     // hash-partition the WHOLE DOCUMENTS by id — BEFORE the explode.
@@ -254,7 +258,7 @@ object Suffix {
         // ORDER-ISOMORPHIC compression, not a dense one — the next
         // combine round just packs it arithmetically. `bkt·(n+1) + rk`
         // is order-isomorphic (bkt is the major order; rk ≤ n within a
-        // bucket) with domain ≤ (buckets+1)·(n+1), so the cross-bucket
+        // bucket) with domain ≤ (Buckets+1)·(n+1), so the cross-bucket
         // offset machinery (per-bucket distinct counts, prefix-sum
         // window, broadcast join) drops out entirely: ONE action, one
         // bkt exchange, one window, one did exchange.
@@ -262,21 +266,21 @@ object Suffix {
         // The FINAL round's output must be dense (the suffix-rank
         // contract): there the per-bucket ranks are offset by the
         // prefix sum of per-bucket distinct counts — in-plan (a
-        // bounded-by-`buckets` aggregate + single-partition window),
+        // bounded-by-`Buckets` aggregate + single-partition window),
         // no driver collect. The bucketed state is consumed twice
         // (rank window + offset aggregate), so it is eagerly
         // checkpointed once; the offs branch then reads the cached
         // copy instead of re-instantiating the exchange.
         val tupleCols = rCols ++ sCols
-        val blockSize = ((dom / buckets) + 1).min(MaxDom).toLong
+        val blockSize = ((dom / Buckets) + 1).min(MaxDom).toLong
         val rkW = Window.partitionBy(col("bkt")).orderBy(tupleCols.map(col): _*)
         val nn = math.max(n, 1L)
         val h =
           if (!isLast) {
-            val packedDom = (BigInt(buckets) + 1) * (BigInt(nn) + 1)
+            val packedDom = (BigInt(Buckets) + 1) * (BigInt(nn) + 1)
             require(packedDom <= MaxDom,
               s"packed intermediate rank domain $packedDom overflows int64 " +
-                s"(n=$n, buckets=$buckets) — lower the bucket count")
+                s"(n=$n, buckets=$Buckets) — lower the bucket count")
             dom = packedDom
             cp.checkpoint(
               repartitionFixed(
@@ -363,9 +367,8 @@ object Suffix {
   def suffixRanks(
       docs: DataFrame,
       id: String,
-      text: String,
-      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
-    build(cp, docs, id, text, buckets, materializeLast = false)
+      text: String): DataFrame = Checkpoints.scope { cp =>
+    build(cp, docs, id, text, materializeLast = false)
       .select(col("did").as(id), col("pos"), col("r").as("srank"))
   }
 
@@ -390,14 +393,13 @@ object Suffix {
       docs: DataFrame,
       id: String,
       text: String,
-      maxLcp: Long,
-      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
+      maxLcp: Long): DataFrame = Checkpoints.scope { cp =>
     require(maxLcp >= 1 && maxLcp <= Int.MaxValue,
       s"maxLcp must be in [1, Int.MaxValue], got $maxLcp")
     // the rank table has exactly one consumer here (the representative
     // aggregate, checkpointed below) — lazy final level, freed by the
     // scope since the result reads only the representatives
-    val sr = build(cp, docs, id, text, buckets, materializeLast = false)
+    val sr = build(cp, docs, id, text, materializeLast = false)
     // the (doc,pos)-minimal representative of each rank is consumed
     // TWICE (both sides of the adjacent-rank self-join) — checkpoint it
     // once, or the analyzer's self-join expr-id dedup re-instantiates
@@ -481,9 +483,8 @@ object Suffix {
       id: String,
       text: String,
       minSpan: Long,
-      cap: Long = 64L,
-      buckets: Int = 512): DataFrame = Checkpoints.scope { cp =>
-    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap, buckets)
+      cap: Long = 64L): DataFrame = Checkpoints.scope { cp =>
+    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap)
     val perDoc = spans.groupBy(col("did"))
       .agg(count(lit(1)).as("dup_spans"),
         sum(col("e") - col("s")).as("dup_chars"))
@@ -508,7 +509,7 @@ object Suffix {
     * the global first occurrence before interval merge.
     *
     * One row per non-empty document:
-    * (id, n_chars, kept_chars, `scrubbedCol`) — the text with every
+    * (id, n_chars, kept_chars, text_scrubbed) — the text with every
     * character inside a merged ≥ `minSpan` duplicated region deleted
     * (the complement substrings concatenated in order).
     *
@@ -524,10 +525,8 @@ object Suffix {
       id: String,
       text: String,
       minSpan: Long,
-      cap: Long = 64L,
-      buckets: Int = 512,
-      scrubbedCol: String = "text_scrubbed"): DataFrame = Checkpoints.scope { cp =>
-    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap, buckets)
+      cap: Long = 64L): DataFrame = Checkpoints.scope { cp =>
+    val spans = dupSpanIntervals(cp, docs, id, text, minSpan, cap)
     val iv = spans.groupBy(col("did"))
       .agg(sort_array(collect_list(struct(
         col("s").cast("long").as("s"), col("e").cast("long").as("e"))))
@@ -552,10 +551,10 @@ object Suffix {
         length(col(text)).cast("long").as("n_chars"))
       .join(iv, Seq("did"), "left")
       .select(col("did").as(id), col("n_chars"),
-        when(col("ivs").isNull, col("_t")).otherwise(rebuilt).as(scrubbedCol))
+        when(col("ivs").isNull, col("_t")).otherwise(rebuilt).as("text_scrubbed"))
       .select(col(id), col("n_chars"),
-        length(col(scrubbedCol)).cast("long").as("kept_chars"),
-        col(scrubbedCol))
+        length(col("text_scrubbed")).cast("long").as("kept_chars"),
+        col("text_scrubbed"))
     // same eager-materialize-then-free discipline as dupSpans; the
     // resident snapshot is doc-count rows of scrubbed text
     cp.checkpoint(out)
@@ -574,8 +573,7 @@ object Suffix {
       id: String,
       text: String,
       minSpan: Long,
-      cap: Long,
-      buckets: Int): DataFrame = {
+      cap: Long): DataFrame = {
     require(minSpan >= 1, s"minSpan must be >= 1, got $minSpan")
     require(cap >= minSpan, s"cap ($cap) must be >= minSpan ($minSpan) — " +
       "the capped union argument needs a length-minSpan interval to fit " +
@@ -598,7 +596,7 @@ object Suffix {
     // (a lead-window pass over every position) and double the final
     // densify's rank-tuple width through the bucket shuffle (guide
     // §2.3, narrower types / fewer bytes).
-    val sr = build(cp, docs, id, text, buckets, maxPrefix = cap) // (did, pos, r)
+    val sr = build(cp, docs, id, text, maxPrefix = cap) // (did, pos, r)
     // ONE aggregate pass over the rank table serves both consumers —
     // the pair representatives and the per-rank multiplicity the span
     // arithmetic needs — checkpointed so neither recomputes it.

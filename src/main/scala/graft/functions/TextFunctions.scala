@@ -180,29 +180,30 @@ object TextFunctions {
     * column-algebra reference.
     */
   def rollingFingerprint(c: Column): Column =
-    nativeRoll(c, 3).getField("fp_roll")
+    nativeRoll(c).getField("fp_roll")
 
   /** Winnowing-style minimum shingle fingerprint: the smallest rolling
-    * hash over all `w`-token shingles (sequence positions clamp at the
-    * end; texts shorter than `w` tokens collapse to one degenerate
+    * hash over all 3-token shingles (sequence positions clamp at the
+    * end; texts shorter than 3 tokens collapse to one degenerate
     * shingle). Two documents sharing any low-hash shingle collide here —
     * the classic cheap near-dup / containment signal that needs only a
     * per-row expression plus a groupBy at scale. Native-backed; see
     * [[minShingleFingerprintFold]] for the reference formulation.
     */
-  def minShingleFingerprint(c: Column, w: Int = 3): Column =
-    nativeRoll(c, w).getField("min_shingle")
+  def minShingleFingerprint(c: Column): Column =
+    nativeRoll(c).getField("min_shingle")
 
-  private def nativeRoll(c: Column, w: Int): Column =
+  private def nativeRoll(c: Column): Column =
     org.apache.spark.sql.graftbridge.GraftBridge.column(
       graft.functions.expressions.RollingFp(
-        org.apache.spark.sql.graftbridge.GraftBridge.expression(tokens(c)), w))
+        org.apache.spark.sql.graftbridge.GraftBridge.expression(tokens(c)), 3))
 
   /** Column-algebra reference of [[rollingFingerprint]] (A/B testing). */
   def rollingFingerprintFold(c: Column): Column = rollOf(t16s(c))
 
   /** Column-algebra reference of [[minShingleFingerprint]] (A/B testing). */
-  def minShingleFingerprintFold(c: Column, w: Int = 3): Column = {
+  def minShingleFingerprintFold(c: Column): Column = {
+    val w = 3
     val hs = t16s(c)
     array_min(
       transform(

@@ -39,9 +39,9 @@ object AsofJoin {
     *                  of being back-filled from an older right row —
     *                  because the whole row travels as one struct through
     *                  a single `last(ignoreNulls)`. Left columns sharing a
-    *                  name with a valueCol or `matchedTs` are replaced in
-    *                  the output.
-    * @param matchedTs output column holding the matched right timestamp
+    *                  name with a valueCol or `asof_ts` are replaced in
+    *                  the output. The matched right timestamp lands in
+    *                  the output column `asof_ts`.
     */
   def asofJoin(
       left: DataFrame,
@@ -49,8 +49,7 @@ object AsofJoin {
       key: String,
       leftTs: String,
       rightTs: String,
-      valueCols: Seq[String],
-      matchedTs: String = "asof_ts"): DataFrame = {
+      valueCols: Seq[String]): DataFrame = {
     val ts    = "_graft_asof_ts"
     val side  = "_graft_asof_side"
     val carry = "_graft_asof_carry"
@@ -67,13 +66,13 @@ object AsofJoin {
       .partitionBy(col(key))
       .orderBy(col(ts).asc, col(side).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val keep = left.columns.filterNot(c => c == matchedTs || valueCols.contains(c))
+    val keep = left.columns.filterNot(c => c == "asof_ts" || valueCols.contains(c))
     l.unionByName(r, allowMissingColumns = true)
       .withColumn(carry, last(col(carry), ignoreNulls = true).over(w))
       .filter(col(side) === 1)
       .select((keep.map(col).toSeq ++
         valueCols.map(v => col(s"$carry.$v").as(v)) :+
-        col(s"$carry.ts").as(matchedTs)): _*)
+        col(s"$carry.ts").as("asof_ts")): _*)
   }
 
   /** Same semantics and output shape as [[asofJoin]], executed by the
@@ -92,8 +91,7 @@ object AsofJoin {
       key: String,
       leftTs: String,
       rightTs: String,
-      valueCols: Seq[String],
-      matchedTs: String = "asof_ts"): DataFrame = {
+      valueCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.graftbridge.GraftBridge
@@ -113,9 +111,9 @@ object AsofJoin {
     val lAttr = lp.output.map(a => a.name -> a).toMap
     val joined = GraftBridge.ofRows(spark,
       AsofJoinPlan(lp, rp, lAttr(key), lAttr(leftTs), rAttr(key), rAttr(rightTs)))
-    val keep = left.columns.filterNot(c => c == matchedTs || valueCols.contains(c))
+    val keep = left.columns.filterNot(c => c == "asof_ts" || valueCols.contains(c))
     joined.select((keep.map(c => GraftBridge.column(lAttr(c))).toSeq ++
       valueCols.map(v => GraftBridge.column(rAttr(v)).as(v)) :+
-      GraftBridge.column(rAttr(rightTs)).as(matchedTs)): _*)
+      GraftBridge.column(rAttr(rightTs)).as("asof_ts")): _*)
   }
 }

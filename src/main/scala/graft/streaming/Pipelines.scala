@@ -158,11 +158,9 @@ object Pipelines {
   def dedupIngest(
       docs: DataFrame,
       stateDir: String,
-      checkpoint: String,
-      id: String = "doc_id",
-      text: String = "text",
-      numHashes: Int = 16,
-      bands: Int = 4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Dedup
     docs.writeStream
       .outputMode("append")
@@ -175,11 +173,11 @@ object Pipelines {
             Dedup.fingerprintTable(batch.limit(0), id, text).withColumnRenamed(id, "cid"))
             .select(col("cid"), col("fp"))
           val corpusBands = Stores.priorBatches(spark, s"$stateDir/bands", batchId,
-            Dedup.bandTable(batch.limit(0), id, text, numHashes, bands)
+            Dedup.bandTable(batch.limit(0), id, text)
               .withColumnRenamed(id, "cid"))
             .select(col("cid"), col("band"), col("bkey"))
           val decisions = Dedup
-            .incrementalDedupAgainst(batch, corpusFp, corpusBands, id, text, numHashes, bands)
+            .incrementalDedupAgainst(batch, corpusFp, corpusBands, id, text)
             .persist()
           try {
             Stores.publishBatch(spark, s"$stateDir/decisions", batchId)(
@@ -190,7 +188,7 @@ object Pipelines {
               Dedup.fingerprintTable(accepted, id, text).withColumnRenamed(id, "cid")
                 .write.mode("overwrite").parquet(_))
             Stores.publishBatch(spark, s"$stateDir/bands", batchId)(
-              Dedup.bandTable(accepted, id, text, numHashes, bands).withColumnRenamed(id, "cid")
+              Dedup.bandTable(accepted, id, text).withColumnRenamed(id, "cid")
                 .write.mode("overwrite").parquet(_))
           } finally decisions.unpersist()
         } finally batch.unpersist()
@@ -220,12 +218,12 @@ object Pipelines {
       vecs: DataFrame,
       stateDir: String,
       checkpoint: String,
-      id: String = "vec_id",
-      vec: String = "embedding",
       dims: Int = 64,
-      threshold: Double = 0.9,
       bitsPerBand: Int = 16,
       numBands: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "vec_id"
+    val vec = "embedding"
+    val threshold = 0.9
     import graft.functions.Similarity
     vecs.writeStream
       .outputMode("append")
@@ -291,10 +289,10 @@ object Pipelines {
       lambdaDir: String,
       stateDir: String,
       checkpoint: String,
-      id: String = "doc_id",
-      text: String = "text",
       buckets: Int = graft.functions.Dsir.DefaultBuckets)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Dsir
     docs.writeStream
       .outputMode("append")
@@ -328,10 +326,10 @@ object Pipelines {
       docs: DataFrame,
       modelDir: String,
       stateDir: String,
-      checkpoint: String,
-      id: String = "doc_id",
-      text: String = "text")
+      checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Curation
     docs.writeStream
       .outputMode("append")
@@ -362,10 +360,10 @@ object Pipelines {
   def bm25Ingest(
       docs: DataFrame,
       stateDir: String,
-      checkpoint: String,
-      id: String = "doc_id",
-      text: String = "text")
+      checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Curation
     docs.writeStream
       .outputMode("append")
@@ -474,10 +472,10 @@ object Pipelines {
   def cdcIngest(
       docs: DataFrame,
       stateDir: String,
-      checkpoint: String,
-      id: String = "doc_id",
-      text: String = "text")
+      checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Dedup
     docs.writeStream
       .outputMode("append")
@@ -527,10 +525,10 @@ object Pipelines {
       docs: DataFrame,
       stateDir: String,
       checkpoint: String,
-      phrases: Seq[String],
-      id: String = "doc_id",
-      text: String = "text")
+      phrases: Seq[String])
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "doc_id"
+    val text = "text"
     import graft.functions.Curation
     docs.writeStream
       .outputMode("append")
@@ -577,10 +575,10 @@ object Pipelines {
   def ivfPqIngest(
       vecs: DataFrame,
       indexDir: String,
-      checkpoint: String,
-      id: String = "vec_id",
-      vec: String = "embedding")
+      checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val id = "vec_id"
+    val vec = "embedding"
     import graft.functions.Similarity
     vecs.writeStream
       .outputMode("append")

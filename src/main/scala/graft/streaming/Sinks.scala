@@ -131,10 +131,14 @@ object Sinks {
     // input a second time and could disagree with what was written
     val obs = org.apache.spark.sql.Observation()
     // salt INSIDE each partition-col combination: repartition(n, cols)
-    // would give n writer tasks total, not n per partition value
+    // would give n writer tasks total, not n per partition value. The
+    // partition count is explicit, as in compactArchive: a column-only
+    // repartition is an AQE coalesce target, which merges the lanes of a
+    // small release straight back into one file per combination
     val lane = pmod(hash(df.columns.map(col): _*), lit(lanesPerPartition))
     df.withColumn("_lane", lane)
-      .repartition((partitionCols.map(col) :+ col("_lane")): _*)
+      .repartition(spark.sessionState.conf.numShufflePartitions,
+        (partitionCols.map(col) :+ col("_lane")): _*)
       .drop("_lane")
       .observe(obs, count(lit(1)).as("rows"))
       .write

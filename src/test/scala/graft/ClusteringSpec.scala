@@ -88,7 +88,7 @@ class ClusteringSpec extends SparkSpec {
       (3L, "Y" * 80) // long but disjoint content
     ).toDF("doc_id", "text")
     val pairs = Clustering
-      .sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8)
+      .sharedWindowPairs(docs, "doc_id", "text")
       .select("doc_a", "doc_b")
       .as[(Long, Long)].collect()
     pairs shouldBe Array((1L, 2L))
@@ -100,10 +100,10 @@ class ClusteringSpec extends SparkSpec {
     val header = "L" * 40
     val docs = (1L to 6L).map(i => (i, header + s" body $i")).toDF("doc_id", "text")
     val uncapped = Clustering
-      .sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8)
+      .sharedWindowPairs(docs, "doc_id", "text")
       .count()
     val capped = Clustering
-      .sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8, maxWindowFreq = 3)
+      .sharedWindowPairs(docs, "doc_id", "text", maxWindowFreq = 3)
       .count()
     uncapped shouldBe 15L // C(6,2)
     capped shouldBe 0L
@@ -128,7 +128,7 @@ class ClusteringSpec extends SparkSpec {
       (5L, "unrelated " + ("Z" * 60))
     ).toDF("doc_id", "text")
     val collapsed = Clustering
-      .sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8)
+      .sharedWindowPairs(docs, "doc_id", "text")
       .as[(Long, Long, Long)].collect().toSet
     // naive formulation, inlined: all (id, wh) rows self-joined on wh
     val wh = docs
@@ -162,10 +162,10 @@ class ClusteringSpec extends SparkSpec {
       (9L, "no duplicates here at all " + ("U" * 40))
     ).toDF("doc_id", "text")
     val winnow = Clustering
-      .winnowedSpanCandidates(docs, "doc_id", "text", win = 40, stride = 8, w = 4)
+      .winnowedSpanCandidates(docs, "doc_id", "text")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val exact = Clustering
-      .sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8)
+      .sharedWindowPairs(docs, "doc_id", "text")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     winnow should contain((1L, 2L))
     exact should contain allOf ((1L, 2L), (6L, 7L))
@@ -179,7 +179,7 @@ class ClusteringSpec extends SparkSpec {
     val tiny = Seq((1L, "Q" * 44), (2L, "Q" * 44), (3L, "R" * 44))
       .toDF("doc_id", "text")
     Clustering
-      .winnowedSpanCandidates(tiny, "doc_id", "text", win = 40, stride = 8, w = 4)
+      .winnowedSpanCandidates(tiny, "doc_id", "text")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet shouldBe Set((1L, 2L))
     // real corpus: every winnow candidate is an exact-evidence pair
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -205,7 +205,7 @@ class ClusteringSpec extends SparkSpec {
     val docs = Seq((1L, big1), (2L, big2), (3L, small), (4L, "x" * 50))
       .toDF("doc_id", "text")
     val viaSplit = Clustering
-      .winnowedSpanCandidates(docs, "doc_id", "text", win = 40, stride = 8, w = 4)
+      .winnowedSpanCandidates(docs, "doc_id", "text")
       .as[(Long, Long, Long)].collect().toSet
     val L = org.apache.spark.sql.functions.length($"text")
     val naive = docs.filter(L >= 40)
@@ -235,14 +235,14 @@ class ClusteringSpec extends SparkSpec {
       Seq((10L, "Z" * 40 + " ten"), (11L, "Z" * 40 + " eleven")))
       .toDF("doc_id", "text")
     val stars = Clustering
-      .sharedWindowStarEdges(docs, "doc_id", "text", win = 40, stride = 8)
+      .sharedWindowStarEdges(docs, "doc_id", "text")
     stars.count() shouldBe 6L // 5 edges to hub 1, plus 10→11
     stars.filter(col("doc_a") === 1L).count() shouldBe 5L
     val viaStars = Clustering.clustersOf(docs, stars, "doc_id")
       .select("doc_id", "cluster_id", "cluster_size")
       .as[(Long, Long, Long)].collect().toSet
     val viaPairs = Clustering.clustersOf(docs,
-        Clustering.sharedWindowPairs(docs, "doc_id", "text", win = 40, stride = 8),
+        Clustering.sharedWindowPairs(docs, "doc_id", "text"),
         "doc_id")
       .select("doc_id", "cluster_id", "cluster_size")
       .as[(Long, Long, Long)].collect().toSet

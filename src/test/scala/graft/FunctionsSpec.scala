@@ -197,7 +197,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minhashCandidates includes identical docs; candidates ⊇ high-jaccard pairs") {
-    val cands = Dedup.minhashCandidates(docs, "doc_id", "text", 16, 4)
+    val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     cands should contain((1L, 2L)) // identical docs share every band
   }
@@ -554,7 +554,7 @@ class FunctionsSpec extends SparkSpec {
       .select("qid", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val reranked = Similarity.ivfPqAnnRerank(qs, vecs, "vec_id", "embedding",
-      k = 3, rerankFactor = 4, dims = 16, numSub = 4, codesPerSub = 8,
+      k = 3, dims = 16, numSub = 4, codesPerSub = 8,
       numCells = 8, nProbe = 4)
       .select("qid", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -793,7 +793,7 @@ class FunctionsSpec extends SparkSpec {
       Similarity.ivfAssign(vecs, "vec_id", "embedding", cents)
         .groupBy("cell").count().agg(max("count")).collect()(0).getLong(0)
     val trained = Similarity.kmeansCentroids(
-      vecs, "vec_id", "embedding", dims = 16, numCells = 4, iters = 2)
+      vecs, "vec_id", "embedding", dims = 16, numCells = 4)
     val firstN = vecs.filter(col("vec_id") < 4)
       .select(
         col("vec_id").as("cell"),
@@ -848,7 +848,7 @@ class FunctionsSpec extends SparkSpec {
     truth.size should be >= 30 // sanity: clusters produce real pairs
 
     val candidates = Dedup
-      .minhashCandidates(docs, "doc_id", "text", numHashes = 16, bands = 8)
+      .minhashCandidates(docs, "doc_id", "text", bands = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.count(candidates.contains).toDouble / truth.size
     recall should be >= 0.9
@@ -863,8 +863,8 @@ class FunctionsSpec extends SparkSpec {
     val out = df.select(
       TF.rollingFingerprint(col("text")).as("fp_n"),
       TF.rollingFingerprintFold(col("text")).as("fp_f"),
-      TF.minShingleFingerprint(col("text"), 3).as("ms_n"),
-      TF.minShingleFingerprintFold(col("text"), 3).as("ms_f")).collect()
+      TF.minShingleFingerprint(col("text")).as("ms_n"),
+      TF.minShingleFingerprintFold(col("text")).as("ms_f")).collect()
     out.foreach { r =>
       r.getLong(0) shouldBe r.getLong(1)
       r.getLong(2) shouldBe r.getLong(3)
@@ -882,7 +882,7 @@ class FunctionsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
       .select(col("doc_id"),
         TF.rollingFingerprint(col("text")).as("fp"),
-        TF.minShingleFingerprint(col("text"), 3).as("ms"))
+        TF.minShingleFingerprint(col("text")).as("ms"))
     val rows = df.orderBy("doc_id").collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     rows(0) shouldBe rows(2)        // identical docs agree
@@ -1190,7 +1190,7 @@ class FunctionsSpec extends SparkSpec {
       (2L, "completely different content with many more tokens"),
       (3L, "tiny doc") // < 5 tokens → no gram rows → absent
     ).toDF("doc_id", "text")
-    val out = Dedup.contamination(corpus, bench, "doc_id", "text", n = 5)
+    val out = Dedup.contamination(corpus, bench, "doc_id", "text")
       .select("doc_id", "n_grams", "n_contaminated", "contam_bps")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     out.map(_._1) shouldBe Array(1L, 2L)

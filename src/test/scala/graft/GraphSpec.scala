@@ -19,7 +19,7 @@ class GraphSpec extends SparkSpec {
     val edges = (cyc ++ cyc.map(_.swap))
       .map { case (s2, d2) => (s2, d2, 1L) }.toDF("src", "dst", "w")
     val r = ranks(Graph.pageRank(edges, iters = 7))
-    r.values.toSet shouldBe Set(Graph.DefaultScale)
+    r.values.toSet shouldBe Set(Graph.Scale)
     r.keySet shouldBe Set("a", "b", "c", "d")
   }
 
@@ -44,7 +44,7 @@ class GraphSpec extends SparkSpec {
     val edges = leaves.flatMap(l => Seq(("hub", l, 1L), (l, "hub", 1L)))
       .toDF("src", "dst", "w")
     val r = ranks(Graph.pageRank(edges, iters = 5))
-    val teleport = (10000L - Graph.DefaultDampingBp) * Graph.DefaultScale / 10000L
+    val teleport = (10000L - Graph.DampingBp) * Graph.Scale / 10000L
     all(r.values) should be >= teleport
     leaves.foreach { l => r("hub") should be > r(l) }
   }

@@ -32,8 +32,8 @@ class PropertySpec extends SparkSpec {
       val df = texts.toDF("text").select(
         TF.rollingFingerprint(col("text")).as("a"),
         TF.rollingFingerprintFold(col("text")).as("b"),
-        TF.minShingleFingerprint(col("text"), 3).as("c"),
-        TF.minShingleFingerprintFold(col("text"), 3).as("d"),
+        TF.minShingleFingerprint(col("text")).as("c"),
+        TF.minShingleFingerprintFold(col("text")).as("d"),
         Dedup.simhashExpr(col("text")).as("e"),
         Dedup.simhashFoldExpr(col("text")).as("f"))
       df.collect().foreach { r =>

@@ -190,7 +190,7 @@ class StoresSpec extends SparkSpec {
           .withColumnRenamed("doc_id", "cid")
           .write.mode("overwrite").parquet(_)) shouldBe true
       Stores.publishOnce(spark, s"$state/bands/batch=$b")(
-        Dedup.bandTable(docs, "doc_id", "text", 16, 4)
+        Dedup.bandTable(docs, "doc_id", "text")
           .withColumnRenamed("doc_id", "cid")
           .write.mode("overwrite").parquet(_)) shouldBe true
     }
@@ -208,7 +208,7 @@ class StoresSpec extends SparkSpec {
       val fp = spark.read.parquet(s"$state/fp").select(col("cid"), col("fp"))
       val bands = spark.read.parquet(s"$state/bands")
         .select(col("cid"), col("band"), col("bkey"))
-      Dedup.incrementalDedupAgainst(probeBatch, fp, bands, "doc_id", "text", 16, 4)
+      Dedup.incrementalDedupAgainst(probeBatch, fp, bands, "doc_id", "text")
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     }
     val before = classify()
@@ -233,7 +233,7 @@ class StoresSpec extends SparkSpec {
       Seq((300L, "doc corpus compaction post")).toDF("doc_id", "text"),
       spark.read.parquet(s"$state/fp").select(col("cid"), col("fp")),
       spark.read.parquet(s"$state/bands").select(col("cid"), col("band"), col("bkey")),
-      "doc_id", "text", 16, 4)
+      "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     after(300L) shouldBe (("exact", 200L))
 
@@ -358,7 +358,7 @@ class StoresSpec extends SparkSpec {
         root => Curation.compactPostingStore(spark, s"$root/postings")),
       ("dedup fp", "fp", index(Dedup.fingerprintTable(_, "doc_id", "text")),
         root => Dedup.compactDedupIndex(spark, root)("fp")),
-      ("dedup bands", "bands", index(Dedup.bandTable(_, "doc_id", "text", 16, 4)),
+      ("dedup bands", "bands", index(Dedup.bandTable(_, "doc_id", "text")),
         root => Dedup.compactDedupIndex(spark, root)("bands")))
     val ids = Seq(0L, 2L, 7L) // gaps: the kept id comes from the listing
     cases.foreach { case (name, sub, publish, compact) =>
@@ -419,7 +419,7 @@ class StoresSpec extends SparkSpec {
     val freshSent = mkSentinel(fresh, ageHours = 0.0)
     val data      = mkDir(s"graft_swp${nonce8}_sfdata")  // no sentinel: keep
     try {
-      Stores.sweepStaleScratch(maxAgeHours = 6.0) should be >= 1
+      Stores.sweepStaleScratch() should be >= 1
       stale.exists() shouldBe false
       staleSent.exists() shouldBe false
       fresh.exists() shouldBe true

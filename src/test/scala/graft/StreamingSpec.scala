@@ -1516,7 +1516,7 @@ class StreamingSpec extends SparkSpec {
     val q = Pipelines
       .embedDedupIngest(
         in.toDF().toDF("vec_id", "embedding"), state, tmpDir("embdedup_ckpt"),
-        dims = 8, threshold = 0.9, bitsPerBand = 8, numBands = 4)
+        dims = 8, bitsPerBand = 8, numBands = 4)
       .start()
     try {
       in.addData((1L, unit(0)), (2L, unit(1)))
@@ -1690,6 +1690,20 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(f.getPath.toString).count() should be <= 50L
       }
     }
+  }
+
+  test("writeCorpusRelease: lanes spread a partition over several files without a row cap") {
+    // the 50-row cap of the spec above splits files by itself; here no
+    // cap binds, so only the salt lanes can put a (lang, source)
+    // combination into more than one file
+    val dst = tmpDir("release_lanes")
+    val docs = (0 until 400).map { i =>
+      (i.toLong, s"doc body $i", if (i % 2 == 0) "en" else "de", s"src${i % 3}")
+    }.toDF("doc_id", "text", "lang", "source")
+    val (rows, files) = Sinks.writeCorpusRelease(
+      docs, dst, Seq("lang", "source"), lanesPerPartition = 4)
+    rows shouldBe 400L
+    files should be > 6L // 6 (lang, source) combinations
   }
 
   test("sessionsStateful on a batch Dataset closes everything (Kappa replay parity)") {
